@@ -15,10 +15,16 @@ overlap's duplicates (reference ST2/ST3).
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Window as W, functions as F
+from pyspark.sql.types import StructType
+
+# commit-metadata key holding the snapshot's Spark schema (JSON)
+_SCHEMA_KEY = "spark_schema"
 
 
 def _latest_per_key(
@@ -203,6 +209,15 @@ class ParquetMergeSink:
     claim is ``stale_after_s`` old AND still uncommitted (the pointer
     never advanced to it), so a live slow writer is never clobbered
     within its grace window.
+
+    BOOKKEEPING WITHOUT SPARK JOBS: ``write`` stores the written
+    DataFrame's ``schema.json()`` as commit metadata (``_meta_*``
+    files, which Spark's reader skips) inside the snapshot before the
+    pointer swap, and ``read`` hands it to ``spark.read.schema`` instead
+    of inferring the schema from a footer, which costs a job.  A
+    snapshot written without it still reads by inference.  ``write``
+    returns the snapshot's row count summed from the committed data
+    files' parquet footers rather than re-reading the snapshot.
     """
 
     def __init__(self, spark, path: str, schema_ddl: str, keep_snapshots: int = 2,
@@ -227,7 +242,11 @@ class ParquetMergeSink:
         snap = self.current_snapshot()
         if snap is None:
             return self.spark.createDataFrame([], self.schema_ddl)
-        return self.spark.read.parquet(os.path.join(self.path, snap))
+        reader = self.spark.read
+        schema = self.current_meta(_SCHEMA_KEY)
+        if schema is not None:
+            reader = reader.schema(StructType.fromJson(json.loads(schema)))
+        return reader.parquet(os.path.join(self.path, snap))
 
     def _claim_slot(self, version: int, new_snap: str) -> str:
         """CAS: atomically claim the version slot by creating its
@@ -276,7 +295,7 @@ class ParquetMergeSink:
         # maintainer's last-applied epoch) is atomic with the data it
         # describes: a crash between data write and pointer swap loses
         # both together, never one without the other.
-        for key, value in (meta or {}).items():
+        for key, value in {**(meta or {}), _SCHEMA_KEY: df.schema.json()}.items():
             with open(os.path.join(snap_dir, f"_meta_{key}"), "w") as f:
                 f.write(value)
         # commit: write pointer sideways, atomically replace
@@ -284,8 +303,15 @@ class ParquetMergeSink:
         with open(tmp, "w") as f:
             f.write(new_snap)
         os.replace(tmp, self._pointer())
+        # row count from the data files' footers: no Spark job re-reads
+        # the snapshot (Spark's reader also skips the _/. files)
+        rows = sum(
+            pq.read_metadata(os.path.join(snap_dir, name)).num_rows
+            for name in os.listdir(snap_dir)
+            if not name.startswith(("_", "."))
+        )
         self._vacuum(version)
-        return self.spark.read.parquet(snap_dir).count()
+        return rows
 
     def current_meta(self, key: str) -> str | None:
         """Commit metadata of the CURRENT snapshot (None before the

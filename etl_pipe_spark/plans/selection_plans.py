@@ -203,36 +203,36 @@ def dsir_importance_select(spark: SparkSession, sf_dir: str,
         "doc_id", "lang",
         (TX.hash32(F.col("t")) % DSIR_BUCKETS).alias("b"),
     ).persist()
-
-    counts = hashed.groupBy("b").agg(
-        F.count(F.lit(1)).cast("bigint").alias("rb"),
-        F.sum(
-            F.when(F.col("lang") == DSIR_TARGET_LANG, 1).otherwise(0)
-        ).cast("bigint").alias("tb"),
-    )
-    totals = counts.agg(
-        F.sum("tb").cast("double").alias("tn"),
-        F.sum("rb").cast("double").alias("rn"),
-    )
-    model = counts.crossJoin(F.broadcast(totals)).select(
-        "b",
-        F.round(
-            F.log(
-                ((F.col("tb") + 1) * (F.col("rn") + float(DSIR_BUCKETS)))
-                / ((F.col("rb") + 1) * (F.col("tn") + float(DSIR_BUCKETS)))
-            ) * _FP
-        ).cast("bigint").alias("lr"),
-    )
-    scored = (
-        hashed.join(F.broadcast(model), "b")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_grams"),
-            F.sum("lr").cast("bigint").alias("weight_fp"),
-        )
-        .persist()
-    )
+    scored = None
     try:
+        counts = hashed.groupBy("b").agg(
+            F.count(F.lit(1)).cast("bigint").alias("rb"),
+            F.sum(
+                F.when(F.col("lang") == DSIR_TARGET_LANG, 1).otherwise(0)
+            ).cast("bigint").alias("tb"),
+        )
+        totals = counts.agg(
+            F.sum("tb").cast("double").alias("tn"),
+            F.sum("rb").cast("double").alias("rn"),
+        )
+        model = counts.crossJoin(F.broadcast(totals)).select(
+            "b",
+            F.round(
+                F.log(
+                    ((F.col("tb") + 1) * (F.col("rn") + float(DSIR_BUCKETS)))
+                    / ((F.col("rb") + 1) * (F.col("tn") + float(DSIR_BUCKETS)))
+                ) * _FP
+            ).cast("bigint").alias("lr"),
+        )
+        scored = (
+            hashed.join(F.broadcast(model), "b")
+            .groupBy("doc_id")
+            .agg(
+                F.count(F.lit(1)).cast("bigint").alias("n_grams"),
+                F.sum("lr").cast("bigint").alias("weight_fp"),
+            )
+            .persist()
+        )
         k = scored.agg(
             F.ceil(F.count(F.lit(1)) * DSIR_KEEP_FRAC).alias("k")
         )
@@ -251,7 +251,8 @@ def dsir_importance_select(spark: SparkSession, sf_dir: str,
         )
         return out.localCheckpoint(eager=True) if checkpoint else out
     finally:
-        scored.unpersist()
+        if scored is not None:
+            scored.unpersist()
         hashed.unpersist()
 
 

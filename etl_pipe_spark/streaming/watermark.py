@@ -11,34 +11,40 @@ watermark to NOW() even when the LIMIT cap truncated the batch, so
 rows beyond the cap can be skipped forever (SURVEY §2.1 S6 ⚠).  Here
 the caller advances to ``max(ts)`` actually processed.
 
-State lives as a tiny parquet dataset — driver-side reads only; at
-cluster scale this is a metadata table (Delta/JDBC), never big data.
+State is one small JSON document per version, read and written with
+plain file I/O on the driver: the whole state is a few rows of
+bookkeeping, so it never launches a Spark job.  At cluster scale this
+is a metadata table (Delta/JDBC), never big data.  Timestamps are
+stored as naive ISO-8601 strings, exact to the microsecond.  A target
+whose ``CURRENT`` still names a state of the earlier parquet layout (a
+directory) reads as empty, so each flow re-scans once from the epoch;
+the idempotent merges keep the result identical.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import json
 import os
 import shutil
-
-from pyspark.sql import Row, SparkSession, functions as F
 
 DEFAULT_EPOCH = dt.datetime(2020, 1, 1)
 DEFAULT_OVERLAP_SEC = 90  # reference config.py:29 OVERLAP_SEC
 
-_SCHEMA = (
-    "table_name string, last_fetched_at timestamp_ntz, "
-    "total_rows_ever long, updated_at timestamp_ntz"
-)
+
+def _write_synced(path: str, text: str) -> None:
+    with open(path, "w") as f:
+        f.write(text)
+        f.flush()
+        os.fsync(f.fileno())
 
 
 class WatermarkStore:
-    """Parquet-backed watermark state table (reference etl_watermark,
-    setup_target.py:15-32)."""
+    """JSON-backed watermark state table (reference etl_watermark,
+    setup_target.py:15-32).  ``spark`` is not used: no call launches a
+    Spark job."""
 
-    def __init__(self, spark: SparkSession, path: str,
-                 overlap_sec: int = DEFAULT_OVERLAP_SEC):
-        self.spark = spark
+    def __init__(self, spark, path: str, overlap_sec: int = DEFAULT_OVERLAP_SEC):
         self.path = path
         self.overlap_sec = overlap_sec
 
@@ -52,11 +58,17 @@ class WatermarkStore:
         except FileNotFoundError:
             return None
 
-    def _read(self):
+    def _read(self) -> dict[str, dict]:
+        """Committed state: ``{table_name: {"last_fetched_at": iso,
+        "total_rows_ever": n, "updated_at": iso}}``."""
         snap = self._current_snapshot()
         if snap is None:
-            return self.spark.createDataFrame([], _SCHEMA)
-        return self.spark.read.schema(_SCHEMA).parquet(os.path.join(self.path, snap))
+            return {}
+        try:
+            with open(os.path.join(self.path, snap)) as f:
+                return json.load(f)["tables"]
+        except IsADirectoryError:
+            return {}  # earlier parquet layout: re-scan once from the epoch
 
     def get(self, table_name: str) -> dt.datetime:
         """Low watermark minus the late-data overlap (extract.py:10-31).
@@ -64,8 +76,8 @@ class WatermarkStore:
         First sight of a table returns the 2020-01-01 epoch default
         (extract.py:31) so the initial cycle scans everything.
         """
-        rows = self._read().filter(F.col("table_name") == table_name).collect()
-        base = rows[0].last_fetched_at if rows else DEFAULT_EPOCH
+        row = self._read().get(table_name)
+        base = dt.datetime.fromisoformat(row["last_fetched_at"]) if row else DEFAULT_EPOCH
         return base - dt.timedelta(seconds=self.overlap_sec)
 
     def advance(self, table_name: str, max_ts_processed: dt.datetime | None,
@@ -74,37 +86,32 @@ class WatermarkStore:
         accumulating the total_rows_ever counter (extract.py:40-47).
 
         Commit is crash-safe: the new state lands in a versioned
-        directory and an atomic pointer swap publishes it (same
-        protocol as ParquetMergeSink) — a crash mid-advance can never
-        wipe the previous watermarks and reset every flow to the 2020
-        epoch, which the old rmtree-then-rename sequence could.
+        ``state-N`` file, fsynced, and an atomic pointer swap publishes
+        it (same protocol as ParquetMergeSink) — a crash mid-advance
+        can never wipe the previous watermarks and reset every flow to
+        the 2020 epoch.
         """
         if max_ts_processed is None:
             return  # empty batch: watermark must not move
-        state = {r.table_name: r for r in self._read().collect()}
+        state = self._read()
+        # wall-clock value without its zone, as a timestamp_ntz column keeps it
+        ts = max_ts_processed.replace(tzinfo=None)
         prev = state.get(table_name)
-        state[table_name] = Row(
-            table_name=table_name,
-            last_fetched_at=max(max_ts_processed, prev.last_fetched_at) if prev else max_ts_processed,
-            total_rows_ever=(prev.total_rows_ever if prev else 0) + rows_fetched,
-            updated_at=dt.datetime.utcnow(),
-        )
+        if prev:
+            ts = max(ts, dt.datetime.fromisoformat(prev["last_fetched_at"]))
+        state[table_name] = {
+            "last_fetched_at": ts.isoformat(),
+            "total_rows_ever": (prev["total_rows_ever"] if prev else 0) + rows_fetched,
+            "updated_at": dt.datetime.now(dt.timezone.utc).replace(tzinfo=None).isoformat(),
+        }
         snap = self._current_snapshot()
         version = int(snap.rsplit("-", 1)[1]) + 1 if snap else 1
         new_snap = f"state-{version:08d}"
         os.makedirs(self.path, exist_ok=True)
-        # single-slice parallelize: a coalesce(1) over the default
-        # 32-partition local-list RDD evaluates every partition
-        # serially through one task's Python-worker round trips
-        # (~6 s/write measured — see operators/index_store._tiny_table)
-        self.spark.createDataFrame(
-            self.spark.sparkContext.parallelize(list(state.values()), 1),
-            _SCHEMA,
-        ).write.mode("overwrite") \
-            .parquet(os.path.join(self.path, new_snap))
+        _write_synced(os.path.join(self.path, new_snap),
+                      json.dumps({"tables": state}, sort_keys=True))
         tmp = self._pointer() + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(new_snap)
+        _write_synced(tmp, new_snap)
         os.replace(tmp, self._pointer())
         # retain one previous state for post-mortems, drop older
         for name in os.listdir(self.path):
@@ -114,8 +121,12 @@ class WatermarkStore:
                 except ValueError:
                     continue
                 if v <= version - 2:
-                    shutil.rmtree(os.path.join(self.path, name), ignore_errors=True)
+                    old = os.path.join(self.path, name)
+                    if os.path.isdir(old):  # earlier parquet layout
+                        shutil.rmtree(old, ignore_errors=True)
+                    else:
+                        os.remove(old)
 
     def total_rows(self, table_name: str) -> int:
-        rows = self._read().filter(F.col("table_name") == table_name).collect()
-        return rows[0].total_rows_ever if rows else 0
+        row = self._read().get(table_name)
+        return row["total_rows_ever"] if row else 0

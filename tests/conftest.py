@@ -45,3 +45,26 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture()
+def jobs_launched(spark):
+    """``jobs_launched(fn, *args)`` -> (fn's result, number of Spark jobs
+    the call launched), counted through a job group and the status
+    tracker once the listener bus has delivered every job event."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn, *args, **kwargs):
+        group = f"jobs-launched-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            result = fn(*args, **kwargs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

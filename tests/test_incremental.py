@@ -34,6 +34,59 @@ def test_watermark_store_roundtrip(spark, tmp_path):
     store.advance("t", dt.datetime(2023, 1, 1), 5)
     assert store.get("t") == dt.datetime(2024, 1, 10, 11, 58, 30)
     assert store.total_rows("t") == 128
+    # watermarks round-trip exact to the microsecond
+    store.advance("t", dt.datetime(2024, 1, 10, 12, 0, 0, 123456), 1)
+    assert store.get("t") == dt.datetime(2024, 1, 10, 11, 58, 30, 123456)
+    # a crash after writing state-N but before the pointer swap, and a
+    # leftover pointer tmp file, leave readers on the committed state
+    wm = tmp_path / "wm"
+    committed = (wm / "CURRENT").read_text()
+    version = int(committed.rsplit("-", 1)[1])
+    (wm / f"state-{version + 1:08d}").write_text('{"tables": {}}')
+    (wm / "CURRENT.tmp").write_text(f"state-{version + 1:08d}")
+    assert store.get("t") == dt.datetime(2024, 1, 10, 11, 58, 30, 123456)
+    assert store.total_rows("t") == 129
+    # the next advance overwrites the orphan and keeps the other tables
+    store.advance("u", dt.datetime(2024, 1, 11), 7)
+    assert store.get("t") == dt.datetime(2024, 1, 10, 11, 58, 30, 123456)
+    assert store.get("u") == dt.datetime(2024, 1, 10, 23, 58, 30)
+    # one previous state is retained, older ones dropped
+    assert sorted(p.name for p in wm.iterdir() if p.name.startswith("state-")) == [
+        f"state-{version:08d}", f"state-{version + 1:08d}"]
+
+
+def test_watermark_store_launches_no_spark_jobs(spark, tmp_path, jobs_launched):
+    store = WatermarkStore(spark, str(tmp_path / "wm"))
+    _, n = jobs_launched(spark.range(3).count)
+    assert n >= 1  # the counter sees jobs
+    for call, args in (
+        (store.get, ("t",)),
+        (store.advance, ("t", dt.datetime(2024, 1, 10), 5)),
+        (store.advance, ("t", dt.datetime(2024, 1, 11), 6)),
+        (store.get, ("t",)),
+        (store.total_rows, ("t",)),
+    ):
+        _, n = jobs_launched(call, *args)
+        assert n == 0, f"{call.__name__}{args} launched {n} Spark jobs"
+    assert store.total_rows("t") == 11
+
+
+def test_watermark_store_rescans_state_of_earlier_parquet_layout(spark, tmp_path):
+    """A ``CURRENT`` naming a parquet state directory reads as empty (one
+    re-scan from the epoch); the next advance commits JSON state after it
+    and retention drops the old directory."""
+    wm = tmp_path / "wm"
+    (wm / "state-00000003").mkdir(parents=True)
+    (wm / "state-00000003" / "part-0.parquet").write_bytes(b"")
+    (wm / "CURRENT").write_text("state-00000003")
+    store = WatermarkStore(spark, str(wm))
+    assert store.get("t") == DEFAULT_EPOCH - dt.timedelta(seconds=90)
+    store.advance("t", dt.datetime(2024, 1, 10), 5)
+    store.advance("t", dt.datetime(2024, 1, 11), 5)
+    assert (wm / "CURRENT").read_text() == "state-00000005"
+    assert not (wm / "state-00000003").exists()
+    assert store.get("t") == dt.datetime(2024, 1, 10, 23, 58, 30)
+    assert store.total_rows("t") == 10
 
 
 def test_two_cycles_converge_to_full_recompute(spark, sf_dir, pipe):

@@ -291,3 +291,44 @@ def test_scd2_successor_start_overrides_source_end(spark):
     out = scd2_apply_versions(existing, updates, keys=["entity_id"], ts_col="ts")
     got = _rows(out, "ts", "version_ended_at", "is_current_version")
     assert got == [(_t(1), _t(3), False), (_t(3), None, True)]
+
+
+_FIDELITY_DDL = "id long, ts timestamp_ntz, flag boolean, x double"
+
+
+def test_sink_stores_schema_and_counts_rows_without_spark_jobs(
+        spark, tmp_path, jobs_launched):
+    """write() keeps the written schema as commit metadata and counts
+    rows from the parquet footers; read() of a committed snapshot
+    launches no Spark job and returns the written schema."""
+    import os
+
+    from etl_pipe_spark.operators.merge import ParquetMergeSink
+
+    df = spark.createDataFrame([
+        (1, dt.datetime(2024, 1, 10, 12, 0, 0, 123456), True, 1.5),
+        (2, None, False, float("nan")),
+        (3, dt.datetime(2024, 1, 11), None, None),
+    ], _FIDELITY_DDL)
+    sink = ParquetMergeSink(spark, str(tmp_path / "t"), _FIDELITY_DDL)
+    assert sink.write(df) == 3
+    snap = os.path.join(sink.path, sink.current_snapshot())
+    assert "_meta_spark_schema" in os.listdir(snap)
+
+    out, n = jobs_launched(sink.read)
+    assert n == 0, f"read() launched {n} Spark jobs"
+    assert out.schema == df.schema
+    assert sorted(map(str, out.collect())) == sorted(map(str, df.collect()))
+
+    # a snapshot committed without the schema metadata (the earlier
+    # layout) still reads, by schema inference
+    os.remove(os.path.join(snap, "_meta_spark_schema"))
+    out = sink.read()
+    assert out.schema == df.schema
+    assert sorted(map(str, out.collect())) == sorted(map(str, df.collect()))
+
+    # multi-file and empty snapshots: the footer count is the row count
+    many = spark.range(0, 1000, numPartitions=7).selectExpr("id", "id * 0.5 AS x")
+    sink2 = ParquetMergeSink(spark, str(tmp_path / "t2"), "id long, x double")
+    assert sink2.write(many) == sink2.read().count() == 1000
+    assert sink2.write(many.limit(0)) == sink2.read().count() == 0

@@ -10,6 +10,7 @@ re-proving equivalence after an optimization touches a query.
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 import traceback
@@ -20,21 +21,13 @@ sys.path.insert(0, os.path.join(ROOT, "tests"))
 
 
 def main() -> None:
-    argv = sys.argv[1:]
     sf_dir = "/root/testdata/sf0.01"
-    names: list[str] = []
-    i = 0
-    while i < len(argv):
-        a = argv[i]
-        if a.startswith("--sf"):
-            if "=" in a:
-                sf_dir = a.split("=", 1)[1]
-            else:  # space-separated form: --sf DIR
-                i += 1
-                sf_dir = argv[i]
-        elif not a.startswith("--"):
-            names.append(a)
-        i += 1
+    ap = argparse.ArgumentParser(
+        description="Oracle re-verification of the named queries.", allow_abbrev=False)
+    ap.add_argument("names", nargs="*")
+    ap.add_argument("--sf", default=sf_dir, metavar="DIR")
+    args = ap.parse_intermixed_args()
+    sf_dir, names = args.sf, args.names
 
     import __spark_entry__ as entrymod
     from oracle_utils import compare, compare_pandas, duckdb_connect

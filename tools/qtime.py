@@ -12,6 +12,7 @@ comparable to the bench's per-query column.
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 import time
@@ -22,21 +23,12 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def main() -> None:
-    argv = sys.argv[1:]
-    runs = 3
-    args: list[str] = []
-    i = 0
-    while i < len(argv):
-        a = argv[i]
-        if a.startswith("--runs"):
-            if "=" in a:
-                runs = int(a.split("=", 1)[1])
-            else:  # space-separated form: --runs N
-                i += 1
-                runs = int(argv[i])
-        elif not a.startswith("--"):
-            args.append(a)
-        i += 1
+    ap = argparse.ArgumentParser(
+        description="Best-of-N timing of the named queries.", allow_abbrev=False)
+    ap.add_argument("names", nargs="*")
+    ap.add_argument("--runs", type=int, default=3, metavar="N")
+    args = ap.parse_intermixed_args()
+    runs = args.runs
 
     from etl_pipe_spark.operators.ordering import release_rank_caches
     from etl_pipe_spark.plans.catalog import queries
@@ -59,7 +51,7 @@ def main() -> None:
         pass
     release_rank_caches()
 
-    for name in args:
+    for name in args.names:
         if name not in qs:
             print(f"{name}: NOT REGISTERED")
             continue
