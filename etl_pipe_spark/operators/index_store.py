@@ -33,9 +33,10 @@ and Bloom-filter dedup paths.
 
 Every mutation is ATOMIC and concurrent-append-safe (round 8): data
 files land under ``<table>/epoch=N`` hive directories invisible to
-readers until one ``os.replace`` of the ``COMMITTED`` pointer (which
-carries the meta) publishes them, and the epoch slot is claimed by an
-exclusive-mkdir CAS first — see the commit-protocol section below.
+readers until the ``COMMITTED`` pointer (which carries the meta)
+publishes them, and the epoch slot is claimed first — the engine's
+commit protocol (operators/commit.py), applied to append-only tables
+in the section below.
 
 Reference stake: SURVEY §2.12 similarity family (driver-mandated
 extension); the reference engine has no index artifacts at all.
@@ -46,11 +47,11 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import time
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from . import commit
 from .ann import centroid_matrix, ivf_assign_vectorized
 from .pq import (KSUB, M_SUB, ivfpq_adc_topk, pq_codebooks_deterministic,
                  pq_encode_assign)
@@ -70,41 +71,23 @@ _ROWS_PER_CODE_FILE = 250_000
 def _n_code_files(n_rows: int, floor: int = 8) -> int:
     return max(floor, -(-int(n_rows) // _ROWS_PER_CODE_FILE))
 
-# Grace window before a crashed appender's claim may be reclaimed —
-# the ParquetMergeSink convention (operators/merge.py).
-STALE_AFTER_S = 3600.0
-
 
 def _p(path: str, *parts: str) -> str:
     return os.path.join(path, *parts)
 
 
 # ---------------------------------------------------------------------------
-# Commit protocol shared by the three stores (round 8, the r7 verdict's
-# item 4): epoch-partitioned data + CAS claim + atomic pointer.
-#
-# The r7 appends wrote data rows, then overwrote ``meta`` as a separate
-# non-atomic step — a crash between the two left appended codes with a
-# stale n_vectors, a crash between the LSH ``bands`` and ``shingles``
-# writes left candidates with no verify sets, and two concurrent
-# appends could interleave.  This protocol makes a mutation atomic the
-# same way ParquetMergeSink does (operators/merge.py:181-262), adapted
-# for APPEND-ONLY tables where versioned full snapshots would re-write
-# history:
+# The commit protocol (operators/commit.py) for APPEND-ONLY tables, where
+# versioned full snapshots would re-write history (round 8):
 #
 # * every mutation writes its data files under ``<table>/epoch=N/`` —
 #   an ordinary Hive partition directory, so readers discover an
 #   ``epoch`` column and a ``.filter(epoch <= committed)`` makes
 #   uncommitted (torn) epochs invisible via partition pruning;
-# * the epoch slot is CLAIMED first by exclusive ``os.mkdir`` of a
-#   ``_claim-epoch-N`` marker (CAS: the loser of a concurrent-append
-#   race raises ConcurrentAppendError BEFORE writing any data, and a
-#   claimant that crashed is reclaimed only once its claim is
-#   ``stale_after_s`` old AND still uncommitted, after purging any
-#   orphan data it left in the epoch directory);
-# * the COMMIT is one ``os.replace`` of the ``COMMITTED`` pointer file
-#   carrying the epoch number and the store's meta — data and meta
-#   become visible together or not at all.
+# * the claimed slot is a ``_claim-epoch-N`` marker directory; a
+#   reclaimed slot's orphan epoch data is purged before writing;
+# * the ``COMMITTED`` pointer is JSON carrying the epoch number and the
+#   store's meta — data and meta become visible together or not at all.
 # ---------------------------------------------------------------------------
 
 _POINTER = "COMMITTED"
@@ -126,62 +109,29 @@ def _tiny_table(spark: SparkSession, data: list, schema: str) -> DataFrame:
         spark.sparkContext.parallelize(data, 1), schema)
 
 
-class ConcurrentAppendError(RuntimeError):
-    """Another appender holds this epoch's slot (live claim) or already
-    committed it.  Re-read the index meta and retry — the next epoch
-    number comes from the NEW committed pointer."""
+ConcurrentAppendError = commit.CommitConflict
 
 
 def _read_committed(path: str) -> dict | None:
-    try:
-        with open(_p(path, _POINTER)) as f:
-            return json.load(f)
-    except FileNotFoundError:
-        return None
+    text = commit.read_pointer(_p(path, _POINTER))
+    return None if text is None else json.loads(text)
 
 
-def _claim_epoch(path: str, epoch: int, tables: tuple[str, ...],
-                 stale_after_s: float = STALE_AFTER_S) -> str:
-    """CAS-claim the epoch slot; purge any orphan data a crashed
-    claimant left under the tables' epoch directories (safe: the claim
-    is exclusive, and the orphan was never committed)."""
+def _claim_epoch(path: str, epoch: int, tables: tuple[str, ...]) -> str:
+    """Claim the epoch slot; purge any orphan data a crashed claimant
+    left under the tables' epoch directories (safe: the claim is
+    exclusive, and the orphan was never committed)."""
     claim = _p(path, f"_claim-epoch-{epoch:08d}")
-    try:
-        os.mkdir(claim)
-    except FileExistsError:
-        committed = _read_committed(path)
-        committed_epoch = committed["epoch"] if committed else -1
-        age = time.time() - os.path.getmtime(claim)
-        reclaimed = False
-        if committed_epoch < epoch and age > stale_after_s:
-            shutil.rmtree(claim, ignore_errors=True)
-            try:
-                os.mkdir(claim)
-                reclaimed = True
-            except FileExistsError:
-                pass  # lost the re-claim race too
-        if not reclaimed:
-            raise ConcurrentAppendError(
-                f"epoch slot {epoch} already claimed (committed epoch "
-                f"{committed_epoch}, claim age {age:.0f}s); re-read the "
-                f"index meta and retry against the new committed state"
-            )
+    commit.claim(claim, epoch,
+                 lambda: (_read_committed(path) or {"epoch": -1})["epoch"])
     for t in tables:
-        seg = _p(path, t, f"epoch={epoch}")
-        if os.path.exists(seg):
-            shutil.rmtree(seg, ignore_errors=True)
+        shutil.rmtree(_p(path, t, f"epoch={epoch}"), ignore_errors=True)
     return claim
 
 
 def _commit_epoch(path: str, claim: str, meta: dict) -> None:
-    """Atomically publish the epoch's data + meta, then release the
-    claim.  A crash BEFORE the os.replace leaves the epoch invisible
-    (readers filter epoch <= previous pointer); after it, fully
-    visible with the meta that describes it."""
-    tmp = _p(path, f".{_POINTER}.tmp-{meta['epoch']:08d}")
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, _p(path, _POINTER))
+    """Publish the epoch's data + meta, then release the claim."""
+    commit.publish(_p(path, _POINTER), json.dumps(meta))
     shutil.rmtree(claim, ignore_errors=True)
 
 
@@ -197,24 +147,10 @@ def _epoch_filter(df: DataFrame, meta: dict) -> DataFrame:
 
 
 def _vacuum_epochs(path: str, tables: tuple[str, ...], base: int) -> None:
-    """Best-effort removal of replaced epoch directories (< base).
-    Runs AFTER the pointer swap, so a crash at any point here leaves
-    only invisible garbage — readers' epoch_base filter already
-    excludes everything this deletes; the next compaction (or a
-    re-run) sweeps the rest."""
+    """Remove replaced epoch directories (< base) after the pointer
+    swap; readers' epoch_base filter already excludes them."""
     for t in tables:
-        tdir = _p(path, t)
-        if not os.path.isdir(tdir):
-            continue
-        for name in os.listdir(tdir):
-            if not name.startswith("epoch="):
-                continue
-            try:
-                n = int(name.split("=", 1)[1])
-            except ValueError:
-                continue
-            if n < base:
-                shutil.rmtree(_p(tdir, name), ignore_errors=True)
+        commit.vacuum(_p(path, t), "epoch=", base)
 
 
 def _fresh_store(path: str) -> None:
@@ -406,7 +342,6 @@ def append_to_ivfpq_index(
     path: str,
     id_col: str = "vec_id",
     vec_col: str = "v",
-    stale_after_s: float = STALE_AFTER_S,
 ) -> dict:
     """Frozen-quantizer increment: encode NEW vectors with the saved
     centroids + codebooks and append their code rows — history is
@@ -418,11 +353,11 @@ def append_to_ivfpq_index(
     ``codes/epoch=N``, claimed by CAS and published by one atomic
     pointer swap — a crash at the worst point (data written, pointer
     not) leaves the epoch invisible to every reader, and a second
-    concurrent appender fails with :class:`ConcurrentAppendError`
+    concurrent appender fails with ``CommitConflict``
     before writing anything."""
     meta = load_index_meta(spark, path)
     epoch = meta["epoch"] + 1
-    claim = _claim_epoch(path, epoch, ("codes",), stale_after_s)
+    claim = _claim_epoch(path, epoch, ("codes",))
     cent_ids, cent_mat = _load_centroids(spark, path)
     cb = _load_codebooks(spark, path, meta["m"], meta["ksub"])
 
@@ -539,7 +474,6 @@ def append_to_sq8_index(
     path: str,
     id_col: str = "vec_id",
     vec_col: str = "v",
-    stale_after_s: float = STALE_AFTER_S,
 ) -> dict:
     """Frozen-quantizer increment: encode ONLY the batch with the SAVED
     (lo, scale) and append its code rows — history is never read or
@@ -552,7 +486,7 @@ def append_to_sq8_index(
 
     meta = load_index_meta(spark, path)
     epoch = meta["epoch"] + 1
-    claim = _claim_epoch(path, epoch, ("codes",), stale_after_s)
+    claim = _claim_epoch(path, epoch, ("codes",))
     lo, scale = _load_sq8_stats(spark, path)
     vecs = emb_new.select(F.col(id_col).alias("vec_id"),
                           F.col(vec_col).alias("v")).persist()
@@ -709,7 +643,6 @@ def append_to_lsh_index(
     spark: SparkSession,
     docs_new: DataFrame,
     path: str,
-    stale_after_s: float = STALE_AFTER_S,
     extra_meta: dict | None = None,
 ) -> dict:
     """Index increment: shingle/hash ONLY the new docs with the saved
@@ -724,7 +657,7 @@ def append_to_lsh_index(
 
     meta = load_index_meta(spark, path)
     epoch = meta["epoch"] + 1
-    claim = _claim_epoch(path, epoch, ("bands", "shingles"), stale_after_s)
+    claim = _claim_epoch(path, epoch, ("bands", "shingles"))
     rows = lsh_build_kernel(docs_new, n=meta["shingle_n"]).persist()
     n_new = rows.count()
     _write_lsh_rows(rows, path, epoch=epoch)
@@ -842,7 +775,6 @@ def append_to_bq_index(
     path: str,
     id_col: str = "vec_id",
     vec_col: str = "v",
-    stale_after_s: float = STALE_AFTER_S,
 ) -> dict:
     """Frozen-quantizer increment: pack ONLY the batch with the SAVED
     thresholds and append its code rows — history bytes are immutable,
@@ -853,7 +785,7 @@ def append_to_bq_index(
 
     meta = load_index_meta(spark, path)
     epoch = meta["epoch"] + 1
-    claim = _claim_epoch(path, epoch, ("codes",), stale_after_s)
+    claim = _claim_epoch(path, epoch, ("codes",))
     thresholds = _load_bq_thresholds(spark, path)
     vecs = emb_new.select(F.col(id_col).alias("vec_id"),
                           F.col(vec_col).alias("v")).persist()
@@ -890,13 +822,12 @@ def append_to_bq_index(
 # (tests pin probe/search equality before and after).
 # ---------------------------------------------------------------------------
 
-def compact_ivfpq_index(spark: SparkSession, path: str,
-                        stale_after_s: float = STALE_AFTER_S) -> dict:
+def compact_ivfpq_index(spark: SparkSession, path: str) -> dict:
     """Rewrite all committed code epochs into one, bucket-clustered
     like the build (one file per cell_bucket)."""
     meta = load_index_meta(spark, path)
     epoch = meta["epoch"] + 1
-    claim = _claim_epoch(path, epoch, ("codes",), stale_after_s)
+    claim = _claim_epoch(path, epoch, ("codes",))
     (
         _epoch_filter(spark.read.parquet(_p(path, "codes")), meta)
         .select("vec_id", "codes", "cent_id", "cell_bucket")
@@ -909,12 +840,11 @@ def compact_ivfpq_index(spark: SparkSession, path: str,
     return {"epoch": epoch, "n_vectors": meta["n_vectors"]}
 
 
-def compact_sq8_index(spark: SparkSession, path: str,
-                      stale_after_s: float = STALE_AFTER_S) -> dict:
+def compact_sq8_index(spark: SparkSession, path: str) -> dict:
     """Rewrite all committed code epochs into one, vec_id-clustered."""
     meta = load_index_meta(spark, path)
     epoch = meta["epoch"] + 1
-    claim = _claim_epoch(path, epoch, ("codes",), stale_after_s)
+    claim = _claim_epoch(path, epoch, ("codes",))
     (
         _epoch_filter(spark.read.parquet(_p(path, "codes")), meta)
         .select("vec_id", "codes")
@@ -926,8 +856,7 @@ def compact_sq8_index(spark: SparkSession, path: str,
     return {"epoch": epoch, "n_vectors": meta["n_vectors"]}
 
 
-def compact_bq_index(spark: SparkSession, path: str,
-                     stale_after_s: float = STALE_AFTER_S) -> dict:
+def compact_bq_index(spark: SparkSession, path: str) -> dict:
     """Rewrite all committed code epochs into one, vec_id-clustered
     (the SQ8 recipe — flat scan, so clustering serves point lookups
     and merges, not probe pruning)."""
@@ -935,7 +864,7 @@ def compact_bq_index(spark: SparkSession, path: str,
 
     meta = load_index_meta(spark, path)
     epoch = meta["epoch"] + 1
-    claim = _claim_epoch(path, epoch, ("codes",), stale_after_s)
+    claim = _claim_epoch(path, epoch, ("codes",))
     code_cols = [f"code{w}" for w in range(n_words(meta["dim"]))]
     (
         _epoch_filter(spark.read.parquet(_p(path, "codes")), meta)
@@ -948,8 +877,7 @@ def compact_bq_index(spark: SparkSession, path: str,
     return {"epoch": epoch, "n_vectors": meta["n_vectors"]}
 
 
-def compact_lsh_index(spark: SparkSession, path: str,
-                      stale_after_s: float = STALE_AFTER_S) -> dict:
+def compact_lsh_index(spark: SparkSession, path: str) -> dict:
     """Rewrite all committed band/shingle epochs into one — bands
     regain GLOBAL band_key range clustering (append epochs each sorted
     their own files; consolidation restores disjoint footer ranges
@@ -958,7 +886,7 @@ def compact_lsh_index(spark: SparkSession, path: str,
     move over the stored rows."""
     meta = load_index_meta(spark, path)
     epoch = meta["epoch"] + 1
-    claim = _claim_epoch(path, epoch, ("bands", "shingles"), stale_after_s)
+    claim = _claim_epoch(path, epoch, ("bands", "shingles"))
     (
         _epoch_filter(spark.read.parquet(_p(path, "bands")), meta)
         .select("doc_id", "band", "band_key")

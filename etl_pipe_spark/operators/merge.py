@@ -5,8 +5,7 @@ The reference upserts row-at-a-time through INSERT ... ON CONFLICT
 (existing snapshot, update batch) pairs — the shape Delta's MERGE
 compiles to; without Delta on the classpath we express the anti-join +
 union rewrite directly and a ParquetMergeSink handles
-read-apply-rewrite (non-atomic; flagged for production, SURVEY §7
-risk 3).
+read-apply-rewrite, committed atomically through operators/commit.py.
 
 All three merges are replay-idempotent: re-applying the same batch
 yields the same snapshot, which is what absorbs the watermark
@@ -17,14 +16,17 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Window as W, functions as F
 from pyspark.sql.types import StructType
 
+from . import commit
+
 # commit-metadata key holding the snapshot's Spark schema (JSON)
 _SCHEMA_KEY = "spark_schema"
+# committed snapshots retained (the current one and its predecessor)
+KEEP_SNAPSHOTS = 2
 
 
 def _latest_per_key(
@@ -176,39 +178,17 @@ def scd2_apply_versions(
     )
 
 
-class ConcurrentWriteError(RuntimeError):
-    """Another writer committed (or is committing) the same snapshot
-    version.  Optimistic-concurrency contract: re-read the sink and
-    re-derive the merge from the NEW current snapshot, then retry —
-    blindly retrying the same DataFrame would resurrect lost updates.
-    """
+ConcurrentWriteError = commit.CommitConflict
 
 
 class ParquetMergeSink:
-    """Versioned-snapshot merge sink with an atomic commit pointer
-    and optimistic concurrent-writer protection.
-
-    A miniature of the Delta/Iceberg commit protocol: each write lands
-    in a fresh ``snapshot-N`` directory, then a one-line ``CURRENT``
-    pointer file is swapped via ``os.replace`` (atomic on POSIX).  A
-    crash mid-write leaves an orphan snapshot directory but never a
-    torn table — readers always see the last committed snapshot.
-    ``keep_snapshots`` bounds retention (time travel over the retained
-    window).
-
-    CONCURRENT WRITERS (round 6): version N+1's commit slot is claimed
-    by exclusive creation of the ``snapshot-(N+1)`` directory itself
-    (``mkdir`` is atomic; the loser gets ``FileExistsError``) — the
-    same compare-and-swap Delta performs with its ``N.json`` commit
-    file.  Two writers that both read snapshot N therefore cannot both
-    commit N+1: the loser raises :class:`ConcurrentWriteError` BEFORE
-    writing any data, and must re-derive its merge from the winner's
-    snapshot (lost-update prevention, not just mutual exclusion).  A
-    writer that crashed after claiming the slot but before committing
-    leaves an orphan claim; a later writer reclaims it only once the
-    claim is ``stale_after_s`` old AND still uncommitted (the pointer
-    never advanced to it), so a live slow writer is never clobbered
-    within its grace window.
+    """Versioned-snapshot merge sink on the engine's commit protocol
+    (operators/commit.py): each write claims and fills a fresh
+    ``snapshot-N`` directory, then publishes it through the ``CURRENT``
+    pointer.  Readers always see the last committed snapshot; a second
+    writer of the same version raises ``CommitConflict`` before
+    writing data.  The last :data:`KEEP_SNAPSHOTS` snapshots are
+    retained (time travel over that window).
 
     BOOKKEEPING WITHOUT SPARK JOBS: ``write`` stores the written
     DataFrame's ``schema.json()`` as commit metadata (``_meta_*``
@@ -220,23 +200,20 @@ class ParquetMergeSink:
     files' parquet footers rather than re-reading the snapshot.
     """
 
-    def __init__(self, spark, path: str, schema_ddl: str, keep_snapshots: int = 2,
-                 stale_after_s: float = 3600.0):
+    def __init__(self, spark, path: str, schema_ddl: str):
         self.spark = spark
         self.path = path
         self.schema_ddl = schema_ddl
-        self.keep_snapshots = keep_snapshots
-        self.stale_after_s = stale_after_s
 
     def _pointer(self) -> str:
         return os.path.join(self.path, "CURRENT")
 
     def current_snapshot(self) -> str | None:
-        try:
-            with open(self._pointer()) as f:
-                return f.read().strip() or None
-        except FileNotFoundError:
-            return None
+        return (commit.read_pointer(self._pointer()) or "").strip() or None
+
+    def _version(self) -> int:
+        snap = self.current_snapshot()
+        return int(snap.rsplit("-", 1)[1]) if snap else 0
 
     def read(self) -> DataFrame:
         snap = self.current_snapshot()
@@ -248,44 +225,13 @@ class ParquetMergeSink:
             reader = reader.schema(StructType.fromJson(json.loads(schema)))
         return reader.parquet(os.path.join(self.path, snap))
 
-    def _claim_slot(self, version: int, new_snap: str) -> str:
-        """CAS: atomically claim the version slot by creating its
-        snapshot directory exclusively.  Raises ConcurrentWriteError
-        when another writer holds a live or committed claim."""
-        import time
-
-        snap_dir = os.path.join(self.path, new_snap)
-        try:
-            os.mkdir(snap_dir)
-            return snap_dir
-        except FileExistsError:
-            committed = self.current_snapshot()
-            committed_v = (
-                int(committed.rsplit("-", 1)[1]) if committed else 0
-            )
-            age = time.time() - os.path.getmtime(snap_dir)
-            if committed_v < version and age > self.stale_after_s:
-                # crashed claimant: uncommitted and past the grace
-                # window — reclaim the slot (rmtree then re-claim
-                # exclusively, so two reclaimers still race safely).
-                shutil.rmtree(snap_dir, ignore_errors=True)
-                try:
-                    os.mkdir(snap_dir)
-                    return snap_dir
-                except FileExistsError:
-                    pass
-            raise ConcurrentWriteError(
-                f"snapshot slot {new_snap} already claimed "
-                f"(committed version {committed_v}, claim age {age:.0f}s); "
-                f"re-read the sink and re-derive the merge before retrying"
-            )
-
     def write(self, df: DataFrame, meta: dict[str, str] | None = None) -> int:
-        snap = self.current_snapshot()
-        version = int(snap.rsplit("-", 1)[1]) + 1 if snap else 1
+        version = self._version() + 1
         new_snap = f"snapshot-{version:08d}"
+        snap_dir = os.path.join(self.path, new_snap)
         os.makedirs(self.path, exist_ok=True)
-        snap_dir = self._claim_slot(version, new_snap)
+        # the snapshot directory itself is the claimed slot
+        commit.claim(snap_dir, version, self._version)
         # append, not overwrite: overwrite DELETES the directory before
         # rewriting it, which would momentarily release the CAS claim;
         # the freshly claimed slot is empty, so append is equivalent.
@@ -298,11 +244,7 @@ class ParquetMergeSink:
         for key, value in {**(meta or {}), _SCHEMA_KEY: df.schema.json()}.items():
             with open(os.path.join(snap_dir, f"_meta_{key}"), "w") as f:
                 f.write(value)
-        # commit: write pointer sideways, atomically replace
-        tmp = self._pointer() + f".tmp-{new_snap}"
-        with open(tmp, "w") as f:
-            f.write(new_snap)
-        os.replace(tmp, self._pointer())
+        commit.publish(self._pointer(), new_snap)
         # row count from the data files' footers: no Spark job re-reads
         # the snapshot (Spark's reader also skips the _/. files)
         rows = sum(
@@ -310,7 +252,7 @@ class ParquetMergeSink:
             for name in os.listdir(snap_dir)
             if not name.startswith(("_", "."))
         )
-        self._vacuum(version)
+        commit.vacuum(self.path, "snapshot-", version - KEEP_SNAPSHOTS + 1)
         return rows
 
     def current_meta(self, key: str) -> str | None:
@@ -324,15 +266,3 @@ class ParquetMergeSink:
                 return f.read()
         except FileNotFoundError:
             return None
-
-    def _vacuum(self, current_version: int) -> None:
-        """Drop snapshots older than the retention window."""
-        cutoff = current_version - self.keep_snapshots
-        for name in os.listdir(self.path):
-            if name.startswith("snapshot-"):
-                try:
-                    v = int(name.rsplit("-", 1)[1])
-                except ValueError:
-                    continue
-                if v <= cutoff:
-                    shutil.rmtree(os.path.join(self.path, name), ignore_errors=True)

@@ -1,9 +1,10 @@
 """Streaming LSH-index maintenance: the foreachBatch glue that keeps a
 persisted near-dup index current with exactly-once semantics.
 
-Composes the epoch-committed LSH store (operators/index_store.py —
-CAS-claimed ``epoch=N`` data dirs + one atomic ``COMMITTED`` pointer
-swap) with Structured Streaming's replay contract, the same shape as
+Composes the epoch-committed LSH store (operators/index_store.py on
+the commit protocol of operators/commit.py — claimed ``epoch=N`` data
+dirs + one atomic ``COMMITTED`` pointer swap) with Structured
+Streaming's replay contract, the same shape as
 :class:`~..streaming.rollup.RollupMaintainer` for aggregates:
 
 * each micro-batch of new documents appends its band + shingle rows
@@ -29,8 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.index_store import (
-    STALE_AFTER_S, _read_committed, append_to_lsh_index)
+from ..operators.index_store import _read_committed, append_to_lsh_index
 
 _EPOCH_KEY = "last_stream_epoch"
 
@@ -42,11 +42,9 @@ class LshIndexMaintainer:
     the maintainer only appends.  ``docs`` frames carry (doc_id, text).
     """
 
-    def __init__(self, spark: SparkSession, path: str,
-                 stale_after_s: float = STALE_AFTER_S):
+    def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
-        self.stale_after_s = stale_after_s
 
     def last_epoch(self) -> int:
         meta = _read_committed(self.path)
@@ -59,11 +57,8 @@ class LshIndexMaintainer:
         epoch was already applied (replay no-op)."""
         if epoch_id <= self.last_epoch():
             return False
-        append_to_lsh_index(
-            self.spark, docs, self.path,
-            stale_after_s=self.stale_after_s,
-            extra_meta={_EPOCH_KEY: int(epoch_id)},
-        )
+        append_to_lsh_index(self.spark, docs, self.path,
+                            extra_meta={_EPOCH_KEY: int(epoch_id)})
         return True
 
     def foreach_batch(self, select_fn=None):

@@ -26,17 +26,11 @@ from __future__ import annotations
 import datetime as dt
 import json
 import os
-import shutil
+
+from ..operators import commit
 
 DEFAULT_EPOCH = dt.datetime(2020, 1, 1)
 DEFAULT_OVERLAP_SEC = 90  # reference config.py:29 OVERLAP_SEC
-
-
-def _write_synced(path: str, text: str) -> None:
-    with open(path, "w") as f:
-        f.write(text)
-        f.flush()
-        os.fsync(f.fileno())
 
 
 class WatermarkStore:
@@ -52,11 +46,7 @@ class WatermarkStore:
         return os.path.join(self.path, "CURRENT")
 
     def _current_snapshot(self) -> str | None:
-        try:
-            with open(self._pointer()) as f:
-                return f.read().strip() or None
-        except FileNotFoundError:
-            return None
+        return (commit.read_pointer(self._pointer()) or "").strip() or None
 
     def _read(self) -> dict[str, dict]:
         """Committed state: ``{table_name: {"last_fetched_at": iso,
@@ -86,10 +76,10 @@ class WatermarkStore:
         accumulating the total_rows_ever counter (extract.py:40-47).
 
         Commit is crash-safe: the new state lands in a versioned
-        ``state-N`` file, fsynced, and an atomic pointer swap publishes
-        it (same protocol as ParquetMergeSink) — a crash mid-advance
-        can never wipe the previous watermarks and reset every flow to
-        the 2020 epoch.
+        ``state-N`` file, fsynced, and the commit protocol's pointer
+        swap publishes it (operators/commit.py; single writer, so no
+        claim) — a crash mid-advance can never wipe the previous
+        watermarks and reset every flow to the 2020 epoch.
         """
         if max_ts_processed is None:
             return  # empty batch: watermark must not move
@@ -108,24 +98,12 @@ class WatermarkStore:
         version = int(snap.rsplit("-", 1)[1]) + 1 if snap else 1
         new_snap = f"state-{version:08d}"
         os.makedirs(self.path, exist_ok=True)
-        _write_synced(os.path.join(self.path, new_snap),
-                      json.dumps({"tables": state}, sort_keys=True))
-        tmp = self._pointer() + ".tmp"
-        _write_synced(tmp, new_snap)
-        os.replace(tmp, self._pointer())
-        # retain one previous state for post-mortems, drop older
-        for name in os.listdir(self.path):
-            if name.startswith("state-"):
-                try:
-                    v = int(name.rsplit("-", 1)[1])
-                except ValueError:
-                    continue
-                if v <= version - 2:
-                    old = os.path.join(self.path, name)
-                    if os.path.isdir(old):  # earlier parquet layout
-                        shutil.rmtree(old, ignore_errors=True)
-                    else:
-                        os.remove(old)
+        commit.write_synced(os.path.join(self.path, new_snap),
+                            json.dumps({"tables": state}, sort_keys=True))
+        commit.publish(self._pointer(), new_snap)
+        # retain one previous state for post-mortems, drop older (a
+        # directory of the earlier parquet layout included)
+        commit.vacuum(self.path, "state-", version - 1)
 
     def total_rows(self, table_name: str) -> int:
         row = self._read().get(table_name)

@@ -18,6 +18,7 @@ from etl_pipe_spark.operators.index_store import (
     append_to_ivfpq_index, build_ivfpq_index, load_index_meta,
     search_ivfpq_index)
 from etl_pipe_spark.sources.catalog import load_table
+from tests.commit_faults import backdate_epoch_claims
 
 
 @pytest.fixture(scope="module")
@@ -301,7 +302,8 @@ def test_lsh_torn_append_invisible_then_recovered(
     with pytest.raises(IS.ConcurrentAppendError):
         IS.append_to_lsh_index(spark, batch, path)
     # ...until the claim is stale; the retry must not duplicate rows
-    out = IS.append_to_lsh_index(spark, batch, path, stale_after_s=0.0)
+    backdate_epoch_claims(path)
+    out = IS.append_to_lsh_index(spark, batch, path)
     assert out["appended"] == 1
     meta2 = IS.load_index_meta(spark, path)
     assert meta2["epoch"] == meta0["epoch"] + 1
@@ -347,7 +349,8 @@ def test_lsh_crash_between_bands_and_shingles_writes(
     assert src["doc_id"] in hits          # history intact
 
     monkeypatch.setattr(IS, "_write_lsh_rows", real_write)
-    out = IS.append_to_lsh_index(spark, batch, path, stale_after_s=0.0)
+    backdate_epoch_claims(path)
+    out = IS.append_to_lsh_index(spark, batch, path)
     assert out["appended"] == 1
     bands = spark.read.parquet(f"{path}/bands")
     assert bands.filter(F.col("doc_id") == 9_000_001).count() == 4
@@ -388,7 +391,8 @@ def test_ivfpq_torn_append_invisible_then_recovered(
     monkeypatch.setattr(IS, "_commit_epoch", real_commit)
     with pytest.raises(IS.ConcurrentAppendError):
         IS.append_to_ivfpq_index(spark, batch, path)
-    out = IS.append_to_ivfpq_index(spark, batch, path, stale_after_s=0.0)
+    backdate_epoch_claims(path)
+    out = IS.append_to_ivfpq_index(spark, batch, path)
     assert out == {"appended": 1, "n_vectors": meta0["n_vectors"] + 1}
     codes = spark.read.parquet(f"{path}/codes")
     assert codes.filter(F.col("vec_id") == 10_000_000).count() == 1  # no dup
@@ -557,7 +561,8 @@ def test_lsh_compaction_crash_is_invisible_then_heals(
     assert hits1 == hits0
 
     monkeypatch.setattr(IS, "_commit_epoch", real_commit)
-    out = IS.compact_lsh_index(spark, path, stale_after_s=0.0)
+    backdate_epoch_claims(path)
+    out = IS.compact_lsh_index(spark, path)
     assert out["n_docs"] == meta0["n_docs"]
     hits2 = sorted((r["left_id"], round(r["jaccard"], 12)) for r in
                    IS.probe_lsh_index(spark, path, probe).collect())
@@ -706,7 +711,8 @@ def test_bq_torn_append_invisible_then_recovered(
     monkeypatch.setattr(IS, "_commit_epoch", real_commit)
     with pytest.raises(IS.ConcurrentAppendError):
         IS.append_to_bq_index(spark, batch, path)
-    out = IS.append_to_bq_index(spark, batch, path, stale_after_s=0.0)
+    backdate_epoch_claims(path)
+    out = IS.append_to_bq_index(spark, batch, path)
     assert out == {"appended": 1, "n_vectors": meta0["n_vectors"] + 1}
     codes = spark.read.parquet(f"{path}/codes")
     assert codes.filter(F.col("vec_id") == 10_000_000).count() == 1

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from etl_pipe_spark.operators import index_store as IS
 from etl_pipe_spark.sources.catalog import load_table
 from etl_pipe_spark.streaming.index_maintenance import LshIndexMaintainer
+from tests.commit_faults import backdate_epoch_claims
 
 
 def _corpus(spark, sf_dir):
@@ -66,7 +67,7 @@ def test_streamed_worst_point_crash_reapplies(spark, sf_dir, tmp_path,
     docs, hist, stream_docs = _corpus(spark, sf_dir)
     path = str(tmp_path / "idx")
     IS.build_lsh_index(spark, hist, path)
-    m = LshIndexMaintainer(spark, path, stale_after_s=0.0)
+    m = LshIndexMaintainer(spark, path)
     b0 = stream_docs.filter(F.col("doc_id") % 2 == 0)
     b1 = stream_docs.filter(F.col("doc_id") % 2 == 1)
     assert m.apply_batch(b0, 0) is True
@@ -78,8 +79,9 @@ def test_streamed_worst_point_crash_reapplies(spark, sf_dir, tmp_path,
     with pytest.raises(RuntimeError, match="simulated crash"):
         m.apply_batch(b1, 1)
     monkeypatch.setattr(IS, "_commit_epoch", real_commit)
+    backdate_epoch_claims(path)  # the crashed writer's claim is stale
 
-    m2 = LshIndexMaintainer(spark, path, stale_after_s=0.0)
+    m2 = LshIndexMaintainer(spark, path)
     assert m2.last_epoch() == 0            # epoch 1 never committed
     assert m2.apply_batch(b1, 1) is True   # re-delivery applies
     # no duplicate rows from the torn first attempt

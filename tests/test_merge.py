@@ -5,6 +5,7 @@ from __future__ import annotations
 import datetime as dt
 
 from etl_pipe_spark.operators.merge import insert_if_absent, scd2_apply_versions, upsert
+from tests.commit_faults import backdate as _backdate
 
 
 def _t(day, hour=0):
@@ -168,7 +169,7 @@ def test_sink_vacuum_retention(spark, tmp_path):
 
     from etl_pipe_spark.operators.merge import ParquetMergeSink
 
-    sink = ParquetMergeSink(spark, str(tmp_path / "t"), "id long", keep_snapshots=2)
+    sink = ParquetMergeSink(spark, str(tmp_path / "t"), "id long")
     for i in range(5):
         sink.write(spark.createDataFrame([(i,)], "id long"))
     snaps = sorted(d for d in os.listdir(sink.path) if d.startswith("snapshot-"))
@@ -205,18 +206,16 @@ def test_sink_concurrent_writer_loses_cas_before_writing_data(spark, tmp_path):
 def test_sink_stale_orphan_claim_is_reclaimed(spark, tmp_path):
     """A claimant that crashed after mkdir but before commit must not
     block the version slot forever: once the claim is older than
-    stale_after_s and still uncommitted, the next writer reclaims it."""
+    STALE_AFTER_S and still uncommitted, the next writer reclaims it."""
     import os
-    import time
 
     from etl_pipe_spark.operators.merge import ParquetMergeSink
 
-    sink = ParquetMergeSink(
-        spark, str(tmp_path / "t"), "id long, v string", stale_after_s=0.2)
+    sink = ParquetMergeSink(spark, str(tmp_path / "t"), "id long, v string")
     sink.write(spark.createDataFrame([(1, "a")], "id long, v string"))
     orphan = tmp_path / "t" / "snapshot-00000002"
     os.mkdir(orphan)
-    time.sleep(0.3)  # claim goes stale, pointer never advanced to it
+    _backdate(orphan)  # claim goes stale, pointer never advanced to it
     sink.write(spark.createDataFrame([(2, "b")], "id long, v string"))
     assert sink.current_snapshot() == "snapshot-00000002"
     assert sorted((r.id, r.v) for r in sink.read().collect()) == [(2, "b")]
@@ -226,18 +225,22 @@ def test_sink_committed_snapshot_is_never_reclaimed(spark, tmp_path):
     """The stale-claim path must only fire for UNCOMMITTED claims: a
     slot the pointer already advanced to is a committed table version
     and raises ConcurrentWriteError regardless of age."""
+    import os
+
+    from etl_pipe_spark.operators import commit
     from etl_pipe_spark.operators.merge import (
         ConcurrentWriteError, ParquetMergeSink)
 
-    sink = ParquetMergeSink(
-        spark, str(tmp_path / "t"), "id long, v string", stale_after_s=0.0)
+    sink = ParquetMergeSink(spark, str(tmp_path / "t"), "id long, v string")
     sink.write(spark.createDataFrame([(1, "a")], "id long, v string"))
+    slot = os.path.join(sink.path, "snapshot-00000001")
+    _backdate(slot)
     # a writer whose pre-claim read was stale (table looked empty)
     # targets v1 — the slot the pointer has already advanced to.  The
     # claim re-reads the pointer and must refuse even at age > stale.
     import pytest as _pytest
     with _pytest.raises(ConcurrentWriteError):
-        sink._claim_slot(1, "snapshot-00000001")
+        commit.claim(slot, 1, sink._version)
     assert [(r.id, r.v) for r in sink.read().collect()] == [(1, "a")]
 
 

@@ -14,6 +14,7 @@ from etl_pipe_spark.operators.merge import ParquetMergeSink
 from etl_pipe_spark.plans.maintenance_plans import COHORTS, _partial_rollup
 from etl_pipe_spark.sources.catalog import load_table
 from etl_pipe_spark.streaming.rollup import RollupMaintainer
+from tests.commit_faults import backdate
 
 SCHEMA = ("cohort bigint, status string, cnt bigint, "
           "sum_dec decimal(28,4), max_dec decimal(18,4)")
@@ -67,8 +68,7 @@ def test_worst_point_crash_reapplies_cleanly(spark, sf_dir, tmp_path):
     last_epoch still reports the previous epoch and the re-delivered
     batch applies (stale-claim reclaim inside the sink)."""
     orders = load_table(spark, sf_dir, "orders")
-    sink = ParquetMergeSink(spark, str(tmp_path / "rollup"), SCHEMA,
-                            stale_after_s=0.0)
+    sink = ParquetMergeSink(spark, str(tmp_path / "rollup"), SCHEMA)
     m = RollupMaintainer(sink, ["cohort", "status"], MERGES)
     b0, b1 = _batches(orders, n=2)
     m.apply_batch(_partial_rollup(b0), 0)
@@ -86,6 +86,7 @@ def test_worst_point_crash_reapplies_cleanly(spark, sf_dir, tmp_path):
     merged.write.mode("append").parquet(orphan)
     with open(os.path.join(orphan, "_meta_last_epoch"), "w") as f:
         f.write("1")
+    backdate(orphan)  # the dead writer's claim is past the grace window
 
     # Restart: the pointer never advanced, so epoch 1 is NOT applied.
     m2 = RollupMaintainer(sink, ["cohort", "status"], MERGES)
