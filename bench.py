@@ -99,8 +99,9 @@ def main() -> None:
 
     # Best-of-2 per query: single-shot local[N] timings carry 5-10x
     # scheduler/GC noise; the minimum reflects the plan's real cost.
-    from etl_pipe_spark.operators.ordering import release_rank_caches
-
+    # Each call goes through the registry wrapper, whose
+    # scope.release() drops the previous run's caches before the build
+    # — run 2 never reads run 1's frames through Spark's CacheManager.
     timings: dict[str, float] = {}
     for name in qs:  # the FULL registry, registration order
         best = float("inf")
@@ -108,13 +109,6 @@ def main() -> None:
             t0 = time.perf_counter()
             qs[name](spark, SF_DIR).write.mode("overwrite").format("noop").save()
             best = min(best, time.perf_counter() - t0)
-            # drain INSIDE the loop: run 2 must not read run 1's
-            # still-persisted rank frames through Spark's CacheManager
-            # (canonicalized-plan matching) — that reports a warm-cache
-            # time, understating the plan's real cost.  The caches are
-            # performance-only (operators/ordering.py), so the drain is
-            # safe at any point.
-            release_rank_caches()
         timings[name] = round(best, 3)
 
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]

@@ -28,6 +28,8 @@ import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, Window as W, functions as F
 
+from . import scope
+
 # Worker closures here reference module-level helpers (_batch_matrix);
 # cloudpickle serializes those by reference, which requires this
 # package on the WORKER's sys.path — not guaranteed when the driver
@@ -460,16 +462,14 @@ def ann_probe_topk_blas(
     vectorized assignment uses.
     """
     assign = ranked.filter(F.col("rn") == 1).select(id_col, "cent_id")
-    # persisted for the function's lifetime: the size probe and every
-    # chunk collect read it, and rebuilding it re-runs the quantizer's
-    # corpus pass each time (measured 3x query-side scans unpersisted)
-    q_df = (
+    # cached for the probe: the size probe and every chunk collect
+    # read it, and rebuilding it re-runs the quantizer's corpus pass
+    # each time (measured 3x query-side scans uncached)
+    with scope.cached(
         ranked.filter((F.col(id_col) % every == 0) & (F.col("rn") <= nprobe))
         .join(emb.select(id_col, vec_col), id_col)
         .select(id_col, "cent_id", vec_col)
-        .persist()
-    )
-    try:
+    ) as q_df:
         n_rows, dim = q_df.agg(
             F.count(F.lit(1)), F.first(F.size(vec_col))).first()
         if not n_rows:  # no sampled queries at this corpus size/stride
@@ -494,8 +494,6 @@ def ann_probe_topk_blas(
                 _make_cell_scorer(qmap, top_k, id_col, vec_col,
                                   qblock=qblock),
                 _TOPK_SCHEMA))
-    finally:
-        q_df.unpersist()
     scored = parts[0]
     for p in parts[1:]:
         scored = scored.unionByName(p)

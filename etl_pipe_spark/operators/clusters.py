@@ -25,6 +25,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Observation, Window as W, functions as F
 
+from . import scope
+
 
 def connected_components(
     edges: DataFrame,
@@ -44,47 +46,45 @@ def connected_components(
     """
     # Symmetrize once; cache the (small relative to corpus) edge list —
     # it is re-joined every round.
-    sym = (
+    with scope.cached(
         edges.select(F.col(left).alias("src"), F.col(right).alias("dst"))
         .unionByName(
             edges.select(F.col(right).alias("src"), F.col(left).alias("dst"))
         )
         .distinct()
-        .cache()
-    )
-    labels = (
-        sym.select(F.col("src").alias("vertex_id"))
-        .distinct()
-        .withColumn("cluster_id", F.col("vertex_id"))
-    )
-    for round_no in range(max_rounds):
-        neighbor_min = (
-            sym.join(labels, sym.dst == labels.vertex_id)
-            .groupBy(F.col("src").alias("vertex_id"))
-            .agg(F.min("cluster_id").alias("nbr_min"))
+    ) as sym:
+        labels = (
+            sym.select(F.col("src").alias("vertex_id"))
+            .distinct()
+            .withColumn("cluster_id", F.col("vertex_id"))
         )
-        # localCheckpoint (eager) truncates the lineage each round —
-        # without it the label plan nests one more join per round and
-        # Catalyst re-analysis cost grows superlinearly with rounds.
-        # The convergence count rides the checkpoint's own job via
-        # observe(): one Spark job per round, no second aggregate pass.
-        obs = Observation(f"cc_round_{round_no}")
-        new_labels = (
-            labels.join(neighbor_min, "vertex_id", "left")
-            .select(
-                "vertex_id",
-                F.least(
-                    F.col("cluster_id"), F.coalesce(F.col("nbr_min"), F.col("cluster_id"))
-                ).alias("cluster_id"),
-                (F.col("nbr_min") < F.col("cluster_id")).alias("__changed"),
+        for round_no in range(max_rounds):
+            neighbor_min = (
+                sym.join(labels, sym.dst == labels.vertex_id)
+                .groupBy(F.col("src").alias("vertex_id"))
+                .agg(F.min("cluster_id").alias("nbr_min"))
             )
-            .observe(obs, F.count_if(F.col("__changed")).alias("n"))
-            .localCheckpoint(eager=True)
-        )
-        labels = new_labels.drop("__changed")
-        if obs.get["n"] == 0:
-            break
-    sym.unpersist()
+            # localCheckpoint (eager) truncates the lineage each round —
+            # without it the label plan nests one more join per round and
+            # Catalyst re-analysis cost grows superlinearly with rounds.
+            # The convergence count rides the checkpoint's own job via
+            # observe(): one Spark job per round, no second aggregate pass.
+            obs = Observation(f"cc_round_{round_no}")
+            new_labels = (
+                labels.join(neighbor_min, "vertex_id", "left")
+                .select(
+                    "vertex_id",
+                    F.least(
+                        F.col("cluster_id"), F.coalesce(F.col("nbr_min"), F.col("cluster_id"))
+                    ).alias("cluster_id"),
+                    (F.col("nbr_min") < F.col("cluster_id")).alias("__changed"),
+                )
+                .observe(obs, F.count_if(F.col("__changed")).alias("n"))
+                .localCheckpoint(eager=True)
+            )
+            labels = new_labels.drop("__changed")
+            if obs.get["n"] == 0:
+                break
     return labels
 
 

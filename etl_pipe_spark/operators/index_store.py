@@ -51,7 +51,7 @@ import shutil
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from . import commit
+from . import commit, scope
 from .ann import centroid_matrix, ivf_assign_vectorized
 from .pq import (KSUB, M_SUB, ivfpq_adc_topk, pq_codebooks_deterministic,
                  pq_encode_assign)
@@ -289,51 +289,48 @@ def search_ivfpq_index(
     # The query frame is consumed twice (probe assignment here, the
     # kernel's own collect below); if the caller derived it from a
     # corpus-sized scan, re-deriving would re-pay that scan per
-    # action — persist the bounded query set for the call's lifetime.
-    q = queries.select(F.col(query_id_col).alias("vec_id"),
-                       F.col(vec_col).alias("v")).persist()
-    probe = ivf_assign_vectorized(q, cent_ids, cent_mat, nprobe=nprobe)
-    probe_rows = probe.collect()  # queries x nprobe — the bounded side
-    probed_cells = sorted({int(r["cent_id"]) for r in probe_rows})
-    buckets = sorted({c % meta["n_buckets"] for c in probed_cells})
+    # action — cache the bounded query set for the call.
+    with scope.cached(queries.select(F.col(query_id_col).alias("vec_id"),
+                                     F.col(vec_col).alias("v"))) as q:
+        probe = ivf_assign_vectorized(q, cent_ids, cent_mat, nprobe=nprobe)
+        probe_rows = probe.collect()  # queries x nprobe — the bounded side
+        probed_cells = sorted({int(r["cent_id"]) for r in probe_rows})
+        buckets = sorted({c % meta["n_buckets"] for c in probed_cells})
 
-    codes_df = (
-        _epoch_filter(spark.read.parquet(_p(path, "codes")), meta)
-        .filter(F.col("cell_bucket").isin(buckets))      # partition pruning
-        .filter(F.col("cent_id").isin(probed_cells))     # footer min/max
-    )
-    members = codes_df.select("vec_id", "cent_id", F.lit(1).alias("rn"))
-    # A query that is itself a corpus member already has its rn=1 row
-    # in `members` (same kernel, same saved centroids => same cell);
-    # emitting the probe's rn=1 row too would double-score that cell
-    # and inflate ranks.  The membership lookup is bounded: query ids
-    # against the already-pruned codes scan.
-    qids = [int(r["vec_id"]) for r in probe_rows if r["rn"] == 1]
-    member_qids = {
-        int(r["vec_id"])
-        for r in codes_df.filter(F.col("vec_id").isin(qids))
-        .select("vec_id").collect()
-    }
-    probes_df = _tiny_table(
-        spark,
-        [
-            (int(r["vec_id"]), int(r["cent_id"]), int(r["rn"]))
-            for r in probe_rows
-            if not (int(r["rn"]) == 1 and int(r["vec_id"]) in member_qids)
-        ],
-        "vec_id bigint, cent_id bigint, rn int",
-    )
-    ranked = members.unionByName(probes_df)
-    out_queries = q.withColumnRenamed("vec_id", "query_id")
-    try:
-        # the kernel collects the query set eagerly, so the cache can
-        # be released before returning: the result plan references
-        # only the codes scan and the driver-built LUT closures
+        codes_df = (
+            _epoch_filter(spark.read.parquet(_p(path, "codes")), meta)
+            .filter(F.col("cell_bucket").isin(buckets))      # partition pruning
+            .filter(F.col("cent_id").isin(probed_cells))     # footer min/max
+        )
+        members = codes_df.select("vec_id", "cent_id", F.lit(1).alias("rn"))
+        # A query that is itself a corpus member already has its rn=1 row
+        # in `members` (same kernel, same saved centroids => same cell);
+        # emitting the probe's rn=1 row too would double-score that cell
+        # and inflate ranks.  The membership lookup is bounded: query ids
+        # against the already-pruned codes scan.
+        qids = [int(r["vec_id"]) for r in probe_rows if r["rn"] == 1]
+        member_qids = {
+            int(r["vec_id"])
+            for r in codes_df.filter(F.col("vec_id").isin(qids))
+            .select("vec_id").collect()
+        }
+        probes_df = _tiny_table(
+            spark,
+            [
+                (int(r["vec_id"]), int(r["cent_id"]), int(r["rn"]))
+                for r in probe_rows
+                if not (int(r["rn"]) == 1 and int(r["vec_id"]) in member_qids)
+            ],
+            "vec_id bigint, cent_id bigint, rn int",
+        )
+        ranked = members.unionByName(probes_df)
+        out_queries = q.withColumnRenamed("vec_id", "query_id")
+        # the kernel collects the query set eagerly, so the cache can be
+        # released before returning: the result plan references only the
+        # codes scan and the driver-built LUT closures
         return ivfpq_adc_topk(
             codes_df.select("vec_id", "codes"), ranked, out_queries, cb,
             k=k, nprobe=nprobe)
-    finally:
-        q.unpersist()
 
 
 def append_to_ivfpq_index(
@@ -365,9 +362,8 @@ def append_to_ivfpq_index(
     # persisting it pins the increment's cost to the BATCH, not to
     # however expensive the caller's lineage is — measured 3.5x on a
     # 1M-corpus-derived 11k batch (75 s -> 21 s).
-    vecs = emb_new.select(F.col(id_col).alias("vec_id"),
-                          F.col(vec_col).alias("v")).persist()
-    try:
+    with scope.cached(emb_new.select(F.col(id_col).alias("vec_id"),
+                                     F.col(vec_col).alias("v"))) as vecs:
         n_new = vecs.count()
         # fused encode+assign — same one-pass, shuffle-free shape as
         # the build (see build_ivfpq_index)
@@ -379,8 +375,6 @@ def append_to_ivfpq_index(
             .write.partitionBy("cell_bucket").mode("append")
             .parquet(_p(path, "codes", f"epoch={epoch}"))
         )
-    finally:
-        vecs.unpersist()
     total = meta["n_vectors"] + n_new
     _commit_epoch(path, claim, {**meta, "epoch": epoch, "n_vectors": int(total)})
     return {"appended": n_new, "n_vectors": total}
@@ -488,17 +482,14 @@ def append_to_sq8_index(
     epoch = meta["epoch"] + 1
     claim = _claim_epoch(path, epoch, ("codes",))
     lo, scale = _load_sq8_stats(spark, path)
-    vecs = emb_new.select(F.col(id_col).alias("vec_id"),
-                          F.col(vec_col).alias("v")).persist()
-    try:
+    with scope.cached(emb_new.select(F.col(id_col).alias("vec_id"),
+                                     F.col(vec_col).alias("v"))) as vecs:
         n_new = vecs.count()
         (
             sq8_encode(vecs, lo, scale)
             .repartition(_n_code_files(n_new, floor=1), "vec_id")
             .write.mode("append").parquet(_p(path, "codes", f"epoch={epoch}"))
         )
-    finally:
-        vecs.unpersist()
     total = meta["n_vectors"] + n_new
     _commit_epoch(path, claim, {**meta, "epoch": epoch, "n_vectors": int(total)})
     return {"appended": n_new, "n_vectors": total}
@@ -541,15 +532,16 @@ def build_lsh_index(
         raise ValueError("build_lsh_index: empty document frame")
     _fresh_store(path)
     claim = _claim_epoch(path, 0, ("bands", "shingles"))
-    rows = lsh_build_kernel(docs, n=shingle_n).persist()
-    # n_docs = docs actually INDEXED: the kernel drops docs shorter
-    # than shingle_n tokens, so counting the raw input would over-count
-    # the rows present in the bands/shingles tables (r7 ADVICE).
-    n = rows.count()
-    if n == 0:
-        raise ValueError("build_lsh_index: no doc reaches shingle_n tokens")
-    _write_lsh_rows(rows, path, epoch=0)
-    rows.unpersist()
+    with scope.cached(lsh_build_kernel(docs, n=shingle_n)) as rows:
+        # n_docs = docs actually INDEXED: the kernel drops docs shorter
+        # than shingle_n tokens, so counting the raw input would
+        # over-count the rows present in the bands/shingles tables
+        # (r7 ADVICE).
+        n = rows.count()
+        if n == 0:
+            raise ValueError(
+                "build_lsh_index: no doc reaches shingle_n tokens")
+        _write_lsh_rows(rows, path, epoch=0)
     _commit_epoch(path, claim, {
         "epoch": 0, "epoch_base": 0, "n_docs": int(n),
         "shingle_n": int(shingle_n), "n_bands": int(N_BANDS),
@@ -602,11 +594,11 @@ def probe_lsh_index(
 
     meta = load_index_meta(spark, path)
     # The batch frame feeds BOTH the band join and the verify stage's
-    # right side; without a persist the Arrow shingle/md5/minhash
+    # right side; without a cache the Arrow shingle/md5/minhash
     # kernel would execute twice per probe (r7 ADVICE).  The count
-    # materializes the cache and sizes the pushdown below; the cache
-    # is released by the ContextCleaner with the returned plan.
-    batch_rows = lsh_build_kernel(batch_docs, n=meta["shingle_n"]).persist()
+    # materializes the cache and sizes the pushdown below; the
+    # returned plan reads it, so it lives until ``scope.release()``.
+    batch_rows = scope.cache(lsh_build_kernel(batch_docs, n=meta["shingle_n"]))
     n_batch = batch_rows.count()
     b = batch_rows.select(
         "doc_id", F.posexplode("band_keys").alias("band", "band_key")
@@ -658,10 +650,9 @@ def append_to_lsh_index(
     meta = load_index_meta(spark, path)
     epoch = meta["epoch"] + 1
     claim = _claim_epoch(path, epoch, ("bands", "shingles"))
-    rows = lsh_build_kernel(docs_new, n=meta["shingle_n"]).persist()
-    n_new = rows.count()
-    _write_lsh_rows(rows, path, epoch=epoch)
-    rows.unpersist()
+    with scope.cached(lsh_build_kernel(docs_new, n=meta["shingle_n"])) as rows:
+        n_new = rows.count()
+        _write_lsh_rows(rows, path, epoch=epoch)
     total = meta["n_docs"] + n_new
     # extra_meta rides the SAME pointer swap as the data (e.g. the
     # streaming maintainer's last-applied micro-batch epoch) — the
@@ -787,17 +778,14 @@ def append_to_bq_index(
     epoch = meta["epoch"] + 1
     claim = _claim_epoch(path, epoch, ("codes",))
     thresholds = _load_bq_thresholds(spark, path)
-    vecs = emb_new.select(F.col(id_col).alias("vec_id"),
-                          F.col(vec_col).alias("v")).persist()
-    try:
+    with scope.cached(emb_new.select(F.col(id_col).alias("vec_id"),
+                                     F.col(vec_col).alias("v"))) as vecs:
         n_new = vecs.count()
         (
             bq_pack_kernel(vecs, thresholds)
             .repartition(_n_code_files(n_new, floor=1), "vec_id")
             .write.mode("append").parquet(_p(path, "codes", f"epoch={epoch}"))
         )
-    finally:
-        vecs.unpersist()
     total = meta["n_vectors"] + n_new
     _commit_epoch(path, claim, {**meta, "epoch": epoch, "n_vectors": int(total)})
     return {"appended": n_new, "n_vectors": total}

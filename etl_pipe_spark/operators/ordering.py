@@ -59,44 +59,12 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
+from . import scope
+
 # Upper bound on the boundary-sample size: one min_by row per hash
 # bucket -> at most this many rows ever reach the driver, regardless
 # of corpus size.
 _SAMPLE_BUCKETS = 4096
-
-# Performance caches created by ranked_running_sum (and fellow
-# travellers like curriculum's phase frames) that a lazy result keeps
-# alive.  One entry per call; release_rank_caches() drains the list.
-_LIVE_RANK_CACHES: list[DataFrame] = []
-
-
-def track_rank_cache(df: DataFrame) -> DataFrame:
-    """Register an already-persisted frame for release_rank_caches()."""
-    _LIVE_RANK_CACHES.append(df)
-    return df
-
-
-def release_rank_caches(blocking: bool = False) -> int:
-    """Unpersist every tracked rank cache; returns how many.
-
-    Safe at ANY time: since the value-derived bucket rewrite the
-    tracked frames are pure performance caches — releasing one before
-    its consumers run only costs a recomputation of the same
-    deterministic plan (ranks cannot diverge; pinned by
-    tests/test_ordering_scale.py's early-release case).  Long-lived
-    sessions (benches, differential harnesses, the registry layer in
-    plans/catalog.py) drain between queries so caches never
-    accumulate."""
-    n = 0
-    while _LIVE_RANK_CACHES:
-        df = _LIVE_RANK_CACHES.pop()
-        try:
-            df.unpersist(blocking=blocking)
-            n += 1
-        except Exception:
-            pass
-    return n
-
 
 def _sorted_sample(df: DataFrame, key: Column) -> list[tuple]:
     """Collect <= _SAMPLE_BUCKETS order-key tuples, uniformly spread
@@ -228,16 +196,14 @@ def ranked_running_sum(
     # window re-derives ``df`` again when it materializes — for call
     # sites whose input is an unpersisted derivation (zorder's
     # interleave, curriculum's phase frames) the whole upstream
-    # pipeline executed twice.  Caching it runs the derivation once;
-    # tracked like every other rank cache, so harnesses drain it and
-    # early release only recomputes (the value-derived buckets keep
-    # correctness persist-independent).  Skipped when the caller
+    # pipeline executed twice.  Caching it runs the derivation once
+    # (query lifetime, operators/scope.py).  Skipped when the caller
     # already persisted the input (round 10, ADVICE r9): stacking a
     # second corpus-scale cache on an already-cached frame doubles
     # memory pressure for zero reuse benefit.
     lvl = df.storageLevel
     if not (lvl.useMemory or lvl.useDisk):
-        df = track_rank_cache(df.persist())
+        df = scope.cache(df)
 
     key = F.struct(*[c.alias(f"k{i}") for i, c in enumerate(order)])
     key_fields = df.select(key.alias("__key")).schema["__key"].dataType.fields
@@ -276,10 +242,9 @@ def ranked_running_sum(
     # function of row values, so the two consumers below agree even
     # when each re-evaluates the plan from scratch): `within` feeds
     # the row output and the per-bucket offsets aggregate; without the
-    # cache the upstream scan + window shuffle run twice.  TRACKED so
-    # long-lived sessions can drain via release_rank_caches() — at any
-    # time, early release only recomputes.
-    within = track_rank_cache(within.persist())
+    # cache the upstream scan + window shuffle run twice.  Query
+    # lifetime (operators/scope.py); early release only recomputes.
+    within = scope.cache(within)
     # one row per bucket; prefix-scan this b-row table (b = bucket
     # count, never data-scale) and broadcast the offsets back.  The
     # single-partition window is INTENTIONAL here — correct precisely

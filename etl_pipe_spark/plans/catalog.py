@@ -15,6 +15,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..operators import scope
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 
@@ -276,26 +278,14 @@ def _ordered() -> list[str]:
 
 
 def _with_cache_drain(fn: QueryFn) -> QueryFn:
-    """Drain tracked rank caches (operators/ordering.py) before each
-    registered query builds its plan.
-
-    The external driver harness consumes this dict and has no way to
-    call release_rank_caches() itself; without this seam a 50-query
-    verify session accumulates the perf caches of every rank-based
-    plan (curriculum alone tracks 4 per invocation).  Draining at the
-    NEXT query's build time is safe at any point since the
-    value-derived bucket rewrite — the caches are performance-only
-    (early release recomputes, never diverges;
-    tests/test_ordering_scale.py pins it), so even a harness that
-    interleaves builds and actions gets correct results.
-    """
+    """Release the previous query's caches (``scope.release()``)
+    before ``fn`` builds: the external driver harness consumes this
+    dict and cannot call ``release()`` itself."""
     import functools
-
-    from ..operators.ordering import release_rank_caches
 
     @functools.wraps(fn)
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        release_rank_caches()
+        scope.release()
         return fn(spark, sf_dir)
 
     return wrapped

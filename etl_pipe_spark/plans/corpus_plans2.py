@@ -56,6 +56,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window as W
 
 from ..functions import vectors as VX
+from ..operators import scope
 from ..sources.catalog import load_table
 from .catalog import register
 from ..functions.frames import local_frame
@@ -436,14 +437,11 @@ def logreg_quality_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fixed-point corpus stats (operators/logreg.standardize) — without
     # it, a corpus whose label boundary sits in a dense feature region
     # (the 1M sweep corpus) needs far more than 8 steps.
-    feats = standardize(raw, ["f_ntok", "f_ttr", "f_wlen"]).cache()
-    try:
-        fit = logreg_fit_gd(
-            feats, ["f_bias", "f_ntok", "f_ttr", "f_wlen"], "y",
-            lr=_LOGREG_LR, n_iters=_LOGREG_ITERS,
-        )
-    finally:
-        feats.unpersist()
+    feats = scope.cache(standardize(raw, ["f_ntok", "f_ttr", "f_wlen"]))
+    fit = logreg_fit_gd(
+        feats, ["f_bias", "f_ntok", "f_ttr", "f_wlen"], "y",
+        lr=_LOGREG_LR, n_iters=_LOGREG_ITERS,
+    )
     import math as _m
 
     losses = fit.losses
@@ -646,8 +644,7 @@ ORDER BY query_id, rnk
 
 
 @register("sq8_ann_rerank", oracle=_SQ8_ANN_ORACLE)
-def sq8_ann_rerank(spark: SparkSession, sf_dir: str,
-                   checkpoint: bool = True) -> DataFrame:
+def sq8_ann_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQ8 as a USABLE index: asymmetric search (raw float queries vs
     int8-reconstructed corpus, BLAS-scored in operators/sq8.py) feeding
     an exact expression-fold rerank — the SQ8 counterpart of
@@ -680,27 +677,15 @@ def sq8_ann_rerank(spark: SparkSession, sf_dir: str,
     q = emb.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv"))
     short = SQ8.sq8_search_topk(codes, q, lo, scale, k=SQ8_SHORTLIST)
-    return _sq8_rerank_tail(spark, sf_dir, emb, q, short,
-                            checkpoint=checkpoint)
+    return _sq8_rerank_tail(spark, sf_dir, emb, q, short)
 
 
 def _sq8_rerank_tail(spark: SparkSession, sf_dir: str, emb: DataFrame,
-                     q: DataFrame, short: DataFrame,
-                     checkpoint: bool = True) -> DataFrame:
+                     q: DataFrame, short: DataFrame) -> DataFrame:
     """Exact-cosine rerank of an SQ8 shortlist + the in-query recall
-    certificate — shared by the in-memory form (sq8_ann_rerank) and
-    the persisted-index form (sq8_index_persisted).
-
-    Round 9 (guide §1/§5 — don't run a pipeline twice): the reranked
-    frame is localCheckpoint'ed ONCE (queries x top-k rows), so the
-    recall join and the harness's later actions read the tiny
-    checkpoint instead of re-running the SQ8 search kernel per
-    action, and the brute-force baseline persists for its two counts
-    instead of executing its corpus scan twice.  Counts and results
-    are unchanged.  ``checkpoint=False`` is the plan-inspection seam
-    (tools/dump_plans.py) — skips the recall counts and emits a
-    constant flag, the _bq_rerank_tail convention.
-    """
+    certificate (extensions.certify_recall) — shared by the in-memory
+    form (sq8_ann_rerank) and the persisted-index form
+    (sq8_index_persisted)."""
     reranked = (
         short.join(emb.withColumnRenamed("vec_id", "neighbor_id"), "neighbor_id")
         .join(F.broadcast(q), "query_id")
@@ -716,28 +701,13 @@ def _sq8_rerank_tail(spark: SparkSession, sf_dir: str, emb: DataFrame,
         .filter(F.col("rnk") <= SQ8_TOPK)
         .select("query_id", "neighbor_id", "rnk")
     )
-    if checkpoint:
-        out = out.localCheckpoint(eager=True)
-        from .extensions import similarity_topk_cosine
+    from .extensions import certify_recall
 
-        brute = similarity_topk_cosine(spark, sf_dir).select(
-            "query_id", "neighbor_id").persist()
-        try:
-            n_brute = brute.count()
-            n_hit = out.join(brute, ["query_id", "neighbor_id"]).count()
-        finally:
-            brute.unpersist()
-        recall_ok = n_brute > 0 and (n_hit / n_brute) >= SQ8_RECALL_FLOOR
-    else:
-        recall_ok = True
-    return out.withColumn(
-        "recall_ge_floor", F.lit(bool(recall_ok))
-    ).orderBy("query_id", "rnk")
+    return certify_recall(spark, sf_dir, out, SQ8_RECALL_FLOOR)
 
 
 @register("sq8_index_persisted", oracle=_SQ8_ANN_ORACLE)
-def sq8_index_persisted(spark: SparkSession, sf_dir: str,
-                        checkpoint: bool = True) -> DataFrame:
+def sq8_index_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PERSISTED SQ8 index under the exact-ranking hash check
     (round 7, the r6 verdict's item 6): build writes the stats/codes/
     meta parquet tables (operators/index_store.py — the ivfpq store's
@@ -762,5 +732,4 @@ def sq8_index_persisted(spark: SparkSession, sf_dir: str,
     q = emb.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv"))
     short = search_sq8_index(spark, path, q, k=SQ8_SHORTLIST)
-    return _sq8_rerank_tail(spark, sf_dir, emb, q, short,
-                            checkpoint=checkpoint)
+    return _sq8_rerank_tail(spark, sf_dir, emb, q, short)

@@ -58,6 +58,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window as W
 
+from ..operators import scope
 from ..operators.ordering import ranked_running_sum
 from ..sources.catalog import load_table
 from .catalog import register
@@ -299,8 +300,7 @@ ORDER BY t.rnk
 
 
 @register("cooccurrence_pmi", oracle=_COOC_ORACLE)
-def cooccurrence_pmi(spark: SparkSession, sf_dir: str,
-                     checkpoint: bool = True) -> DataFrame:
+def cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Windowed co-occurrence collocations with pointwise mutual
     information — the distributional statistic under word2vec/GloVe
     embedding training and classic collocation extraction (Church &
@@ -337,60 +337,53 @@ def cooccurrence_pmi(spark: SparkSession, sf_dir: str,
         )
         .select("p.tok_a", "p.tok_b")
     )
-    pair_counts = pairs.groupBy("tok_a", "tok_b").agg(
+    pair_counts = scope.cache(pairs.groupBy("tok_a", "tok_b").agg(
         F.count(F.lit(1)).cast("bigint").alias("pair_cnt")
-    ).persist()
-    try:
-        top = (
-            pair_counts.orderBy(
-                F.col("pair_cnt").desc(), F.col("tok_a"), F.col("tok_b")
-            )
-            .limit(COOC_TOP)
-            .withColumn(
-                "rnk",
-                F.row_number()
-                .over(
-                    W.orderBy(
-                        F.col("pair_cnt").desc(), F.col("tok_a"),
-                        F.col("tok_b")
-                    )
+    ))
+    top = (
+        pair_counts.orderBy(
+            F.col("pair_cnt").desc(), F.col("tok_a"), F.col("tok_b")
+        )
+        .limit(COOC_TOP)
+        .withColumn(
+            "rnk",
+            F.row_number()
+            .over(
+                W.orderBy(
+                    F.col("pair_cnt").desc(), F.col("tok_a"),
+                    F.col("tok_b")
                 )
-                .cast("bigint"),
             )
+            .cast("bigint"),
         )
-        stream = load_table(spark, sf_dir, "documents").select(
-            F.explode(F.split("text", " ")).alias("tok")
+    )
+    stream = load_table(spark, sf_dir, "documents").select(
+        F.explode(F.split("text", " ")).alias("tok")
+    )
+    marg = stream.groupBy("tok").agg(
+        F.count(F.lit(1)).cast("bigint").alias("cnt")
+    )
+    n_tok = stream.agg(F.count(F.lit(1)).cast("bigint").alias("n_tok"))
+    n_pairs = pair_counts.agg(
+        F.sum("pair_cnt").cast("bigint").alias("n_pairs")
+    )
+    ma = marg.select(F.col("tok").alias("tok_a"), F.col("cnt").alias("cnt_a"))
+    mb = marg.select(F.col("tok").alias("tok_b"), F.col("cnt").alias("cnt_b"))
+    out = (
+        ma.join(F.broadcast(top), "tok_a")
+        .join(mb, "tok_b")
+        .crossJoin(F.broadcast(n_tok))
+        .crossJoin(F.broadcast(n_pairs))
+        .select(
+            "tok_a", "tok_b", "pair_cnt", "rnk",
+            F.expr(
+                "round(ln((CAST(pair_cnt AS DOUBLE) * n_tok * n_tok)"
+                " / (CAST(n_pairs AS DOUBLE) * cnt_a * cnt_b)), 4)"
+            ).alias("pmi_r4"),
         )
-        marg = stream.groupBy("tok").agg(
-            F.count(F.lit(1)).cast("bigint").alias("cnt")
-        )
-        n_tok = stream.agg(F.count(F.lit(1)).cast("bigint").alias("n_tok"))
-        n_pairs = pair_counts.agg(
-            F.sum("pair_cnt").cast("bigint").alias("n_pairs")
-        )
-        ma = marg.select(F.col("tok").alias("tok_a"), F.col("cnt").alias("cnt_a"))
-        mb = marg.select(F.col("tok").alias("tok_b"), F.col("cnt").alias("cnt_b"))
-        out = (
-            ma.join(F.broadcast(top), "tok_a")
-            .join(mb, "tok_b")
-            .crossJoin(F.broadcast(n_tok))
-            .crossJoin(F.broadcast(n_pairs))
-            .select(
-                "tok_a", "tok_b", "pair_cnt", "rnk",
-                F.expr(
-                    "round(ln((CAST(pair_cnt AS DOUBLE) * n_tok * n_tok)"
-                    " / (CAST(n_pairs AS DOUBLE) * cnt_a * cnt_b)), 4)"
-                ).alias("pmi_r4"),
-            )
-            .orderBy("rnk")
-        )
-        # checkpoint=False is the plan-inspection seam (ivfpq_rerank
-        # convention): the lazy form keeps pair_counts cached so the
-        # dumped plan shows the reuse the executed path relies on.
-        return out.localCheckpoint(eager=True) if checkpoint else out
-    finally:
-        if checkpoint:
-            pair_counts.unpersist()
+        .orderBy("rnk")
+    )
+    return scope.checkpoint(out)
 
 
 _QUANT_ORACLE = f"""

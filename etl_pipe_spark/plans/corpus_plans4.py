@@ -35,8 +35,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window as W
 
 from ..functions.text import shingles, token_count, ws_tokens
+from ..operators import scope
 from ..operators.layout import spread_for_compute as _spread
-from ..operators.ordering import ranked_running_sum, track_rank_cache
+from ..operators.ordering import ranked_running_sum
 from ..sources.catalog import load_table
 from .catalog import register
 
@@ -204,27 +205,26 @@ def curriculum_frame(docs: DataFrame) -> DataFrame:
     """Frame-level curriculum schedule over (doc_id, text) — shared by
     the registered query, the invariant tests, and the scaling tool.
 
-    Both persists below are TRACKED (operators.ordering registry): the
+    Both caches below have query lifetime (operators/scope.py): the
     (doc_id, n_tokens) base is 16 bytes/row and feeds three consumers
     (the count, the rank's main branch, its offsets branch); the
     bucketed frame stops the second rank phase from duplicating the
-    whole first-phase lineage into its own offsets branch.  Harnesses
-    release them between queries via release_rank_caches()."""
-    base = track_rank_cache(docs.select(
+    whole first-phase lineage into its own offsets branch."""
+    base = scope.cache(docs.select(
         "doc_id", token_count(F.col("text")).cast("long").alias("n_tokens")
-    ).persist())
+    ))
     n_row = F.broadcast(base.agg(F.count(F.lit(1)).cast("long").alias("n")))
     ranked = ranked_running_sum(
         base, [F.col("n_tokens"), F.col("doc_id")], None, rank_name="rnk"
     ).crossJoin(n_row)
     # bucket/rib: exact integer arithmetic (see module docstring).
-    bucketed = track_rank_cache(ranked.select(
+    bucketed = scope.cache(ranked.select(
         "doc_id", "n_tokens", "rnk", "n",
         F.expr(f"((rnk - 1) * {_NB}) DIV n").alias("bucket"),
     ).withColumn(
         "rank_in_bucket",
         F.expr(f"rnk - (bucket * n + {_NB} - 1) DIV {_NB}"),
-    ).persist())
+    ))
     return ranked_running_sum(
         bucketed,
         [F.col("rank_in_bucket"), F.col("bucket")],

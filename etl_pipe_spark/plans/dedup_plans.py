@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 from ..functions import vectors as VX
 from ..operators import clusters as CC
 from ..operators import dedup as DD
+from ..operators import scope
 from ..operators import similarity as SIM
 from ..operators.similarity import srp_buckets
 from ..sources.catalog import load_table
@@ -240,7 +241,7 @@ def incremental_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = _spread(spark, load_table(spark, sf_dir, "documents"))
     # one kernel pass serves both sides and the verify arrays
-    rows = DD.lsh_build_kernel(docs, n=3).persist()
+    rows = scope.cache(DD.lsh_build_kernel(docs, n=3))
     cand = DD.lsh_probe_pairs_kernel(
         rows.filter(F.col("doc_id") % 5 != 0),
         rows.filter(F.col("doc_id") % 5 == 0))
@@ -960,32 +961,26 @@ def ann_kmeans_recall_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .extensions import similarity_topk_cosine
 
-    # brute feeds four actions (count, two recall joins, query count):
-    # persist for the query's lifetime, release before returning —
-    # the returned invariant row no longer references it
-    brute = similarity_topk_cosine(spark, sf_dir).select(
-        "query_id", "neighbor_id").persist()
-    # one persisted corpus frame serves BOTH probe pipelines and every
+    # brute feeds four actions (count, two recall joins, query count)
+    brute = scope.cache(similarity_topk_cosine(spark, sf_dir).select(
+        "query_id", "neighbor_id"))
+    # one cached corpus frame serves BOTH probe pipelines and every
     # Lloyd-iteration pass of the fit (round 9, guide §5: the fitted
     # path alone re-derived the scan+norm projection max_iters+1
-    # times); released before the invariant row returns
-    emb = _emb_with_norms(spark, sf_dir).persist()
-    try:
-        n_brute = brute.count()
+    # times)
+    emb = scope.cache(_emb_with_norms(spark, sf_dir))
+    n_brute = brute.count()
 
-        def recall(df: DataFrame) -> float:
-            hits = df.select("query_id", "neighbor_id").join(
-                brute, ["query_id", "neighbor_id"]).count()
-            return hits / n_brute if n_brute else 0.0
+    def recall(df: DataFrame) -> float:
+        hits = df.select("query_id", "neighbor_id").join(
+            brute, ["query_id", "neighbor_id"]).count()
+        return hits / n_brute if n_brute else 0.0
 
-        sampled = recall(ann_ivf(spark, sf_dir, nprobe=2, emb=emb))
-        fitted = recall(ann_ivf_kmeans(
-            spark, sf_dir, nprobe=2, n_centroids=N_CENTROIDS, max_iters=5,
-            emb=emb))
-        n_queries = brute.select("query_id").distinct().count()
-    finally:
-        brute.unpersist()
-        emb.unpersist()
+    sampled = recall(ann_ivf(spark, sf_dir, nprobe=2, emb=emb))
+    fitted = recall(ann_ivf_kmeans(
+        spark, sf_dir, nprobe=2, n_centroids=N_CENTROIDS, max_iters=5,
+        emb=emb))
+    n_queries = brute.select("query_id").distinct().count()
     return local_frame(
         spark,
         [(int(n_queries), fitted >= sampled, fitted >= _KMEANS_RECALL_FLOOR)],
@@ -1508,8 +1503,7 @@ ORDER BY query_id, rnk
 
 
 @register("ivfpq_rerank", oracle=_IVFPQ_RERANK_ORACLE)
-def ivfpq_rerank(spark: SparkSession, sf_dir: str,
-                 checkpoint: bool = True) -> DataFrame:
+def ivfpq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVFADC shortlist + exact cosine rerank under the hash check.
 
     Stage 1 runs the combined index exactly as ivfpq_ann_adc but keeps
@@ -1535,39 +1529,37 @@ def ivfpq_rerank(spark: SparkSession, sf_dir: str,
     instead of once per downstream scan; measured 3+ re-folds cold),
     the shortlist is materialized once, and the rerank stage runs
     against the caches.  The tiny final ranking (queries x k rows) is
-    localCheckpoint'ed and both caches are RELEASED before returning,
-    so the driver benches the steady-state cost (2.5 s at 1M vs ~20 s
-    cold — docs/BENCH_COMPARE.md) and no cache residue outlives the
-    query.
+    localCheckpoint'ed, so the driver benches the steady-state cost
+    (2.5 s at 1M vs ~20 s cold — docs/BENCH_COMPARE.md).
     """
     from ..operators import pq as PQ
 
-    emb = _emb_with_norms(spark, sf_dir).persist()
-    shortlist = None
-    try:
-        ranked = _ivf_ranked(emb, n_centroids=N_CENTROIDS)
-        vecs = emb.select("vec_id", "v")
-        cb = PQ.pq_codebooks_deterministic(vecs, m=_PQ_M, ksub=_PQ_KSUB)
-        enc = PQ.pq_encode(vecs, cb)
-        queries = (
-            vecs.filter(F.col("vec_id") % 100 == 0)
-            .withColumnRenamed("vec_id", "query_id")
-        )
-        shortlist = PQ.ivfpq_adc_topk(
-            enc, ranked, queries, cb, k=_PQ_SHORTLIST, nprobe=2
-        ).select("query_id", "neighbor_id").persist()
+    emb = scope.cache(_emb_with_norms(spark, sf_dir))
+    ranked = _ivf_ranked(emb, n_centroids=N_CENTROIDS)
+    vecs = emb.select("vec_id", "v")
+    cb = PQ.pq_codebooks_deterministic(vecs, m=_PQ_M, ksub=_PQ_KSUB)
+    enc = PQ.pq_encode(vecs, cb)
+    queries = (
+        vecs.filter(F.col("vec_id") % 100 == 0)
+        .withColumnRenamed("vec_id", "query_id")
+    )
+    q_side = emb.select(
+        F.col("vec_id").alias("query_id"),
+        F.col("v").alias("qv"), F.col("v_norm").alias("qv_norm"))
+    n_side = emb.select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("v").alias("nv"), F.col("v_norm").alias("nv_norm"))
+    cos = VX.safe_div(VX.dot(F.col("qv"), F.col("nv")),
+                      F.col("qv_norm") * F.col("nv_norm"))
+    w = W.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("neighbor_id"))
+    # The shortlist lives until the final ranking is checkpointed;
+    # inside scope.inspect() it is released before the lazy plan is
+    # read, so that plan shows the ADC stage it derives from.
+    with scope.cached(PQ.ivfpq_adc_topk(
+        enc, ranked, queries, cb, k=_PQ_SHORTLIST, nprobe=2
+    ).select("query_id", "neighbor_id")) as shortlist:
         shortlist.count()  # ADC pass runs once; raw storage now cached
-
-        q_side = emb.select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"), F.col("v_norm").alias("qv_norm"))
-        n_side = emb.select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("v").alias("nv"), F.col("v_norm").alias("nv_norm"))
-        cos = VX.safe_div(VX.dot(F.col("qv"), F.col("nv")),
-                          F.col("qv_norm") * F.col("nv_norm"))
-        w = W.partitionBy("query_id").orderBy(
-            F.col("cosine").desc(), F.col("neighbor_id"))
         # The shortlist (queries x 15 rows) BROADCASTS into both vector
         # lookups, so each join is a streamed scan of the cached vector
         # store with no shuffle of the corpus.
@@ -1580,14 +1572,7 @@ def ivfpq_rerank(spark: SparkSession, sf_dir: str,
             .select("query_id", "neighbor_id", "rnk")
             .orderBy("query_id", "rnk")
         )
-        # checkpoint=False is the PLAN-INSPECTION seam
-        # (tests/test_physical_plans.py pins the rerank join shapes,
-        # which a checkpointed scan would hide); results are identical.
-        return out.localCheckpoint(eager=True) if checkpoint else out
-    finally:
-        emb.unpersist()
-        if shortlist is not None:
-            shortlist.unpersist()
+        return scope.checkpoint(out)
 
 
 @register("ivfpq_index_persisted", oracle=_IVFPQ_ORACLE)
@@ -1608,27 +1593,22 @@ def ivfpq_index_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # The corpus frame feeds the build's four passes (count, centroid
     # sample, codebook seeds, fused encode) plus the query projection —
-    # persist for the query's lifetime so each pass reads the cache
-    # instead of re-scanning parquet (guide §5; the search result's
-    # plan references only the on-disk codes, so the release below
-    # never triggers a recompute).
-    emb = _emb_with_norms(spark, sf_dir).select("vec_id", "v").persist()
-    try:
-        path = _io_dir(sf_dir, "ivfpq_index")
-        build_ivfpq_index(spark, emb, path, n_centroids=N_CENTROIDS,
-                          m=_PQ_M, ksub=_PQ_KSUB)
-        queries = (
-            emb.filter(F.col("vec_id") % 100 == 0)
-            .withColumnRenamed("vec_id", "query_id")
-        )
-        return (
-            search_ivfpq_index(spark, path, queries, k=_PQ_K, nprobe=2)
-            .select("query_id", "neighbor_id",
-                    F.col("rnk").cast("long").alias("rnk"))
-            .orderBy("query_id", "rnk")
-        )
-    finally:
-        emb.unpersist()
+    # cached so each pass reads the cache instead of re-scanning
+    # parquet (guide §5).
+    emb = scope.cache(_emb_with_norms(spark, sf_dir).select("vec_id", "v"))
+    path = _io_dir(sf_dir, "ivfpq_index")
+    build_ivfpq_index(spark, emb, path, n_centroids=N_CENTROIDS,
+                      m=_PQ_M, ksub=_PQ_KSUB)
+    queries = (
+        emb.filter(F.col("vec_id") % 100 == 0)
+        .withColumnRenamed("vec_id", "query_id")
+    )
+    return (
+        search_ivfpq_index(spark, path, queries, k=_PQ_K, nprobe=2)
+        .select("query_id", "neighbor_id",
+                F.col("rnk").cast("long").alias("rnk"))
+        .orderBy("query_id", "rnk")
+    )
 
 
 # The lifecycle twin's oracle: the QUANTIZER (centroids + codebooks)
@@ -1754,29 +1734,25 @@ def ivfpq_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         append_to_ivfpq_index, build_ivfpq_index, compact_ivfpq_index,
         search_ivfpq_index)
 
-    # One persist serves the seed build's passes, both append batches,
+    # One cache serves the seed build's passes, both append batches,
     # and the query projection — without it every lifecycle phase
-    # re-scanned the embeddings parquet (guide §5; release is safe:
-    # the search result's plan references only the on-disk codes).
-    emb = _emb_with_norms(spark, sf_dir).select("vec_id", "v").persist()
-    try:
-        path = _io_dir(sf_dir, "ivfpq_index_lifecycle")
-        # seed: one third trains + freezes the quantizer; two "days" of
-        # frozen-quantizer appends deliver the rest
-        build_ivfpq_index(spark, emb.filter(F.col("vec_id") % 3 == 0), path,
-                          n_centroids=N_CENTROIDS, m=_PQ_M, ksub=_PQ_KSUB)
-        append_to_ivfpq_index(spark, emb.filter(F.col("vec_id") % 3 == 1), path)
-        append_to_ivfpq_index(spark, emb.filter(F.col("vec_id") % 3 == 2), path)
-        compact_ivfpq_index(spark, path)
-        queries = (
-            emb.filter(F.col("vec_id") % 100 == 0)
-            .withColumnRenamed("vec_id", "query_id")
-        )
-        return (
-            search_ivfpq_index(spark, path, queries, k=_PQ_K, nprobe=2)
-            .select("query_id", "neighbor_id",
-                    F.col("rnk").cast("long").alias("rnk"))
-            .orderBy("query_id", "rnk")
-        )
-    finally:
-        emb.unpersist()
+    # re-scanned the embeddings parquet (guide §5).
+    emb = scope.cache(_emb_with_norms(spark, sf_dir).select("vec_id", "v"))
+    path = _io_dir(sf_dir, "ivfpq_index_lifecycle")
+    # seed: one third trains + freezes the quantizer; two "days" of
+    # frozen-quantizer appends deliver the rest
+    build_ivfpq_index(spark, emb.filter(F.col("vec_id") % 3 == 0), path,
+                      n_centroids=N_CENTROIDS, m=_PQ_M, ksub=_PQ_KSUB)
+    append_to_ivfpq_index(spark, emb.filter(F.col("vec_id") % 3 == 1), path)
+    append_to_ivfpq_index(spark, emb.filter(F.col("vec_id") % 3 == 2), path)
+    compact_ivfpq_index(spark, path)
+    queries = (
+        emb.filter(F.col("vec_id") % 100 == 0)
+        .withColumnRenamed("vec_id", "query_id")
+    )
+    return (
+        search_ivfpq_index(spark, path, queries, k=_PQ_K, nprobe=2)
+        .select("query_id", "neighbor_id",
+                F.col("rnk").cast("long").alias("rnk"))
+        .orderBy("query_id", "rnk")
+    )

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from ..functions import text as TX
 from ..functions import vectors as VX
+from ..operators import scope
 from ..operators.multimodal import documents_as_binary, extract_features
 from ..sources.catalog import load_table
 from .catalog import register
@@ -258,6 +259,28 @@ def similarity_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
     return scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= 5)
+
+
+def certify_recall(spark: SparkSession, sf_dir: str, topk: DataFrame,
+                   floor: float) -> DataFrame:
+    """Checkpoint an ANN top-k (query_id, neighbor_id, ..., rnk) frame
+    and attach its in-query recall certificate: ``recall_ge_floor`` is
+    whether the top-k hits at least ``floor`` of the brute-force
+    :func:`similarity_topk_cosine` pairs.  The tiny checkpoint is what
+    the recall join and every later action read, so the search
+    pipeline runs once; the brute-force frame is cached for its two
+    counts.  Inside ``scope.inspect()`` nothing runs and the flag is
+    TRUE."""
+    topk = scope.checkpoint(topk)
+    ok = True
+    if not scope.inspecting():
+        with scope.cached(similarity_topk_cosine(spark, sf_dir).select(
+                "query_id", "neighbor_id")) as brute:
+            n_brute = brute.count()
+            n_hit = topk.join(brute, ["query_id", "neighbor_id"]).count()
+        ok = n_brute > 0 and n_hit / n_brute >= floor
+    return topk.withColumn("recall_ge_floor", F.lit(ok)).orderBy(
+        "query_id", "rnk")
 
 
 # --------------------------------------------------------------------------

@@ -38,6 +38,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..operators import scope
 from ..operators.dedup import duck_simhash_pieces
 from ..sources.catalog import load_table
 from .catalog import register
@@ -136,7 +137,6 @@ ORDER BY r.doc_id""")
 
 @register("pagerank_neardup_graph", oracle=_pagerank_oracle())
 def pagerank_neardup_graph(spark: SparkSession, sf_dir: str,
-                           checkpoint: bool = True,
                            iters: int | None = None) -> DataFrame:
     """Fixed-point PageRank over the SimHash near-dup graph: per-doc
     (degree, rank) after PR_ITERS exact integer power iterations.
@@ -146,23 +146,21 @@ def pagerank_neardup_graph(spark: SparkSession, sf_dir: str,
     across out-edges, aggregates inflow by dst, and adds the teleport
     floor — the Pregel message-pass as two narrow DataFrame ops.  The
     per-iteration localCheckpoint truncates lineage so iteration k
-    never re-derives the pair graph (checkpoint=False is the
-    plan-inspection seam, the ivfpq_rerank convention; pass iters=1
-    with it to dump ONE iteration's shape — the fully lazy 8-deep
+    never re-derives the pair graph (under ``scope.inspect()`` pass
+    iters=1 to see ONE iteration's shape — the fully lazy 8-deep
     plan textually unrolls the lineage that caching+checkpointing
     truncate in real execution and is not the executed shape).
     """
     from .text_plans2 import dedup_simhash_pairs
 
     pairs = dedup_simhash_pairs(
-        spark, sf_dir, bucket_cap=PR_BUCKET_CAP, checkpoint=checkpoint
+        spark, sf_dir, bucket_cap=PR_BUCKET_CAP
     ).select("left_id", "right_id")
-    return _pagerank_over_pairs(spark, sf_dir, pairs,
-                                checkpoint=checkpoint, iters=iters)
+    return _pagerank_over_pairs(spark, sf_dir, pairs, iters=iters)
 
 
 def _pagerank_over_pairs(spark: SparkSession, sf_dir: str,
-                         pairs: DataFrame, checkpoint: bool = True,
+                         pairs: DataFrame,
                          iters: int | None = None) -> DataFrame:
     """The PageRank power loop over an explicit undirected pair list
     — shared by the in-query derivation (pagerank_neardup_graph) and
@@ -173,98 +171,87 @@ def _pagerank_over_pairs(spark: SparkSession, sf_dir: str,
     ).unionByName(pairs.select(
         F.col("right_id").alias("src"), F.col("left_id").alias("dst")
     ))
-    deg = edges.groupBy("src").agg(
+    # vertex-sized; reused every iteration + the output join
+    deg = scope.cache(edges.groupBy("src").agg(
         F.count(F.lit(1)).cast("bigint").alias("deg")
-    ).persist()  # vertex-sized; reused every iteration + the output join
-    edges_deg = edges.join(deg, "src").persist()
-    try:
-        tp_num = (PR_DAMP_DEN - PR_DAMP_NUM) * PR_UNIT // PR_DAMP_DEN
-        params = verts.agg(
-            F.expr(f"{tp_num} div count(*)").alias("tp"),
-            F.expr(f"{PR_UNIT} div count(*)").alias("seed"),
+    ))
+    edges_deg = scope.cache(edges.join(deg, "src"))
+    tp_num = (PR_DAMP_DEN - PR_DAMP_NUM) * PR_UNIT // PR_DAMP_DEN
+    params = verts.agg(
+        F.expr(f"{tp_num} div count(*)").alias("tp"),
+        F.expr(f"{PR_UNIT} div count(*)").alias("seed"),
+    )
+    # The power loop runs over the ACTIVE vertex set only (round 9,
+    # guide §1.2 — don't compute what you throw away): edges are
+    # symmetric, so in-degree > 0 <=> out-degree > 0, and a vertex
+    # with no edges holds the bare teleport rank from iteration 1
+    # onward.  The old loop left-joined the CORPUS-sized verts
+    # table every iteration to re-emit those constant rows; at
+    # 100 TB the active set is the near-dup neighborhood — orders
+    # of magnitude smaller than the corpus — and isolated vertices
+    # now rejoin exactly once, after the loop, with the identical
+    # teleport value.
+    active = deg.select(F.col("src").alias("doc_id"))
+    # materialize the tiny active-vertex list once so each
+    # iteration's left join reads a bounded RDD instead of
+    # re-projecting through the cached deg lineage (A/B'd:
+    # without it the loop paid ~0.5 s/run more on local[32])
+    active = scope.checkpoint(active)
+    ranks = (
+        active.crossJoin(F.broadcast(params))
+        .select("doc_id", F.col("seed").cast("bigint").alias("rank_fp"))
+    )
+    n_iters = PR_ITERS if iters is None else iters
+    for i in range(n_iters):
+        inflow = (
+            ranks.join(edges_deg, ranks.doc_id == edges_deg.src)
+            .select(
+                F.col("dst").alias("doc_id"),
+                F.expr(
+                    f"(({PR_DAMP_NUM} * rank_fp) div {PR_DAMP_DEN})"
+                    " div deg"
+                ).alias("c"),
+            )
+            .groupBy("doc_id")
+            .agg(F.sum("c").cast("bigint").alias("inflow"))
         )
-        # The power loop runs over the ACTIVE vertex set only (round 9,
-        # guide §1.2 — don't compute what you throw away): edges are
-        # symmetric, so in-degree > 0 <=> out-degree > 0, and a vertex
-        # with no edges holds the bare teleport rank from iteration 1
-        # onward.  The old loop left-joined the CORPUS-sized verts
-        # table every iteration to re-emit those constant rows; at
-        # 100 TB the active set is the near-dup neighborhood — orders
-        # of magnitude smaller than the corpus — and isolated vertices
-        # now rejoin exactly once, after the loop, with the identical
-        # teleport value.
-        active = deg.select(F.col("src").alias("doc_id"))
-        if checkpoint:
-            # materialize the tiny active-vertex list once so each
-            # iteration's left join reads a bounded RDD instead of
-            # re-projecting through the cached deg lineage (A/B'd:
-            # without it the loop paid ~0.5 s/run more on local[32])
-            active = active.localCheckpoint(eager=True)
         ranks = (
-            active.crossJoin(F.broadcast(params))
-            .select("doc_id", F.col("seed").cast("bigint").alias("rank_fp"))
-        )
-        n_iters = PR_ITERS if iters is None else iters
-        for i in range(n_iters):
-            inflow = (
-                ranks.join(edges_deg, ranks.doc_id == edges_deg.src)
-                .select(
-                    F.col("dst").alias("doc_id"),
-                    F.expr(
-                        f"(({PR_DAMP_NUM} * rank_fp) div {PR_DAMP_DEN})"
-                        " div deg"
-                    ).alias("c"),
-                )
-                .groupBy("doc_id")
-                .agg(F.sum("c").cast("bigint").alias("inflow"))
-            )
-            ranks = (
-                active.join(inflow, "doc_id", "left")
-                .crossJoin(F.broadcast(params))
-                .select(
-                    "doc_id",
-                    (F.col("tp") + F.coalesce(F.col("inflow"), F.lit(0)))
-                    .cast("bigint").alias("rank_fp"),
-                )
-            )
-            # Materialize every SECOND iteration (and the last): the
-            # two-iteration lazy plan is still bounded, and halving
-            # the eager barriers halves the rank-table
-            # materializations the loop pays (guide §5 — a
-            # localCheckpoint per iteration was pure overhead).
-            if checkpoint and (i % 2 == 1 or i == n_iters - 1):
-                ranks = ranks.localCheckpoint(eager=True)
-        # isolated vertices re-enter with the bare teleport rank —
-        # identical to the value the old per-iteration left join gave
-        # them (seed if the loop never ran)
-        out = (
-            verts.join(ranks, "doc_id", "left")
-            .join(deg.withColumnRenamed("src", "doc_id"), "doc_id",
-                  "left")
+            active.join(inflow, "doc_id", "left")
             .crossJoin(F.broadcast(params))
             .select(
                 "doc_id",
-                F.coalesce(F.col("deg"), F.lit(0)).cast("bigint")
-                .alias("deg"),
-                F.coalesce(
-                    F.col("rank_fp"),
-                    (F.col("tp") if n_iters > 0 else F.col("seed"))
-                    .cast("bigint"),
-                ).alias("rank_fp"),
+                (F.col("tp") + F.coalesce(F.col("inflow"), F.lit(0)))
+                .cast("bigint").alias("rank_fp"),
             )
-            .orderBy("doc_id")
         )
-        if checkpoint:
-            return out.localCheckpoint(eager=True)
-        # Inspection seam: leave the caches in place so the dumped
-        # plan shows the InMemory reuse the executed loop relies on
-        # (unpersisting here would make the lazy text re-derive the
-        # banding join per reference — a shape that never executes).
-        return out
-    finally:
-        if checkpoint:
-            edges_deg.unpersist()
-            deg.unpersist()
+        # Materialize every SECOND iteration (and the last): the
+        # two-iteration lazy plan is still bounded, and halving
+        # the eager barriers halves the rank-table
+        # materializations the loop pays (guide §5 — a
+        # localCheckpoint per iteration was pure overhead).
+        if i % 2 == 1 or i == n_iters - 1:
+            ranks = scope.checkpoint(ranks)
+    # isolated vertices re-enter with the bare teleport rank —
+    # identical to the value the old per-iteration left join gave
+    # them (seed if the loop never ran)
+    out = (
+        verts.join(ranks, "doc_id", "left")
+        .join(deg.withColumnRenamed("src", "doc_id"), "doc_id",
+              "left")
+        .crossJoin(F.broadcast(params))
+        .select(
+            "doc_id",
+            F.coalesce(F.col("deg"), F.lit(0)).cast("bigint")
+            .alias("deg"),
+            F.coalesce(
+                F.col("rank_fp"),
+                (F.col("tp") if n_iters > 0 else F.col("seed"))
+                .cast("bigint"),
+            ).alias("rank_fp"),
+        )
+        .orderBy("doc_id")
+    )
+    return scope.checkpoint(out)
 
 
 # ---------------------------------------------------------------------------
@@ -335,7 +322,6 @@ ORDER BY d.doc_id"""
 
 @register("triangle_clustering_coeff", oracle=_triangle_oracle())
 def triangle_clustering_coeff(spark: SparkSession, sf_dir: str,
-                              checkpoint: bool = True,
                               pairs: DataFrame | None = None) -> DataFrame:
     """Exact triangle count + local clustering coefficient per node of
     the SimHash near-dup graph — the densest-neighborhood signal
@@ -377,84 +363,63 @@ def triangle_clustering_coeff(spark: SparkSession, sf_dir: str,
         from .dedup_plans import dedup_minhash_lsh
 
         pairs = dedup_minhash_lsh(spark, sf_dir)
-    pairs = pairs.select("left_id", "right_id")
-    if checkpoint:
-        # The verified pair list is edge-sized (true near-dups only)
-        # but its LINEAGE is the whole MinHash pipeline — persist it
-        # first so degree build + orientation read the cached edges
-        # instead of re-running signatures/banding/verification.
-        pairs = pairs.localCheckpoint(eager=True)
-    deg = (
+    # The verified pair list is edge-sized (true near-dups only) but
+    # its LINEAGE is the whole MinHash pipeline — checkpoint it first
+    # so degree build + orientation read the materialized edges
+    # instead of re-running signatures/banding/verification.
+    pairs = scope.checkpoint(pairs.select("left_id", "right_id"))
+    # vertex-sized; used by orientation + output
+    deg = scope.cache(
         pairs.select(F.col("left_id").alias("doc_id"))
         .unionByName(pairs.select(F.col("right_id").alias("doc_id")))
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).cast("bigint").alias("deg"))
     )
-    if checkpoint:
-        deg = deg.persist()  # vertex-sized; used by orientation + output
-    try:
-        dl = deg.select(F.col("doc_id").alias("left_id"),
-                        F.col("deg").alias("dl"))
-        dr = deg.select(F.col("doc_id").alias("right_id"),
-                        F.col("deg").alias("dr"))
-        lo_first = (
-            F.struct(F.col("dl"), F.col("left_id"))
-            < F.struct(F.col("dr"), F.col("right_id"))
+    dl = deg.select(F.col("doc_id").alias("left_id"),
+                    F.col("deg").alias("dl"))
+    dr = deg.select(F.col("doc_id").alias("right_id"),
+                    F.col("deg").alias("dr"))
+    lo_first = (
+        F.struct(F.col("dl"), F.col("left_id"))
+        < F.struct(F.col("dr"), F.col("right_id"))
+    )
+    # edge-sized; joined 3x below
+    oriented = scope.cache(
+        pairs.join(dl, "left_id").join(dr, "right_id")
+        .select(
+            F.when(lo_first, F.col("left_id"))
+            .otherwise(F.col("right_id")).alias("src"),
+            F.when(lo_first, F.col("right_id"))
+            .otherwise(F.col("left_id")).alias("dst"),
         )
-        oriented = (
-            pairs.join(dl, "left_id").join(dr, "right_id")
-            .select(
-                F.when(lo_first, F.col("left_id"))
-                .otherwise(F.col("right_id")).alias("src"),
-                F.when(lo_first, F.col("right_id"))
-                .otherwise(F.col("left_id")).alias("dst"),
-            )
+    )
+    e1 = oriented.select(F.col("src").alias("a"), F.col("dst").alias("b"))
+    e2 = oriented.select(F.col("src").alias("b"), F.col("dst").alias("c"))
+    e3 = oriented.select(F.col("src").alias("a"), F.col("dst").alias("c"))
+    tri = scope.cache(e1.join(e2, "b").join(e3, ["a", "c"]))
+    tri_nodes = (
+        tri.select(F.col("a").alias("doc_id"))
+        .unionByName(tri.select(F.col("b").alias("doc_id")))
+        .unionByName(tri.select(F.col("c").alias("doc_id")))
+        .groupBy("doc_id")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("tri_cnt"))
+    )
+    tri_cnt = F.coalesce(F.col("tri_cnt"), F.lit(0)).cast("bigint")
+    out = (
+        deg.join(tri_nodes, "doc_id", "left")
+        .select(
+            "doc_id",
+            "deg",
+            tri_cnt.alias("tri_cnt"),
+            F.when(
+                F.col("deg") >= 2,
+                (F.lit(2) * tri_cnt).cast("double")
+                / (F.col("deg") * (F.col("deg") - 1)).cast("double"),
+            ).otherwise(F.lit(0.0)).alias("clust_coeff"),
         )
-        if checkpoint:
-            oriented = oriented.persist()  # edge-sized; joined 3x below
-        try:
-            e1 = oriented.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-            e2 = oriented.select(F.col("src").alias("b"), F.col("dst").alias("c"))
-            e3 = oriented.select(F.col("src").alias("a"), F.col("dst").alias("c"))
-            tri = e1.join(e2, "b").join(e3, ["a", "c"])
-            if checkpoint:
-                tri = tri.persist()
-            try:
-                tri_nodes = (
-                    tri.select(F.col("a").alias("doc_id"))
-                    .unionByName(tri.select(F.col("b").alias("doc_id")))
-                    .unionByName(tri.select(F.col("c").alias("doc_id")))
-                    .groupBy("doc_id")
-                    .agg(F.count(F.lit(1)).cast("bigint").alias("tri_cnt"))
-                )
-                tri_cnt = F.coalesce(F.col("tri_cnt"), F.lit(0)).cast("bigint")
-                out = (
-                    deg.join(tri_nodes, "doc_id", "left")
-                    .select(
-                        "doc_id",
-                        "deg",
-                        tri_cnt.alias("tri_cnt"),
-                        F.when(
-                            F.col("deg") >= 2,
-                            (F.lit(2) * tri_cnt).cast("double")
-                            / (F.col("deg") * (F.col("deg") - 1)).cast("double"),
-                        ).otherwise(F.lit(0.0)).alias("clust_coeff"),
-                    )
-                    .orderBy("doc_id")
-                )
-                # checkpoint=False is the plan-inspection seam (the
-                # pagerank convention): leave everything lazy so the
-                # dumped plan shows the real join pipeline.
-                return out.localCheckpoint(eager=True) if checkpoint else out
-            finally:
-                if checkpoint:
-                    tri.unpersist()
-        finally:
-            if checkpoint:
-                oriented.unpersist()
-    finally:
-        if checkpoint:
-            deg.unpersist()
+        .orderBy("doc_id")
+    )
+    return scope.checkpoint(out)
 
 
 # ---------------------------------------------------------------------------
@@ -499,11 +464,11 @@ def pagerank_persisted_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .text_plans2 import dedup_simhash_pairs
 
     pairs = dedup_simhash_pairs(
-        spark, sf_dir, bucket_cap=PR_BUCKET_CAP, checkpoint=True
+        spark, sf_dir, bucket_cap=PR_BUCKET_CAP
     ).select("left_id", "right_id")
     stored = _write_edge_table(
         spark, pairs, _io_dir(sf_dir, "neardup_edges_simhash"))
-    return _pagerank_over_pairs(spark, sf_dir, stored, checkpoint=True)
+    return _pagerank_over_pairs(spark, sf_dir, stored)
 
 
 @register("triangle_persisted_pairs", oracle=_triangle_oracle())

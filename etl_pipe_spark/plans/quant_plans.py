@@ -29,6 +29,7 @@ from pyspark.sql.window import Window as W
 
 from ..functions import vectors as VX
 from ..operators import bq as BQ
+from ..operators import scope
 from ..sources.catalog import load_table
 from .catalog import register
 
@@ -100,8 +101,7 @@ ORDER BY query_id, rnk
 
 
 @register("bq_hamming_rerank", oracle=_BQ_ANN_ORACLE)
-def bq_hamming_rerank(spark: SparkSession, sf_dir: str,
-                      checkpoint: bool = True) -> DataFrame:
+def bq_hamming_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sign-bit BQ search: pack -> Hamming shortlist -> exact rerank.
 
     Pipeline: per-dim midrange thresholds (bit-deterministic across
@@ -143,8 +143,7 @@ def bq_hamming_rerank(spark: SparkSession, sf_dir: str,
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv"))
     packed_q = BQ.bq_pack(q, thresholds, "qv", prefix="qcode").drop("qv")
     short = BQ.hamming_shortlist(codes, packed_q, dim, shortlist)
-    return _bq_rerank_tail(spark, sf_dir, emb, q, short,
-                           checkpoint=checkpoint)
+    return _bq_rerank_tail(spark, sf_dir, emb, q, short)
 
 
 def _bq_shortlist_size(n_corpus: int) -> int:
@@ -155,22 +154,12 @@ def _bq_shortlist_size(n_corpus: int) -> int:
 
 def _bq_rerank_tail(spark: SparkSession, sf_dir: str, emb: DataFrame,
                     q: DataFrame, short: DataFrame,
-                    floor: float = BQ_RECALL_FLOOR,
-                    checkpoint: bool = True) -> DataFrame:
+                    floor: float = BQ_RECALL_FLOOR) -> DataFrame:
     """Exact-cosine rerank of a (query_id, neighbor_id, hamming)
-    shortlist + the in-query recall certificate — shared by the
-    in-memory form (bq_hamming_rerank), the SRP/IVF compositions, and
-    the persisted-index form (bq_index_persisted), the
-    _sq8_rerank_tail convention.
-
-    ``checkpoint=True`` materializes the tiny reranked frame ONCE
-    (queries x top-k rows) so the recall counts and the harness's
-    later count/hash actions all read the checkpoint instead of
-    re-running the shortlist pipeline per action (the ivfsq8
-    convention); ``checkpoint=False`` is the plan-inspection seam for
-    tools/dump_plans.py — it skips the eager recall counts entirely
-    and emits a constant flag.
-    """
+    shortlist + the in-query recall certificate
+    (extensions.certify_recall) — shared by the in-memory form
+    (bq_hamming_rerank), the SRP/IVF compositions, and the
+    persisted-index form (bq_index_persisted)."""
     reranked = (
         short.join(emb.withColumnRenamed("vec_id", "neighbor_id"),
                    "neighbor_id")
@@ -185,26 +174,9 @@ def _bq_rerank_tail(spark: SparkSession, sf_dir: str, emb: DataFrame,
         .filter(F.col("rnk") <= BQ_TOPK)
         .select("query_id", "neighbor_id", "hamming", "rnk")
     )
-    if checkpoint:
-        out = out.localCheckpoint(eager=True)
-        from .extensions import similarity_topk_cosine
+    from .extensions import certify_recall
 
-        # persist: the brute-force baseline feeds BOTH counts — without
-        # the cache its corpus-scan pipeline executed twice per query
-        # (guide §1; counts and results unchanged)
-        brute = similarity_topk_cosine(spark, sf_dir).select(
-            "query_id", "neighbor_id").persist()
-        try:
-            n_brute = brute.count()
-            n_hit = out.join(brute, ["query_id", "neighbor_id"]).count()
-        finally:
-            brute.unpersist()
-        recall_ok = n_brute > 0 and (n_hit / n_brute) >= floor
-    else:
-        recall_ok = True
-    return out.withColumn(
-        "recall_ge_floor", F.lit(bool(recall_ok))
-    ).orderBy("query_id", "rnk")
+    return certify_recall(spark, sf_dir, out, floor)
 
 
 # ---------------------------------------------------------------------------
@@ -287,8 +259,7 @@ ORDER BY query_id, rnk
 
 
 @register("srp_bq_hamming_rerank", oracle=_SRP_BQ_ORACLE)
-def srp_bq_hamming_rerank(spark: SparkSession, sf_dir: str,
-                          checkpoint: bool = True) -> DataFrame:
+def srp_bq_hamming_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """256-bit SRP binary codes: fixed-shortlist Hamming ANN.
 
     The production BQ shape: code length sized to the corpus
@@ -320,23 +291,12 @@ def srp_bq_hamming_rerank(spark: SparkSession, sf_dir: str,
                                   vec_col="qv", prefix="qcode")
     short = BQ.hamming_shortlist(codes, packed_q, SRP_BQ_BITS,
                                  SRP_BQ_SHORTLIST)
-    return _srp_bq_tail(spark, sf_dir, emb, q, short,
-                        checkpoint=checkpoint)
-
-
-def _srp_bq_tail(spark: SparkSession, sf_dir: str, emb: DataFrame,
-                 q: DataFrame, short: DataFrame,
-                 checkpoint: bool = True) -> DataFrame:
-    """The shared rerank tail with the SRP leg's recall floor."""
-    out = _bq_rerank_tail(spark, sf_dir, emb, q, short,
-                          floor=SRP_BQ_RECALL_FLOOR,
-                          checkpoint=checkpoint)
-    return out
+    return _bq_rerank_tail(spark, sf_dir, emb, q, short,
+                           floor=SRP_BQ_RECALL_FLOOR)
 
 
 @register("bq_index_persisted", oracle=_BQ_ANN_ORACLE)
-def bq_index_persisted(spark: SparkSession, sf_dir: str,
-                       checkpoint: bool = True) -> DataFrame:
+def bq_index_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PERSISTED BQ index under the exact-distance hash check —
     completing the store's quantizer legs (IVFPQ / SQ8 / BQ, all on
     the epoch/CAS/pointer commit protocol of operators/index_store.py).
@@ -362,8 +322,7 @@ def bq_index_persisted(spark: SparkSession, sf_dir: str,
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv"))
     short = search_bq_index(spark, path, q,
                             shortlist=_bq_shortlist_size(emb.count()))
-    return _bq_rerank_tail(spark, sf_dir, emb, q, short,
-                           checkpoint=checkpoint)
+    return _bq_rerank_tail(spark, sf_dir, emb, q, short)
 
 
 # --------------------------------------------------------------------------
@@ -436,8 +395,7 @@ ORDER BY query_id, rnk
 
 
 @register("ivfsq8_ann_rerank", oracle=_ivfsq8_oracle())
-def ivfsq8_ann_rerank(spark: SparkSession, sf_dir: str,
-                      checkpoint: bool = True) -> DataFrame:
+def ivfsq8_ann_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-pruned SQ8 search with exact rerank — the composition the
     SQ8 leg's docs promise ("pruning lives in the IVF leg; production
     composes").  Completes the quantizer x index matrix: IVF+flat
@@ -476,104 +434,75 @@ def ivfsq8_ann_rerank(spark: SparkSession, sf_dir: str,
     """
     from .corpus_plans2 import Q_LEVELS
     from .dedup_plans import _emb_with_norms, _ivf_ranked
-    from .extensions import similarity_topk_cosine
+    from .extensions import certify_recall
 
-    emb = _emb_with_norms(spark, sf_dir).persist()
-    try:
-        # per-dim stats -> broadcast; decode(encode(x)) folded into one
-        # expression over the exploded narrow rows, array rebuilt in dim
-        # order (the oracle's list(... ORDER BY dimi))
-        flat = emb.select("vec_id", F.posexplode("v").alias("dim", "x"))
-        stats = flat.groupBy("dim").agg(
-            F.min("x").alias("lo"), F.max("x").alias("hi"))
-        step = (F.col("hi") - F.col("lo")) / F.lit(float(Q_LEVELS))
-        code = F.least(
-            F.greatest(F.floor((F.col("x") - F.col("lo")) / step + 0.5), F.lit(0)),
-            F.lit(Q_LEVELS))
-        rv_val = F.when(F.col("hi") == F.col("lo"), F.col("lo")).otherwise(
-            F.col("lo") + step * code)
-        recon = (
-            flat.join(F.broadcast(stats), "dim")
-            .select("vec_id", F.struct(F.col("dim"), rv_val.alias("rv")).alias("s"))
-            .groupBy("vec_id")
-            .agg(F.transform(F.array_sort(F.collect_list("s")),
-                             lambda s: s["rv"]).alias("rv"))
-        )
+    emb = scope.cache(_emb_with_norms(spark, sf_dir))
+    # per-dim stats -> broadcast; decode(encode(x)) folded into one
+    # expression over the exploded narrow rows, array rebuilt in dim
+    # order (the oracle's list(... ORDER BY dimi))
+    flat = emb.select("vec_id", F.posexplode("v").alias("dim", "x"))
+    stats = flat.groupBy("dim").agg(
+        F.min("x").alias("lo"), F.max("x").alias("hi"))
+    step = (F.col("hi") - F.col("lo")) / F.lit(float(Q_LEVELS))
+    code = F.least(
+        F.greatest(F.floor((F.col("x") - F.col("lo")) / step + 0.5), F.lit(0)),
+        F.lit(Q_LEVELS))
+    rv_val = F.when(F.col("hi") == F.col("lo"), F.col("lo")).otherwise(
+        F.col("lo") + step * code)
+    recon = (
+        flat.join(F.broadcast(stats), "dim")
+        .select("vec_id", F.struct(F.col("dim"), rv_val.alias("rv")).alias("s"))
+        .groupBy("vec_id")
+        .agg(F.transform(F.array_sort(F.collect_list("s")),
+                         lambda s: s["rv"]).alias("rv"))
+    )
 
-        ranked = _ivf_ranked(emb)
-        assign = ranked.filter(F.col("rn") == 1).select(
-            F.col("vec_id").alias("neighbor_id"), "cent_id")
-        q = emb.filter(F.col("vec_id") % 100 == 0).select(
-            F.col("vec_id").alias("query_id"), F.col("v").alias("qv"))
-        q_cells = (
-            ranked.filter((F.col("vec_id") % 100 == 0)
-                          & (F.col("rn") <= IVFSQ8_NPROBE))
-            .select(F.col("vec_id").alias("query_id"), "cent_id")
-        )
-        cand = (
-            q_cells.join(assign, "cent_id")
-            .filter(F.col("neighbor_id") != F.col("query_id"))
-            .select("query_id", "neighbor_id")
-        )
-        shortlisted = (
-            cand.join(recon.withColumnRenamed("vec_id", "neighbor_id"),
-                      "neighbor_id")
-            .join(F.broadcast(q), "query_id")
-            .select("query_id", "neighbor_id",
-                    VX.cosine(F.col("qv"), F.col("rv")).alias("c_recon"))
-        )
-        w_short = W.partitionBy("query_id").orderBy(
-            F.col("c_recon").desc(), F.col("neighbor_id"))
-        short = (
-            shortlisted.withColumn("srnk", F.row_number().over(w_short))
-            .filter(F.col("srnk") <= IVFSQ8_SHORTLIST)
-            .select("query_id", "neighbor_id")
-        )
-        rer = (
-            short.join(emb.withColumnRenamed("vec_id", "neighbor_id"),
-                       "neighbor_id")
-            .join(F.broadcast(q), "query_id")
-            .select("query_id", "neighbor_id",
-                    VX.cosine(F.col("qv"), F.col("v")).alias("cos"))
-        )
-        w_rer = W.partitionBy("query_id").orderBy(
-            F.col("cos").desc(), F.col("neighbor_id"))
-        out = (
-            rer.withColumn("rnk", F.row_number().over(w_rer).cast("bigint"))
-            .filter(F.col("rnk") <= IVFSQ8_TOPK)
-            .select("query_id", "neighbor_id", "rnk")
-        )
-        # Materialize ONCE (recon + both ranks + joins) into a tiny
-        # checkpointed frame, then release the vector cache — the
-        # ivfpq_rerank convention: the recall counts below and the
-        # harness's later count/hash actions all read the checkpoint,
-        # so nothing in the pipeline runs twice and no cache outlives
-        # the query.  checkpoint=False is the plan-inspection seam
-        # (tools/dump_plans.py dumps the lazy form).
-        if checkpoint:
-            out = out.localCheckpoint(eager=True)
-            # persist: both counts read one brute-force execution
-            # (guide §1 — the corpus-scan baseline ran twice before)
-            brute = similarity_topk_cosine(spark, sf_dir).select(
-                "query_id", "neighbor_id").persist()
-            try:
-                n_brute = brute.count()
-                n_hit = out.join(brute, ["query_id", "neighbor_id"]).count()
-            finally:
-                brute.unpersist()
-            recall_ok = n_brute > 0 and (n_hit / n_brute) >= IVFSQ8_RECALL_FLOOR
-        else:
-            # plan-inspection seam (tools/dump_plans.py): the recall
-            # counts would eagerly materialize the full IVFxSQ8
-            # pipeline PLUS a brute-force scan at dump time — emit a
-            # constant flag instead; the certified value only ever
-            # ships through the checkpoint=True registered form.
-            recall_ok = True
-        return out.withColumn(
-            "recall_ge_floor", F.lit(bool(recall_ok))
-        ).orderBy("query_id", "rnk")
-    finally:
-        emb.unpersist()
+    ranked = _ivf_ranked(emb)
+    assign = ranked.filter(F.col("rn") == 1).select(
+        F.col("vec_id").alias("neighbor_id"), "cent_id")
+    q = emb.filter(F.col("vec_id") % 100 == 0).select(
+        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"))
+    q_cells = (
+        ranked.filter((F.col("vec_id") % 100 == 0)
+                      & (F.col("rn") <= IVFSQ8_NPROBE))
+        .select(F.col("vec_id").alias("query_id"), "cent_id")
+    )
+    cand = (
+        q_cells.join(assign, "cent_id")
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .select("query_id", "neighbor_id")
+    )
+    shortlisted = (
+        cand.join(recon.withColumnRenamed("vec_id", "neighbor_id"),
+                  "neighbor_id")
+        .join(F.broadcast(q), "query_id")
+        .select("query_id", "neighbor_id",
+                VX.cosine(F.col("qv"), F.col("rv")).alias("c_recon"))
+    )
+    w_short = W.partitionBy("query_id").orderBy(
+        F.col("c_recon").desc(), F.col("neighbor_id"))
+    short = (
+        shortlisted.withColumn("srnk", F.row_number().over(w_short))
+        .filter(F.col("srnk") <= IVFSQ8_SHORTLIST)
+        .select("query_id", "neighbor_id")
+    )
+    rer = (
+        short.join(emb.withColumnRenamed("vec_id", "neighbor_id"),
+                   "neighbor_id")
+        .join(F.broadcast(q), "query_id")
+        .select("query_id", "neighbor_id",
+                VX.cosine(F.col("qv"), F.col("v")).alias("cos"))
+    )
+    w_rer = W.partitionBy("query_id").orderBy(
+        F.col("cos").desc(), F.col("neighbor_id"))
+    out = (
+        rer.withColumn("rnk", F.row_number().over(w_rer).cast("bigint"))
+        .filter(F.col("rnk") <= IVFSQ8_TOPK)
+        .select("query_id", "neighbor_id", "rnk")
+    )
+    # checkpointed ONCE (recon + both ranks + joins): the recall
+    # counts and later actions read the checkpoint
+    return certify_recall(spark, sf_dir, out, IVFSQ8_RECALL_FLOOR)
 
 
 # --------------------------------------------------------------------------
@@ -643,8 +572,7 @@ ORDER BY query_id, rnk
 
 
 @register("ivfbq_ann_rerank", oracle=_ivfbq_oracle())
-def ivfbq_ann_rerank(spark: SparkSession, sf_dir: str,
-                     checkpoint: bool = True) -> DataFrame:
+def ivfbq_ann_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-pruned Hamming search with exact rerank — the BQ column of
     the quantizer x index matrix, completing the row ivfsq8_ann_rerank
     opened: IVF+flat (similarity_ann_ivf), IVF+PQ (ivfpq_ann_adc),
@@ -684,45 +612,41 @@ def ivfbq_ann_rerank(spark: SparkSession, sf_dir: str,
     """
     from .dedup_plans import _emb_with_norms, _ivf_ranked
 
-    emb = _emb_with_norms(spark, sf_dir).persist()
-    try:
-        base = emb.select("vec_id", "v")
-        thresholds = BQ.bq_thresholds(base)
-        dim = len(thresholds)
-        code_cols = [f"code{w}" for w in range(BQ.n_words(dim))]
-        codes = BQ.bq_pack(base, thresholds, "v").select("vec_id", *code_cols)
-        ranked = _ivf_ranked(emb)
-        assign = ranked.filter(F.col("rn") == 1).select(
-            F.col("vec_id").alias("neighbor_id"), "cent_id")
-        q = emb.filter(F.col("vec_id") % 100 == 0).select(
-            F.col("vec_id").alias("query_id"), F.col("v").alias("qv"))
-        q_cells = (
-            ranked.filter((F.col("vec_id") % 100 == 0)
-                          & (F.col("rn") <= IVFBQ_NPROBE))
-            .select(F.col("vec_id").alias("query_id"), "cent_id")
-        )
-        cand = (
-            q_cells.join(assign, "cent_id")
-            .filter(F.col("neighbor_id") != F.col("query_id"))
-            .select("query_id", "neighbor_id")
-        )
-        packed_q = BQ.bq_pack(q, thresholds, "qv", prefix="qcode").drop("qv")
-        scored = (
-            cand.join(codes.withColumnRenamed("vec_id", "neighbor_id"),
-                      "neighbor_id")
-            .join(F.broadcast(packed_q), "query_id")
-            .select("query_id", "neighbor_id",
-                    BQ.hamming("code", "qcode", dim).alias("hamming"))
-        )
-        sw = W.partitionBy("query_id").orderBy(
-            F.col("hamming").asc(), F.col("neighbor_id").asc())
-        short = (
-            scored.withColumn("srnk", F.row_number().over(sw))
-            .filter(F.col("srnk") <= IVFBQ_SHORTLIST)
-            .drop("srnk")
-        )
-        return _bq_rerank_tail(spark, sf_dir, base, q, short,
-                               floor=IVFBQ_RECALL_FLOOR,
-                               checkpoint=checkpoint)
-    finally:
-        emb.unpersist()
+    emb = scope.cache(_emb_with_norms(spark, sf_dir))
+    base = emb.select("vec_id", "v")
+    thresholds = BQ.bq_thresholds(base)
+    dim = len(thresholds)
+    code_cols = [f"code{w}" for w in range(BQ.n_words(dim))]
+    codes = BQ.bq_pack(base, thresholds, "v").select("vec_id", *code_cols)
+    ranked = _ivf_ranked(emb)
+    assign = ranked.filter(F.col("rn") == 1).select(
+        F.col("vec_id").alias("neighbor_id"), "cent_id")
+    q = emb.filter(F.col("vec_id") % 100 == 0).select(
+        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"))
+    q_cells = (
+        ranked.filter((F.col("vec_id") % 100 == 0)
+                      & (F.col("rn") <= IVFBQ_NPROBE))
+        .select(F.col("vec_id").alias("query_id"), "cent_id")
+    )
+    cand = (
+        q_cells.join(assign, "cent_id")
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .select("query_id", "neighbor_id")
+    )
+    packed_q = BQ.bq_pack(q, thresholds, "qv", prefix="qcode").drop("qv")
+    scored = (
+        cand.join(codes.withColumnRenamed("vec_id", "neighbor_id"),
+                  "neighbor_id")
+        .join(F.broadcast(packed_q), "query_id")
+        .select("query_id", "neighbor_id",
+                BQ.hamming("code", "qcode", dim).alias("hamming"))
+    )
+    sw = W.partitionBy("query_id").orderBy(
+        F.col("hamming").asc(), F.col("neighbor_id").asc())
+    short = (
+        scored.withColumn("srnk", F.row_number().over(sw))
+        .filter(F.col("srnk") <= IVFBQ_SHORTLIST)
+        .drop("srnk")
+    )
+    return _bq_rerank_tail(spark, sf_dir, base, q, short,
+                           floor=IVFBQ_RECALL_FLOOR)

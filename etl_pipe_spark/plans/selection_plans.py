@@ -66,6 +66,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window as W
 
 from ..functions import text as TX
+from ..operators import scope
 from ..operators.layout import spread_for_compute
 from ..operators.ordering import ranked_running_sum
 from ..sources.catalog import load_table
@@ -137,8 +138,7 @@ FROM ranked ORDER BY doc_id
 
 
 @register("dsir_importance_select", oracle=_DSIR_ORACLE)
-def dsir_importance_select(spark: SparkSession, sf_dir: str,
-                           checkpoint: bool = True) -> DataFrame:
+def dsir_importance_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document DSIR importance weight against the English target
     slice, with the top DSIR_KEEP_FRAC selected — hashed unigram +
     bigram features, add-one-smoothed bucket models, fixed-point log
@@ -162,8 +162,7 @@ def dsir_importance_select(spark: SparkSession, sf_dir: str,
     range-sampling pass AND the final output — the bm25_retrieval
     precedent), the top-fraction rank runs through
     ranked_running_sum's two-phase rank (never one window task), and
-    the result is localCheckpoint'ed so the cache can be released
-    before returning (checkpoint=False is the plan-inspection seam).
+    the result is localCheckpoint'ed.
     """
     docs = spread_for_compute(spark, load_table(spark, sf_dir, "documents"))
     toks = F.split(F.col("text"), " ")
@@ -195,65 +194,58 @@ def dsir_importance_select(spark: SparkSession, sf_dir: str,
     # projection — ~24 bytes/gram, disk-spillable; at cluster scale
     # that cache is still gram-count-sized, but recomputing the
     # tokenize+md5 stream twice costs strictly more than writing the
-    # projection once.  Released in the finally below.
-    hashed = docs.select(
+    # projection once.
+    hashed = scope.cache(docs.select(
         "doc_id", "lang",
         F.explode(grams).alias("t"),
     ).select(
         "doc_id", "lang",
         (TX.hash32(F.col("t")) % DSIR_BUCKETS).alias("b"),
-    ).persist()
-    scored = None
-    try:
-        counts = hashed.groupBy("b").agg(
-            F.count(F.lit(1)).cast("bigint").alias("rb"),
-            F.sum(
-                F.when(F.col("lang") == DSIR_TARGET_LANG, 1).otherwise(0)
-            ).cast("bigint").alias("tb"),
+    ))
+    counts = hashed.groupBy("b").agg(
+        F.count(F.lit(1)).cast("bigint").alias("rb"),
+        F.sum(
+            F.when(F.col("lang") == DSIR_TARGET_LANG, 1).otherwise(0)
+        ).cast("bigint").alias("tb"),
+    )
+    totals = counts.agg(
+        F.sum("tb").cast("double").alias("tn"),
+        F.sum("rb").cast("double").alias("rn"),
+    )
+    model = counts.crossJoin(F.broadcast(totals)).select(
+        "b",
+        F.round(
+            F.log(
+                ((F.col("tb") + 1) * (F.col("rn") + float(DSIR_BUCKETS)))
+                / ((F.col("rb") + 1) * (F.col("tn") + float(DSIR_BUCKETS)))
+            ) * _FP
+        ).cast("bigint").alias("lr"),
+    )
+    scored = scope.cache(
+        hashed.join(F.broadcast(model), "b")
+        .groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_grams"),
+            F.sum("lr").cast("bigint").alias("weight_fp"),
         )
-        totals = counts.agg(
-            F.sum("tb").cast("double").alias("tn"),
-            F.sum("rb").cast("double").alias("rn"),
+    )
+    k = scored.agg(
+        F.ceil(F.count(F.lit(1)) * DSIR_KEEP_FRAC).alias("k")
+    )
+    # descending fixed-point weight == ascending negated (bigint)
+    ranked = ranked_running_sum(
+        scored, [(-F.col("weight_fp")), F.col("doc_id")], None,
+        rank_name="rnk",
+    )
+    out = (
+        ranked.crossJoin(F.broadcast(k))
+        .select(
+            "doc_id", "n_grams", "weight_fp",
+            (F.col("rnk") <= F.col("k")).cast("int").alias("selected"),
         )
-        model = counts.crossJoin(F.broadcast(totals)).select(
-            "b",
-            F.round(
-                F.log(
-                    ((F.col("tb") + 1) * (F.col("rn") + float(DSIR_BUCKETS)))
-                    / ((F.col("rb") + 1) * (F.col("tn") + float(DSIR_BUCKETS)))
-                ) * _FP
-            ).cast("bigint").alias("lr"),
-        )
-        scored = (
-            hashed.join(F.broadcast(model), "b")
-            .groupBy("doc_id")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_grams"),
-                F.sum("lr").cast("bigint").alias("weight_fp"),
-            )
-            .persist()
-        )
-        k = scored.agg(
-            F.ceil(F.count(F.lit(1)) * DSIR_KEEP_FRAC).alias("k")
-        )
-        # descending fixed-point weight == ascending negated (bigint)
-        ranked = ranked_running_sum(
-            scored, [(-F.col("weight_fp")), F.col("doc_id")], None,
-            rank_name="rnk",
-        )
-        out = (
-            ranked.crossJoin(F.broadcast(k))
-            .select(
-                "doc_id", "n_grams", "weight_fp",
-                (F.col("rnk") <= F.col("k")).cast("int").alias("selected"),
-            )
-            .orderBy("doc_id")
-        )
-        return out.localCheckpoint(eager=True) if checkpoint else out
-    finally:
-        if scored is not None:
-            scored.unpersist()
-        hashed.unpersist()
+        .orderBy("doc_id")
+    )
+    return scope.checkpoint(out)
 
 
 # ---------------------------------------------------------------------------

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from ..functions.text import DUCK_HASH60, hash60, ws_tokens
+from ..operators import scope
 from ..operators.dedup import simhash
 from ..operators.layout import spread_for_compute
 from ..sources.catalog import load_table
@@ -59,8 +60,7 @@ _sums, _fp = duck_simhash_pieces()
 
 @register("dedup_simhash_pairs", oracle=_SIMHASH_PAIRS_ORACLE.format(sums=_sums, fp=_fp))
 def dedup_simhash_pairs(spark: SparkSession, sf_dir: str,
-                        bucket_cap: int | None = None,
-                        checkpoint: bool = True) -> DataFrame:
+                        bucket_cap: int | None = None) -> DataFrame:
     """SimHash near-dup pairs: byte-band candidates, hamming <= 6 verify.
 
     The 32-bit fingerprint splits into 4 byte bands; docs agreeing on
@@ -74,16 +74,14 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str,
     boilerplate byte-value would otherwise dominate the edge list).
     PageRank's production edge set passes PR_BUCKET_CAP here; its
     DuckDB oracle applies the same HAVING.  When a cap is active the
-    vertex-sized fingerprint table is checkpointed once (checkpoint
-    permitting) so the tokenize+vote expression isn't re-derived per
-    join branch (bucket counts + both self-join sides = 4x otherwise).
-    ``checkpoint=False`` is the plan-inspection seam: fully lazy, no
-    jobs at construction time.
+    vertex-sized fingerprint table is checkpointed once so the
+    tokenize+vote expression isn't re-derived per join branch (bucket
+    counts + both self-join sides = 4x otherwise).
     """
     docs = spread_for_compute(spark, load_table(spark, sf_dir, "documents"))
     fp = simhash(docs)
-    if bucket_cap is not None and checkpoint:
-        fp = fp.localCheckpoint(eager=True)
+    if bucket_cap is not None:
+        fp = scope.checkpoint(fp)
     bands = fp.select(
         "doc_id", "simhash",
         F.explode(F.array(*[F.lit(i) for i in range(4)])).alias("band"),

@@ -38,6 +38,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window as W
 
+from ..operators import scope
 from ..sources.catalog import load_table
 from .catalog import register
 from ..functions.frames import local_frame
@@ -336,7 +337,6 @@ ORDER BY query_id, rnk
 
 @register("bm25_retrieval", oracle=_BM25_ORACLE)
 def bm25_retrieval(spark: SparkSession, sf_dir: str,
-                   checkpoint: bool = True,
                    query_set=None) -> DataFrame:
     """Okapi BM25 top-k retrieval for a fixed query set, hash-checked
     end to end (Robertson & Zaragoza 2009; the Lucene-style
@@ -356,15 +356,21 @@ def bm25_retrieval(spark: SparkSession, sf_dir: str,
     BEFORE any shuffle, so the tf aggregation and everything after it
     move only MATCHED postings — never the whole-vocabulary postings
     table.  The matched-postings frame feeds both tf and df, so it is
-    persisted for the query's lifetime (a retrieval system persists
-    its inverted index; the ivfpq_rerank warm-path precedent), the
-    tiny final ranking is localCheckpoint'ed, and the cache is
-    released before returning.  df per query term is exact even
+    cached for the query's lifetime (a retrieval system persists its
+    inverted index; the ivfpq_rerank warm-path precedent) and the
+    tiny final ranking is localCheckpoint'ed.  df per query term is
+    exact even
     though it is computed POST-filter: filtering to a term's own
     postings does not change that term's document count.  Corpus
     stats (N, avgdl) are a 1-row broadcast crossJoin (the repo-wide
     scalar pattern) computed from a narrow no-shuffle scan.
     """
+    return scope.checkpoint(_bm25_topk(spark, sf_dir, query_set))
+
+
+def _bm25_topk(spark: SparkSession, sf_dir: str,
+               query_set=None) -> DataFrame:
+    """The lazy ranking behind :func:`bm25_retrieval`."""
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.split("text", " ").alias("w")
     )
@@ -381,42 +387,36 @@ def bm25_retrieval(spark: SparkSession, sf_dir: str,
         [(qid, t) for qid, ts in (query_set or _BM25_QUERIES) for t in ts],
         "query_id int, term string")
     tok = docs.select("doc_id", F.explode("w").alias("term"))
-    matched = (
+    matched = scope.cache(
         tok.join(F.broadcast(qterms.select("term").distinct()), "term")
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
-        .persist()
     )
-    try:
-        dfm = matched.groupBy("term").agg(
-            F.count(F.lit(1)).cast("bigint").alias("df"))
-        contrib = (
-            F.log((F.col("__n") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1)
-            * (F.col("tf") * (_BM25_K1 + 1))
-            / (F.col("tf") + _BM25_K1
-               * (1 - _BM25_B + _BM25_B * F.col("dl") / F.col("__avgdl")))
-        )
-        scored = (
-            matched.join(F.broadcast(dfm), "term")
-            .join(F.broadcast(qterms), "term")
-            .join(doclen, "doc_id")
-            .crossJoin(F.broadcast(stats))
-            .groupBy("query_id", "doc_id")
-            .agg(F.round(F.sum(contrib), 4).alias("score"))
-        )
-        w = W.partitionBy("query_id").orderBy(
-            F.col("score").desc(), F.col("doc_id"))
-        out = (
-            scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-            .filter(F.col("rnk") <= _BM25_TOPK)
-            .select("query_id", "doc_id", "score", "rnk")
-            .orderBy("query_id", "rnk")
-        )
-        # checkpoint=False is the plan-inspection seam (the ivfpq_rerank
-        # convention): identical results, lazy plan visible.
-        return out.localCheckpoint(eager=True) if checkpoint else out
-    finally:
-        matched.unpersist()
+    dfm = matched.groupBy("term").agg(
+        F.count(F.lit(1)).cast("bigint").alias("df"))
+    contrib = (
+        F.log((F.col("__n") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1)
+        * (F.col("tf") * (_BM25_K1 + 1))
+        / (F.col("tf") + _BM25_K1
+           * (1 - _BM25_B + _BM25_B * F.col("dl") / F.col("__avgdl")))
+    )
+    scored = (
+        matched.join(F.broadcast(dfm), "term")
+        .join(F.broadcast(qterms), "term")
+        .join(doclen, "doc_id")
+        .crossJoin(F.broadcast(stats))
+        .groupBy("query_id", "doc_id")
+        .agg(F.round(F.sum(contrib), 4).alias("score"))
+    )
+    w = W.partitionBy("query_id").orderBy(
+        F.col("score").desc(), F.col("doc_id"))
+    out = (
+        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
+        .filter(F.col("rnk") <= _BM25_TOPK)
+        .select("query_id", "doc_id", "score", "rnk")
+        .orderBy("query_id", "rnk")
+    )
+    return out
 
 
 # --------------------------------------------------------------------------
@@ -507,10 +507,10 @@ def mmr_diversified_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: MMR is a POST-RETRIEVAL operator — its input is the
     (queries x k) shortlist, never the corpus.  The corpus-sized work
-    (postings, df, BM25 scoring) happens once in bm25_retrieval, which
-    checkpoints its k-row output; the pairwise-similarity table is
-    (queries x k^2) rows.  The greedy selection itself is a
-    cogroup().applyInPandas over query_id — each group is one query's
+    (postings, df, BM25 scoring) happens once in bm25_retrieval's
+    ranking, whose k-row output is checkpointed; the
+    pairwise-similarity table is (queries x k^2) rows.  The greedy
+    selection itself is a cogroup().applyInPandas over query_id — each group is one query's
     k scores + k^2 sims (bounded by construction, k=10 here), so the
     loop is embarrassingly parallel across queries with ONE shuffle
     and no per-step driver round trips; a million-query batch costs a
@@ -518,7 +518,12 @@ def mmr_diversified_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     grouped-map sibling of pandas_group_zscore and completes the
     Arrow surface matrix with the COGROUPED shape.)
     """
-    short = bm25_retrieval(spark, sf_dir).select("query_id", "doc_id", "score")
+    # materialized inside scope.inspect() too: the cogroup below pairs
+    # the shortlist with `sims`, which derives from it, and Spark
+    # rejects that as an ambiguous self-join unless the shortlist is a
+    # checkpoint
+    short = _bm25_topk(spark, sf_dir).localCheckpoint(eager=True).select(
+        "query_id", "doc_id", "score")
     tsets = (
         load_table(spark, sf_dir, "documents")
         .join(short.select("doc_id").distinct(), "doc_id")

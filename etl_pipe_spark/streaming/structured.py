@@ -23,6 +23,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..operators import scope
 from ..operators.merge import ParquetMergeSink, insert_if_absent
 from ..session import pin_conf
 
@@ -190,12 +191,11 @@ def stream_jsonl_ingest(
         # overwrite silently delete the other file's quarantined lines
         # (a 48-bit prefix reaches ~50% birthday collision around 16M
         # files — inside the landing-zone scale this module targets).
-        batch_df = batch_df.withColumn(
+        with scope.cached(batch_df.withColumn(
             "src_path", F.input_file_name()
         ).withColumn(
             "src_file", F.sha1(F.input_file_name())
-        ).persist()
-        try:
+        )) as batch_df:
             good, bad = quarantine(batch_df)
             (
                 bad.write.partitionBy("src_file")
@@ -205,8 +205,6 @@ def stream_jsonl_ingest(
             )
             sink.write(insert_if_absent(
                 sink.read(), good.drop("src_path", "src_file"), key_cols))
-        finally:
-            batch_df.unpersist()
 
     q = (
         stream.writeStream.foreachBatch(apply_batch)

@@ -47,6 +47,17 @@ def sf_dir() -> str:
     return SF_DIR
 
 
+@pytest.fixture(autouse=True)
+def _release_scope():
+    """Release every query-lifetime cache after each test: Spark's
+    CacheManager would otherwise substitute a cache one test left into
+    a later test's plan that happens to match it."""
+    yield
+    from etl_pipe_spark.operators import scope
+
+    scope.release()
+
+
 @pytest.fixture()
 def jobs_launched(spark):
     """``jobs_launched(fn, *args)`` -> (fn's result, number of Spark jobs

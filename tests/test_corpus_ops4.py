@@ -132,18 +132,17 @@ def test_novelty_exact_on_micro_corpus(spark):
 
 def test_rank_caches_are_tracked_and_releasable(spark, sf_dir):
     """curriculum's correctness caches must drain via the shared
-    registry once the query is fully materialized (the harness
+    scope once the query is fully materialized (the harness
     contract — no session-lifetime cache residue)."""
-    from etl_pipe_spark.operators.ordering import (
-        _LIVE_RANK_CACHES, release_rank_caches)
+    from etl_pipe_spark.operators import scope
 
-    release_rank_caches()
+    scope.release()
     out = REGISTRY["curriculum_quantile_interleave"].fn(spark, sf_dir)
     out.count()  # fully materialize
-    assert len(_LIVE_RANK_CACHES) >= 4  # base, bucketed, 2x within
-    released = release_rank_caches()
+    assert len(scope._TRACKED) >= 4  # base, bucketed, 2x within
+    released = scope.release()
     assert released >= 4
-    assert not _LIVE_RANK_CACHES
+    assert not scope._TRACKED
 
 
 def test_novelty_persisted_reference_equals_inquery(spark, sf_dir, tmp_path):

@@ -209,6 +209,19 @@ def test_lsh_persisted_probe_equals_in_memory(spark, sf_dir, tmp_path_factory):
     assert got == want and len(got) > 0
 
 
+def test_lsh_build_error_leaves_no_cache(spark, tmp_path):
+    """A build over documents that never reach shingle_n tokens raises
+    and releases the kernel frame it cached for the count."""
+    from etl_pipe_spark.operators.index_store import build_lsh_index
+
+    spark.catalog.clearCache()
+    docs = spark.createDataFrame(
+        [(1, "too short"), (2, "tiny")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="no doc reaches shingle_n"):
+        build_lsh_index(spark, docs, str(tmp_path / "idx"), shingle_n=3)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_lsh_append_only_touches_batch(spark, sf_dir, tmp_path_factory):
     """Append must add ONLY the batch's band/shingle rows (frozen
     shingle_n, immutable history files) and make the appended docs

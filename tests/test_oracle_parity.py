@@ -9,6 +9,7 @@ import pytest
 from tests.oracle_utils import compare, duckdb_connect
 
 import __spark_entry__ as entrymod
+from etl_pipe_spark.operators import scope
 
 
 def _specs():
@@ -31,6 +32,7 @@ _COMPLEX_TYPES = ("array", "map", "struct")
 def test_query_matches_oracle(name, spark, sf_dir, duck):
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
+    spark.catalog.clearCache()
     df = qs[name](spark, sf_dir)
     # Driver-compat gate: the round driver canonicalizes results through
     # pandas sort_values, which raises `unhashable type: 'list'` on any
@@ -45,18 +47,16 @@ def test_query_matches_oracle(name, spark, sf_dir, duck):
         f"[{name}] complex-typed output columns {bad} would crash the "
         f"driver's pandas canonicalizer; serialize them to scalars"
     )
-    try:
-        if name in oracles:
-            compare(df, duck, oracles[name], name=name)
-        else:
-            # rows-only check, mirroring the driver's weaker path
-            assert df.count() >= 0
-    finally:
-        # this query is fully materialized — drain its tracked
-        # rank-correctness caches so the 163-query session doesn't
-        # accumulate them (operators/ordering.py contract)
-        from etl_pipe_spark.operators.ordering import release_rank_caches
-        release_rank_caches()
+    if name in oracles:
+        compare(df, duck, oracles[name], name=name)
+    else:
+        # rows-only check, mirroring the driver's weaker path
+        assert df.count() >= 0
+    # this query is fully materialized: releasing its scope must leave
+    # nothing in Spark's CacheManager
+    scope.release()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), (
+        f"[{name}] left a cached frame that scope.release() cannot drop")
 
 
 def test_entry_smoke(spark):

@@ -18,7 +18,7 @@ function of the row's order-key values against boundary literals
 frozen at plan-build time, so independent re-evaluations of the two
 consumers always agree and the tracked persist is a pure performance
 cache.  test_rank_survives_early_cache_release pins exactly that —
-release_rank_caches() fired BEFORE any action (the call pattern the
+scope.release() fired BEFORE any action (the call pattern the
 r8 contract forbade) must still yield a permutation.
 
 Round 10 tiers the file (VERDICT r9 item 4 — the suite outgrew the
@@ -36,10 +36,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from etl_pipe_spark.operators.ordering import (
-    ranked_running_sum,
-    release_rank_caches,
-)
+from etl_pipe_spark.operators import scope
+from etl_pipe_spark.operators.ordering import ranked_running_sum
 
 N_FAST = 150_000
 N_SLOW = 1_000_000
@@ -81,7 +79,7 @@ def _run_permutation(spark, n):
         _permutation_check(ranked, n)
     finally:
         df.unpersist()
-        release_rank_caches()
+        scope.release()
 
 
 def _run_early_release(spark, n):
@@ -92,7 +90,7 @@ def _run_early_release(spark, n):
             df, [F.col("n_tokens"), F.col("doc_id")], None, rank_name="rnk"
         )
         # early release: no action has touched `ranked` yet
-        release_rank_caches()
+        scope.release()
         _permutation_check(ranked, n)
         # and a SECOND action on the same (now uncached) frame must
         # reproduce the identical permutation — re-evaluation cannot
@@ -100,7 +98,7 @@ def _run_early_release(spark, n):
         _permutation_check(ranked, n)
     finally:
         df.unpersist()
-        release_rank_caches()
+        scope.release()
 
 
 def _run_running_sum(spark, n):
@@ -124,7 +122,7 @@ def _run_running_sum(spark, n):
         assert chk["first_before"] == 0
     finally:
         df.unpersist()
-        release_rank_caches()
+        scope.release()
 
 
 # --- fast tier (default) ---------------------------------------------------

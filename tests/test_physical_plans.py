@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import pytest
 
+from etl_pipe_spark.operators import scope
 from etl_pipe_spark.plans.catalog import queries
 
 
@@ -258,11 +259,12 @@ def test_ivfpq_rerank_shortlist_join_not_cartesian(spark, sf_dir):
     equi-keys — never a nested loop over the corpus, and the final
     top-k must stay a partitioned window (no global sort of the
     corpus)."""
-    # checkpoint=False: the registered (warm-path) form returns a
+    # scope.inspect(): the registered (warm-path) form returns a
     # localCheckpoint scan whose plan hides the joins it already ran
     from etl_pipe_spark.plans.dedup_plans import ivfpq_rerank
 
-    df = ivfpq_rerank(spark, sf_dir, checkpoint=False)
+    with scope.inspect():
+        df = ivfpq_rerank(spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     # the single nested-loop is the deliberate broadcast k-row
@@ -381,7 +383,8 @@ def test_pagerank_lineage_is_bounded(spark, sf_dir):
     assert "documents.parquet" not in real  # lineage truncated
     assert "xor" not in real
 
-    one = pagerank_neardup_graph(spark, sf_dir, checkpoint=False, iters=1)
+    with scope.inspect():
+        one = pagerank_neardup_graph(spark, sf_dir, iters=1)
     plan = one._jdf.queryExecution().executedPlan().toString()
     # Both the degree table and the (edges ⋈ deg) table must be
     # cached scans — every banding derivation in the text sits UNDER
@@ -410,7 +413,8 @@ def test_cooccurrence_pairs_are_mapside_no_self_join(spark, sf_dir):
     broadcast, never pair-space-sized."""
     from etl_pipe_spark.plans.corpus_plans3 import cooccurrence_pmi
 
-    df = cooccurrence_pmi(spark, sf_dir, checkpoint=False)
+    with scope.inspect():
+        df = cooccurrence_pmi(spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "SortMergeJoin" not in plan
@@ -455,12 +459,13 @@ def test_hive_read_prunes_partitions(spark, sf_dir):
 def test_triangle_joins_are_hash_not_allpairs(spark, sf_dir):
     # wedge-build and wedge-close must be key-hashed joins of the
     # oriented edge list — any nested-loop shape means the orientation
-    # stopped bounding the fan-out.  checkpoint=False is the
-    # inspection seam: the registered query returns an eager
-    # localCheckpoint whose plan is just the checkpoint scan.
+    # stopped bounding the fan-out.  Built under scope.inspect(): the
+    # registered query returns an eager localCheckpoint whose plan is
+    # just the checkpoint scan.
     from etl_pipe_spark.plans.graph_plans import triangle_clustering_coeff
 
-    df = triangle_clustering_coeff(spark, sf_dir, checkpoint=False)
+    with scope.inspect():
+        df = triangle_clustering_coeff(spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan

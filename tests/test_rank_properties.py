@@ -15,8 +15,8 @@ import random
 import pytest
 from pyspark.sql import Window as W, functions as F
 
-from etl_pipe_spark.operators.ordering import (
-    ranked_running_sum, release_rank_caches)
+from etl_pipe_spark.operators import scope
+from etl_pipe_spark.operators.ordering import ranked_running_sum
 
 N_ROWS = 3000
 _HOSTILE = [float("nan"), float("inf"), float("-inf"), -0.0, 0.0, None,
@@ -71,7 +71,7 @@ def test_rank_matches_row_number_over_hostile_keys(spark, seed, nan_share,
             .select("id", "rnk", "sum_before").collect()
         }
     finally:
-        release_rank_caches()
+        scope.release()
     assert len(got) == N_ROWS
     wrong = [i for i in want if got[i] != want[i]]
     assert wrong == [], f"{len(wrong)} wrong ranks, e.g. id {wrong[:5]}"

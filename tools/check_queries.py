@@ -32,7 +32,6 @@ def main() -> None:
     import __spark_entry__ as entrymod
     from oracle_utils import compare, compare_pandas, duckdb_connect
 
-    from etl_pipe_spark.operators.ordering import release_rank_caches
     from etl_pipe_spark.session import get_spark
 
     spark = get_spark("check-queries")
@@ -52,8 +51,6 @@ def main() -> None:
         except Exception:
             n_bad += 1
             print(f"ERR {name}\n{traceback.format_exc(limit=5)}", flush=True)
-        finally:
-            release_rank_caches()
     spark.stop()
     sys.exit(1 if n_bad else 0)
 

@@ -73,7 +73,7 @@ def main() -> None:
     args = ap.parse_args()
     scales = [int(s) for s in args.scales.split(",")]
 
-    from etl_pipe_spark.operators.ordering import release_rank_caches
+    from etl_pipe_spark.operators import scope
     from etl_pipe_spark.plans.catalog import REGISTRY, _load_all
     from etl_pipe_spark.session import get_spark
 
@@ -132,7 +132,7 @@ def main() -> None:
             "op": "curriculum", "n_docs": n, "wall_s": wall,
             "rows": chk["rows"], "buckets": chk["buckets"],
         }), flush=True)
-        release_rank_caches()
+        scope.release()
 
         t0 = time.time()
         out = nov(spark, sf_dir)

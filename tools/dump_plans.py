@@ -124,8 +124,7 @@ EXTRA_PLANS = [
     # NFC (single MapInPandas pass), schema evolution (mergeSchema
     # union scan), hive pruning (PartitionFilters on the day read),
     # funnel (partial-min cascade), MMR (cogrouped Arrow greedy over
-    # the checkpointed shortlist).  triangle_clustering_coeff is added
-    # via its checkpoint=False seam below.
+    # the checkpointed shortlist).
     "timeseries_gapfill",
     "weighted_priority_sample",
     "unicode_nfc_normalize",
@@ -169,6 +168,7 @@ EXTRA_PLANS = [
 
 def main() -> None:
     from bench import HEADLINE
+    from etl_pipe_spark.operators import scope
     from etl_pipe_spark.plans.catalog import queries
     from etl_pipe_spark.session import get_spark
 
@@ -184,73 +184,39 @@ def main() -> None:
             "dimension sides, partial_* aggregation before Exchange,\n"
             "TakeOrderedAndProject for top-k, WholeStageCodegen coverage.\n"
         )
-        # queries whose registered form returns a localCheckpoint scan
-        # (warm-path precedent) dump their LAZY form instead — the
-        # checkpointed plan is a bare RDD scan with no evidence in it
-        lazy_forms = {}
-        from etl_pipe_spark.plans.dedup_plans import ivfpq_rerank
-        from etl_pipe_spark.plans.quant_plans import ivfsq8_ann_rerank
-        from etl_pipe_spark.plans.text_plans4 import bm25_retrieval
-        lazy_forms["ivfpq_rerank"] = lambda s, d: ivfpq_rerank(
-            s, d, checkpoint=False)
-        lazy_forms["ivfsq8_ann_rerank"] = lambda s, d: ivfsq8_ann_rerank(
-            s, d, checkpoint=False)
-        # r9: the SQ8 rerank tail gained the checkpoint seam (the BQ
-        # convention) — dump the lazy form so the plan still shows the
-        # search kernel + rerank joins, not a checkpoint RDD scan
-        from etl_pipe_spark.plans.corpus_plans2 import (
-            sq8_ann_rerank, sq8_index_persisted)
-        lazy_forms["sq8_ann_rerank"] = lambda s, d: sq8_ann_rerank(
-            s, d, checkpoint=False)
-        lazy_forms["sq8_index_persisted"] = lambda s, d: sq8_index_persisted(
-            s, d, checkpoint=False)
-        lazy_forms["bm25_retrieval"] = lambda s, d: bm25_retrieval(
-            s, d, checkpoint=False)
-        from etl_pipe_spark.plans.graph_plans import pagerank_neardup_graph
-        # iters=1: the executed loop truncates lineage per iteration
-        # (persisted edges + localCheckpoint); the fully lazy 8-deep
-        # plan would textually unroll what execution never re-derives.
-        lazy_forms["pagerank_neardup_graph"] = (
-            lambda s, d: pagerank_neardup_graph(s, d, checkpoint=False,
-                                                iters=1))
-        from etl_pipe_spark.plans.corpus_plans3 import cooccurrence_pmi
-        lazy_forms["cooccurrence_pmi"] = (
-            lambda s, d: cooccurrence_pmi(s, d, checkpoint=False))
-        from etl_pipe_spark.plans.graph_plans import triangle_clustering_coeff
-        lazy_forms["triangle_clustering_coeff"] = (
-            lambda s, d: triangle_clustering_coeff(s, d, checkpoint=False))
-        # r7 persisted forms: write the edge table eagerly, dump the
-        # LAZY graph stages over the reloaded files (iters=1 for the
-        # pagerank convention noted above)
+        # Built inside scope.inspect(): queries whose executed form
+        # returns a localCheckpoint scan (warm-path precedent) stay
+        # lazy, so the dump shows their operators instead of a bare
+        # RDD scan.  The PageRank forms dump ONE iteration (iters=1):
+        # the executed loop truncates lineage per iteration, and the
+        # lazy 8-deep plan would textually unroll what execution never
+        # re-derives.
         from etl_pipe_spark.plans.graph_plans import (
-            PR_BUCKET_CAP, _pagerank_over_pairs, _write_edge_table)
+            PR_BUCKET_CAP, _pagerank_over_pairs, _write_edge_table,
+            pagerank_neardup_graph)
         from etl_pipe_spark.plans.ingest_plans import _io_dir
+        from etl_pipe_spark.plans.text_plans2 import dedup_simhash_pairs
 
         def _pagerank_persisted_lazy(s, d):
-            from etl_pipe_spark.plans.text_plans2 import dedup_simhash_pairs
             pairs = dedup_simhash_pairs(
                 s, d, bucket_cap=PR_BUCKET_CAP).select("left_id", "right_id")
             stored = _write_edge_table(
                 s, pairs, _io_dir(d, "neardup_edges_simhash"))
-            return _pagerank_over_pairs(s, d, stored, checkpoint=False,
-                                        iters=1)
+            return _pagerank_over_pairs(s, d, stored, iters=1)
 
-        def _triangle_persisted_lazy(s, d):
-            from etl_pipe_spark.plans.dedup_plans import dedup_minhash_lsh
-            pairs = dedup_minhash_lsh(s, d).select("left_id", "right_id")
-            stored = _write_edge_table(
-                s, pairs, _io_dir(d, "neardup_edges_verified"))
-            return triangle_clustering_coeff(s, d, pairs=stored,
-                                             checkpoint=False)
-
-        lazy_forms["pagerank_persisted_edges"] = _pagerank_persisted_lazy
-        lazy_forms["triangle_persisted_pairs"] = _triangle_persisted_lazy
+        one_iteration = {
+            "pagerank_neardup_graph":
+                lambda s, d: pagerank_neardup_graph(s, d, iters=1),
+            "pagerank_persisted_edges": _pagerank_persisted_lazy,
+        }
         for name in HEADLINE + [n for n in EXTRA_PLANS if n not in HEADLINE]:
-            df = lazy_forms.get(name, qs[name])(spark, SF_DIR)
+            with scope.inspect():
+                df = one_iteration.get(name, qs[name])(spark, SF_DIR)
             buf = io.StringIO()
             with redirect_stdout(buf):
                 df.explain("formatted")
             f.write(f"\n## {name}\n\n```\n{buf.getvalue().strip()}\n```\n")
+            scope.release()
     spark.stop()
     print(f"wrote {OUT}")
 

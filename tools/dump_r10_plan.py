@@ -4,9 +4,9 @@
 Usage:  python tools/dump_r10_plan.py TAG name [name ...]
 
 Writes plans/r10/<name>_<TAG>.txt (TAG = before | after).  Queries
-with a ``checkpoint=`` plan-inspection seam are dumped through it
-(checkpoint=False) so the text shows the real operator tree instead
-of a checkpoint RDD scan — the tools/dump_plans.py convention.  For
+are built inside ``scope.inspect()`` so the text shows the real
+operator tree instead of a checkpoint RDD scan — the
+tools/dump_plans.py convention.  For
 queries that do eager index builds the dumped plan is the search /
 probe stage (the part that HAS a lazy plan); the builds' shapes are
 pinned by tests and described in OPTIMIZATION_r10.md.
@@ -14,7 +14,6 @@ pinned by tests and described in OPTIMIZATION_r10.md.
 
 from __future__ import annotations
 
-import inspect
 import io
 import os
 import sys
@@ -30,23 +29,17 @@ OUT_DIR = os.path.join(ROOT, "plans", "r10")
 def main() -> None:
     tag = sys.argv[1]
     names = sys.argv[2:]
-    from etl_pipe_spark.plans.catalog import REGISTRY, queries
+    from etl_pipe_spark.operators import scope
+    from etl_pipe_spark.plans.catalog import queries
     from etl_pipe_spark.session import get_spark
 
     spark = get_spark("r10-plan-dump", cpus=8)
-    queries()  # force registration
+    qs = queries()
     os.makedirs(OUT_DIR, exist_ok=True)
     for name in names:
-        spec = REGISTRY[name]
-        fn = spec.fn
-        kwargs = {}
         try:
-            if "checkpoint" in inspect.signature(fn).parameters:
-                kwargs["checkpoint"] = False
-        except (TypeError, ValueError):
-            pass
-        try:
-            df = fn(spark, SF_DIR, **kwargs)
+            with scope.inspect():
+                df = qs[name](spark, SF_DIR)
             buf = io.StringIO()
             with redirect_stdout(buf):
                 df.explain("formatted")
@@ -54,13 +47,9 @@ def main() -> None:
         except Exception as exc:  # keep going; record the failure
             text = f"PLAN DUMP FAILED: {exc!r}\n"
         with open(os.path.join(OUT_DIR, f"{name}_{tag}.txt"), "w") as f:
-            f.write(f"# {name} ({tag}) — sf_dir={SF_DIR}\n")
-            if kwargs:
-                f.write(f"# dumped via plan-inspection seam {kwargs}\n")
+            f.write(f"# {name} ({tag}) — sf_dir={SF_DIR}, scope.inspect()\n")
             f.write(text)
         print(f"wrote {name}_{tag}.txt", flush=True)
-        from etl_pipe_spark.operators.ordering import release_rank_caches
-        release_rank_caches()
     spark.stop()
 
 

