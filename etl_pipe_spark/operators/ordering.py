@@ -91,6 +91,20 @@ def _sorted_sample(df: DataFrame, key: Column) -> list[tuple]:
     return vals
 
 
+#: Working columns the rank path adds to the caller's frame and drops
+#: again; a caller column of the same name would be overwritten.
+_RESERVED = ("__bkey", "__pid", "__rn_in", "__sum_in", "__cnt_off", "__sum_off")
+
+
+def _reject_reserved(df: DataFrame) -> None:
+    for c in df.columns:
+        # Spark resolves column names case-insensitively by default
+        if c.lower() in _RESERVED:
+            raise ValueError(
+                f"ranked_running_sum: input column {c!r} collides with a "
+                f"working column of the rank path; rename it first")
+
+
 def _bucket_by_boundaries(
     df: DataFrame, key: Column, bnd_lits: list[Column]
 ) -> DataFrame:
@@ -186,8 +200,13 @@ def ranked_running_sum(
     array (log2(buckets) struct probes per row —
     :func:`_bucket_by_boundaries`); at cluster scale raise it with
     the shuffle width (each bucket is one window task).
+
+    An input column named like one of the working columns in
+    :data:`_RESERVED` raises ``ValueError`` rather than being
+    overwritten and dropped.
     """
     _reject_sort_markers(order)
+    _reject_reserved(df)
     spark = df.sparkSession
     nb = buckets or int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
 

@@ -13,6 +13,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from ..session import pin_conf
 
@@ -81,15 +82,31 @@ def _events_normalize(df: DataFrame) -> DataFrame:
     return df
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+def _table_path(sf_dir: str, name: str) -> str:
+    return f"{sf_dir.rstrip('/')}/{name}.parquet"
+
+
+def file_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
+    """The table's schema as its files store it, before any
+    normalization — inferred from a footer, which costs one Spark job.
+    Hand it back to :func:`load_table` to skip that job on later loads."""
+    pin_conf(spark)
+    return spark.read.parquet(_table_path(sf_dir, name)).schema
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str,
+               schema: StructType | None = None) -> DataFrame:
     """Load one catalog table as a lazy DataFrame.
 
     ``events`` is normalized to carry both ``ts`` (TIMESTAMP_NTZ) and
     ``ts_ns`` (int64 nanos) whatever the file's timestamp layout — see
-    :func:`_events_normalize`.
+    :func:`_events_normalize`.  ``schema``, the :func:`file_schema` of
+    an earlier load, replaces the schema inference; the files are
+    still listed on every load.
     """
     pin_conf(spark)
-    df = spark.read.parquet(f"{sf_dir.rstrip('/')}/{name}.parquet")
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    df = reader.parquet(_table_path(sf_dir, name))
     if name == "events":
         df = _events_normalize(df)
     return df

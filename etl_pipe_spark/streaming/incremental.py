@@ -9,15 +9,20 @@ the reference's scenario/node_data/timeline trio re-expressed:
 
 Each flow is isolated (one failing flow doesn't stop the others,
 reference pipeline.py:41-49), reads from its own watermark minus the
-90 s overlap, and advances the watermark to max(ts) processed.
+90 s overlap, and advances the watermark to max(ts) processed.  The
+reference runs its flows one after another; here they run
+concurrently in the driver, still one writer per sink.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from concurrent.futures import ThreadPoolExecutor
+
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from ..operators.merge import ParquetMergeSink, insert_if_absent, scd2_apply_versions, upsert
-from ..sources.catalog import events_since, load_table
+from ..sources.catalog import events_since, file_schema, load_table
 from .watermark import WatermarkStore
 
 _DIM_USERS_DDL = (
@@ -47,6 +52,7 @@ class IncrementalPipeline:
                  overlap_sec: int = 90):
         self.spark = spark
         self.source_sf_dir = source_sf_dir
+        self._events_schema = None  # the events files' schema, from the first load
         self.store = WatermarkStore(spark, f"{target_dir}/etl_watermark", overlap_sec)
         self.sinks = {
             "dim_users": ParquetMergeSink(spark, f"{target_dir}/dim_users", _DIM_USERS_DDL),
@@ -107,40 +113,60 @@ class IncrementalPipeline:
         )
 
     # -- cycle -----------------------------------------------------------
+    def _run_flow(self, name: str, flow, events: DataFrame, now_ts) -> int:
+        """One flow: merge its batch into its sink, then advance its
+        watermark.  Returns the sink's row count, or -1 if the flow
+        failed — its watermark then stays put (crash-safe restart
+        semantics, reference ST4)."""
+        try:
+            # observe() rides the sink write's own job (reference S10's
+            # row counters via the metrics API) — no extra pass over
+            # the batch, no cache needed
+            obs = Observation(f"batch_{name}")
+            batch = self._batch(events, name, now_ts).observe(
+                obs, F.max("ts").alias("mx"), F.count(F.lit(1)).alias("n")
+            )
+            rows = self.sinks[name].write(flow(batch))
+            stats = obs.get
+            self.store.advance(name, stats["mx"], stats["n"])
+            return rows
+        except Exception as exc:  # per-flow isolation (pipeline.py:41-49)
+            print(f"[etl_pipe_spark] flow {name} failed: {exc}")
+            return -1
+
     def run_cycle(self, now_ts=None) -> dict[str, int]:
         """One micro-batch cycle over all flows (reference run_cycle).
 
-        Per-flow failure isolation: a failing flow is reported but the
-        rest proceed, and its watermark does not advance (crash-safe
-        restart semantics, reference ST4).
+        The flows run concurrently, one driver thread each, so a cycle
+        costs its slowest flow rather than the sum of all three: each
+        flow reads only its own sink and watermark row and writes only
+        its own sink, and the watermark store serializes the advances.
+        Per-flow failure isolation: a failing flow is reported as -1
+        but the rest proceed, and its watermark does not advance.
         """
-        counts: dict[str, int] = {}
         flows = {
             "dim_users": self._flow_dim_users,
             "fact_event_log": self._flow_event_log,
             "user_versions": self._flow_versions,
         }
-        from pyspark.sql import Observation
-
-        # one source load shared by every flow's watermark filter
+        # one source load shared by every flow's watermark filter; the
+        # file schema is inferred once per pipeline (that inference is a
+        # Spark job), while the source is still listed on every load
         try:
-            events = load_table(self.spark, self.source_sf_dir, "events")
+            if self._events_schema is None:
+                self._events_schema = file_schema(self.spark, self.source_sf_dir, "events")
+            events = load_table(self.spark, self.source_sf_dir, "events",
+                                self._events_schema)
         except Exception as exc:  # no flow can run: report each as failed
             print(f"[etl_pipe_spark] source events failed: {exc}")
             return {name: -1 for name in flows}
-        for name, flow in flows.items():
-            try:
-                # observe() rides the sink write's own job (reference S10's
-                # row counters via the metrics API) — no extra pass over
-                # the batch, no cache needed
-                obs = Observation(f"batch_{name}")
-                batch = self._batch(events, name, now_ts).observe(
-                    obs, F.max("ts").alias("mx"), F.count(F.lit(1)).alias("n")
-                )
-                counts[name] = self.sinks[name].write(flow(batch))
-                stats = obs.get
-                self.store.advance(name, stats["mx"], stats["n"])
-            except Exception as exc:  # per-flow isolation (pipeline.py:41-49)
-                counts[name] = -1
-                print(f"[etl_pipe_spark] flow {name} failed: {exc}")
-        return counts
+        with ThreadPoolExecutor(max_workers=len(flows)) as pool:
+            # wrap each flow separately: every wrapper clones the caller's
+            # local properties (job group included) for its own thread,
+            # so the cycle's jobs stay in the caller's job group
+            futures = {
+                name: pool.submit(inheritable_thread_target(self.spark)(self._run_flow),
+                                  name, flow, events, now_ts)
+                for name, flow in flows.items()
+            }
+        return {name: future.result() for name, future in futures.items()}

@@ -25,7 +25,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators import scope
 from ..operators.merge import ParquetMergeSink, insert_if_absent
-from ..session import pin_conf
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str,
@@ -38,12 +37,9 @@ def read_events_stream(spark: SparkSession, sf_dir: str,
     the batch reader's footer-derived schema — a metadata-only read —
     is handed to the stream and the shared normalizer branches on it.
     """
-    from ..sources.catalog import _events_normalize
+    from ..sources.catalog import _events_normalize, file_schema
 
-    pin_conf(spark)
-    path = f"{sf_dir.rstrip('/')}/events.parquet"
-    file_schema = spark.read.parquet(path).schema
-    reader = spark.readStream.schema(file_schema)
+    reader = spark.readStream.schema(file_schema(spark, sf_dir, "events"))
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     # the file source derives basePath from the non-glob path prefix and

@@ -26,6 +26,7 @@ from __future__ import annotations
 import datetime as dt
 import json
 import os
+import threading
 
 from ..operators import commit
 
@@ -36,11 +37,18 @@ DEFAULT_OVERLAP_SEC = 90  # reference config.py:29 OVERLAP_SEC
 class WatermarkStore:
     """JSON-backed watermark state table (reference etl_watermark,
     setup_target.py:15-32).  ``spark`` is not used: no call launches a
-    Spark job."""
+    Spark job.
+
+    Safe for concurrent callers within one process: the pipeline's
+    flows advance their own rows from their own threads, and a lock
+    serializes each read-modify-publish, so no flow's advance is lost
+    to another's and no read opens a state that retention just dropped.
+    """
 
     def __init__(self, spark, path: str, overlap_sec: int = DEFAULT_OVERLAP_SEC):
         self.path = path
         self.overlap_sec = overlap_sec
+        self._lock = threading.Lock()
 
     def _pointer(self) -> str:
         return os.path.join(self.path, "CURRENT")
@@ -66,7 +74,8 @@ class WatermarkStore:
         First sight of a table returns the 2020-01-01 epoch default
         (extract.py:31) so the initial cycle scans everything.
         """
-        row = self._read().get(table_name)
+        with self._lock:
+            row = self._read().get(table_name)
         base = dt.datetime.fromisoformat(row["last_fetched_at"]) if row else DEFAULT_EPOCH
         return base - dt.timedelta(seconds=self.overlap_sec)
 
@@ -77,34 +86,37 @@ class WatermarkStore:
 
         Commit is crash-safe: the new state lands in a versioned
         ``state-N`` file, fsynced, and the commit protocol's pointer
-        swap publishes it (operators/commit.py; single writer, so no
-        claim) — a crash mid-advance can never wipe the previous
-        watermarks and reset every flow to the 2020 epoch.
+        swap publishes it (operators/commit.py; one writer process whose
+        threads take the store's lock, so no claim) — a crash
+        mid-advance can never wipe the previous watermarks and reset
+        every flow to the 2020 epoch.
         """
         if max_ts_processed is None:
             return  # empty batch: watermark must not move
-        state = self._read()
-        # wall-clock value without its zone, as a timestamp_ntz column keeps it
-        ts = max_ts_processed.replace(tzinfo=None)
-        prev = state.get(table_name)
-        if prev:
-            ts = max(ts, dt.datetime.fromisoformat(prev["last_fetched_at"]))
-        state[table_name] = {
-            "last_fetched_at": ts.isoformat(),
-            "total_rows_ever": (prev["total_rows_ever"] if prev else 0) + rows_fetched,
-            "updated_at": dt.datetime.now(dt.timezone.utc).replace(tzinfo=None).isoformat(),
-        }
-        snap = self._current_snapshot()
-        version = int(snap.rsplit("-", 1)[1]) + 1 if snap else 1
-        new_snap = f"state-{version:08d}"
-        os.makedirs(self.path, exist_ok=True)
-        commit.write_synced(os.path.join(self.path, new_snap),
-                            json.dumps({"tables": state}, sort_keys=True))
-        commit.publish(self._pointer(), new_snap)
-        # retain one previous state for post-mortems, drop older (a
-        # directory of the earlier parquet layout included)
-        commit.vacuum(self.path, "state-", version - 1)
+        with self._lock:
+            state = self._read()
+            # wall-clock value without its zone, as a timestamp_ntz column keeps it
+            ts = max_ts_processed.replace(tzinfo=None)
+            prev = state.get(table_name)
+            if prev:
+                ts = max(ts, dt.datetime.fromisoformat(prev["last_fetched_at"]))
+            state[table_name] = {
+                "last_fetched_at": ts.isoformat(),
+                "total_rows_ever": (prev["total_rows_ever"] if prev else 0) + rows_fetched,
+                "updated_at": dt.datetime.now(dt.timezone.utc).replace(tzinfo=None).isoformat(),
+            }
+            snap = self._current_snapshot()
+            version = int(snap.rsplit("-", 1)[1]) + 1 if snap else 1
+            new_snap = f"state-{version:08d}"
+            os.makedirs(self.path, exist_ok=True)
+            commit.write_synced(os.path.join(self.path, new_snap),
+                                json.dumps({"tables": state}, sort_keys=True))
+            commit.publish(self._pointer(), new_snap)
+            # retain one previous state for post-mortems, drop older (a
+            # directory of the earlier parquet layout included)
+            commit.vacuum(self.path, "state-", version - 1)
 
     def total_rows(self, table_name: str) -> int:
-        row = self._read().get(table_name)
+        with self._lock:
+            row = self._read().get(table_name)
         return row["total_rows_ever"] if row else 0

@@ -4,11 +4,16 @@ watermark advance, overlap replay idempotence, crash-safe convergence."""
 from __future__ import annotations
 
 import datetime as dt
+import threading
+from concurrent.futures import ThreadPoolExecutor
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql import Window, functions as F
 
-from etl_pipe_spark.sources.catalog import load_table
+from etl_pipe_spark.sources.catalog import file_schema, load_table
+from etl_pipe_spark.streaming import incremental
 from etl_pipe_spark.streaming.incremental import IncrementalPipeline
 from etl_pipe_spark.streaming.watermark import DEFAULT_EPOCH, WatermarkStore
 
@@ -172,3 +177,138 @@ def test_replayed_cycle_is_noop(spark, pipe):
     pipe.run_cycle(now_ts=MID)
     snap2 = {k: sorted(map(str, s.read().collect())) for k, s in pipe.sinks.items()}
     assert snap1 == snap2
+
+
+def test_concurrent_advances_of_different_tables_all_survive(spark, tmp_path):
+    """The flows advance their own rows from their own threads: none of
+    three simultaneous read-modify-publish cycles may lose another's
+    update.  Repeated, because one trial can miss the race."""
+    days = {"a": 1, "b": 2, "c": 3}
+    for trial in range(20):
+        store = WatermarkStore(spark, str(tmp_path / f"wm{trial}"), overlap_sec=0)
+        barrier = threading.Barrier(len(days), timeout=30)
+
+        def advance(table):
+            barrier.wait()
+            store.advance(table, dt.datetime(2024, 1, days[table]), days[table])
+
+        with ThreadPoolExecutor(len(days)) as pool:
+            list(pool.map(advance, days))
+        for table, day in days.items():
+            assert store.get(table) == dt.datetime(2024, 1, day), f"trial {trial}"
+            assert store.total_rows(table) == day, f"trial {trial}"
+
+
+def _assert_matches_full_recompute(spark, sf_dir, pipe):
+    ev = load_table(spark, sf_dir, "events")
+    latest = Window.partitionBy("user_id").orderBy(F.col("ts").desc(),
+                                                   F.col("event_id").desc())
+    want_dim = {(r.user_id, r.event_id) for r in ev.withColumn(
+        "rn", F.row_number().over(latest)).filter("rn = 1").collect()}
+    got_dim = {(r.user_id, r.last_event_id)
+               for r in pipe.sinks["dim_users"].read().collect()}
+    assert got_dim == want_dim
+    want_keys = sorted(f"EV_{r.event_id}" for r in ev.select("event_id").collect())
+    got_keys = sorted(r.source_key for r in pipe.sinks["fact_event_log"].read().collect())
+    assert got_keys == want_keys
+    vers = pipe.sinks["user_versions"].read()
+    assert vers.count() == len(want_keys)
+    assert {r.event_id for r in vers.filter("is_current_version").collect()} == {
+        e for _, e in want_dim}
+
+
+def test_flows_overlap_in_time(spark, sf_dir, pipe):
+    """Every sink write waits until all three flows reach their write:
+    only flows that run concurrently get past the barrier."""
+    barrier = threading.Barrier(len(pipe.sinks), timeout=60)
+    for sink in pipe.sinks.values():
+        def write(df, meta=None, _write=sink.write):
+            barrier.wait()
+            return _write(df, meta)
+        sink.write = write
+    counts = pipe.run_cycle(now_ts=END)
+    assert list(counts) == ["dim_users", "fact_event_log", "user_versions"]
+    assert all(v >= 0 for v in counts.values()), counts
+    _assert_matches_full_recompute(spark, sf_dir, pipe)
+
+
+def test_one_failing_flow_leaves_the_others_committed(spark, sf_dir, tmp_path):
+    """Only fact_event_log's write fails: the other two flows commit and
+    advance, the failing flow's snapshot and watermark stay put, and the
+    next cycle converges to the state of an uninterrupted pipeline."""
+    faulty = IncrementalPipeline(spark, sf_dir, str(tmp_path / "faulty"))
+    control = IncrementalPipeline(spark, sf_dir, str(tmp_path / "control"))
+    faulty.run_cycle(now_ts=MID)
+    control.run_cycle(now_ts=MID)
+
+    log = faulty.sinks["fact_event_log"]
+    snap_before = {t: s.current_snapshot() for t, s in faulty.sinks.items()}
+    wm_before = {t: faulty.store.get(t) for t in faulty.sinks}
+
+    def failing_write(df, meta=None):
+        raise RuntimeError("simulated fact_event_log write failure")
+
+    log.write = failing_write
+    counts = faulty.run_cycle(now_ts=END)
+    assert counts["fact_event_log"] == -1
+    assert counts["dim_users"] >= 0 and counts["user_versions"] >= 0, counts
+    assert log.current_snapshot() == snap_before["fact_event_log"]
+    assert faulty.store.get("fact_event_log") == wm_before["fact_event_log"]
+    for name in ("dim_users", "user_versions"):
+        assert faulty.sinks[name].current_snapshot() != snap_before[name]
+        assert faulty.store.get(name) > wm_before[name]
+
+    del log.write  # the fault is removed: the class's write again
+    counts = faulty.run_cycle(now_ts=END)
+    assert all(v >= 0 for v in counts.values()), counts
+    control.run_cycle(now_ts=END)
+    for name in faulty.sinks:
+        got = sorted(map(str, faulty.sinks[name].read().collect()))
+        want = sorted(map(str, control.sinks[name].read().collect()))
+        assert got == want, f"{name} diverged after the failed flow recovered"
+        assert faulty.store.get(name) == control.store.get(name)
+
+
+def test_cycle_jobs_land_in_the_callers_job_group(spark, pipe, jobs_launched):
+    """The flows' threads inherit the caller's job group, so a caller
+    that labels or counts its jobs by group sees every job of the cycle."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    for now in (MID, END):
+        first = dag.numTotalJobs()
+        counts, in_group = jobs_launched(pipe.run_cycle, now)
+        issued = dag.numTotalJobs() - first
+        assert all(v >= 0 for v in counts.values()), counts
+        assert issued > 0 and in_group == issued
+
+
+def test_events_schema_is_inferred_once_per_pipeline(spark, pipe, monkeypatch):
+    calls = []
+
+    def counting_file_schema(*args):
+        calls.append(args)
+        return file_schema(*args)
+
+    monkeypatch.setattr(incremental, "file_schema", counting_file_schema)
+    pipe.run_cycle(now_ts=MID)
+    pipe.run_cycle(now_ts=END)
+    assert len(calls) == 1
+
+
+@pytest.mark.parametrize("unit", ["us", "ns"])
+def test_events_load_with_file_schema_matches_inference(spark, sf_dir, tmp_path,
+                                                        jobs_launched, unit):
+    """Both timestamp layouts, TIMESTAMP(MICROS) and TIMESTAMP(NANOS),
+    load the same through a passed file schema as through inference,
+    and the passed schema saves the inference job."""
+    table = pq.read_table(f"{sf_dir}/events.parquet")
+    ts = table.schema.get_field_index("ts")
+    table = table.set_column(ts, "ts", table.column("ts").cast(pa.timestamp(unit)))
+    pq.write_table(table, tmp_path / "events.parquet", coerce_timestamps=None)
+    src = str(tmp_path)
+
+    inferred, n_inferred = jobs_launched(load_table, spark, src, "events")
+    schema = file_schema(spark, src, "events")
+    given, n_given = jobs_launched(load_table, spark, src, "events", schema)
+    assert n_inferred >= 1 and n_given == 0
+    assert given.schema == inferred.schema  # field metadata included
+    assert sorted(map(str, given.collect())) == sorted(map(str, inferred.collect()))

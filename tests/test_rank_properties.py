@@ -75,3 +75,12 @@ def test_rank_matches_row_number_over_hostile_keys(spark, seed, nan_share,
     assert len(got) == N_ROWS
     wrong = [i for i in want if got[i] != want[i]]
     assert wrong == [], f"{len(wrong)} wrong ranks, e.g. id {wrong[:5]}"
+
+
+@pytest.mark.parametrize("name", ["__pid", "__bkey", "__rn_in", "__cnt_off", "__PID"])
+def test_reserved_column_names_are_rejected(spark, name):
+    """A caller column named like one of the rank path's working columns
+    would be overwritten and dropped; the call refuses it by name."""
+    df = spark.range(10).withColumn(name, F.col("id") * 2)
+    with pytest.raises(ValueError, match=name):
+        ranked_running_sum(df, [F.col("id")], "id", buckets=4)
