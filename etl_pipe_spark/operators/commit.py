@@ -2,7 +2,10 @@
 
 Three stores keep state that must survive a crash: the merge sink
 (``ParquetMergeSink``, ``snapshot-N`` directories + a ``CURRENT``
-pointer + ``_meta_*`` commit metadata), the persisted ANN/LSH indexes
+pointer + ``_meta_*`` commit metadata, whose ``_meta_manifest`` names
+the snapshot's data files: the ones in its own directory and the
+unchanged cold files it inherits from older ``snapshot-N``
+directories), the persisted ANN/LSH indexes
 (``index_store``, ``<table>/epoch=N`` data + ``_claim-epoch-N`` claims +
 a ``COMMITTED`` JSON pointer carrying the meta) and the watermark store
 (``WatermarkStore``, ``state-N`` JSON files + a ``CURRENT`` pointer).
@@ -29,13 +32,15 @@ protocol:
   leaves readers on the previous version — the new data is an
   invisible orphan and a leftover tmp file is ignored; after it the new
   version is fully visible, together with any metadata it carries.
-* **Sweep old versions** (:func:`vacuum`) after the swap: a crash
-  mid-sweep leaves only garbage no reader can reach.
+* **Sweep old versions** (:func:`vacuum`) after the swap, keeping
+  every file a retained version still names: a crash mid-sweep leaves
+  only garbage no reader can reach.
 
 Readers resolve the pointer first (:func:`read_pointer`) and read only
-what it names.  The pointer swap and the claim need a rename- and
-mkdir-atomic file system (POSIX, HDFS, ABFS); object stores such as S3
-need a manifest or the Delta-backed sink instead.
+what it names.  The pointer swap, the claim and :func:`flatten` need a
+rename- and mkdir-atomic file system (POSIX, HDFS, ABFS); on an object
+store such as S3 a rename is a copy and creating a directory is not
+exclusive, so this protocol does not hold there.
 """
 
 from __future__ import annotations
@@ -111,12 +116,35 @@ def publish(pointer: str, text: str) -> None:
     os.replace(tmp, pointer)
 
 
-def vacuum(directory: str, prefix: str, below: int) -> None:
-    """Remove every ``<prefix><N>`` file or directory with N < ``below``."""
+def flatten(directory: str) -> None:
+    """Move the data files of every ``<column>=<value>`` subdirectory of
+    ``directory`` (a partitioned write's output) up into ``directory``
+    as ``<value>-<file>``, and remove the subdirectories with what is
+    left in them (checksum and other hidden files).
+
+    Only for a claimed, unpublished version slot: no reader looks into
+    it yet, so a crash midway leaves an orphan, never a torn version.
+    """
+    for sub in os.listdir(directory):
+        full = os.path.join(directory, sub)
+        if "=" not in sub or not os.path.isdir(full):
+            continue
+        value = sub.split("=", 1)[1]
+        for name in os.listdir(full):
+            if not name.startswith(("_", ".")):
+                os.rename(os.path.join(full, name), os.path.join(directory, f"{value}-{name}"))
+        shutil.rmtree(full)
+
+
+def vacuum(directory: str, prefix: str, below: int, keep: frozenset[str] = frozenset()) -> None:
+    """Remove every ``<prefix><N>`` file or directory with N < ``below``,
+    except the files named in ``keep`` (paths relative to ``directory``):
+    a directory holding one of them loses only its other entries."""
     try:
         names = os.listdir(directory)
     except FileNotFoundError:
         return
+    kept_dirs = {path.split("/", 1)[0] for path in keep}
     for name in names:
         if not name.startswith(prefix):
             continue
@@ -124,9 +152,19 @@ def vacuum(directory: str, prefix: str, below: int) -> None:
             n = int(name[len(prefix):])
         except ValueError:
             continue
-        if n < below:
-            full = os.path.join(directory, name)
-            if os.path.isdir(full):
-                shutil.rmtree(full, ignore_errors=True)
-            else:
-                os.remove(full)
+        if n >= below:
+            continue
+        full = os.path.join(directory, name)
+        if name in kept_dirs:
+            for entry in os.listdir(full):
+                if f"{name}/{entry}" not in keep:
+                    _remove(os.path.join(full, entry))
+        else:
+            _remove(full)
+
+
+def _remove(path: str) -> None:
+    if os.path.isdir(path):
+        shutil.rmtree(path, ignore_errors=True)
+    else:
+        os.remove(path)

@@ -151,8 +151,7 @@ def avro_available(spark: SparkSession) -> bool:
     Avro has been "built-in but external" since Spark 2.4
     (org.apache.spark:spark-avro must be deployed alongside the app);
     this sandbox ships only the avro core jars, so the data source is
-    absent and the avro round-trip tests skip — the Delta convention
-    (operators/delta_merge.delta_available).
+    absent and the avro round-trip tests skip.
     """
     try:
         # Resolve through Spark's own data-source registry — some

@@ -12,6 +12,12 @@ reference pipeline.py:41-49), reads from its own watermark minus the
 90 s overlap, and advances the watermark to max(ts) processed.  The
 reference runs its flows one after another; here they run
 concurrently in the driver, still one writer per sink.
+
+That bound, the flow's *horizon*, also splits each history sink
+(``fact_event_log``, ``user_versions``) into a hot region the batch can
+change and cold files it cannot, so a cycle reads and rewrites only the
+hot region (operators/merge.py ``ParquetMergeSink``).  ``dim_users``
+holds one row per user and is rewritten whole.
 """
 
 from __future__ import annotations
@@ -56,26 +62,29 @@ class IncrementalPipeline:
         self.store = WatermarkStore(spark, f"{target_dir}/etl_watermark", overlap_sec)
         self.sinks = {
             "dim_users": ParquetMergeSink(spark, f"{target_dir}/dim_users", _DIM_USERS_DDL),
-            "fact_event_log": ParquetMergeSink(spark, f"{target_dir}/fact_event_log", _EVENT_LOG_DDL),
-            "user_versions": ParquetMergeSink(spark, f"{target_dir}/user_versions", _VERSIONS_DDL),
+            "fact_event_log": ParquetMergeSink(spark, f"{target_dir}/fact_event_log",
+                                               _EVENT_LOG_DDL, freeze_col="event_time"),
+            "user_versions": ParquetMergeSink(spark, f"{target_dir}/user_versions",
+                                              _VERSIONS_DDL, freeze_col="version_ended_at"),
         }
 
     # -- extract ---------------------------------------------------------
-    def _batch(self, events: DataFrame, table: str, now_ts) -> DataFrame:
+    def _batch(self, events: DataFrame, horizon, now_ts) -> DataFrame:
         """Watermark-bounded incremental read (reference extract.py P1)
-        of ``events``, the source loaded once per cycle.
+        of ``events``, the source loaded once per cycle: the rows at or
+        after ``horizon``, the flow's watermark minus the overlap.
 
         ``now_ts`` is the cycle's upper bound — simulated clock in
         tests; in production, unbounded.
         """
         # pushdown-friendly watermark predicate (see sources.catalog.events_since)
-        batch = events_since(events, self.store.get(table))
+        batch = events_since(events, horizon)
         if now_ts is not None:
             batch = batch.filter(F.col("ts") < F.lit(now_ts))
         return batch
 
     # -- flows -----------------------------------------------------------
-    def _flow_dim_users(self, batch: DataFrame) -> DataFrame:
+    def _flow_dim_users(self, existing: DataFrame, batch: DataFrame) -> DataFrame:
         updates = batch.select(
             F.col("user_id"),
             F.col("event_id").alias("last_event_id"),
@@ -84,12 +93,12 @@ class IncrementalPipeline:
             F.col("ts").alias("updated_at"),
         )
         return upsert(
-            self.sinks["dim_users"].read(), updates,
+            existing, updates,
             keys=["user_id"], order_col="updated_at",
             tiebreakers=["last_event_id"],
         )
 
-    def _flow_event_log(self, batch: DataFrame) -> DataFrame:
+    def _flow_event_log(self, existing: DataFrame, batch: DataFrame) -> DataFrame:
         updates = batch.select(
             event_source_key().alias("source_key"),
             F.col("ts").alias("event_time"),
@@ -97,9 +106,9 @@ class IncrementalPipeline:
             "event_type",
             F.col("value").alias("amount"),
         )
-        return insert_if_absent(self.sinks["fact_event_log"].read(), updates, ["source_key"])
+        return insert_if_absent(existing, updates, ["source_key"])
 
-    def _flow_versions(self, batch: DataFrame) -> DataFrame:
+    def _flow_versions(self, existing: DataFrame, batch: DataFrame) -> DataFrame:
         updates = batch.select(
             "user_id",
             F.col("ts").alias("version_started_at"),
@@ -107,26 +116,30 @@ class IncrementalPipeline:
             "value",
         )
         return scd2_apply_versions(
-            self.sinks["user_versions"].read(), updates,
+            existing, updates,
             keys=["user_id"], ts_col="version_started_at",
             tiebreakers=["event_id"],
         )
 
     # -- cycle -----------------------------------------------------------
     def _run_flow(self, name: str, flow, events: DataFrame, now_ts) -> int:
-        """One flow: merge its batch into its sink, then advance its
-        watermark.  Returns the sink's row count, or -1 if the flow
-        failed — its watermark then stays put (crash-safe restart
-        semantics, reference ST4)."""
+        """One flow: merge its batch into its sink's hot region, then
+        advance its watermark.  Returns the sink's row count, or -1 if
+        the flow failed — its watermark then stays put (crash-safe
+        restart semantics, reference ST4)."""
         try:
+            # read once: the batch filter and the sink's hot/cold split
+            # must agree on it (merge.ParquetMergeSink's exactness)
+            horizon = self.store.get(name)
             # observe() rides the sink write's own job (reference S10's
             # row counters via the metrics API) — no extra pass over
             # the batch, no cache needed
             obs = Observation(f"batch_{name}")
-            batch = self._batch(events, name, now_ts).observe(
+            batch = self._batch(events, horizon, now_ts).observe(
                 obs, F.max("ts").alias("mx"), F.count(F.lit(1)).alias("n")
             )
-            rows = self.sinks[name].write(flow(batch))
+            sink = self.sinks[name]
+            rows = sink.write(flow(sink.read(horizon), batch), horizon=horizon)
             stats = obs.get
             self.store.advance(name, stats["mx"], stats["n"])
             return rows

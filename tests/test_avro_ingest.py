@@ -1,4 +1,4 @@
-"""Avro round-trip (classpath-optional, the Delta convention).
+"""Avro round-trip (classpath-optional).
 
 The sandbox ships avro core jars but not the spark-avro data source
 module ("built-in but external" since Spark 2.4), so the round-trip

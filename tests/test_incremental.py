@@ -4,7 +4,10 @@ watermark advance, overlap replay idempotence, crash-safe convergence."""
 from __future__ import annotations
 
 import datetime as dt
+import json
+import os
 import threading
+from collections import Counter
 from concurrent.futures import ThreadPoolExecutor
 
 import pyarrow as pa
@@ -222,9 +225,9 @@ def test_flows_overlap_in_time(spark, sf_dir, pipe):
     only flows that run concurrently get past the barrier."""
     barrier = threading.Barrier(len(pipe.sinks), timeout=60)
     for sink in pipe.sinks.values():
-        def write(df, meta=None, _write=sink.write):
+        def write(df, meta=None, horizon=None, _write=sink.write):
             barrier.wait()
-            return _write(df, meta)
+            return _write(df, meta, horizon=horizon)
         sink.write = write
     counts = pipe.run_cycle(now_ts=END)
     assert list(counts) == ["dim_users", "fact_event_log", "user_versions"]
@@ -245,7 +248,7 @@ def test_one_failing_flow_leaves_the_others_committed(spark, sf_dir, tmp_path):
     snap_before = {t: s.current_snapshot() for t, s in faulty.sinks.items()}
     wm_before = {t: faulty.store.get(t) for t in faulty.sinks}
 
-    def failing_write(df, meta=None):
+    def failing_write(df, meta=None, horizon=None):
         raise RuntimeError("simulated fact_event_log write failure")
 
     log.write = failing_write
@@ -312,3 +315,142 @@ def test_events_load_with_file_schema_matches_inference(spark, sf_dir, tmp_path,
     assert n_inferred >= 1 and n_given == 0
     assert given.schema == inferred.schema  # field metadata included
     assert sorted(map(str, given.collect())) == sorted(map(str, inferred.collect()))
+
+
+_SINK_COLS = {
+    "dim_users": ["user_id", "last_event_id", "last_event_type", "last_value", "updated_at"],
+    "fact_event_log": ["source_key", "event_time", "user_id", "event_type", "amount"],
+    "user_versions": ["user_id", "version_started_at", "event_id", "value",
+                      "version_ended_at", "is_current_version"],
+}
+
+
+def _assert_equals_full_recompute(spark, src_dir, pipe, now):
+    """Every column of every sink equals a recompute over the events
+    before ``now``."""
+    ev = load_table(spark, src_dir, "events").filter(F.col("ts") < F.lit(now))
+    by_user = Window.partitionBy("user_id")
+    latest = ev.withColumn("rn", F.row_number().over(
+        by_user.orderBy(F.col("ts").desc(), F.col("event_id").desc()))).filter("rn = 1")
+    end = F.lead("ts").over(by_user.orderBy("ts", "event_id"))
+    want = {
+        "dim_users": latest.select("user_id", "event_id", "event_type", "value", "ts"),
+        "fact_event_log": ev.select(incremental.event_source_key(), "ts", "user_id",
+                                    "event_type", "value"),
+        "user_versions": ev.select("user_id", "ts", "event_id", "value",
+                                   end.alias("end"), end.isNull()),
+    }
+    for name, cols in _SINK_COLS.items():
+        got = Counter(tuple(r) for r in pipe.sinks[name].read().select(*cols).collect())
+        assert got == Counter(tuple(r) for r in want[name].collect()), name
+
+
+def _events_source(path, events):
+    """An events source at ``path`` holding ``events``: rows
+    ``(event_id, ts, user_id)``."""
+    path.mkdir(exist_ok=True)
+    pq.write_table(pa.table({
+        "event_id": pa.array([e for e, _, _ in events], pa.int64()),
+        "ts": pa.array([t for _, t, _ in events], pa.timestamp("us")),
+        "user_id": pa.array([u for _, _, u in events], pa.int64()),
+        "event_type": [f"type{e % 3}" for e, _, _ in events],
+        "value": [float(e) for e, _, _ in events],
+        "props": ["{}"] * len(events),
+    }), path / "events.parquet")
+    return str(path)
+
+
+def _manifest(sink, snap=None):
+    with open(os.path.join(sink.path, snap or sink.current_snapshot(), "_meta_manifest")) as f:
+        return json.load(f)["files"]
+
+
+_W = dt.datetime(2024, 1, 10, 5)  # the watermark after each test's first cycle
+
+
+def test_replay_straddling_the_horizon_matches_full_recompute(spark, tmp_path):
+    """The second cycle's batch starts at its horizon, the first cycle's
+    watermark minus 90 s, and replays the events between the two; rows
+    just below the horizon are cold and stay out of the rewrite.  Every
+    sink equals a full recompute after each cycle and after a replay."""
+    s = dt.timedelta(seconds=1)
+    src = _events_source(tmp_path / "src", [
+        (1, _W - 4 * 3600 * s, 1), (2, _W - 3 * 3600 * s, 1), (3, _W - 120 * s, 1),
+        (4, _W - 60 * s, 1), (5, _W - 90 * s, 3), (6, _W - 91 * s, 2), (7, _W - 30 * s, 2),
+        (8, _W, 1), (9, _W + 1800 * s, 1), (10, _W + 2400 * s, 2), (11, _W + 5400 * s, 3),
+    ])
+    pipe = IncrementalPipeline(spark, src, str(tmp_path / "target"))
+    for now in (_W + s, _W + 3600 * s, _W + 7200 * s, _W + 7200 * s):
+        counts = pipe.run_cycle(now_ts=now)
+        assert all(v >= 0 for v in counts.values()), counts
+        _assert_equals_full_recompute(spark, src, pipe, now)
+        if now == _W + 3600 * s:  # the straddling cycle froze rows below W - 90 s
+            for name in ("fact_event_log", "user_versions"):
+                sink = pipe.sinks[name]
+                assert any(sink._is_cold(e, _W - 90 * s) for e in _manifest(sink)), name
+
+
+def test_late_version_inside_the_overlap_closes_a_hot_version(spark, tmp_path):
+    """Versions that reach the source after the first cycle, stamped
+    inside the overlap, close user 2's current version and split user
+    1's chain before its current version — both left hot by the first
+    cycle.  The sinks equal a full recompute."""
+    s = dt.timedelta(seconds=1)
+    early = [(1, _W - 4 * 3600 * s, 1), (2, _W - 600 * s, 1), (3, _W, 1),
+             (4, _W - 3 * 3600 * s, 2), (5, _W - 500 * s, 2)]
+    src = _events_source(tmp_path / "src", early)
+    pipe = IncrementalPipeline(spark, src, str(tmp_path / "target"))
+    pipe.run_cycle(now_ts=_W + s)
+    _assert_equals_full_recompute(spark, src, pipe, _W + s)
+    _events_source(tmp_path / "src", early + [
+        (6, _W - 30 * s, 2), (7, _W - 45 * s, 1), (8, _W + 600 * s, 3)])
+    counts = pipe.run_cycle(now_ts=_W + 3600 * s)
+    assert all(v >= 0 for v in counts.values()), counts
+    _assert_equals_full_recompute(spark, src, pipe, _W + 3600 * s)
+    versions = {(r.event_id, r.version_ended_at)
+                for r in pipe.sinks["user_versions"].read().collect()}
+    assert {(5, _W - 30 * s), (6, None), (2, _W - 45 * s), (7, _W)} <= versions
+
+
+def test_hourly_cycles_write_only_the_hot_region(spark, sf_dir, pipe):
+    """Seven hourly cycles at sf0.001.  After the first, each commit's own
+    files hold at most (users + the events since the previous horizon)
+    rows, cold files are inherited under their paths, every sink equals
+    a full recompute, and retention keeps exactly the snapshot
+    directories the current and previous manifests name."""
+    from etl_pipe_spark.operators.merge import KEEP_SNAPSHOTS
+
+    ev = load_table(spark, sf_dir, "events")
+    n_users = ev.select("user_id").distinct().count()
+    prev_horizon = None
+    for hour in range(7):
+        now = MID + dt.timedelta(hours=hour)
+        horizon = {name: pipe.store.get(name) for name in pipe.sinks}
+        before = {name: _manifest(s) for name, s in pipe.sinks.items() if s.current_snapshot()}
+        counts = pipe.run_cycle(now_ts=now)
+        assert all(v >= 0 for v in counts.values()), counts
+        _assert_equals_full_recompute(spark, sf_dir, pipe, now)
+        if hour == 0:
+            prev_horizon = horizon
+            continue
+        for name, sink in pipe.sinks.items():
+            snap = sink.current_snapshot()
+            manifest = _manifest(sink)
+            recent = ev.filter((F.col("ts") >= F.lit(prev_horizon[name]))
+                               & (F.col("ts") < F.lit(now))).count()
+            own = sum(e["rows"] for e in manifest if e["path"].startswith(snap + "/"))
+            assert own <= n_users + recent, (name, hour, own, recent)
+            inherited = [e for e in before[name] if sink._is_cold(e, horizon[name])]
+            assert all(e in manifest for e in inherited), name
+            if name != "dim_users" and hour >= 2:
+                assert inherited, name
+            # retention: the current and previous snapshots, and the
+            # directories of the files their manifests name
+            previous = f"snapshot-{int(snap.rsplit('-', 1)[1]) - 1:08d}"
+            named = manifest + _manifest(sink, previous)
+            assert all(os.path.exists(os.path.join(sink.path, e["path"])) for e in named)
+            dirs = {d for d in os.listdir(sink.path) if d.startswith("snapshot-")}
+            assert dirs == {snap, previous} | {e["path"].split("/")[0] for e in named}, name
+            if hour > KEEP_SNAPSHOTS + 2 and name == "dim_users":
+                assert dirs == {snap, previous}
+        prev_horizon = horizon

@@ -7,7 +7,7 @@ Derby (its Hive-metastore backend), which exercises the REAL JDBC
 write and read paths — batched inserts, connection-bounded
 parallelism, dialect type mapping — end to end in-process.  Where
 even Derby is absent the tests skip with the classpath pinned as the
-reason, the same convention as test_delta_merge.py.
+reason.
 """
 
 from __future__ import annotations

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 from etl_pipe_spark.operators.merge import insert_if_absent, scd2_apply_versions, upsert
 from tests.commit_faults import backdate as _backdate
@@ -335,3 +336,145 @@ def test_sink_stores_schema_and_counts_rows_without_spark_jobs(
     sink2 = ParquetMergeSink(spark, str(tmp_path / "t2"), "id long, x double")
     assert sink2.write(many) == sink2.read().count() == 1000
     assert sink2.write(many.limit(0)) == sink2.read().count() == 0
+
+
+_LOG_DDL = "k string, t timestamp_ntz, v long"
+
+
+def _log_step(spark, sink, horizon, rows):
+    """One hot-region cycle of an event log: ``rows`` (all at or after
+    ``horizon``, replays included) merged into the sink's hot region."""
+    from etl_pipe_spark.operators.merge import insert_if_absent
+
+    batch = spark.createDataFrame(rows, _LOG_DDL)
+    return sink.write(insert_if_absent(sink.read(horizon), batch, ["k"]), horizon=horizon)
+
+
+def _log_rows(n):
+    """Rows k0..k<n-1>, one an hour from 2024-01-01."""
+    return [(f"k{i}", dt.datetime(2024, 1, 1) + dt.timedelta(hours=i), i) for i in range(n)]
+
+
+def _manifest(sink):
+    import json
+
+    return json.loads(sink.current_meta("manifest"))["files"]
+
+
+def test_footer_classification_never_calls_a_file_cold_that_may_hold_hot_rows(
+        spark, tmp_path):
+    """A file is cold only when its footer shows no NULL freeze value and
+    a max strictly below the horizon: a NULL, a max equal to the horizon
+    and a file mixing cold and hot rows each keep the file hot."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from etl_pipe_spark.operators.merge import ParquetMergeSink, _freeze_max
+
+    horizon = dt.datetime(2024, 1, 10)
+    sink = ParquetMergeSink(spark, str(tmp_path / "t"), _LOG_DDL, freeze_col="t")
+    cases = {
+        "null": [("a", dt.datetime(2024, 1, 1), 1), ("b", None, 2)],
+        "at_horizon": [("a", dt.datetime(2024, 1, 1), 1), ("b", horizon, 2)],
+        "mixed": [("a", dt.datetime(2024, 1, 1), 1), ("b", dt.datetime(2024, 1, 11), 2)],
+        "cold": [("a", dt.datetime(2024, 1, 1), 1),
+                 ("b", horizon - dt.timedelta(microseconds=1), 2)],
+    }
+    cold = {}
+    for name, rows in cases.items():
+        out = str(tmp_path / name)
+        spark.createDataFrame(rows, _LOG_DDL).coalesce(1).write.parquet(out)
+        (path,) = glob.glob(f"{out}/*.parquet")
+        entry = {"max": _freeze_max(pq.read_metadata(path), "t")}
+        cold[name] = sink._is_cold(entry, horizon)
+    assert cold == {"null": False, "at_horizon": False, "mixed": False, "cold": True}
+
+
+def test_sink_crash_before_publish_keeps_cold_files_readable(spark, tmp_path, monkeypatch):
+    """A crash after the data write but before the publish leaves readers
+    on the previous manifest, whose inherited cold files all stay
+    readable; once the dead writer's claim is stale the retry lands
+    the same table as an uninterrupted sink."""
+    import pytest
+
+    from etl_pipe_spark.operators import commit
+    from etl_pipe_spark.operators.merge import ParquetMergeSink
+
+    rows = _log_rows(8)
+    sinks = [ParquetMergeSink(spark, str(tmp_path / name), _LOG_DDL, freeze_col="t")
+             for name in ("crashed", "control")]
+    for step in range(1, 6):
+        for sink in sinks:
+            _log_step(spark, sink, rows[step - 1][1], rows[step - 1:step + 1])
+    crashed, control = sinks
+    before = sorted(crashed.read().collect())
+    manifest = _manifest(crashed)
+    assert sum(e["path"].split("/")[0] != crashed.current_snapshot() for e in manifest) >= 2
+
+    def crash(pointer, text):
+        raise RuntimeError("simulated crash before the pointer swap")
+
+    monkeypatch.setattr(commit, "publish", crash)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        _log_step(spark, crashed, rows[5][1], rows[5:7])
+    monkeypatch.undo()
+
+    assert sorted(crashed.read().collect()) == before
+    assert _manifest(crashed) == manifest
+    for entry in manifest:
+        path = os.path.join(crashed.path, entry["path"])
+        assert spark.read.parquet(path).count() == entry["rows"]
+
+    _backdate(os.path.join(crashed.path, "snapshot-00000006"))
+    for sink in sinks:
+        _log_step(spark, sink, rows[5][1], rows[5:7])
+    assert sorted(crashed.read().collect()) == sorted(control.read().collect())
+    assert len(crashed.read().collect()) == 7
+
+
+def test_sink_compaction_merges_cold_files_and_its_crash_is_invisible(
+        spark, tmp_path, monkeypatch):
+    """Once a manifest names COMPACT_AT cold files of one size, the next
+    commit merges them into one within its own write.  A crash of that
+    commit before its publish is invisible, and its retry compacts."""
+    import pytest
+
+    from etl_pipe_spark.operators import commit, merge
+    from etl_pipe_spark.operators.merge import ParquetMergeSink
+
+    monkeypatch.setattr(merge, "COMPACT_AT", 3)
+    rows = _log_rows(12)
+    sink = ParquetMergeSink(spark, str(tmp_path / "t"), _LOG_DDL, freeze_col="t")
+
+    def cold(horizon):
+        return [e for e in _manifest(sink) if sink._is_cold(e, horizon)]
+
+    step = 1
+    _log_step(spark, sink, rows[0][1], rows[0:2])
+    while len(cold(rows[step][1])) < 3:  # one more file freezes every step or so
+        step += 1
+        _log_step(spark, sink, rows[step - 1][1], rows[step - 1:step + 1])
+        assert step < 8
+    horizon = rows[step][1]
+    assert {e["rows"] for e in cold(horizon)} == {1}
+    before = sorted(sink.read().collect())
+    manifest = _manifest(sink)
+
+    def crash(pointer, text):
+        raise RuntimeError("simulated crash before the pointer swap")
+
+    with monkeypatch.context() as m:
+        m.setattr(commit, "publish", crash)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            _log_step(spark, sink, horizon, rows[step:step + 2])
+    assert sorted(sink.read().collect()) == before
+    assert _manifest(sink) == manifest
+    for entry in manifest:
+        assert os.path.exists(os.path.join(sink.path, entry["path"]))
+
+    _backdate(os.path.join(sink.path, f"snapshot-{step + 1:08d}"))
+    assert _log_step(spark, sink, horizon, rows[step:step + 2]) == step + 2
+    assert sorted(e["rows"] for e in cold(horizon)) == [1, step - 1]
+    assert sorted(r.k for r in sink.read().collect()) == sorted(
+        f"k{i}" for i in range(step + 2))
