@@ -7,8 +7,8 @@ a broadcast relation from a dimension list, a coalesce(1) single-file
 write — then evaluates every one of those partitions through a
 Python-worker round trip: 32 tasks for one row, and a ``coalesce(1)``
 funnels them SERIALLY through one task (~6 s measured for a 32-row
-dimension-table write on local[32]; see
-operators/index_store._tiny_table, the first site this bit).
+dimension-table write on local[32]; the index store's former parquet
+dimension tables were the first site this bit).
 
 For driver-computed data the parallelism is pure overhead at any
 cluster size — the data already sits on the driver and is at most a

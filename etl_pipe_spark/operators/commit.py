@@ -21,9 +21,12 @@ protocol:
   exactly one claims N; the loser raises :class:`CommitConflict`
   BEFORE writing, and must re-read the committed state and re-derive
   its change (retrying the same data would resurrect lost updates —
-  the compare-and-swap Delta performs with its ``N.json`` file).  A
-  writer that crashed after claiming leaves an orphan claim; a later
-  writer reclaims it only while it is still uncommitted (the pointer
+  the compare-and-swap Delta performs with its ``N.json`` file).  The
+  writes need not overlap in time: a writer that read N-1 but claims
+  only after N was committed and its slot released or vacuumed wins
+  the ``mkdir``, then re-reads the pointer, finds N, drops the slot and
+  raises.  A writer that crashed after claiming leaves an orphan claim;
+  a later writer reclaims it only while it is still uncommitted (the pointer
   never reached N) AND older than :data:`STALE_AFTER_S`, so a live slow
   writer is never clobbered within its grace window.
 * **Publish by one pointer swap** (:func:`publish`): the pointer text
@@ -74,12 +77,15 @@ def claim(slot: str, version: int, committed_version: Callable[[], int]) -> None
     """Claim ``slot`` for ``version`` by exclusive ``mkdir``.
 
     ``committed_version`` re-reads the pointer on a lost race, so a slot
-    the pointer has reached is never reclaimed, however old.  Raises
-    :class:`CommitConflict` when the slot is committed or claimed live.
+    the pointer has reached is never reclaimed, however old, and once
+    more after a won ``mkdir``: a writer that read an old version finds
+    the slot gone when the version's committer released or vacuumed it,
+    and must not take it.  Raises :class:`CommitConflict` when the slot
+    is committed or claimed live.
     """
     try:
         os.mkdir(slot)
-        return
+        return _still_ahead(slot, version, committed_version)
     except FileExistsError:
         pass
     committed = committed_version()
@@ -92,7 +98,7 @@ def claim(slot: str, version: int, committed_version: Callable[[], int]) -> None
         shutil.rmtree(slot, ignore_errors=True)
         try:
             os.mkdir(slot)
-            return
+            return _still_ahead(slot, version, committed_version)
         except FileExistsError:
             pass
     raise CommitConflict(
@@ -100,6 +106,17 @@ def claim(slot: str, version: int, committed_version: Callable[[], int]) -> None
         f"(committed version {committed}, claim age {age:.0f}s); re-read the "
         f"committed state and re-derive the change before retrying"
     )
+
+
+def _still_ahead(slot: str, version: int, committed_version: Callable[[], int]) -> None:
+    """Keep a won slot only while the pointer is below ``version``."""
+    committed = committed_version()
+    if committed >= version:
+        shutil.rmtree(slot, ignore_errors=True)
+        raise CommitConflict(
+            f"version {version} is already committed (committed version "
+            f"{committed}); re-read the committed state and re-derive the "
+            f"change before retrying")
 
 
 def write_synced(path: str, text: str) -> None:

@@ -1,42 +1,55 @@
-"""Persisted IVFPQ index: build once, search many, append increments.
+"""Persisted index store: one epoch store, four codecs (IVFPQ, SQ8, BQ,
+LSH).
 
-The registered ANN queries rebuild their index per run — correct for
-the oracle harness, wrong for production, where the index is the
-artifact: a 10^9-vector IVFPQ build is hours of cluster time and the
-searches against it are seconds.  This module persists the three
-index components as parquet tables and reloads them for search:
+The registered ANN and near-dup queries rebuild their index per run —
+correct for the oracle harness, wrong for production, where the index
+is the artifact: a 10^9-vector IVFPQ build is hours of cluster time
+and the searches against it are seconds.  This module persists an
+index once and serves searches, appends and compactions from disk.
 
-* ``centroids``   — (cent_id, v)             k rows, k ~ sqrt(N)
-* ``codebooks``   — (sub, code_id, cw)       m x ksub rows
-* ``codes``       — (vec_id, codes, cent_id) N rows, hive-partitioned
-                    by ``cell_bucket = cent_id % n_buckets``
+THE STORE owns everything the four families share, in one place:
+``build`` (fit, encode, publish epoch 0), ``append`` (encode a batch
+with the frozen quantizer under a new epoch) and ``compact`` (rewrite
+the committed epochs into one).  Only these three claim an epoch,
+write under ``<table>/epoch=N``, publish the ``COMMITTED`` meta and
+vacuum — the engine's commit protocol (operators/commit.py) applied to
+append-only tables:
 
-Partitioning by a BOUNDED bucket of the cell id (not cent_id itself —
-k ~ sqrt(N) directories would be 10^4+ partitions at 10^8 vectors)
-lets a search prune the codes scan to the probed cells' buckets via
-ordinary Hive partition pruning: an nprobe=2 query set touching c
-distinct cells reads at most min(c, n_buckets)/n_buckets of the codes
-files, and the residual cent_id row filter lands on the parquet
-footer min/max within each bucket.
+* data files land under ``<table>/epoch=N`` hive directories; readers
+  filter ``epoch_base <= epoch <= committed`` (partition pruning), so
+  uncommitted (torn) epochs and epochs a compaction replaced are
+  invisible;
+* the epoch slot is claimed first (``_claim-epoch-N``); a reclaimed
+  slot's orphan epoch data is purged before writing;
+* the ``COMMITTED`` pointer is JSON carrying the epoch and the store's
+  meta, including the ``family`` the build recorded — data and meta
+  become visible together or not at all.
 
-Search REUSES the exact ivfpq_adc_topk scoring kernel (operators/pq):
-the loaded tables are adapted into the (codes_df, ranked, queries)
-frames that kernel expects, so the persisted path cannot drift from
-the oracle-checked in-memory path — a property the tests assert by
-literal result equality.
+THE QUANTIZER is frozen at build (the FAISS split: ``train`` once,
+``add`` only encodes — Johnson, Douze & Jégou, "Billion-scale
+similarity search with GPUs").  It is numpy arrays in one
+driver-written ``quantizer.npz``, written inside the claimed build
+before the publish, and loads with no Spark job.  A store without it
+was built before this format and must be rebuilt.
 
-Append encodes NEW vectors with the SAVED centroids + codebooks (the
-standard frozen-quantizer increment: FAISS `add` after `train`) and
-appends their code rows into the partitioned table — history is never
-re-read, the same incremental contract as the LSH probe-vs-history
-and Bloom-filter dedup paths.
+A CODEC is the part that differs per family: ``fit`` (corpus ->
+quantizer arrays + meta), ``encode`` (rows + quantizer -> the family's
+rows), and per table a projection plus a layout (its repartition or
+``partitionBy``), shared by build, append and compaction.  Each search
+reuses the oracle-checked in-memory scoring kernel, so the persisted
+path cannot drift from it (tests assert literal result equality):
 
-Every mutation is ATOMIC and concurrent-append-safe (round 8): data
-files land under ``<table>/epoch=N`` hive directories invisible to
-readers until the ``COMMITTED`` pointer (which carries the meta)
-publishes them, and the epoch slot is claimed first — the engine's
-commit protocol (operators/commit.py), applied to append-only tables
-in the section below.
+* ``ivfpq`` — quantizer: centroids (by cent_id) + PQ codebooks;
+  ``codes`` (vec_id, codes, cent_id) hive-partitioned by the BOUNDED
+  ``cell_bucket = cent_id % n_buckets``, so a search prunes the scan to
+  the probed cells' buckets and the cent_id filter lands on footers;
+* ``sq8`` — quantizer: per-dim (lo, scale); flat ``codes`` (vec_id,
+  codes), dim bytes per vector, clustered by vec_id;
+* ``bq`` — quantizer: per-dim sign thresholds; flat ``codes`` (vec_id,
+  code0..codeW), clustered by vec_id, scanned by integer Hamming;
+* ``lsh`` — an empty quantizer (its parameters are the meta); ``bands``
+  (doc_id, band, band_key) range-clustered and sorted by band_key, and
+  ``shingles`` (doc_id, shingles) for the verify stage.
 
 Reference stake: SURVEY §2.12 similarity family (driver-mandated
 extension); the reference engine has no index artifacts at all.
@@ -47,15 +60,20 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from dataclasses import dataclass
+from typing import Callable
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, DataFrameWriter, SparkSession, functions as F
 
+from ..functions.frames import local_frame
 from . import commit, scope
 from .ann import centroid_matrix, ivf_assign_vectorized
-from .pq import (KSUB, M_SUB, ivfpq_adc_topk, pq_codebooks_deterministic,
-                 pq_encode_assign)
+from .bq import bq_pack, bq_pack_kernel, bq_thresholds, hamming_shortlist_kernel, n_words
+from .dedup import N_BANDS, ROWS_PER_BAND, jaccard_verify, lsh_build_kernel
+from .pq import KSUB, M_SUB, ivfpq_adc_topk, pq_codebooks_deterministic, pq_encode_assign
 from .similarity import ivf_centroids_for_corpus
+from .sq8 import sq8_encode, sq8_search_topk, sq8_stats
 
 N_BUCKETS = 64  # bounded partition-directory count for cell pruning
 
@@ -67,6 +85,11 @@ N_BUCKETS = 64  # bounded partition-directory count for cell pruning
 # large enough that listing stays trivial; compaction re-applies it.
 _ROWS_PER_CODE_FILE = 250_000
 
+_POINTER = "COMMITTED"
+_QUANTIZER = "quantizer.npz"
+
+ConcurrentAppendError = commit.CommitConflict
+
 
 def _n_code_files(n_rows: int, floor: int = 8) -> int:
     return max(floor, -(-int(n_rows) // _ROWS_PER_CODE_FILE))
@@ -76,45 +99,63 @@ def _p(path: str, *parts: str) -> str:
     return os.path.join(path, *parts)
 
 
+@dataclass(frozen=True)
+class _Codec:
+    """One index family over the store.
+
+    ``fit(corpus, **opts) -> (quantizer, meta, n)``: the frozen arrays,
+    the family's meta and the rows a build indexes (None when only the
+    encoded rows can tell).  ``encode(rows, quantizer, meta)``: the
+    family's rows.  ``project(rows)``: table name -> frame.
+    ``layouts``: table name -> ``layout(frame, n_files)``, the writer a
+    build, an append and a compaction all use.  ``write`` stands in for
+    the store's table writer (LSH keeps a module-level one)."""
+
+    fit: Callable
+    encode: Callable
+    layouts: dict[str, Callable[[DataFrame, int], DataFrameWriter]]
+    project: Callable = lambda rows: {"codes": rows}
+    count: str = "n_vectors"
+    write: Callable | None = None
+
+
 # ---------------------------------------------------------------------------
-# The commit protocol (operators/commit.py) for APPEND-ONLY tables, where
-# versioned full snapshots would re-write history (round 8):
-#
-# * every mutation writes its data files under ``<table>/epoch=N/`` —
-#   an ordinary Hive partition directory, so readers discover an
-#   ``epoch`` column and a ``.filter(epoch <= committed)`` makes
-#   uncommitted (torn) epochs invisible via partition pruning;
-# * the claimed slot is a ``_claim-epoch-N`` marker directory; a
-#   reclaimed slot's orphan epoch data is purged before writing;
-# * the ``COMMITTED`` pointer is JSON carrying the epoch number and the
-#   store's meta — data and meta become visible together or not at all.
+# The store: the only code that claims, writes epochs, publishes, vacuums
 # ---------------------------------------------------------------------------
-
-_POINTER = "COMMITTED"
-
-
-def _tiny_table(spark: SparkSession, data: list, schema: str) -> DataFrame:
-    """Single-partition DataFrame for driver-built dimension tables
-    (centroids / codebooks / stats / thresholds — k to m*ksub rows).
-
-    ``createDataFrame(list)`` parallelizes into defaultParallelism
-    pickled partitions, and the ``coalesce(1)`` the one-file write
-    needs then evaluates all of them SERIALLY through one task's
-    Python-worker round trips — measured 6 s per dim-table write on
-    local[32] for 32 rows (the dominant cost of every persisted-index
-    build).  Parallelizing into ONE slice up front makes the same
-    write one partition end to end: 0.5 s, same file, same rows.
-    """
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(data, 1), schema)
-
-
-ConcurrentAppendError = commit.CommitConflict
-
 
 def _read_committed(path: str) -> dict | None:
     text = commit.read_pointer(_p(path, _POINTER))
     return None if text is None else json.loads(text)
+
+
+def load_index_meta(spark: SparkSession, path: str) -> dict:
+    """The COMMITTED pointer is the store's meta — one atomic file, so
+    counts can never describe data that isn't visible (``spark`` kept
+    in the signature for call-site stability; the read is driver-side)."""
+    meta = _read_committed(path)
+    if meta is None:
+        raise ValueError(f"no committed index at {path}")
+    return meta
+
+
+def _open(path: str, family: str) -> dict:
+    """The committed meta of a ``family`` store in this format."""
+    meta = load_index_meta(None, path)
+    if meta.get("family") != family:
+        raise ValueError(
+            f"{path} holds no {family} index in the quantizer.npz format (family "
+            f"{meta.get('family')!r}); rebuild it with build_{family}_index")
+    return meta
+
+
+def _load_quantizer(path: str) -> dict[str, np.ndarray]:
+    """The frozen quantizer: one driver-side file read, no Spark job."""
+    try:
+        with np.load(_p(path, _QUANTIZER)) as z:
+            return dict(z)
+    except FileNotFoundError:
+        raise ValueError(f"{path} has no {_QUANTIZER}: it was built before the "
+                         f"quantizer format; rebuild the index") from None
 
 
 def _claim_epoch(path: str, epoch: int, tables: tuple[str, ...]) -> str:
@@ -146,11 +187,36 @@ def _epoch_filter(df: DataFrame, meta: dict) -> DataFrame:
                      & (F.col("epoch") <= F.lit(meta["epoch"])))
 
 
-def _vacuum_epochs(path: str, tables: tuple[str, ...], base: int) -> None:
-    """Remove replaced epoch directories (< base) after the pointer
-    swap; readers' epoch_base filter already excludes them."""
-    for t in tables:
-        commit.vacuum(_p(path, t), "epoch=", base)
+def _scan(spark: SparkSession, path: str, table: str, meta: dict) -> DataFrame:
+    return _epoch_filter(spark.read.parquet(_p(path, table)), meta)
+
+
+def _write_tables(codec: _Codec, frames: dict[str, DataFrame], path: str,
+                  epoch: int, n_files: int) -> None:
+    for table, frame in frames.items():
+        codec.layouts[table](frame, n_files).mode("append").parquet(
+            _p(path, table, f"epoch={epoch}"))
+
+
+def _write_rows(codec: _Codec, rows: DataFrame, path: str, epoch: int,
+                n_files: int) -> None:
+    _write_tables(codec, codec.project(rows), path, epoch, n_files)
+
+
+def _write_epoch(codec: _Codec, rows: DataFrame, path: str, epoch: int,
+                 n: int | None) -> int:
+    """Write encoded ``rows`` as epoch ``epoch`` of every table; returns
+    their count.  A build whose fit counted the corpus streams it with
+    the whole-table file count; otherwise the rows are cached, so the
+    count and the table writes encode once (a batch: no file floor)."""
+    write = codec.write or _write_rows
+    if n is not None:
+        write(codec, rows, path, epoch, _n_code_files(n))
+        return n
+    with scope.cached(rows) as rows:
+        n = rows.count()
+        write(codec, rows, path, epoch, _n_code_files(n, floor=1))
+    return n
 
 
 def _fresh_store(path: str) -> None:
@@ -159,146 +225,187 @@ def _fresh_store(path: str) -> None:
     overwritten data (readers see 'no committed index', not torn
     state).  Rebuild-in-place is single-writer by contract, like any
     table overwrite."""
-    os.makedirs(path, exist_ok=True)
-    try:
+    if os.path.exists(_p(path, _POINTER)):
         os.remove(_p(path, _POINTER))
-    except FileNotFoundError:
-        pass
-    for name in os.listdir(path):
-        full = _p(path, name)
-        if os.path.isdir(full):
-            shutil.rmtree(full, ignore_errors=True)
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
 
 
-def build_ivfpq_index(
-    spark: SparkSession,
-    emb: DataFrame,
-    path: str,
-    n_centroids: int | None = None,
-    m: int = M_SUB,
-    ksub: int = KSUB,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
-) -> dict:
-    """Build and persist the full IVFPQ index from an embedding frame.
+def _build(family: str, corpus: DataFrame, path: str, **opts) -> dict:
+    """Fit the quantizer, encode the corpus as epoch 0, publish."""
+    codec = _CODECS[family]
+    quantizer, meta, n = codec.fit(corpus, **opts)
+    _fresh_store(path)
+    claim = _claim_epoch(path, 0, tuple(codec.layouts))
+    np.savez(_p(path, _QUANTIZER), **quantizer)
+    meta = {"family": family, **meta}
+    n = _write_epoch(codec, codec.encode(corpus, quantizer, meta), path, 0, n)
+    if n == 0:
+        raise ValueError(f"build_{family}_index: nothing to index (an empty "
+                         f"frame, or no doc reaches shingle_n tokens)")
+    _commit_epoch(path, claim, {**meta, "epoch": 0, "epoch_base": 0, codec.count: n})
+    return {**meta, codec.count: n}
 
-    One centroid collect (k rows), one assignment pass, one encode
-    pass, one partitioned write of the codes — the corpus streams
-    through exactly twice and never concentrates anywhere.  Returns
-    {n_vectors, k, m, ksub} for the build log.
-    """
+
+def _append(family: str, batch: DataFrame, path: str,
+            extra_meta: dict | None = None) -> dict:
+    """Encode ONLY the batch with the frozen quantizer and commit it as
+    the next epoch — history is never read.  ``extra_meta`` rides the
+    same pointer swap as the rows it describes."""
+    meta = _open(path, family)
+    codec = _CODECS[meta["family"]]
+    quantizer = _load_quantizer(path)
+    epoch = meta["epoch"] + 1
+    claim = _claim_epoch(path, epoch, tuple(codec.layouts))
+    n_new = _write_epoch(codec, codec.encode(batch, quantizer, meta), path, epoch, None)
+    total = meta[codec.count] + n_new
+    _commit_epoch(path, claim, {**meta, **(extra_meta or {}),
+                                "epoch": epoch, codec.count: total})
+    return {"appended": n_new, codec.count: total}
+
+
+def _compact(spark: SparkSession, family: str, path: str) -> dict:
+    """Rewrite the committed epochs of every table into ONE fresh epoch in
+    the codec's layout, then swap the pointer to {epoch: E+1,
+    epoch_base: E+1}: the replaced epochs turn invisible in the same
+    atomic step that publishes the consolidated one (Delta's OPTIMIZE
+    on the pointer protocol).  A crash before the swap leaves the new
+    epoch invisible and the claim stale-reclaimable; after it, only
+    garbage the vacuum sweeps.  The quantizer is untouched: compaction
+    moves bytes, never results."""
+    meta = _open(path, family)
+    codec = _CODECS[meta["family"]]
+    epoch = meta["epoch"] + 1
+    tables = tuple(codec.layouts)
+    claim = _claim_epoch(path, epoch, tables)
+    _write_tables(codec, {t: _scan(spark, path, t, meta).drop("epoch") for t in tables},
+                  path, epoch, _n_code_files(meta[codec.count]))
+    _commit_epoch(path, claim, {**meta, "epoch": epoch, "epoch_base": epoch})
+    for t in tables:
+        commit.vacuum(_p(path, t), "epoch=", epoch)
+    return {"epoch": epoch, codec.count: meta[codec.count]}
+
+
+# ---------------------------------------------------------------------------
+# The codecs
+# ---------------------------------------------------------------------------
+
+def _by_vec_id(codes: DataFrame, n_files: int) -> DataFrameWriter:
+    """Flat codes: clustered by vec_id so point lookups and merges stay
+    footer-prunable; the file count scales with rows."""
+    return codes.repartition(n_files, "vec_id").write
+
+
+def _fit_ivfpq(emb: DataFrame, n_centroids: int | None = None) -> tuple:
     n = emb.count()
     if n == 0:
         raise ValueError("build_ivfpq_index: empty embedding frame")
-    _fresh_store(path)
-    claim = _claim_epoch(path, 0, ("codes",))
     k = n_centroids or ivf_centroids_for_corpus(n)
-    cent_ids, cent_mat = centroid_matrix(emb, k, id_col=id_col, vec_col=vec_col)
-    vecs = emb.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v"))
-    cb = pq_codebooks_deterministic(vecs, m=m, ksub=ksub)
-
-    # Fused encode+assign (round 9, guide §2.3/§2.4): one linear pass
-    # emits (vec_id, codes, cent_id) — the previous
-    # pq_encode(...).join(assign) scanned the corpus twice and paid
-    # two vec_id hash exchanges before the bucketed write; the fused
-    # kernel's output is row-identical (shared _assign_batch /
-    # _subspace_d2 math) and reaches the repartition with no prior
-    # shuffle at all.
-    codes = pq_encode_assign(vecs, cb, cent_ids, cent_mat)
-    (
-        codes.withColumn("cell_bucket", F.pmod(F.col("cent_id"), F.lit(N_BUCKETS)))
-        # repartition ON the partition column first: without it every
-        # shuffle task writes into every bucket directory (tasks x
-        # buckets small files — the small-file problem at birth);
-        # with it each bucket's rows land in one task -> one file per
-        # directory, and compact_to_size never needs to visit
-        .repartition(N_BUCKETS, "cell_bucket")
-        .write.partitionBy("cell_bucket").mode("overwrite")
-        .parquet(_p(path, "codes", "epoch=0"))
-    )
-    _tiny_table(
-        spark,
-        [(int(i), [float(x) for x in row]) for i, row in zip(cent_ids, cent_mat)],
-        "cent_id bigint, v array<double>",
-    ).write.mode("overwrite").parquet(_p(path, "centroids"))
-    _tiny_table(
-        spark,
-        [
-            (s, c, [float(x) for x in cb[s, c]])
-            for s in range(m) for c in range(ksub)
-        ],
-        "sub int, code_id int, cw array<double>",
-    ).write.mode("overwrite").parquet(_p(path, "codebooks"))
-    _commit_epoch(path, claim, {
-        "epoch": 0, "epoch_base": 0, "n_vectors": int(n), "k": int(k),
-        "m": int(m), "ksub": int(ksub), "n_buckets": int(N_BUCKETS),
-    })
-    return {"n_vectors": n, "k": k, "m": m, "ksub": ksub}
+    cent_ids, cent_mat = centroid_matrix(emb, k)
+    order = np.argsort(cent_ids)  # one centroid order for build, append and search
+    return ({"cent_ids": cent_ids[order], "cent_mat": cent_mat[order],
+             "codebooks": pq_codebooks_deterministic(emb)},
+            {"k": int(k), "m": M_SUB, "ksub": KSUB, "n_buckets": N_BUCKETS}, n)
 
 
-def load_index_meta(spark: SparkSession, path: str) -> dict:
-    """The COMMITTED pointer is the store's meta — one atomic file, so
-    counts can never describe data that isn't visible (``spark`` kept
-    in the signature for call-site stability; the read is driver-side)."""
-    meta = _read_committed(path)
-    if meta is None:
-        raise ValueError(f"no committed index at {path}")
-    return meta
+def _fit_sq8(emb: DataFrame) -> tuple:
+    lo, scale, n = sq8_stats(emb, with_count=True)
+    return {"lo": lo, "scale": scale}, {"dim": int(lo.shape[0])}, n
 
 
-def _load_centroids(spark: SparkSession, path: str) -> tuple:
-    rows = spark.read.parquet(_p(path, "centroids")).orderBy("cent_id").collect()
-    return (np.array([r["cent_id"] for r in rows], dtype=np.int64),
-            np.array([r["v"] for r in rows], dtype=np.float64))
+def _fit_bq(emb: DataFrame) -> tuple:
+    thresholds, n = bq_thresholds(emb, "v", with_count=True)
+    return {"thresholds": np.array(thresholds)}, {"dim": len(thresholds)}, n
 
 
-def _load_codebooks(spark: SparkSession, path: str, m: int, ksub: int) -> np.ndarray:
-    rows = spark.read.parquet(_p(path, "codebooks")).collect()
-    dsub = len(rows[0]["cw"])
-    cb = np.zeros((m, ksub, dsub))
-    for r in rows:
-        cb[r["sub"], r["code_id"]] = r["cw"]
-    return cb
+_CODECS = {
+    # Fused encode+assign: one linear pass emits (vec_id, codes,
+    # cent_id) with no shuffle before the bucketed write.  Repartition
+    # ON the partition column: each bucket's rows land in one task ->
+    # one file per bucket directory, not tasks x buckets small files.
+    "ivfpq": _Codec(
+        fit=_fit_ivfpq,
+        encode=lambda rows, q, meta: pq_encode_assign(
+            rows, q["codebooks"], q["cent_ids"], q["cent_mat"]).withColumn(
+            "cell_bucket", F.pmod(F.col("cent_id"), F.lit(meta["n_buckets"]))),
+        layouts={"codes": lambda codes, _: codes.repartition(N_BUCKETS, "cell_bucket")
+                 .write.partitionBy("cell_bucket")}),
+    # A batch value outside the frozen min/max clips to 0/255 (FAISS
+    # SQ8 ``add``): retrain when drift makes that loss material.
+    "sq8": _Codec(
+        fit=_fit_sq8,
+        encode=lambda rows, q, meta: sq8_encode(rows, q["lo"], q["scale"]),
+        layouts={"codes": _by_vec_id}),
+    # A batch value exactly on a frozen threshold resolves by the same
+    # strict ``>`` every other row used.
+    "bq": _Codec(
+        fit=_fit_bq,
+        encode=lambda rows, q, meta: bq_pack_kernel(rows, q["thresholds"].tolist()),
+        layouts={"codes": _by_vec_id}),
+    # Bands are RANGE-clustered and sorted by band_key, so each row
+    # group covers a narrow key range and a probe's band_key predicate
+    # skips row groups via footer min/max; shingle sets cluster by
+    # doc_id for the candidate lookup.  The kernel drops docs shorter
+    # than shingle_n tokens, so only the encoded rows count n_docs.
+    "lsh": _Codec(
+        fit=lambda docs, shingle_n=3: ({}, {"shingle_n": int(shingle_n), "n_bands": N_BANDS,
+                                            "rows_per_band": ROWS_PER_BAND}, None),
+        encode=lambda docs, q, meta: lsh_build_kernel(docs, n=meta["shingle_n"]),
+        project=lambda rows: {
+            "bands": rows.select("doc_id", F.posexplode("band_keys").alias("band", "band_key")),
+            "shingles": rows.select("doc_id", "shingles")},
+        layouts={"bands": lambda bands, _: bands.repartitionByRange(8, "band_key")
+                 .sortWithinPartitions("band_key").write,
+                 "shingles": lambda sh, _: sh.repartition(8, "doc_id").write},
+        count="n_docs",
+        # looked up at call time: crash tests replace _write_lsh_rows
+        write=lambda codec, rows, path, epoch, n_files: _write_lsh_rows(rows, path, epoch)),
+}
 
 
-def search_ivfpq_index(
-    spark: SparkSession,
-    path: str,
-    queries: DataFrame,
-    k: int = 5,
-    nprobe: int = 2,
-    query_id_col: str = "query_id",
-    vec_col: str = "v",
-) -> DataFrame:
-    """Search the persisted index with the in-memory scoring kernel.
+def _write_lsh_rows(rows: DataFrame, path: str, epoch: int) -> None:
+    """Write an LSH kernel frame's bands and shingles under the epoch dir."""
+    _write_rows(_CODECS["lsh"], rows, path, epoch, 8)
 
-    The centroid/codebook dimension tables load to the driver (k and
-    m x ksub rows).  Query cells are assigned via the SAME vectorized
-    kernel as the build (a numpy matmul over the collected query set),
-    and the codes scan is pruned TWICE before any scoring: a Hive
-    partition filter on cell_bucket drops unprobed buckets' files
-    entirely, and the cent_id IN filter lands on parquet footers
-    within the surviving buckets.  Scoring itself is the exact
-    ``ivfpq_adc_topk`` applyInPandas kernel — the persisted path and
-    the oracle-checked path cannot diverge.
+
+# ---------------------------------------------------------------------------
+# IVFPQ
+# ---------------------------------------------------------------------------
+
+def build_ivfpq_index(spark: SparkSession, emb: DataFrame, path: str,
+                      n_centroids: int | None = None) -> dict:
+    """Build and persist the IVFPQ index of a (vec_id, v) frame: one
+    count, one centroid collect (k ~ sqrt(N) rows), one codebook
+    sample, one fused encode pass into the bucketed write.  Returns
+    {n_vectors, k, m, ksub, ...} for the build log."""
+    return _build("ivfpq", emb, path, n_centroids=n_centroids)
+
+
+def search_ivfpq_index(spark: SparkSession, path: str, queries: DataFrame,
+                       k: int = 5, nprobe: int = 2) -> DataFrame:
+    """Search (query_id, v) queries with the in-memory scoring kernel.
+
+    Query cells are assigned with the SAME vectorized kernel as the
+    build (a numpy matmul over the collected query set), and the codes
+    scan is pruned TWICE before any scoring: a Hive partition filter on
+    cell_bucket drops unprobed buckets' files entirely, and the cent_id
+    IN filter lands on parquet footers within the surviving buckets.
+    Scoring itself is the exact ``ivfpq_adc_topk`` applyInPandas kernel.
     """
-    meta = load_index_meta(spark, path)
-    cent_ids, cent_mat = _load_centroids(spark, path)
-    cb = _load_codebooks(spark, path, meta["m"], meta["ksub"])
-
+    meta = _open(path, "ivfpq")
+    q = _load_quantizer(path)
     # The query frame is consumed twice (probe assignment here, the
     # kernel's own collect below); if the caller derived it from a
     # corpus-sized scan, re-deriving would re-pay that scan per
     # action — cache the bounded query set for the call.
-    with scope.cached(queries.select(F.col(query_id_col).alias("vec_id"),
-                                     F.col(vec_col).alias("v"))) as q:
-        probe = ivf_assign_vectorized(q, cent_ids, cent_mat, nprobe=nprobe)
+    with scope.cached(queries.select(F.col("query_id").alias("vec_id"), "v")) as qs:
+        probe = ivf_assign_vectorized(qs, q["cent_ids"], q["cent_mat"], nprobe=nprobe)
         probe_rows = probe.collect()  # queries x nprobe — the bounded side
         probed_cells = sorted({int(r["cent_id"]) for r in probe_rows})
         buckets = sorted({c % meta["n_buckets"] for c in probed_cells})
 
         codes_df = (
-            _epoch_filter(spark.read.parquet(_p(path, "codes")), meta)
+            _scan(spark, path, "codes", meta)
             .filter(F.col("cell_bucket").isin(buckets))      # partition pruning
             .filter(F.col("cent_id").isin(probed_cells))     # footer min/max
         )
@@ -314,7 +421,7 @@ def search_ivfpq_index(
             for r in codes_df.filter(F.col("vec_id").isin(qids))
             .select("vec_id").collect()
         }
-        probes_df = _tiny_table(
+        probes_df = local_frame(
             spark,
             [
                 (int(r["vec_id"]), int(r["cent_id"]), int(r["rn"]))
@@ -324,261 +431,124 @@ def search_ivfpq_index(
             "vec_id bigint, cent_id bigint, rn int",
         )
         ranked = members.unionByName(probes_df)
-        out_queries = q.withColumnRenamed("vec_id", "query_id")
         # the kernel collects the query set eagerly, so the cache can be
         # released before returning: the result plan references only the
         # codes scan and the driver-built LUT closures
         return ivfpq_adc_topk(
-            codes_df.select("vec_id", "codes"), ranked, out_queries, cb,
+            codes_df.select("vec_id", "codes"), ranked,
+            qs.withColumnRenamed("vec_id", "query_id"), q["codebooks"],
             k=k, nprobe=nprobe)
 
 
-def append_to_ivfpq_index(
-    spark: SparkSession,
-    emb_new: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
-) -> dict:
+def append_to_ivfpq_index(spark: SparkSession, emb_new: DataFrame, path: str) -> dict:
     """Frozen-quantizer increment: encode NEW vectors with the saved
-    centroids + codebooks and append their code rows — history is
-    never read, daily cost tracks the batch.  Caller owns id
+    centroids + codebooks and append their code rows.  Caller owns id
     uniqueness (the engine-wide insert-if-absent merge handles replay
-    when ids may repeat).
-
-    Crash/concurrency contract (round 8): the batch's rows land under
-    ``codes/epoch=N``, claimed by CAS and published by one atomic
-    pointer swap — a crash at the worst point (data written, pointer
-    not) leaves the epoch invisible to every reader, and a second
-    concurrent appender fails with ``CommitConflict``
+    when ids may repeat).  A crash before the pointer swap leaves the
+    epoch invisible; a concurrent appender raises ``CommitConflict``
     before writing anything."""
-    meta = load_index_meta(spark, path)
-    epoch = meta["epoch"] + 1
-    claim = _claim_epoch(path, epoch, ("codes",))
-    cent_ids, cent_mat = _load_centroids(spark, path)
-    cb = _load_codebooks(spark, path, meta["m"], meta["ksub"])
+    return _append("ivfpq", emb_new, path)
 
-    # The batch is consumed three times (count, assignment, encode);
-    # persisting it pins the increment's cost to the BATCH, not to
-    # however expensive the caller's lineage is — measured 3.5x on a
-    # 1M-corpus-derived 11k batch (75 s -> 21 s).
-    with scope.cached(emb_new.select(F.col(id_col).alias("vec_id"),
-                                     F.col(vec_col).alias("v"))) as vecs:
-        n_new = vecs.count()
-        # fused encode+assign — same one-pass, shuffle-free shape as
-        # the build (see build_ivfpq_index)
-        codes = pq_encode_assign(vecs, cb, cent_ids, cent_mat)
-        (
-            codes.withColumn(
-                "cell_bucket", F.pmod(F.col("cent_id"), F.lit(meta["n_buckets"])))
-            .repartition(meta["n_buckets"], "cell_bucket")  # one file/bucket/batch
-            .write.partitionBy("cell_bucket").mode("append")
-            .parquet(_p(path, "codes", f"epoch={epoch}"))
-        )
-    total = meta["n_vectors"] + n_new
-    _commit_epoch(path, claim, {**meta, "epoch": epoch, "n_vectors": int(total)})
-    return {"appended": n_new, "n_vectors": total}
+
+def compact_ivfpq_index(spark: SparkSession, path: str) -> dict:
+    """Rewrite all committed code epochs into one, one file per bucket."""
+    return _compact(spark, "ivfpq", path)
 
 
 # ---------------------------------------------------------------------------
-# SQ8 leg: the scalar-quantized flat index under the same store contract
+# SQ8: the scalar-quantized flat index
 # ---------------------------------------------------------------------------
 
-def build_sq8_index(
-    spark: SparkSession,
-    emb: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
-) -> dict:
-    """Persist the SQ8 flat index (round 7, the r6 verdict's item 6):
-
-    * ``stats`` — (dim, lo, scale)      dim rows (the whole quantizer)
-    * ``codes`` — (vec_id, codes)       N rows, dim BYTES each
-    * ``meta``  — (n_vectors, dim)
-
-    One dim-sized stats aggregate, one shuffle-free Arrow encode pass,
-    one key-clustered write — the corpus streams through twice, like
-    the IVFPQ build.  No cell partitioning: SQ8 is a FLAT index whose
-    search scans every code row by design (the pruning story lives in
-    the IVFPQ leg; production composes the two).  Codes land
-    repartitioned by vec_id so point lookups and merges stay
-    footer-prunable.
-    """
-    from .sq8 import sq8_encode, sq8_stats
-
-    # stats pass also carries the row count (round 9) — the separate
-    # count() scan this build used to pay is folded into the same
-    # map-side-combining aggregate
-    lo, scale, n = sq8_stats(emb, vec_col=vec_col, with_count=True)
-    if n == 0:
-        raise ValueError("build_sq8_index: empty embedding frame")
-    _fresh_store(path)
-    claim = _claim_epoch(path, 0, ("codes",))
-    (
-        sq8_encode(emb, lo, scale, id_col=id_col, vec_col=vec_col)
-        .repartition(_n_code_files(n), "vec_id")
-        .write.mode("overwrite").parquet(_p(path, "codes", "epoch=0"))
-    )
-    _tiny_table(
-        spark,
-        [(int(d), float(lo[d]), float(scale[d])) for d in range(lo.shape[0])],
-        "dim int, lo double, scale double",
-    ).write.mode("overwrite").parquet(_p(path, "stats"))
-    _commit_epoch(path, claim, {
-        "epoch": 0, "epoch_base": 0, "n_vectors": int(n),
-        "dim": int(lo.shape[0]),
-    })
-    return {"n_vectors": n, "dim": int(lo.shape[0])}
+def build_sq8_index(spark: SparkSession, emb: DataFrame, path: str) -> dict:
+    """Persist the SQ8 flat index of a (vec_id, v) frame: one stats
+    pass that also counts, one shuffle-free Arrow encode pass, one
+    vec_id-clustered write.  Flat by design: its search scans every
+    code row (the pruning story lives in the IVFPQ leg)."""
+    return _build("sq8", emb, path)
 
 
-def _load_sq8_stats(spark: SparkSession, path: str) -> tuple:
-    rows = spark.read.parquet(_p(path, "stats")).orderBy("dim").collect()
-    return (np.array([r["lo"] for r in rows], dtype=np.float64),
-            np.array([r["scale"] for r in rows], dtype=np.float64))
+def search_sq8_index(spark: SparkSession, path: str, queries: DataFrame,
+                     k: int = 15) -> DataFrame:
+    """Asymmetric search of (query_id, qv) queries with the exact
+    ``sq8_search_topk`` kernel — the saved (lo, scale) IS the decoder."""
+    meta = _open(path, "sq8")
+    q = _load_quantizer(path)
+    codes = _scan(spark, path, "codes", meta).select("vec_id", "codes")
+    return sq8_search_topk(codes, queries, q["lo"], q["scale"], k=k)
 
 
-def search_sq8_index(
-    spark: SparkSession,
-    path: str,
-    queries: DataFrame,
-    k: int = 15,
-    query_id_col: str = "query_id",
-    vec_col: str = "qv",
-) -> DataFrame:
-    """Asymmetric search over the persisted codes with the exact
-    ``sq8_search_topk`` kernel — the loaded (lo, scale) pair IS the
-    decoder, so the persisted path cannot drift from the in-memory
-    oracle-checked one (the IVFPQ store's literal-equality property)."""
-    from .sq8 import sq8_search_topk
-
-    meta = load_index_meta(spark, path)
-    lo, scale = _load_sq8_stats(spark, path)
-    codes = (
-        _epoch_filter(spark.read.parquet(_p(path, "codes")), meta)
-        .select("vec_id", "codes")
-    )
-    return sq8_search_topk(codes, queries, lo, scale, k=k,
-                           id_col=query_id_col, vec_col=vec_col)
+def append_to_sq8_index(spark: SparkSession, emb_new: DataFrame, path: str) -> dict:
+    """Frozen-quantizer increment: encode ONLY the batch with the saved
+    (lo, scale); out-of-range values clip to 0/255."""
+    return _append("sq8", emb_new, path)
 
 
-def append_to_sq8_index(
-    spark: SparkSession,
-    emb_new: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
-) -> dict:
-    """Frozen-quantizer increment: encode ONLY the batch with the SAVED
-    (lo, scale) and append its code rows — history is never read or
-    re-encoded (codes already on disk are immutable bytes; a batch
-    whose values fall outside the frozen min/max clips to 0/255, the
-    FAISS SQ8 `add` behavior — retrain when drift makes that loss
-    material, the same stance as the frozen IVFPQ quantizer).  Same
-    epoch/CAS/pointer atomicity contract as append_to_ivfpq_index."""
-    from .sq8 import sq8_encode
-
-    meta = load_index_meta(spark, path)
-    epoch = meta["epoch"] + 1
-    claim = _claim_epoch(path, epoch, ("codes",))
-    lo, scale = _load_sq8_stats(spark, path)
-    with scope.cached(emb_new.select(F.col(id_col).alias("vec_id"),
-                                     F.col(vec_col).alias("v"))) as vecs:
-        n_new = vecs.count()
-        (
-            sq8_encode(vecs, lo, scale)
-            .repartition(_n_code_files(n_new, floor=1), "vec_id")
-            .write.mode("append").parquet(_p(path, "codes", f"epoch={epoch}"))
-        )
-    total = meta["n_vectors"] + n_new
-    _commit_epoch(path, claim, {**meta, "epoch": epoch, "n_vectors": int(total)})
-    return {"appended": n_new, "n_vectors": total}
+def compact_sq8_index(spark: SparkSession, path: str) -> dict:
+    """Rewrite all committed code epochs into one, vec_id-clustered."""
+    return _compact(spark, "sq8", path)
 
 
 # ---------------------------------------------------------------------------
-# LSH leg: the persisted MinHash band index for incremental near-dup
+# BQ: 1-bit sign codes
 # ---------------------------------------------------------------------------
 
-def build_lsh_index(
-    spark: SparkSession,
-    docs: DataFrame,
-    path: str,
-    shingle_n: int = 3,
-) -> dict:
-    """Persist the near-dup probe index (round 7, completing the
-    store's trilogy: IVFPQ / SQ8 / LSH):
-
-    * ``bands``    — (doc_id, band, band_key)   docs x N_BANDS rows,
-                     key-clustered by band_key so a probe join reads
-                     bucket-local files
-    * ``shingles`` — (doc_id, shingles)         the verify-stage sets,
-                     key-clustered by doc_id for the candidate lookup
-    * ``meta``     — (n_docs, shingle_n, n_bands, rows_per_band)
-
-    This is exactly what an incremental dedup pipeline keeps warm: a
-    day's batch meets history ONLY through these two tables — history
-    text is never re-shingled, re-hashed, or self-joined again.
-
-    The corpus pass runs through :func:`~..operators.dedup.
-    lsh_build_kernel` — grams, hashes, permutations, and band keys in
-    one Arrow stage (byte-identical to the expression route, which
-    remains the oracle surface of the in-memory queries); the kernel
-    frame persists across the two table writes so the pass happens
-    once.
-    """
-    from .dedup import N_BANDS, ROWS_PER_BAND, lsh_build_kernel
-
-    if docs.isEmpty():
-        raise ValueError("build_lsh_index: empty document frame")
-    _fresh_store(path)
-    claim = _claim_epoch(path, 0, ("bands", "shingles"))
-    with scope.cached(lsh_build_kernel(docs, n=shingle_n)) as rows:
-        # n_docs = docs actually INDEXED: the kernel drops docs shorter
-        # than shingle_n tokens, so counting the raw input would
-        # over-count the rows present in the bands/shingles tables
-        # (r7 ADVICE).
-        n = rows.count()
-        if n == 0:
-            raise ValueError(
-                "build_lsh_index: no doc reaches shingle_n tokens")
-        _write_lsh_rows(rows, path, epoch=0)
-    _commit_epoch(path, claim, {
-        "epoch": 0, "epoch_base": 0, "n_docs": int(n),
-        "shingle_n": int(shingle_n), "n_bands": int(N_BANDS),
-        "rows_per_band": int(ROWS_PER_BAND),
-    })
-    return {"n_docs": n, "shingle_n": shingle_n, "n_bands": N_BANDS}
+def build_bq_index(spark: SparkSession, emb: DataFrame, path: str) -> dict:
+    """Persist the binary-quantization flat index of a (vec_id, v)
+    frame: 8 bytes per vector at dim 64 (32x under float32, 4x under
+    SQ8).  One thresholds pass that also counts, one Arrow pack pass
+    (byte-parity with the ``bq_pack`` expression pinned by
+    tests/test_quant.py), one vec_id-clustered write."""
+    return _build("bq", emb, path)
 
 
-def _write_lsh_rows(rows: DataFrame, path: str, epoch: int) -> None:
-    """Write a kernel frame's two projections under the epoch dir:
-    exploded (doc_id, band, band_key) rows RANGE-clustered and sorted
-    by band_key — each parquet row group then covers a narrow,
-    non-overlapping key range, so a probe's band_key predicate skips
-    row groups via footer min/max (the write_zordered/compact_to_size
-    layout contract; hash clustering left every footer spanning the
-    whole md5 keyspace and pruned nothing) — and the (doc_id,
-    shingles) sets clustered by doc_id for the candidate lookup."""
-    (
-        rows.select("doc_id", F.posexplode("band_keys")
-                    .alias("band", "band_key"))
-        .repartitionByRange(8, "band_key")
-        .sortWithinPartitions("band_key")
-        .write.mode("append").parquet(_p(path, "bands", f"epoch={epoch}"))
-    )
-    (
-        rows.select("doc_id", "shingles")
-        .repartition(8, "doc_id")
-        .write.mode("append").parquet(_p(path, "shingles", f"epoch={epoch}"))
-    )
+def search_bq_index(spark: SparkSession, path: str, queries: DataFrame,
+                    shortlist: int) -> DataFrame:
+    """Hamming shortlist of (query_id, qv) queries: packed with the SAVED
+    thresholds and ranked by the Arrow ``bq.hamming_shortlist_kernel``
+    (XOR + byte-table popcount, exact per-batch pruning under the
+    (hamming, neighbor_id) total order).  Hamming is integer math, so
+    the results are EXACTLY the expression route's.  Returns
+    (query_id, neighbor_id, hamming)."""
+    meta = _open(path, "bq")
+    thresholds = _load_quantizer(path)["thresholds"].tolist()
+    words = n_words(meta["dim"])
+    codes = _scan(spark, path, "codes", meta).select(
+        "vec_id", *[f"code{w}" for w in range(words)])
+    packed_q = bq_pack(queries.select("query_id", "qv"), thresholds, "qv",
+                       prefix="qcode").select(
+        "query_id", *[f"qcode{w}" for w in range(words)])
+    return hamming_shortlist_kernel(codes, packed_q, meta["dim"], shortlist)
 
 
-def probe_lsh_index(
-    spark: SparkSession,
-    path: str,
-    batch_docs: DataFrame,
-    threshold: float = 0.5,
-) -> DataFrame:
+def append_to_bq_index(spark: SparkSession, emb_new: DataFrame, path: str) -> dict:
+    """Frozen-quantizer increment: pack ONLY the batch with the saved
+    thresholds; history bytes are immutable."""
+    return _append("bq", emb_new, path)
+
+
+def compact_bq_index(spark: SparkSession, path: str) -> dict:
+    """Rewrite all committed code epochs into one, vec_id-clustered."""
+    return _compact(spark, "bq", path)
+
+
+# ---------------------------------------------------------------------------
+# LSH: the MinHash band index for incremental near-dup
+# ---------------------------------------------------------------------------
+
+def build_lsh_index(spark: SparkSession, docs: DataFrame, path: str,
+                    shingle_n: int = 3) -> dict:
+    """Persist the near-dup probe index of a (doc_id, text) frame.  A
+    day's batch meets history ONLY through its bands and shingles
+    tables — history text is never re-shingled, re-hashed, or
+    self-joined again.  The corpus pass runs through
+    ``dedup.lsh_build_kernel`` (byte-identical to the expression route)
+    once: the kernel frame stays cached across the count and both
+    table writes."""
+    return _build("lsh", docs, path, shingle_n=shingle_n)
+
+
+def probe_lsh_index(spark: SparkSession, path: str, batch_docs: DataFrame,
+                    threshold: float = 0.5) -> DataFrame:
     """Probe a new batch against the persisted index: (left_id=history,
     right_id=batch, jaccard) verified pairs.
 
@@ -590,9 +560,7 @@ def probe_lsh_index(
     lsh_probe_pairs contract); a re-ingested doc id is excluded from
     matching itself.
     """
-    from .dedup import jaccard_verify, lsh_build_kernel
-
-    meta = load_index_meta(spark, path)
+    meta = _open(path, "lsh")
     # The batch frame feeds BOTH the band join and the verify stage's
     # right side; without a cache the Arrow shingle/md5/minhash
     # kernel would execute twice per probe (r7 ADVICE).  The count
@@ -603,7 +571,7 @@ def probe_lsh_index(
     b = batch_rows.select(
         "doc_id", F.posexplode("band_keys").alias("band", "band_key")
     ).alias("b")
-    h = _epoch_filter(spark.read.parquet(_p(path, "bands")), meta)
+    h = _scan(spark, path, "bands", meta)
     # Small-probe fast path: a bounded batch's band keys form a small
     # IN set; against the range-clustered, sorted bands files the
     # predicate reaches parquet footers/column index and skips the row
@@ -623,271 +591,23 @@ def probe_lsh_index(
                 F.col("b.doc_id").alias("right_id"))
         .distinct()
     )
-    hist_sharr = (
-        _epoch_filter(spark.read.parquet(_p(path, "shingles")), meta)
-        .select("doc_id", "shingles")
-    )
+    hist_sharr = _scan(spark, path, "shingles", meta).select("doc_id", "shingles")
     return jaccard_verify(hist_sharr, cand, threshold,
                           sharr_right=batch_rows.select("doc_id", "shingles"))
 
 
-def append_to_lsh_index(
-    spark: SparkSession,
-    docs_new: DataFrame,
-    path: str,
-    extra_meta: dict | None = None,
-) -> dict:
+def append_to_lsh_index(spark: SparkSession, docs_new: DataFrame, path: str,
+                        extra_meta: dict | None = None) -> dict:
     """Index increment: shingle/hash ONLY the new docs with the saved
-    parameters and append their band + shingle rows — history files
-    are immutable, daily cost tracks the batch (the same contract as
-    the IVFPQ/SQ8 appends and the Bloom/LSH probe paths).  The epoch
-    commit makes the TWO table writes atomic together: a crash between
-    the bands and shingles appends can no longer leave candidates with
-    no verify sets, and ``n_docs`` counts docs actually indexed (the
-    kernel drops sub-shingle_n docs — r7 ADVICE)."""
-    from .dedup import lsh_build_kernel
-
-    meta = load_index_meta(spark, path)
-    epoch = meta["epoch"] + 1
-    claim = _claim_epoch(path, epoch, ("bands", "shingles"))
-    with scope.cached(lsh_build_kernel(docs_new, n=meta["shingle_n"])) as rows:
-        n_new = rows.count()
-        _write_lsh_rows(rows, path, epoch=epoch)
-    total = meta["n_docs"] + n_new
-    # extra_meta rides the SAME pointer swap as the data (e.g. the
-    # streaming maintainer's last-applied micro-batch epoch) — the
-    # marker and the rows it describes commit or vanish together,
-    # the RollupMaintainer convention (streaming/rollup.py)
-    _commit_epoch(path, claim, {**meta, **(extra_meta or {}),
-                                "epoch": epoch, "n_docs": int(total)})
-    return {"appended": n_new, "n_docs": total}
-
-
-# ---------------------------------------------------------------------------
-# BQ leg: 1-bit sign codes under the same store contract (round 8,
-# completing the quantizer family's persisted forms: IVFPQ / SQ8 / BQ)
-# ---------------------------------------------------------------------------
-
-def build_bq_index(
-    spark: SparkSession,
-    emb: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
-) -> dict:
-    """Persist the binary-quantization flat index:
-
-    * ``thresholds`` — (dim, t)                dim rows (the whole
-                       quantizer: per-dim midrange sign thresholds)
-    * ``codes``      — (vec_id, code0..codeW)  N rows, 8 BYTES each at
-                       dim 64 (32x under float32, 4x under SQ8)
-    * meta           — (n_vectors, dim) on the COMMITTED pointer
-
-    One dim-row stats aggregate, one shuffle-free Catalyst pack pass,
-    one key-clustered write.  Flat by design like the SQ8 leg (the
-    pruning story lives in the IVFPQ leg; production composes), but
-    the scan it serves is pure-integer ``bit_count(xor)`` — the
-    cheapest probe of the three stores.
-    """
-    from .bq import bq_pack_kernel, bq_thresholds
-
-    vecs = emb.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v"))
-    # thresholds pass also carries the row count (round 9; see
-    # build_sq8_index)
-    thresholds, n = bq_thresholds(vecs, "v", with_count=True)
-    if n == 0:
-        raise ValueError("build_bq_index: empty embedding frame")
-    _fresh_store(path)
-    claim = _claim_epoch(path, 0, ("codes",))
-    dim = len(thresholds)
-    (
-        # Arrow pack kernel — the production build path (byte-parity
-        # with the bq_pack expression pinned by tests/test_quant.py;
-        # the expression remains the registered query's oracle surface)
-        bq_pack_kernel(vecs, thresholds)
-        .repartition(_n_code_files(n), "vec_id")
-        .write.mode("overwrite").parquet(_p(path, "codes", "epoch=0"))
-    )
-    _tiny_table(
-        spark,
-        [(int(d), float(t)) for d, t in enumerate(thresholds)],
-        "dim int, t double",
-    ).write.mode("overwrite").parquet(_p(path, "thresholds"))
-    _commit_epoch(path, claim, {
-        "epoch": 0, "epoch_base": 0, "n_vectors": int(n), "dim": int(dim),
-    })
-    return {"n_vectors": n, "dim": dim}
-
-
-def _load_bq_thresholds(spark: SparkSession, path: str) -> list[float]:
-    rows = spark.read.parquet(_p(path, "thresholds")).orderBy("dim").collect()
-    return [r["t"] for r in rows]
-
-
-def search_bq_index(
-    spark: SparkSession,
-    path: str,
-    queries: DataFrame,
-    shortlist: int,
-    query_id_col: str = "query_id",
-    vec_col: str = "qv",
-) -> DataFrame:
-    """Hamming shortlist over the persisted codes — queries are packed
-    with the SAVED thresholds and ranked by the Arrow
-    ``bq.hamming_shortlist_kernel`` (XOR + byte-table popcount per
-    batch, exact per-batch pruning under the (hamming, neighbor_id)
-    total order).  Hamming is integer math, so the kernel's results
-    are EXACTLY the expression route's — the persisted path stays
-    certified by the registered query's oracle (kernel/expression
-    equality pinned by tests/test_quant.py; persisted/in-memory
-    equality by tests/test_index_store.py).  Returns (query_id,
-    neighbor_id, hamming)."""
-    from .bq import bq_pack, hamming_shortlist_kernel, n_words
-
-    meta = load_index_meta(spark, path)
-    thresholds = _load_bq_thresholds(spark, path)
-    dim = meta["dim"]
-    code_cols = [f"code{w}" for w in range(n_words(dim))]
-    codes = (
-        _epoch_filter(spark.read.parquet(_p(path, "codes")), meta)
-        .select("vec_id", *code_cols)
-    )
-    packed_q = bq_pack(
-        queries.select(F.col(query_id_col).alias("query_id"),
-                       F.col(vec_col).alias("qv")),
-        thresholds, "qv", prefix="qcode",
-    ).select("query_id", *[f"qcode{w}" for w in range(n_words(dim))])
-    return hamming_shortlist_kernel(codes, packed_q, dim, shortlist)
-
-
-def append_to_bq_index(
-    spark: SparkSession,
-    emb_new: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
-) -> dict:
-    """Frozen-quantizer increment: pack ONLY the batch with the SAVED
-    thresholds and append its code rows — history bytes are immutable,
-    and a batch value landing exactly on a frozen threshold resolves
-    by the same strict ``>`` every other row used.  Same epoch/CAS/
-    pointer atomicity contract as the sibling appends."""
-    from .bq import bq_pack_kernel
-
-    meta = load_index_meta(spark, path)
-    epoch = meta["epoch"] + 1
-    claim = _claim_epoch(path, epoch, ("codes",))
-    thresholds = _load_bq_thresholds(spark, path)
-    with scope.cached(emb_new.select(F.col(id_col).alias("vec_id"),
-                                     F.col(vec_col).alias("v"))) as vecs:
-        n_new = vecs.count()
-        (
-            bq_pack_kernel(vecs, thresholds)
-            .repartition(_n_code_files(n_new, floor=1), "vec_id")
-            .write.mode("append").parquet(_p(path, "codes", f"epoch={epoch}"))
-        )
-    total = meta["n_vectors"] + n_new
-    _commit_epoch(path, claim, {**meta, "epoch": epoch, "n_vectors": int(total)})
-    return {"appended": n_new, "n_vectors": total}
-
-
-# ---------------------------------------------------------------------------
-# Compaction (round 8): consolidate accumulated epochs, atomically.
-#
-# A year of daily appends leaves ~365 `epoch=N` directories of small
-# files per table; every probe/search then lists and opens all of
-# them.  Compaction rewrites the committed window into ONE fresh epoch
-# with the store's canonical clustering (the same layout the build
-# emits), then swaps the pointer to {epoch: E+1, epoch_base: E+1} —
-# readers' epoch-window filter makes every replaced epoch invisible in
-# the same atomic step that publishes the consolidated one (Delta's
-# OPTIMIZE, re-expressed on the pointer protocol).  A crash mid-compact
-# leaves the new epoch invisible and the claim stale-reclaimable; a
-# crash after the swap leaves only invisible garbage, which the
-# post-swap vacuum (or the next compaction's) sweeps.  Quantizer /
-# dimension tables (centroids, codebooks, stats) are immutable and
-# untouched — compaction moves bytes, never changes a single result
-# (tests pin probe/search equality before and after).
-# ---------------------------------------------------------------------------
-
-def compact_ivfpq_index(spark: SparkSession, path: str) -> dict:
-    """Rewrite all committed code epochs into one, bucket-clustered
-    like the build (one file per cell_bucket)."""
-    meta = load_index_meta(spark, path)
-    epoch = meta["epoch"] + 1
-    claim = _claim_epoch(path, epoch, ("codes",))
-    (
-        _epoch_filter(spark.read.parquet(_p(path, "codes")), meta)
-        .select("vec_id", "codes", "cent_id", "cell_bucket")
-        .repartition(meta["n_buckets"], "cell_bucket")
-        .write.partitionBy("cell_bucket").mode("append")
-        .parquet(_p(path, "codes", f"epoch={epoch}"))
-    )
-    _commit_epoch(path, claim, {**meta, "epoch": epoch, "epoch_base": epoch})
-    _vacuum_epochs(path, ("codes",), epoch)
-    return {"epoch": epoch, "n_vectors": meta["n_vectors"]}
-
-
-def compact_sq8_index(spark: SparkSession, path: str) -> dict:
-    """Rewrite all committed code epochs into one, vec_id-clustered."""
-    meta = load_index_meta(spark, path)
-    epoch = meta["epoch"] + 1
-    claim = _claim_epoch(path, epoch, ("codes",))
-    (
-        _epoch_filter(spark.read.parquet(_p(path, "codes")), meta)
-        .select("vec_id", "codes")
-        .repartition(_n_code_files(meta["n_vectors"]), "vec_id")
-        .write.mode("append").parquet(_p(path, "codes", f"epoch={epoch}"))
-    )
-    _commit_epoch(path, claim, {**meta, "epoch": epoch, "epoch_base": epoch})
-    _vacuum_epochs(path, ("codes",), epoch)
-    return {"epoch": epoch, "n_vectors": meta["n_vectors"]}
-
-
-def compact_bq_index(spark: SparkSession, path: str) -> dict:
-    """Rewrite all committed code epochs into one, vec_id-clustered
-    (the SQ8 recipe — flat scan, so clustering serves point lookups
-    and merges, not probe pruning)."""
-    from .bq import n_words
-
-    meta = load_index_meta(spark, path)
-    epoch = meta["epoch"] + 1
-    claim = _claim_epoch(path, epoch, ("codes",))
-    code_cols = [f"code{w}" for w in range(n_words(meta["dim"]))]
-    (
-        _epoch_filter(spark.read.parquet(_p(path, "codes")), meta)
-        .select("vec_id", *code_cols)
-        .repartition(_n_code_files(meta["n_vectors"]), "vec_id")
-        .write.mode("append").parquet(_p(path, "codes", f"epoch={epoch}"))
-    )
-    _commit_epoch(path, claim, {**meta, "epoch": epoch, "epoch_base": epoch})
-    _vacuum_epochs(path, ("codes",), epoch)
-    return {"epoch": epoch, "n_vectors": meta["n_vectors"]}
+    parameters.  The epoch commit makes the bands and shingles writes
+    atomic together, and ``extra_meta`` (e.g. the streaming
+    maintainer's last-applied micro-batch epoch) commits or vanishes
+    with them, the RollupMaintainer convention."""
+    return _append("lsh", docs_new, path, extra_meta)
 
 
 def compact_lsh_index(spark: SparkSession, path: str) -> dict:
-    """Rewrite all committed band/shingle epochs into one — bands
-    regain GLOBAL band_key range clustering (append epochs each sorted
-    their own files; consolidation restores disjoint footer ranges
-    across the whole table, re-arming the small-probe skip), shingles
-    re-cluster by doc_id.  No text is re-shingled: this is a byte
-    move over the stored rows."""
-    meta = load_index_meta(spark, path)
-    epoch = meta["epoch"] + 1
-    claim = _claim_epoch(path, epoch, ("bands", "shingles"))
-    (
-        _epoch_filter(spark.read.parquet(_p(path, "bands")), meta)
-        .select("doc_id", "band", "band_key")
-        .repartitionByRange(8, "band_key")
-        .sortWithinPartitions("band_key")
-        .write.mode("append").parquet(_p(path, "bands", f"epoch={epoch}"))
-    )
-    (
-        _epoch_filter(spark.read.parquet(_p(path, "shingles")), meta)
-        .select("doc_id", "shingles")
-        .repartition(8, "doc_id")
-        .write.mode("append").parquet(_p(path, "shingles", f"epoch={epoch}"))
-    )
-    _commit_epoch(path, claim, {**meta, "epoch": epoch, "epoch_base": epoch})
-    _vacuum_epochs(path, ("bands", "shingles"), epoch)
-    return {"epoch": epoch, "n_docs": meta["n_docs"]}
+    """Rewrite all committed band/shingle epochs into one — bands regain
+    GLOBAL band_key range clustering (re-arming the small-probe skip),
+    shingles re-cluster by doc_id.  No text is re-shingled."""
+    return _compact(spark, "lsh", path)

@@ -328,9 +328,12 @@ class ParquetMergeSink:
     def current_snapshot(self) -> str | None:
         return (commit.read_pointer(self._pointer()) or "").strip() or None
 
-    def _version(self) -> int:
+    def committed_version(self) -> int:
+        """The committed snapshot's version, 0 before the first commit."""
         snap = self.current_snapshot()
         return int(snap.rsplit("-", 1)[1]) if snap else 0
+
+    _version = committed_version  # its earlier private name, still called
 
     def _manifest(self, snap: str) -> list[dict]:
         """The data files of committed snapshot ``snap``."""
@@ -366,18 +369,25 @@ class ParquetMergeSink:
         return self._scan([e for e in entries if not self._is_cold(e, horizon)])
 
     def write(self, df: DataFrame, meta: dict[str, str] | None = None,
-              horizon: dt.datetime | None = None) -> int:
+              horizon: dt.datetime | None = None, read_version: int | None = None) -> int:
         """Commit ``df`` as the table's next snapshot and return its row
         count.  With ``horizon`` (and a freeze column), ``df`` replaces
         only the hot files that ``read(horizon)`` returned; the horizon a
-        sink is given must never decrease."""
-        version = self._version() + 1
+        sink is given must never decrease.
+
+        A read-modify-write caller takes ``committed_version()`` before its
+        ``read`` and passes it as ``read_version``: the write then commits
+        only on top of that version and raises ``CommitConflict`` if
+        another writer committed since, whether or not the two writes
+        overlapped in time.  Without it the write lands on top of
+        whatever is committed (a blind write)."""
+        version = (self.committed_version() if read_version is None else read_version) + 1
         new_snap = f"snapshot-{version:08d}"
         snap_dir = os.path.join(self.path, new_snap)
         os.makedirs(self.path, exist_ok=True)
         # the snapshot directory itself is the claimed slot; once it is
         # ours, CURRENT names the predecessor and cannot move
-        commit.claim(snap_dir, version, self._version)
+        commit.claim(snap_dir, version, self.committed_version)
         prev = self._manifest(f"snapshot-{version - 1:08d}") if version > 1 else []
         # append, not overwrite: overwrite DELETES the directory before
         # rewriting it, which would momentarily release the CAS claim;

@@ -709,9 +709,9 @@ def _sq8_rerank_tail(spark: SparkSession, sf_dir: str, emb: DataFrame,
 @register("sq8_index_persisted", oracle=_SQ8_ANN_ORACLE)
 def sq8_index_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PERSISTED SQ8 index under the exact-ranking hash check
-    (round 7, the r6 verdict's item 6): build writes the stats/codes/
-    meta parquet tables (operators/index_store.py — the ivfpq store's
-    SQ8 leg), search RELOADS them and ranks via the same mapInArrow
+    (round 7, the r6 verdict's item 6): build writes the (lo, scale)
+    quantizer and the codes table (operators/index_store.py — the
+    store's SQ8 codec), search RELOADS them and ranks via the same mapInArrow
     kernel as sq8_ann_rerank, and the identical _SQ8_ANN_ORACLE
     certifies that the save/load round trip through BINARY code
     storage changes NOTHING about shortlist or reranked order.

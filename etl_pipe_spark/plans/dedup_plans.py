@@ -1578,9 +1578,9 @@ def ivfpq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("ivfpq_index_persisted", oracle=_IVFPQ_ORACLE)
 def ivfpq_index_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PERSISTED IVFPQ index under the exact-ranking hash check
-    (round 6): build writes the centroid / codebook / bucketed-codes
-    parquet tables (operators/index_store.py), then search RELOADS
-    them from disk and ranks via the same applyInPandas kernel as
+    (round 6): build writes the quantizer (centroids + codebooks) and
+    the bucketed codes table (operators/index_store.py), then search
+    RELOADS them from disk and ranks via the same applyInPandas kernel as
     ivfpq_ann_adc — the identical _IVFPQ_ORACLE certifies that a
     save/load round trip through the on-disk layout (including the
     cell_bucket partition pruning on the codes scan) changes NOTHING
@@ -1597,8 +1597,7 @@ def ivfpq_index_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     # parquet (guide §5).
     emb = scope.cache(_emb_with_norms(spark, sf_dir).select("vec_id", "v"))
     path = _io_dir(sf_dir, "ivfpq_index")
-    build_ivfpq_index(spark, emb, path, n_centroids=N_CENTROIDS,
-                      m=_PQ_M, ksub=_PQ_KSUB)
+    build_ivfpq_index(spark, emb, path, n_centroids=N_CENTROIDS)
     queries = (
         emb.filter(F.col("vec_id") % 100 == 0)
         .withColumnRenamed("vec_id", "query_id")
@@ -1742,7 +1741,7 @@ def ivfpq_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     # seed: one third trains + freezes the quantizer; two "days" of
     # frozen-quantizer appends deliver the rest
     build_ivfpq_index(spark, emb.filter(F.col("vec_id") % 3 == 0), path,
-                      n_centroids=N_CENTROIDS, m=_PQ_M, ksub=_PQ_KSUB)
+                      n_centroids=N_CENTROIDS)
     append_to_ivfpq_index(spark, emb.filter(F.col("vec_id") % 3 == 1), path)
     append_to_ivfpq_index(spark, emb.filter(F.col("vec_id") % 3 == 2), path)
     compact_ivfpq_index(spark, path)

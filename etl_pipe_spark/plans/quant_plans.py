@@ -301,8 +301,8 @@ def bq_index_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     completing the store's quantizer legs (IVFPQ / SQ8 / BQ, all on
     the epoch/CAS/pointer commit protocol of operators/index_store.py).
 
-    Build writes the thresholds/codes tables (8 bytes per vector at
-    dim 64) and publishes them with one pointer swap; search RELOADS
+    Build writes the thresholds quantizer and the codes table (8 bytes
+    per vector at dim 64) and publishes them with one pointer swap; search RELOADS
     them, packs the raw float queries with the SAVED thresholds, and
     ranks via the same ``bq.hamming_shortlist`` helper as
     bq_hamming_rerank — the identical _BQ_ANN_ORACLE certifies that

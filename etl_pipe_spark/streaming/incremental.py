@@ -139,7 +139,9 @@ class IncrementalPipeline:
                 obs, F.max("ts").alias("mx"), F.count(F.lit(1)).alias("n")
             )
             sink = self.sinks[name]
-            rows = sink.write(flow(sink.read(horizon), batch), horizon=horizon)
+            base = sink.committed_version()  # before the read: no lost update
+            rows = sink.write(flow(sink.read(horizon), batch), horizon=horizon,
+                              read_version=base)
             stats = obs.get
             self.store.advance(name, stats["mx"], stats["n"])
             return rows

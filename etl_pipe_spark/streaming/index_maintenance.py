@@ -30,7 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.index_store import _read_committed, append_to_lsh_index
+from ..operators.index_store import append_to_lsh_index, load_index_meta
 
 _EPOCH_KEY = "last_stream_epoch"
 
@@ -47,8 +47,9 @@ class LshIndexMaintainer:
         self.path = path
 
     def last_epoch(self) -> int:
-        meta = _read_committed(self.path)
-        if meta is None:
+        try:
+            meta = load_index_meta(self.spark, self.path)
+        except ValueError:  # no committed index yet
             return -1
         return int(meta.get(_EPOCH_KEY, -1))
 

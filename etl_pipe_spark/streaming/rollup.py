@@ -59,6 +59,7 @@ class RollupMaintainer:
         when the epoch was already applied (replay no-op)."""
         if epoch_id <= self.last_epoch():
             return False
+        base = self.sink.committed_version()
         current = self.sink.read()
         aggs = [
             (F.sum(c) if fn == "sum" else F.max(c)).alias(c)
@@ -69,7 +70,7 @@ class RollupMaintainer:
             .groupBy(*self.keys)
             .agg(*aggs)
         )
-        self.sink.write(merged, meta={_EPOCH_KEY: str(epoch_id)})
+        self.sink.write(merged, meta={_EPOCH_KEY: str(epoch_id)}, read_version=base)
         return True
 
     def foreach_batch(self, partial_fn):

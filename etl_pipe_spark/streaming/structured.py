@@ -117,7 +117,8 @@ def stream_into_sink(spark: SparkSession, stream: DataFrame, sink: ParquetMergeS
             "event_type",
             F.col("value").alias("amount"),
         )
-        sink.write(insert_if_absent(sink.read(), updates, ["source_key"]))
+        base = sink.committed_version()
+        sink.write(insert_if_absent(sink.read(), updates, ["source_key"]), read_version=base)
 
     listener = attach_metrics_listener(spark) if metrics else None
     try:
@@ -199,8 +200,10 @@ def stream_jsonl_ingest(
                 .mode("overwrite")
                 .json(dead_dir)
             )
+            base = sink.committed_version()
             sink.write(insert_if_absent(
-                sink.read(), good.drop("src_path", "src_file"), key_cols))
+                sink.read(), good.drop("src_path", "src_file"), key_cols),
+                read_version=base)
 
     q = (
         stream.writeStream.foreachBatch(apply_batch)

@@ -151,3 +151,90 @@ def test_commit_protocol_has_one_home():
     with open(home) as f:
         text = f.read()
     assert "os.replace(" in text and "os.mkdir(" in text
+
+
+def test_interleaved_index_appender_cannot_take_a_committed_epoch(spark, tmp_path, monkeypatch):
+    """Writer A reads epoch 0; writer B appends epoch 1, publishes it and
+    releases its claim; only then does A append.  A's claim of epoch 1
+    must raise before its orphan purge can delete B's committed rows."""
+    from etl_pipe_spark.operators import index_store as IS
+
+    store = _Index(spark, str(tmp_path / "store"))
+    stale = IS._read_committed(store.path)        # A reads epoch 0
+    store.commit(1)                               # B commits epoch 1
+    after_b = store.visible()
+    assert after_b[0] == 1 and 101 in after_b[2]
+
+    reads = iter([stale])                         # A's read is the stale one
+    real_read = IS._read_committed
+    monkeypatch.setattr(IS, "_read_committed", lambda path: next(reads, None) or real_read(path))
+    with pytest.raises(commit.CommitConflict):
+        store.commit(2)
+    monkeypatch.setattr(IS, "_read_committed", real_read)
+    assert store.visible() == after_b             # B's epoch kept
+    assert not glob.glob(os.path.join(store.path, "_claim-epoch-*"))  # A's slot dropped
+
+
+def test_stale_merge_writer_cannot_reclaim_a_vacuumed_snapshot(spark, tmp_path):
+    """A writer holding version 1 writes after snapshot-2 was committed
+    and vacuumed: the free slot name must not let it commit on top of
+    version 1 again."""
+    store = _Sink(spark, str(tmp_path / "store"))
+    store.commit(1)
+    stale = store.sink.committed_version()
+    for i in range(2, 6):                         # snapshot-2 falls out of retention
+        store.commit(i)
+    assert not os.path.exists(os.path.join(store.path, "snapshot-00000002"))
+    before = store.visible()
+    with pytest.raises(commit.CommitConflict):
+        store.sink.write(spark.createDataFrame([(99,)], "id long"), read_version=stale)
+    assert store.visible() == before
+    assert not os.path.exists(os.path.join(store.path, "snapshot-00000002"))
+
+
+def _keys(sink):
+    return sorted(r.k for r in sink.read().collect())
+
+
+def test_merge_sink_interleaved_writers_lose_no_update(spark, tmp_path):
+    """A reads v1, B commits v2 with ``kb``, then A writes its read plus
+    ``ka``: A's commit raises and the table keeps ``kb``."""
+    from etl_pipe_spark.operators.merge import ParquetMergeSink
+
+    path = str(tmp_path / "t")
+    sink = ParquetMergeSink(spark, path, "k string")
+    row = lambda k: spark.createDataFrame([(k,)], "k string")  # noqa: E731
+    sink.write(row("k0"))
+    a_version, a_read = sink.committed_version(), sink.read()      # A reads v1
+    ParquetMergeSink(spark, path, "k string").write(sink.read().unionByName(row("kb")))  # B
+    with pytest.raises(commit.CommitConflict):
+        sink.write(a_read.unionByName(row("ka")), read_version=a_version)
+    assert _keys(sink) == ["k0", "kb"]
+
+
+def test_rollup_maintainer_carries_its_read_version(spark, tmp_path):
+    """The read-modify-write callers pass the version they read: another
+    writer committing between the maintainer's read and its write makes
+    the maintainer raise instead of overwriting that commit."""
+    from etl_pipe_spark.operators.merge import ParquetMergeSink
+    from etl_pipe_spark.streaming.rollup import RollupMaintainer
+
+    path = str(tmp_path / "t")
+    schema = "k string, n bigint"
+    sink = ParquetMergeSink(spark, path, schema)
+    sink.write(spark.createDataFrame([("k0", 1)], schema))
+    real_read = sink.read
+
+    def read_then_other_writer_commits(*args, **kwargs):
+        out = real_read(*args, **kwargs)
+        other = ParquetMergeSink(spark, path, schema)
+        other.write(other.read().unionByName(spark.createDataFrame([("kb", 1)], schema)))
+        return out
+
+    sink.read = read_then_other_writer_commits
+    m = RollupMaintainer(sink, ["k"], {"n": "sum"})
+    with pytest.raises(commit.CommitConflict):
+        m.apply_batch(spark.createDataFrame([("ka", 1)], schema), 0)
+    del sink.read
+    assert _keys(sink) == ["k0", "kb"]
+    assert m.last_epoch() == -1

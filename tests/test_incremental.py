@@ -225,9 +225,9 @@ def test_flows_overlap_in_time(spark, sf_dir, pipe):
     only flows that run concurrently get past the barrier."""
     barrier = threading.Barrier(len(pipe.sinks), timeout=60)
     for sink in pipe.sinks.values():
-        def write(df, meta=None, horizon=None, _write=sink.write):
+        def write(df, meta=None, horizon=None, read_version=None, _write=sink.write):
             barrier.wait()
-            return _write(df, meta, horizon=horizon)
+            return _write(df, meta, horizon=horizon, read_version=read_version)
         sink.write = write
     counts = pipe.run_cycle(now_ts=END)
     assert list(counts) == ["dim_users", "fact_event_log", "user_versions"]
@@ -248,7 +248,7 @@ def test_one_failing_flow_leaves_the_others_committed(spark, sf_dir, tmp_path):
     snap_before = {t: s.current_snapshot() for t, s in faulty.sinks.items()}
     wm_before = {t: faulty.store.get(t) for t in faulty.sinks}
 
-    def failing_write(df, meta=None, horizon=None):
+    def failing_write(df, meta=None, horizon=None, read_version=None):
         raise RuntimeError("simulated fact_event_log write failure")
 
     log.write = failing_write
