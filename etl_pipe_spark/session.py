@@ -14,6 +14,24 @@ externally-provided sessions (see :func:`pin_conf`):
   with this flag the column arrives as int64 nanos and the loader
   derives an exact micro-truncated timestamp (matching DuckDB's
   nanos->micros truncation).
+
+:func:`get_spark` also switches off two defaults:
+
+* ``spark.python.sql.dataFrameDebugging.enabled=false`` — PySpark 4
+  wraps every DataFrame and ``functions`` call to capture its Python
+  call site for the JVM, about five extra py4j round trips per call.
+  Plans and results are unchanged.  What an error loses is the call site: the ``== DataFrame
+  ==`` context of, say, a division by zero says ``"divide" was called
+  from`` a JVM frame instead of ``"__truediv__" was called from
+  job.py:13``; the error class, message and Python traceback stay.
+  PySpark reads the flag once per process, at the first wrapped call
+  made while a session is active.  To get call sites back, build your
+  own session without this setting (it defaults to true) before that
+  call.  :func:`pin_conf` leaves the flag alone, so a session someone
+  else built keeps its own choice.
+* ``spark.ui.showConsoleProgress=false`` — the progress bar's
+  ``\r``-terminated lines on stderr would otherwise splice into a
+  tool's stdout lines when both streams go to one log.
 """
 
 from __future__ import annotations
@@ -65,6 +83,8 @@ def get_spark(app_name: str = "etl_pipe_spark", cpus: int | None = None) -> Spar
         # heap shows up as 5-10x query-time variance from GC pauses
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.ui.showConsoleProgress", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -6,11 +6,22 @@ is a lazy DataFrame: ``spark.read.parquet`` in the test environment,
 ``spark.read.format("jdbc")`` against a live database — either way
 Catalyst pushes filters/projections into the scan, so downstream
 operators stay source-agnostic.
+
+Postgres resolves a SELECT's columns from its catalog without reading
+data; Spark's parquet reader instead infers the schema from a file
+footer, and that inference is a Spark job.  :func:`file_schema` is the
+one schema resolver: it memoizes each file's schema in the process,
+keyed by the footer's bytes and the confs the schema conversion reads,
+so after a table's first load every later load of the unchanged file
+builds its plan without a job.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
+import threading
+from collections import OrderedDict
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
@@ -86,27 +97,91 @@ def _table_path(sf_dir: str, name: str) -> str:
     return f"{sf_dir.rstrip('/')}/{name}.parquet"
 
 
+#: The SQL confs Spark's parquet schema conversion reads (the eight
+#: flags of Spark 4.1's ``ParquetToSparkSchemaConverter``): with the
+#: footer, they determine the inferred schema.
+_SCHEMA_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.fieldId.read.enabled",
+    "spark.sql.parquet.ignoreVariantAnnotation",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
+)
+_MEMO_SIZE = 256  # footers kept; a source rewritten each cycle adds one per cycle
+_memo: OrderedDict[tuple, StructType] = OrderedDict()
+_memo_lock = threading.Lock()
+
+
+def _footer_digest(path: str) -> bytes | None:
+    """Digest of a local parquet file's footer, or None when ``path``
+    is not one (a directory, a remote URI, an encrypted or truncated
+    file).  The file ends with the footer, its 4-byte little-endian
+    length and the magic ``PAR1``."""
+    if not os.path.isfile(path):
+        return None
+    try:
+        with open(path, "rb") as f:
+            f.seek(-8, os.SEEK_END)
+            tail = f.read(8)
+            if tail[4:] != b"PAR1":
+                return None
+            size = int.from_bytes(tail[:4], "little")
+            f.seek(-8 - size, os.SEEK_END)
+            return hashlib.sha256(f.read(size)).digest()
+    except OSError:
+        return None
+
+
+def _infer(spark: SparkSession, path: str) -> StructType:
+    return spark.read.parquet(path).schema
+
+
 def file_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
     """The table's schema as its files store it, before any
-    normalization — inferred from a footer, which costs one Spark job.
-    Hand it back to :func:`load_table` to skip that job on later loads."""
-    pin_conf(spark)
-    return spark.read.parquet(_table_path(sf_dir, name)).schema
+    normalization.  Treat the result as read-only: it is shared.
 
-
-def load_table(spark: SparkSession, sf_dir: str, name: str,
-               schema: StructType | None = None) -> DataFrame:
-    """Load one catalog table as a lazy DataFrame.
-
-    ``events`` is normalized to carry both ``ts`` (TIMESTAMP_NTZ) and
-    ``ts_ns`` (int64 nanos) whatever the file's timestamp layout — see
-    :func:`_events_normalize`.  ``schema``, the :func:`file_schema` of
-    an earlier load, replaces the schema inference; the files are
-    still listed on every load.
+    Inference reads a footer in a Spark job, so the schema is memoized
+    in the process.  The key is a digest of the file's parquet footer
+    bytes plus the values of :data:`_SCHEMA_CONFS`; the inferred schema
+    is a function of exactly those, so a hit is exact.  (A key from
+    ``stat()`` would not be: an in-place rewrite keeps the inode, and
+    mtime is coarse.)  A path that is not a single local parquet file
+    (a directory, a remote URI) is inferred on every call.
     """
     pin_conf(spark)
-    reader = spark.read if schema is None else spark.read.schema(schema)
-    df = reader.parquet(_table_path(sf_dir, name))
+    path = _table_path(sf_dir, name)
+    digest = _footer_digest(path)
+    if digest is None:
+        return _infer(spark, path)
+    key = (digest, *(spark.conf.get(k) for k in _SCHEMA_CONFS))
+    with _memo_lock:
+        schema = _memo.get(key)
+        if schema is not None:
+            _memo.move_to_end(key)
+            return schema
+    schema = _infer(spark, path)
+    with _memo_lock:
+        _memo[key] = schema
+        if len(_memo) > _MEMO_SIZE:
+            _memo.popitem(last=False)
+    return schema
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Load one catalog table as a lazy DataFrame.
+
+    The schema comes from :func:`file_schema` (which also pins the
+    session's correctness confs), so only a table's first load infers
+    it; the files are still listed on every load.  ``events`` is
+    normalized to carry both ``ts`` (TIMESTAMP_NTZ) and ``ts_ns``
+    (int64 nanos) whatever the file's timestamp layout — see
+    :func:`_events_normalize`.
+    """
+    schema = file_schema(spark, sf_dir, name)
+    df = spark.read.schema(schema).parquet(_table_path(sf_dir, name))
     if name == "events":
         df = _events_normalize(df)
     return df

@@ -28,7 +28,7 @@ from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from ..operators.merge import ParquetMergeSink, insert_if_absent, scd2_apply_versions, upsert
-from ..sources.catalog import events_since, file_schema, load_table
+from ..sources.catalog import events_since, load_table
 from .watermark import WatermarkStore
 
 _DIM_USERS_DDL = (
@@ -58,7 +58,6 @@ class IncrementalPipeline:
                  overlap_sec: int = 90):
         self.spark = spark
         self.source_sf_dir = source_sf_dir
-        self._events_schema = None  # the events files' schema, from the first load
         self.store = WatermarkStore(spark, f"{target_dir}/etl_watermark", overlap_sec)
         self.sinks = {
             "dim_users": ParquetMergeSink(spark, f"{target_dir}/dim_users", _DIM_USERS_DDL),
@@ -164,14 +163,9 @@ class IncrementalPipeline:
             "fact_event_log": self._flow_event_log,
             "user_versions": self._flow_versions,
         }
-        # one source load shared by every flow's watermark filter; the
-        # file schema is inferred once per pipeline (that inference is a
-        # Spark job), while the source is still listed on every load
+        # one source load shared by every flow's watermark filter
         try:
-            if self._events_schema is None:
-                self._events_schema = file_schema(self.spark, self.source_sf_dir, "events")
-            events = load_table(self.spark, self.source_sf_dir, "events",
-                                self._events_schema)
+            events = load_table(self.spark, self.source_sf_dir, "events")
         except Exception as exc:  # no flow can run: report each as failed
             print(f"[etl_pipe_spark] source events failed: {exc}")
             return {name: -1 for name in flows}

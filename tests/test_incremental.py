@@ -15,7 +15,8 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import Window, functions as F
 
-from etl_pipe_spark.sources.catalog import file_schema, load_table
+from etl_pipe_spark.sources import catalog
+from etl_pipe_spark.sources.catalog import load_table
 from etl_pipe_spark.streaming import incremental
 from etl_pipe_spark.streaming.incremental import IncrementalPipeline
 from etl_pipe_spark.streaming.watermark import DEFAULT_EPOCH, WatermarkStore
@@ -284,14 +285,22 @@ def test_cycle_jobs_land_in_the_callers_job_group(spark, pipe, jobs_launched):
         assert issued > 0 and in_group == issued
 
 
-def test_events_schema_is_inferred_once_per_pipeline(spark, pipe, monkeypatch):
+def _count_inferences(monkeypatch) -> list:
+    """Empty the process's schema memo and record each inference."""
     calls = []
 
-    def counting_file_schema(*args):
+    def counting_infer(*args):
         calls.append(args)
-        return file_schema(*args)
+        return infer(*args)
 
-    monkeypatch.setattr(incremental, "file_schema", counting_file_schema)
+    infer = catalog._infer
+    monkeypatch.setattr(catalog, "_memo", type(catalog._memo)())
+    monkeypatch.setattr(catalog, "_infer", counting_infer)
+    return calls
+
+
+def test_events_schema_is_inferred_once_per_pipeline(spark, pipe, monkeypatch):
+    calls = _count_inferences(monkeypatch)
     pipe.run_cycle(now_ts=MID)
     pipe.run_cycle(now_ts=END)
     assert len(calls) == 1
@@ -299,22 +308,26 @@ def test_events_schema_is_inferred_once_per_pipeline(spark, pipe, monkeypatch):
 
 @pytest.mark.parametrize("unit", ["us", "ns"])
 def test_events_load_with_file_schema_matches_inference(spark, sf_dir, tmp_path,
-                                                        jobs_launched, unit):
+                                                        jobs_launched, monkeypatch, unit):
     """Both timestamp layouts, TIMESTAMP(MICROS) and TIMESTAMP(NANOS),
-    load the same through a passed file schema as through inference,
-    and the passed schema saves the inference job."""
+    load the same through the memoized file schema as through
+    inference, and the memo saves the inference job."""
     table = pq.read_table(f"{sf_dir}/events.parquet")
     ts = table.schema.get_field_index("ts")
     table = table.set_column(ts, "ts", table.column("ts").cast(pa.timestamp(unit)))
     pq.write_table(table, tmp_path / "events.parquet", coerce_timestamps=None)
     src = str(tmp_path)
+    calls = _count_inferences(monkeypatch)
 
-    inferred, n_inferred = jobs_launched(load_table, spark, src, "events")
-    schema = file_schema(spark, src, "events")
-    given, n_given = jobs_launched(load_table, spark, src, "events", schema)
-    assert n_inferred >= 1 and n_given == 0
-    assert given.schema == inferred.schema  # field metadata included
-    assert sorted(map(str, given.collect())) == sorted(map(str, inferred.collect()))
+    first, n_first = jobs_launched(load_table, spark, src, "events")
+    given, n_given = jobs_launched(load_table, spark, src, "events")
+    assert len(calls) == 1
+    assert n_first >= 1 and n_given == 0
+    # the loader's normalization over a plain inferring read
+    inferred = catalog._events_normalize(spark.read.parquet(f"{src}/events.parquet"))
+    for df in (first, given):
+        assert df.schema == inferred.schema  # field metadata included
+        assert sorted(map(str, df.collect())) == sorted(map(str, inferred.collect()))
 
 
 _SINK_COLS = {
