@@ -252,15 +252,16 @@ def event_data_flow(src: Sources, since) -> DataFrame:
     )
 
 
-def timeline_flow(src: Sources, since, limit: int | None = 10000) -> DataFrame:
+def timeline_flow(src: Sources, since) -> DataFrame:
     """The 8-way UNION ALL activity timeline (reference extract.py:270-419 U1).
 
     Eight branch projections onto one 10-column event schema with
     typed NULL literals, NULL-propagating concat descriptions (F1) and
     COALESCE'd optional fragments (F2); the synthetic source_key makes
     overlap redelivery idempotent at the insert-if-absent sink (L6).
-    Ordered by (event_time, source_key) — the tiebreaker makes the cap
-    deterministic, unlike the reference's bare ORDER BY event_time.
+    Ordered by (event_time, source_key) and capped at the reference's
+    10,000 rows — the tiebreaker makes the cap deterministic, unlike
+    the reference's bare ORDER BY event_time.
     """
     s = src["fc_scenario"]
     nd = src["fc_scenario_node_data"]
@@ -379,4 +380,4 @@ def timeline_flow(src: Sources, since, limit: int | None = 10000) -> DataFrame:
     out = timeline.filter(F.col("event_time").isNotNull()).orderBy(
         "event_time", "source_key"
     )
-    return out.limit(limit) if limit is not None else out
+    return out.limit(10000)

@@ -3,9 +3,10 @@
 The reference coerces untrusted JSON payload values with four small
 Python helpers (reference transform.py:12-47: safe_get / safe_bool /
 safe_numeric / safe_int).  Spark's plain ``cast`` is stricter (ANSI
-mode errors; non-ANSI maps "yes" -> NULL), so each helper is re-built
+mode errors; non-ANSI maps "yes" -> NULL), so each coercion is re-built
 as a ``when`` ladder over ``try_cast`` — whole-stage-codegen'd JVM
-expressions, ANSI-safe, zero Python on the hot path.
+expressions, ANSI-safe, zero Python on the hot path.  ``safe_get``
+needs no helper: field access on a NULL struct is NULL.
 
 ``try_cast`` alone is NOT a faithful ``float(val)``: the JVM parser
 additionally accepts Java numeric literals that Python rejects —
@@ -126,12 +127,3 @@ def safe_int(col: Column) -> Column:
     ok = t.rlike(f"^{PY_INT_GRAMMAR}$")
     direct = F.when(ok, F.regexp_replace(t, "_", "").try_cast("long"))
     return F.coalesce(direct, safe_numeric(col).try_cast("long"))
-
-
-def safe_get(struct_col: Column, field: str) -> Column:
-    """Reference transform.py:12-17 — tolerant dict lookup.
-
-    Vanishes in Spark: field access on a NULL struct (unparseable or
-    non-dict JSON) is NULL naturally.
-    """
-    return struct_col.getField(field)

@@ -34,15 +34,15 @@ def dsum(expr: Column, scale: int = 2) -> Column:
     return F.round(F.sum(expr), scale).cast("double")
 
 
-def davg(expr: Column, scale: int = 4) -> Column:
+def davg(expr: Column) -> Column:
     """Bit-stable average: exact decimal sum -> round -> double / count.
 
     Not ``F.avg``: DuckDB's AVG returns DOUBLE (order-dependent sum)
     and the two engines' decimal-division scale rules differ.  Instead
-    both sides compute ``CAST(round(sum(dec), s) AS DOUBLE) /
+    both sides compute ``CAST(round(sum(dec), 4) AS DOUBLE) /
     CAST(count AS DOUBLE)`` — the division inputs are identical bits,
     and IEEE double division is deterministic, so the quotient matches
     exactly.  NULL (not NaN/error) when the group has no non-null rows.
     """
     n = F.count(expr)
-    return F.when(n > 0, dsum(expr, scale) / n.cast("double"))
+    return F.when(n > 0, dsum(expr, 4) / n.cast("double"))

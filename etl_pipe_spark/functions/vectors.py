@@ -52,10 +52,3 @@ def safe_div(num: Column, den: Column) -> Column:
 # DuckDB oracle fragments mirroring the expressions above.
 DUCK_VEC = "list_transform({col}, x -> CAST(x AS DOUBLE))"
 DUCK_DOT = "list_dot_product({a}, {b})"
-
-
-def duck_cosine(a: str, b: str) -> str:
-    return (
-        f"(list_dot_product({a}, {b})"
-        f" / (sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b}))))"
-    )

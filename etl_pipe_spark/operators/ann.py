@@ -414,20 +414,21 @@ def ivf_assign_vectorized(
 
 
 _TOPK_SCHEMA = "query_id bigint, neighbor_id bigint, cosine double"
+_TOP_K = 5
+_SEMDUP_BLOCK = 1024
 
 
 def ann_probe_topk_blas(
     emb: DataFrame,
     ranked: DataFrame,
     nprobe: int = 2,
-    top_k: int = 5,
     every: int = 100,
     id_col: str = "vec_id",
     vec_col: str = "v",
     max_query_bytes: int = 64 << 20,
     qblock: int = 512,
 ) -> DataFrame:
-    """Probe + score as per-cell BLAS matmuls: top-``top_k`` neighbors
+    """Probe + score as per-cell BLAS matmuls: top-``_TOP_K`` neighbors
     for every ``1/every``-sampled query, searched in its ``nprobe``
     nearest cells.
 
@@ -457,7 +458,7 @@ def ann_probe_topk_blas(
     join makes when its build side exceeds the threshold.
 
     Output contract matches the expression path: (query_id,
-    neighbor_id, cosine, rnk), rnk 1..top_k by (cosine DESC,
+    neighbor_id, cosine, rnk), rnk 1..``_TOP_K`` by (cosine DESC,
     neighbor_id ASC) — ties pinned by the same lexsort rule the
     vectorized assignment uses.
     """
@@ -491,15 +492,14 @@ def ann_probe_topk_blas(
                 chunk_key == chunk_no)
             qmap = _collect_query_map(chunk.collect(), id_col, vec_col)
             parts.append(member.groupBy("cent_id").applyInPandas(
-                _make_cell_scorer(qmap, top_k, id_col, vec_col,
-                                  qblock=qblock),
+                _make_cell_scorer(qmap, id_col, vec_col, qblock=qblock),
                 _TOPK_SCHEMA))
     scored = parts[0]
     for p in parts[1:]:
         scored = scored.unionByName(p)
     w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
     return scored.withColumn("rnk", F.row_number().over(w)).filter(
-        F.col("rnk") <= top_k)
+        F.col("rnk") <= _TOP_K)
 
 
 def _collect_query_map(q_rows, id_col: str, vec_col: str) -> dict:
@@ -518,8 +518,7 @@ def _collect_query_map(q_rows, id_col: str, vec_col: str) -> dict:
     return qmap
 
 
-def _make_cell_scorer(qmap: dict, top_k: int, id_col: str, vec_col: str,
-                      qblock: int = 512):
+def _make_cell_scorer(qmap: dict, id_col: str, vec_col: str, qblock: int):
     """Per-cell scorer for ``applyInPandas``: each cell's members score
     against its probing queries in ``qblock``-row query panels, so the
     score matrix costs qblock x members memory, never nq x members —
@@ -528,7 +527,7 @@ def _make_cell_scorer(qmap: dict, top_k: int, id_col: str, vec_col: str,
     full matrix grows quadratically with cell heat; the Zipf spike
     sweep's 100k-member cell drew ~1k queries = 800 MB unpaneled)."""
 
-    def score(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def score(key, pdf):
         entry = qmap.get(key[0])
         empty = pd.DataFrame({"query_id": pd.Series(dtype=np.int64),
                               "neighbor_id": pd.Series(dtype=np.int64),
@@ -550,13 +549,13 @@ def _make_cell_scorer(qmap: dict, top_k: int, id_col: str, vec_col: str,
                 s = panel[i - q0]
                 idx = np.nonzero(nids != qid)[0]  # exclude self
                 # lexsort BEFORE truncating: an argpartition prune keeps
-                # an arbitrary member of a score tie at the top_k
+                # an arbitrary member of a score tie at the top-k
                 # boundary, silently diverging from the expression
                 # path's (cosine DESC, neighbor_id ASC) rule — and
                 # exact-duplicate embeddings make exact cosine ties
                 # common in dedup corpora
                 order = np.lexsort((nids[idx], -s[idx]))
-                sel = idx[order][:top_k]
+                sel = idx[order][:_TOP_K]
                 out_q.extend([qid] * len(sel))
                 out_n.extend(nids[sel])
                 out_c.extend(s[sel])
@@ -570,15 +569,14 @@ def _make_cell_scorer(qmap: dict, top_k: int, id_col: str, vec_col: str,
 
 
 def semantic_dups_blas(emb: DataFrame, assign: DataFrame, tau: float,
-                       id_col: str = "vec_id", vec_col: str = "v",
-                       block: int = 1024) -> DataFrame:
+                       id_col: str = "vec_id", vec_col: str = "v") -> DataFrame:
     """Within-cell earliest-id-wins duplicate flags, scored as blocked
     per-cell matmuls: (vec_id, cent_id, is_dup).
 
     The expression form self-joins each cell (pairs = sum of
     cell-size^2 / 2 = O(N^1.5) with sqrt(N) cells) and folds an
     interpreted cosine per pair; this kernel runs each cell inside
-    ``applyInPandas``, streaming the cosine matrix in ``block``-row
+    ``applyInPandas``, streaming the cosine matrix in ``_SEMDUP_BLOCK``-row
     panels so a skewed cell (real corpora cluster — cells follow
     density, not the sqrt(N) mean) costs block x m floats of memory
     instead of m x m.  A running column-max over the strict-upper
@@ -602,7 +600,7 @@ def semantic_dups_blas(emb: DataFrame, assign: DataFrame, tau: float,
     cell going from hours (10^14 flops at m=100k) to sub-second.
     """
 
-    def score(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def score(key, pdf):
         pdf = pdf.sort_values(id_col, kind="mergesort").reset_index(drop=True)
         m = len(pdf)
         x = np.array(list(pdf[vec_col]), dtype=np.float64)
@@ -619,8 +617,8 @@ def semantic_dups_blas(emb: DataFrame, assign: DataFrame, tau: float,
         xn[xn == 0.0] = 1.0
         un = xu / xn[:, None]
         run_max = np.full(nu, -np.inf)
-        for r0 in range(0, nu, block):
-            r1 = min(r0 + block, nu)
+        for r0 in range(0, nu, _SEMDUP_BLOCK):
+            r1 = min(r0 + _SEMDUP_BLOCK, nu)
             panel = un[r0:r1] @ un.T  # b x nu
             # strict upper triangle: row i contributes to columns j > i
             cols = np.arange(nu)[None, :]

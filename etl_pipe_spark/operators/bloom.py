@@ -22,8 +22,8 @@ serializes through the ordinary broadcast machinery (2 MiB per 2^24
 bits).  xxhash64 is partition- and run-deterministic, so a filter
 built today answers identically forever.
 
-Sizing: ``bloom_bits_for(n)`` gives ~10 bits/key for k=4, putting the
-theoretical false-positive rate (1 - e^(-kn/m))^k under 1.2%.
+Sizing: m >= 10 bits per key for k=4 puts the theoretical
+false-positive rate (1 - e^(-kn/m))^k under 1.2%.
 """
 
 from __future__ import annotations
@@ -31,14 +31,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 BLOOM_K = 4  # hash functions; fp ~ (1 - e^(-k*n/m))^k
-
-
-def bloom_bits_for(n_keys: int) -> int:
-    """Next power of two >= 10 bits per key (fp < 1.2% at k=4)."""
-    m = 1 << 10
-    while m < 10 * max(n_keys, 1):
-        m <<= 1
-    return m
 
 
 def _positions(col: Column, m_bits: int) -> Column:

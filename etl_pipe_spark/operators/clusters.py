@@ -27,12 +27,13 @@ from pyspark.sql import DataFrame, Observation, Window as W, functions as F
 
 from . import scope
 
+_MAX_ROUNDS = 20
+
 
 def connected_components(
     edges: DataFrame,
     left: str = "left_id",
     right: str = "right_id",
-    max_rounds: int = 20,
 ) -> DataFrame:
     """Label every vertex of the pair graph with min(id) of its component.
 
@@ -58,7 +59,7 @@ def connected_components(
             .distinct()
             .withColumn("cluster_id", F.col("vertex_id"))
         )
-        for round_no in range(max_rounds):
+        for round_no in range(_MAX_ROUNDS):
             neighbor_min = (
                 sym.join(labels, sym.dst == labels.vertex_id)
                 .groupBy(F.col("src").alias("vertex_id"))

@@ -20,9 +20,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions.text import hash32, shingles
+from ..functions.text import hash32
 
 MINHASH_P = 4294967311  # smallest prime > 2^32
+SIMHASH_BITS = 32
 
 # Default hot-shingle document-frequency cap: a 3-gram appearing in more
 # than this many documents is boilerplate, not a similarity signal, and
@@ -75,9 +76,8 @@ def shingle_arrays(docs: DataFrame, id_col: str = "doc_id", text_col: str = "tex
     return toked.select(id_col, F.array_distinct(windows).alias("shingles"))
 
 
-def shingle_sets(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-                 n: int = 3) -> DataFrame:
-    """Distinct word n-gram shingles per document: (doc_id, shingle).
+def shingle_sets(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+    """Distinct word 3-gram shingles per document: (doc_id, shingle).
 
     ``explode_outer``, not ``explode``: a plain explode makes Catalyst
     infer a ``size(shingles) > 0`` filter (InferFiltersFromGenerate)
@@ -86,98 +86,8 @@ def shingle_sets(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
     partitioning (measured 2.8 s -> 0.5 s at sf0.1).  The outer form
     skips the inference and is identical here: shingle_arrays already
     guarantees non-empty arrays (token-count guard)."""
-    return shingle_arrays(docs, id_col, text_col, n).select(
+    return shingle_arrays(docs, id_col, text_col).select(
         id_col, F.explode_outer("shingles").alias("shingle")
-    )
-
-
-def capped_postings(sh: DataFrame, max_df: int) -> DataFrame:
-    """Posting list with hot shingles dropped (document frequency cap).
-
-    Candidate-pair cost through an inverted index is sum over shingles
-    of k^2 (k = posting-list length) — quadratic in bucket occupancy,
-    so one boilerplate phrase shared by k docs costs k^2 pairs.  The
-    standard dedup-at-scale fix: drop shingles whose df exceeds
-    ``max_df`` from CANDIDATE GENERATION (a hot shingle carries almost
-    no similarity signal anyway), bounding per-shingle cost at
-    max_df^2.  Verification still scores candidates on the FULL
-    shingle sets, so surviving pairs keep their exact Jaccard.
-    """
-    # The HOT list (df > cap) is tiny by construction — aggregate the
-    # index once, keep only the offenders, and broadcast a left-anti
-    # join.  The posting list itself is never re-shuffled by shingle
-    # here (a window-count formulation would exchange the full index).
-    hot = (
-        sh.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("__df"))
-        .filter(F.col("__df") > max_df)
-        .select("shingle")
-    )
-    return sh.join(F.broadcast(hot), "shingle", "left_anti")
-
-
-def index_candidates(sh: DataFrame, max_df: int | None = None) -> DataFrame:
-    """Candidate pairs (left_id < right_id) sharing >=1 indexed shingle,
-    optionally under a hot-shingle df cap (see :func:`capped_postings`)."""
-    idx = sh if max_df is None else capped_postings(sh, max_df)
-    a, b = idx.alias("a"), idx.alias("b")
-    return (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("left_id"), F.col("b.doc_id").alias("right_id"))
-        .distinct()
-    )
-
-
-def jaccard_pairs(sh: DataFrame, threshold: float,
-                  candidates: DataFrame | None = None,
-                  max_df: int | None = None) -> DataFrame:
-    """Exact n-gram Jaccard over an inverted shingle index.
-
-    Pairs sharing >=1 shingle are enumerated by an equi-join on the
-    shingle; per-shingle pair cost is k^2 in posting-list length, so
-    ``max_df`` (hot-shingle document-frequency cap, see
-    :func:`capped_postings`) bounds the worst bucket — without it a
-    single corpus-wide stop phrase costs O(N^2) pairs.  ``candidates``
-    (from LSH) restricts the verify set directly.  Either way the
-    Jaccard value |A ∩ B| / |A ∪ B| is computed exactly over the FULL
-    shingle sets of the surviving pairs.
-    """
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
-    if candidates is None and max_df is not None:
-        candidates = index_candidates(sh, max_df=max_df)
-    if candidates is None:
-        # Inverted-index path: every pair sharing >=1 shingle.
-        a, b = sh.alias("a"), sh.alias("b")
-        inter = (
-            a.join(b, (F.col("a.shingle") == F.col("b.shingle"))
-                   & (F.col("a.doc_id") < F.col("b.doc_id")))
-            .groupBy(F.col("a.doc_id").alias("left_id"), F.col("b.doc_id").alias("right_id"))
-            .agg(F.count(F.lit(1)).alias("n_common"))
-        )
-    else:
-        # Candidate-restricted path: intersect only LSH-collided pairs
-        # (cost ~ |candidates| x shingles-per-doc, not the full index).
-        left_sh = candidates.join(
-            sh.withColumnRenamed("doc_id", "left_id"), "left_id"
-        )
-        inter = (
-            left_sh.join(
-                sh.select(F.col("doc_id").alias("right_id"), "shingle"),
-                ["right_id", "shingle"],
-            )
-            .groupBy("left_id", "right_id")
-            .agg(F.count(F.lit(1)).alias("n_common"))
-        )
-    sa = sizes.select(F.col("doc_id").alias("left_id"), F.col("n_shingles").alias("n_left"))
-    sb = sizes.select(F.col("doc_id").alias("right_id"), F.col("n_shingles").alias("n_right"))
-    jac = F.col("n_common").cast("double") / (
-        F.col("n_left") + F.col("n_right") - F.col("n_common")
-    ).cast("double")
-    return (
-        inter.join(sa, "left_id").join(sb, "right_id")
-        .select("left_id", "right_id", jac.alias("jaccard"))
-        .filter(F.coalesce(F.col("jaccard") >= threshold, F.lit(False)))
     )
 
 
@@ -280,8 +190,7 @@ def minhash_signatures_arrays(sharr: DataFrame) -> DataFrame:
     fold lands behind an alias barrier in its own projection:
     CollapseProject refuses to merge a non-cheap producer referenced 16
     times, pinning single evaluation.  No explode, no groupBy, no
-    exchange; same values as :func:`minhash_signatures`, so the banding
-    oracle is unchanged.
+    exchange.
     """
     zero = F.struct(
         *[F.lit(MINHASH_P).cast("bigint").alias(f"m{i}") for i in range(N_PERM)]
@@ -306,23 +215,6 @@ def minhash_signatures_arrays(sharr: DataFrame) -> DataFrame:
         "doc_id",
         *[F.col("__sig").getField(f"m{i}").alias(f"mh{i}") for i in range(N_PERM)],
     )
-
-
-def minhash_signatures(sh: DataFrame) -> DataFrame:
-    """Per-document MinHash signature: one min-aggregate per permutation.
-
-    The base md5 hash is materialized as a column first so the 16
-    permutation expressions share one md5 evaluation per shingle
-    (inlining it re-computes md5 per permutation — measured ~40%
-    slower).
-    """
-    hashed = sh.withColumn("__h", hash32(F.col("shingle")))
-    aggs = [
-        F.min((F.lit(PERM_A[i]) * F.col("__h") + F.lit(PERM_B[i])) % F.lit(MINHASH_P))
-        .alias(f"mh{i}")
-        for i in range(N_PERM)
-    ]
-    return hashed.groupBy("doc_id").agg(*aggs)
 
 
 def lsh_candidate_pairs(signatures: DataFrame) -> DataFrame:
@@ -419,20 +311,20 @@ def lsh_probe_pairs_kernel(hist_rows: DataFrame,
     )
 
 
-def duck_simhash_pieces(bits: int = 32) -> tuple[str, str]:
+def duck_simhash_pieces() -> tuple[str, str]:
     """DuckDB SQL fragments (per-bit sums, fingerprint fold) mirroring
     :func:`simhash` — the single source for every SimHash oracle."""
     h = "CAST(concat('0x', substr(md5(tok), 1, 8)) AS BIGINT)"
     sums = ",\n    ".join(
         f"sum(CASE WHEN ({h} & {1 << j}) != 0 THEN 1 ELSE -1 END) AS s{j}"
-        for j in range(bits)
+        for j in range(SIMHASH_BITS)
     )
-    fp = " + ".join(f"(CASE WHEN s{j} > 0 THEN {1 << j} ELSE 0 END)" for j in range(bits))
+    fp = " + ".join(
+        f"(CASE WHEN s{j} > 0 THEN {1 << j} ELSE 0 END)" for j in range(SIMHASH_BITS))
     return sums, fp
 
 
-def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-            bits: int = 32) -> DataFrame:
+def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Per-document SimHash fingerprint over whitespace tokens.
 
     Token multiset (not set: repeats weigh) hashed to 32 bits; bit j of
@@ -442,7 +334,7 @@ def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     from ..functions.text import ws_tokens
 
     # The hash is projected ONCE as a named column and the per-bit
-    # aggregates are parsed from SQL text (round 9): building bits x
+    # aggregates are parsed from SQL text (round 9): building 32 x
     # ~10 Column objects cost ~400 py4j round trips of pure driver
     # time per call; the parsed expressions are identical (codegen
     # already CSE'd the repeated hash).
@@ -452,10 +344,10 @@ def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     sums = toks.groupBy(id_col).agg(*[
         F.expr(f"sum(CASE WHEN (__h32 & {1 << j}) != 0 THEN 1 ELSE -1 END)")
         .alias(f"s{j}")
-        for j in range(bits)
+        for j in range(SIMHASH_BITS)
     ])
     fp = " + ".join(
-        f"(CASE WHEN s{j} > 0 THEN {1 << j} ELSE 0 END)" for j in range(bits))
+        f"(CASE WHEN s{j} > 0 THEN {1 << j} ELSE 0 END)" for j in range(SIMHASH_BITS))
     return sums.select(
         id_col, F.expr(fp).cast("bigint").alias("simhash"))
 

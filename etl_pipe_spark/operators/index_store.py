@@ -247,11 +247,9 @@ def _build(family: str, corpus: DataFrame, path: str, **opts) -> dict:
     return {**meta, codec.count: n}
 
 
-def _append(family: str, batch: DataFrame, path: str,
-            extra_meta: dict | None = None) -> dict:
+def _append(family: str, batch: DataFrame, path: str) -> dict:
     """Encode ONLY the batch with the frozen quantizer and commit it as
-    the next epoch — history is never read.  ``extra_meta`` rides the
-    same pointer swap as the rows it describes."""
+    the next epoch — history is never read."""
     meta = _open(path, family)
     codec = _CODECS[meta["family"]]
     quantizer = _load_quantizer(path)
@@ -259,8 +257,7 @@ def _append(family: str, batch: DataFrame, path: str,
     claim = _claim_epoch(path, epoch, tuple(codec.layouts))
     n_new = _write_epoch(codec, codec.encode(batch, quantizer, meta), path, epoch, None)
     total = meta[codec.count] + n_new
-    _commit_epoch(path, claim, {**meta, **(extra_meta or {}),
-                                "epoch": epoch, codec.count: total})
+    _commit_epoch(path, claim, {**meta, "epoch": epoch, codec.count: total})
     return {"appended": n_new, codec.count: total}
 
 
@@ -596,14 +593,11 @@ def probe_lsh_index(spark: SparkSession, path: str, batch_docs: DataFrame,
                           sharr_right=batch_rows.select("doc_id", "shingles"))
 
 
-def append_to_lsh_index(spark: SparkSession, docs_new: DataFrame, path: str,
-                        extra_meta: dict | None = None) -> dict:
+def append_to_lsh_index(spark: SparkSession, docs_new: DataFrame, path: str) -> dict:
     """Index increment: shingle/hash ONLY the new docs with the saved
     parameters.  The epoch commit makes the bands and shingles writes
-    atomic together, and ``extra_meta`` (e.g. the streaming
-    maintainer's last-applied micro-batch epoch) commits or vanishes
-    with them, the RollupMaintainer convention."""
-    return _append("lsh", docs_new, path, extra_meta)
+    atomic together."""
+    return _append("lsh", docs_new, path)
 
 
 def compact_lsh_index(spark: SparkSession, path: str) -> dict:

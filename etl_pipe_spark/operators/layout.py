@@ -1,57 +1,16 @@
-"""Physical layout operators: the Spark replacement for the reference's
-7 serving-side indexes (reference setup_target.py:104-240; SURVEY §4
-"Index-backed serving").
+"""Scan-width gate: spread a narrow scan across the compute width.
 
-On a cluster, scan pruning comes from layout, not b-trees:
-
-* date partitioning on fact tables -> partition pruning on time
-  predicates (the reference's idx_timeline_time equivalent);
-* bucketing on join/merge keys -> co-located joins without a shuffle
-  (the reference's unique-key indexes feeding ON CONFLICT);
-* sorted-within-files writes -> parquet min/max row-group skipping
-  (the partial index WHERE is_current_version analogue is simply a
-  partition column).
+Text pipelines multiply bytes after the scan (shingling, token
+explodes), so a table that fits in one input split would run its whole
+expansion serially.  :func:`spread_for_compute` adds one round-robin
+exchange only when the planned scan is narrower than the shuffle
+width; the estimate comes from file listings and parquet footers, with
+no Spark job.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-
-
-def write_date_partitioned(
-    df: DataFrame, path: str, ts_col: str, granularity: str = "month",
-    mode: str = "overwrite",
-) -> None:
-    """Date-partitioned fact write: time predicates prune directories.
-
-    Month granularity keeps partition counts sane at 100 TB (day-level
-    on a multi-year fact creates small-file pressure; AQE coalesce
-    plus month partitions is the usual budget).
-    """
-    fmt = {"day": "yyyy-MM-dd", "month": "yyyy-MM", "year": "yyyy"}[granularity]
-    (
-        df.withColumn("__dt", F.date_format(F.col(ts_col), fmt))
-        .repartition("__dt")
-        .write.mode(mode)
-        .partitionBy("__dt")
-        .parquet(path)
-    )
-
-
-def read_date_partitioned(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path).drop("__dt")
-
-
-def write_bucketed_table(
-    df: DataFrame, table_name: str, key: str, n_buckets: int = 16,
-    sort_col: str | None = None,
-) -> None:
-    """Bucketed managed table: later equi-joins/merges on ``key``
-    co-locate without a shuffle (both sides bucketed the same way)."""
-    writer = df.write.mode("overwrite").bucketBy(n_buckets, key)
-    if sort_col is not None:
-        writer = writer.sortBy(sort_col)
-    writer.saveAsTable(table_name)
+from pyspark.sql import DataFrame, SparkSession
 
 
 def _parse_byte_conf(raw: str, default: int) -> int:
@@ -129,9 +88,10 @@ def _planned_scan_width(spark: SparkSession, df: DataFrame) -> int:
 
 
 _ROW_GROUP_CACHE: dict[tuple[str, ...], int | None] = {}
+_ROW_GROUP_CAP_FILES = 64
 
 
-def _parquet_total_row_groups(files: list[str], cap_files: int = 64) -> int | None:
+def _parquet_total_row_groups(files: list[str]) -> int | None:
     """Sum of row-group counts across the scan's parquet files, or
     None when the input isn't all-LOCAL-parquet or has too many files
     to stat cheaply.
@@ -139,11 +99,12 @@ def _parquet_total_row_groups(files: list[str], cap_files: int = 64) -> int | No
     Scheme allowlist, not duck-typing: pyarrow can open s3://, gs://,
     and hdfs:// URIs when the matching filesystem package is present,
     so "rely on the open failing" would turn every spread gate into
-    up to ``cap_files`` synchronous remote footer GETs on the driver —
+    up to ``_ROW_GROUP_CAP_FILES`` synchronous remote footer GETs on the
+    driver —
     the per-file RPC storm this module's size estimator exists to
     avoid.  Results are memoized per file list (footers are immutable
     for a given listing; a rewritten table produces new file names)."""
-    if not files or len(files) > cap_files:
+    if not files or len(files) > _ROW_GROUP_CAP_FILES:
         return None
     if not all(f.endswith(".parquet") for f in files):
         return None
@@ -193,102 +154,3 @@ def spread_for_compute(
     if planned >= max(1, int(width * min_ratio)):
         return df
     return df.repartition(width)
-
-
-def compact(df: DataFrame, path: str, target_partitions: int) -> None:
-    """Small-file compaction at a FIXED file count: rewrite a dataset
-    via coalesce.  Prefer :func:`compact_to_size` — it sizes the file
-    count from the actual bytes and can preserve clustering."""
-    df.coalesce(target_partitions).write.mode("overwrite").parquet(path)
-
-
-def _listed_total_bytes(spark: SparkSession, files: list[str]) -> int:
-    """Sum file lengths from filesystem LISTINGS — one ``listStatus``
-    RPC per distinct parent directory of ``files`` (not one
-    ``getFileStatus`` per file, which would be a million RPCs against
-    an object store; not a row scan, which would read the data).
-    Zero-row files are counted: they still appear in ``inputFiles()``
-    and carry footer bytes."""
-    from collections import defaultdict
-
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    by_dir: dict[str, set[str]] = defaultdict(set)
-    for f in files:
-        d, _, name = f.rpartition("/")
-        by_dir[d].add(name)
-    total = 0
-    for d, names in by_dir.items():
-        dp = jvm.org.apache.hadoop.fs.Path(d)
-        fs = dp.getFileSystem(hconf)
-        for st in fs.listStatus(dp):
-            if st.getPath().getName() in names:
-                total += st.getLen()
-    return int(total)
-
-
-def compact_to_size(
-    spark: SparkSession,
-    src_path: str,
-    dst_path: str,
-    target_bytes: int = 128 << 20,
-    sort_cols: list[str] | None = None,
-    partition_cols: list[str] | None = None,
-) -> dict:
-    """Size-targeted small-file compaction — the OPTIMIZE maintenance
-    job every long-lived incremental sink needs (each micro-batch
-    leaves a few small files; a year of 30 s cycles leaves a million).
-
-    * The output file count comes from the dataset's ACTUAL bytes,
-      summed from a real filesystem listing (one ``listStatus`` per
-      source directory over the scan's ``inputFiles()`` — metadata
-      RPCs only, the data is NOT read), so files land near
-      ``target_bytes`` regardless of how skewed the input files are.
-      An earlier revision summed the per-row ``_metadata.file_size``
-      hidden column, which silently cost a full scan of every row
-      plus a shuffle — exactly wrong for a maintenance job scheduled
-      against 100 TB sinks.
-    * ``sort_cols`` preserves CLUSTERING: plain ``coalesce`` glues
-      arbitrary input files together, destroying the footer min/max
-      locality a z-ordered or sorted write paid for — with
-      ``sort_cols`` the rewrite range-partitions and re-sorts on the
-      same keys, so pruning survives compaction (pinned against real
-      footers in tests/test_layout_ops.py).
-    * ``partition_cols`` preserves HIVE PARTITIONING: reading a
-      partitioned tree promotes the directory columns to data
-      columns, and an unpartitioned rewrite would flatten them —
-      destroying directory pruning.  Pass the partition columns and
-      the rewrite re-emits the same tree (``target_bytes`` then
-      applies per partition on average, not per file).
-    * Never in-place — ENFORCED: readers of ``src_path`` keep a
-      consistent view and a mid-job crash cannot destroy the only
-      copy; the caller swaps paths (or a sink snapshot pointer)
-      after the rewrite.
-
-    Returns {files_before, files_after, total_bytes} for the
-    maintenance log (file counts via driver-side listings, no extra
-    job).
-    """
-    import os as _os
-
-    if _os.path.realpath(src_path) == _os.path.realpath(dst_path):
-        raise ValueError(
-            "compact_to_size is never-in-place: src and dst resolve to "
-            f"the same location ({src_path!r})")
-    src = spark.read.parquet(src_path)
-    in_files = src.inputFiles()
-    files_before = len(in_files)
-    total_bytes = _listed_total_bytes(spark, in_files)
-    n_out = max(1, -(-total_bytes // target_bytes))
-    if sort_cols:
-        out = src.repartitionByRange(n_out, *sort_cols) \
-                 .sortWithinPartitions(*sort_cols)
-    else:
-        out = src.repartition(n_out)
-    writer = out.write.mode("overwrite")
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(dst_path)
-    files_after = len(spark.read.parquet(dst_path).inputFiles())
-    return {"files_before": files_before, "files_after": files_after,
-            "total_bytes": total_bytes}

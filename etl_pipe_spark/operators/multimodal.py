@@ -6,12 +6,11 @@ extraction runs as Arrow-batched ``mapInPandas`` so each task
 processes whole record batches without JVM<->Python row churn, and
 partitioning/pushdown still work on the metadata columns.
 
-The actual codec step is STUBBED (no PIL/ffmpeg in this environment):
-``decode_image``/``decode_audio`` raise NotImplementedError behind an
-import-try, and ``extract_features`` computes deterministic
-byte-level features (length, md5, magic sniff) so the Spark-side
-plumbing — schema, batch iteration, binary Arrow transfer — is real
-and oracle-testable.
+The actual codec step is STUBBED (no PIL/ffmpeg in this build):
+``extract_features`` computes deterministic byte-level features
+(length, md5, magic sniff) and reports ``DECODE_STATUS_STUB``, so the
+Spark-side plumbing — schema, batch iteration, binary Arrow transfer —
+is real and oracle-testable.
 """
 
 from __future__ import annotations
@@ -51,18 +50,9 @@ _MAGIC = [
 # This build ships no media codecs (PIL/soundfile/ffmpeg absent), so the
 # decode step is a documented constant stub: deterministic, environment-
 # independent (the oracle pins the literal), and cheap (no per-row import
-# probing).  Wiring a real codec replaces decode_payload below.
+# probing).  A real deployment dispatches on the sniffed format to a
+# codec and routes poison-pill media to the status column.
 DECODE_STATUS_STUB = "stub:no-codec"
-
-
-def decode_payload(payload: bytes):
-    """Codec entry point — intentionally unimplemented in this build.
-
-    A real deployment dispatches on the sniffed format to PIL /
-    soundfile / ffmpeg here; poison-pill media must be routed to a
-    status column, never allowed to kill a 100 TB job.
-    """
-    raise NotImplementedError("no media codecs in this build; see DECODE_STATUS_STUB")
 
 
 def _sniff(payload: bytes) -> str:
@@ -116,14 +106,13 @@ FRAME_STRIDE = 2    # keep every 2nd frame
 
 
 def sample_frames(docs: DataFrame, id_col: str = "doc_id",
-                  text_col: str = "text", frame_chars: int = FRAME_CHARS,
-                  stride: int = FRAME_STRIDE) -> DataFrame:
+                  text_col: str = "text") -> DataFrame:
     """Frame sampling (the 1 -> N multimodal shape), Arrow-batched.
 
     Real video frame-sampling decodes a container and keeps every
     k-th frame; with no codecs in this build the deterministic
-    stand-in treats each ``frame_chars``-character window of the
-    payload as one "frame" and keeps every ``stride``-th window.  The
+    stand-in treats each ``FRAME_CHARS``-character window of the
+    payload as one "frame" and keeps every ``FRAME_STRIDE``-th window.  The
     plumbing is the real thing: one record fans out to a variable
     number of frame rows inside a ``mapInPandas`` batch (never a
     per-row JVM<->Python call), each carrying the frame's digest —
@@ -138,9 +127,9 @@ def sample_frames(docs: DataFrame, id_col: str = "doc_id",
             for did, txt in zip(pdf[id_col], pdf[text_col]):
                 if txt is None:  # poison pill: contribute no frames
                     continue
-                n_frames = -(-len(txt) // frame_chars)  # ceil
-                for fi in range(0, n_frames, stride):
-                    seg = txt[fi * frame_chars:(fi + 1) * frame_chars]
+                n_frames = -(-len(txt) // FRAME_CHARS)  # ceil
+                for fi in range(0, n_frames, FRAME_STRIDE):
+                    seg = txt[fi * FRAME_CHARS:(fi + 1) * FRAME_CHARS]
                     ids.append(did)
                     idxs.append(fi)
                     lens.append(len(seg))
@@ -153,47 +142,3 @@ def sample_frames(docs: DataFrame, id_col: str = "doc_id",
             })
 
     return docs.select(id_col, text_col).mapInPandas(op, FRAME_SCHEMA)
-
-
-RESIZE_SCHEMA = (
-    "doc_id long, thumb binary, n_thumb_bytes long, resize_status string"
-)
-THUMB_BYTES = 64  # stand-in thumbnail byte budget
-
-
-def resize_payloads(binary_df: DataFrame, id_col: str = "doc_id",
-                    payload_col: str = "payload",
-                    thumb_bytes: int = THUMB_BYTES) -> DataFrame:
-    """Resize / thumbnail (the 1 -> 1 binary-to-binary shape).
-
-    A real resize decodes, scales, and re-encodes; the stand-in emits
-    a deterministic fixed-budget digest-prefixed truncation so the
-    binary-out plumbing (bytes column -> bytes column through Arrow,
-    status column for poison pills) is real and testable.  Poison
-    media must land in ``resize_status``, never kill the job.
-    """
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            # per-row poison-pill routing: a null/undecodable payload
-            # yields a NULL thumb and an error status, never a raised
-            # exception that would kill the whole job
-            thumbs, sizes, statuses = [], [], []
-            for b in pdf[payload_col]:
-                if b is None:
-                    thumbs.append(None)
-                    sizes.append(0)
-                    statuses.append("error:null-payload")
-                else:
-                    t = hashlib.md5(b).digest() + bytes(b[:thumb_bytes])
-                    thumbs.append(t)
-                    sizes.append(len(t))
-                    statuses.append(DECODE_STATUS_STUB)
-            yield pd.DataFrame({
-                "doc_id": pdf[id_col],
-                "thumb": pd.Series(thumbs, dtype="object"),
-                "n_thumb_bytes": pd.Series(sizes, dtype="int64"),
-                "resize_status": pd.Series(statuses, dtype="object"),
-            })
-
-    return binary_df.mapInPandas(op, RESIZE_SCHEMA)

@@ -200,6 +200,9 @@ def pq_encode_assign(
     return emb.select(id_col, vec_col).mapInArrow(op, _ENCODE_ASSIGN_SCHEMA)
 
 
+_MAX_QUERY_BYTES = 64 << 20
+
+
 def _query_chunks(q_rows, codebooks: np.ndarray, max_query_bytes: int):
     """Yield (qids, lut) per driver-bounded query chunk — the shared
     byte-budget scaffold of every ADC scorer: if the collected query
@@ -252,7 +255,7 @@ def pq_adc_topk(
     id_col: str = "vec_id",
     vec_col: str = "v",
     query_id_col: str = "query_id",
-    max_query_bytes: int = 64 << 20,
+    max_query_bytes: int = _MAX_QUERY_BYTES,
 ) -> DataFrame:
     """Asymmetric-distance top-k over PQ codes: (query_id,
     neighbor_id, rnk), rnk 1..k ascending by approximate squared L2
@@ -327,7 +330,6 @@ def ivfpq_adc_topk(
     nprobe: int = 2,
     query_id_col: str = "query_id",
     vec_col: str = "v",
-    max_query_bytes: int = 64 << 20,
 ) -> DataFrame:
     """IVF + ADC combined — the full IVFADC search (Jegou et al. 2011,
     the FAISS production design): each query scores PQ codes ONLY in
@@ -342,7 +344,7 @@ def ivfpq_adc_topk(
     lookups, and only tie-stable per-(query, cell) top-k rows leave
     the group, so the shuffle carries cells x queries-probing x k
     rows.  The query set (ids, vectors, probed cells) is driver-
-    collected under the same mechanical ``max_query_bytes`` budget as
+    collected under the same mechanical ``_MAX_QUERY_BYTES`` budget as
     pq_adc_topk / ann_probe_topk_blas: above the budget, queries chunk
     into independent passes.
 
@@ -372,7 +374,7 @@ def ivfpq_adc_topk(
         probes.setdefault(int(r["vec_id"]), []).append(int(r["cent_id"]))
 
     cand_parts = []
-    for qids, lut in _query_chunks(q_rows, codebooks, max_query_bytes):
+    for qids, lut in _query_chunks(q_rows, codebooks, _MAX_QUERY_BYTES):
         cell_to_q: dict[int, list[int]] = {}
         for qi, qid in enumerate(qids):
             for cid in probes.get(int(qid), ()):

@@ -21,30 +21,12 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from ..functions.vectors import as_double, dot
 
-N_PLANES = 8  # default; see srp_planes_for_corpus for the sizing rule
+N_PLANES = 8  # 2^8 buckets; more planes cut occupancy and recall
 DIM = 64
 _WEIGHT_MOD = 2001  # weights in [-1000, 1000]
 
 
-def srp_planes_for_corpus(n_docs: int, target_bucket: int = 1000) -> int:
-    """Plane count sized to the corpus: the occupancy/recall dial.
-
-    2^planes buckets, so mean occupancy is N / 2^planes; pick
-    planes ~= ceil(log2(N / target_bucket)) to hold mean bucket size at
-    ``target_bucket`` as the corpus grows (fixed planes => occupancy,
-    and thus pair-enumeration cost, grows linearly with N).  More
-    planes trade recall for cost — per plane, P[same bit] =
-    1 - angle/pi — so recall lost to extra planes is recovered by
-    OR-ing multiple independent bands (run srp_buckets with disjoint
-    plane-index offsets and union the candidate pairs), exactly like
-    MinHash banding.
-    """
-    ratio = max(1.0, n_docs / max(target_bucket, 1))
-    planes = max(1, math.ceil(math.log2(ratio)))
-    return max(N_PLANES, planes)
-
-
-def ivf_centroids_for_corpus(n_vecs: int, floor: int = 32) -> int:
+def ivf_centroids_for_corpus(n_vecs: int) -> int:
     """Centroid count sized to the corpus: k ~ ceil(sqrt(N)).
 
     Balances the two linear terms of IVF cost: assignment is N x k,
@@ -54,10 +36,10 @@ def ivf_centroids_for_corpus(n_vecs: int, floor: int = 32) -> int:
     250k-vector sweep measured 59x runtime at 50x docs for the pinned
     32-cell form vs near-linear when k follows this rule
     (docs/BENCH_COMPARE.md).  sqrt(N) makes both terms N^1.5/bounded —
-    the standard IVF sizing in the ANN literature.  ``floor`` keeps
-    tiny corpora at the oracle-pinned default.
+    the standard IVF sizing in the ANN literature.  The floor of 32
+    keeps tiny corpora at the oracle-pinned default.
     """
-    return max(floor, math.ceil(math.sqrt(max(1, n_vecs))))
+    return max(32, math.ceil(math.sqrt(max(1, n_vecs))))
 
 
 def plane_weight(i: int, d: int) -> int:

@@ -11,7 +11,7 @@ predicates on EITHER dimension prune (the technique behind Delta's
 clustering — public literature: Morton 1966; Orenstein & Merrett
 1984).
 
-At 100 TB the write path is::
+At 100 TB the write path would be::
 
     df.withColumn("z", morton32(gx, gy))
       .repartitionByRange(N_FILES, "z")
@@ -63,67 +63,6 @@ def morton32(x: Column, y: Column) -> Column:
     """Interleave two 16-bit grid coordinates into one 32-bit Morton
     code: x on even bits, y on odd bits."""
     return spread16(x).bitwiseOR(F.shiftleft(spread16(y), 1))
-
-
-def grid_scale(c: Column, lo: Column, hi: Column) -> Column:
-    """Scale an integer column into the 16-bit Morton grid:
-    floor division ((c - lo) * 65535) / max(hi - lo, 1).  floor(a/b)
-    equals integer DIV here because c >= lo keeps the numerator
-    non-negative; staying in Column arithmetic (not F.expr text) keeps
-    the helper composable with arbitrary input expressions.  The
-    double division is exact while (hi - lo) * 65535 < 2^53 (~1.4e11
-    key range) — far beyond any grid dimension worth z-ordering; the
-    registered audit query uses literal-SQL DIV and is unaffected."""
-    return F.floor(
-        (c - lo) * 65535 / F.greatest(hi - lo, F.lit(1))
-    ).cast("bigint")
-
-
-def write_zordered(
-    df,
-    path: str,
-    x_col: str,
-    y_col: str,
-    n_files: int = 16,
-    mode: str = "overwrite",
-) -> None:
-    """The production Z-order WRITE: range-partition on the Morton
-    code of two integer dimension columns, sort within files, write
-    parquet.  Afterwards every file's footer min/max stats form a
-    tight bounding BOX in (x, y) space, so ANY engine's row-group /
-    file pruning skips files for predicates on EITHER dimension —
-    verified against real footers in tests/test_layout_ops.py.
-
-    One exact min/max aggregate (broadcast back), one range shuffle —
-    the same cost as any global sort; the Morton column itself is
-    dropped before writing.
-    """
-    mm = df.agg(
-        F.min(x_col).cast("bigint").alias("__xlo"),
-        F.max(x_col).cast("bigint").alias("__xhi"),
-        F.min(y_col).cast("bigint").alias("__ylo"),
-        F.max(y_col).cast("bigint").alias("__yhi"),
-    )
-    with_z = (
-        df.crossJoin(F.broadcast(mm))
-        .withColumn(
-            "__z",
-            morton32(
-                grid_scale(F.col(x_col).cast("bigint"),
-                           F.col("__xlo"), F.col("__xhi")),
-                grid_scale(F.col(y_col).cast("bigint"),
-                           F.col("__ylo"), F.col("__yhi")),
-            ),
-        )
-        .drop("__xlo", "__xhi", "__ylo", "__yhi")
-    )
-    (
-        with_z.repartitionByRange(n_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode(mode)
-        .parquet(path)
-    )
 
 
 def spread16_sql(expr: str, prefix: str) -> str:

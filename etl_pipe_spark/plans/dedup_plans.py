@@ -350,8 +350,8 @@ def lsh_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
 # SimHash fingerprints.
 # --------------------------------------------------------------------------
 
-def _duck_simhash_sql(bits: int = 32) -> str:
-    sums, fp = DD.duck_simhash_pieces(bits)
+def _duck_simhash_sql() -> str:
+    sums, fp = DD.duck_simhash_pieces()
     return f"""
 WITH toks AS (
   SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\\s+')) AS tok
@@ -548,9 +548,7 @@ def _ann_from_assignment(emb: DataFrame, ranked: DataFrame,
     return scored.withColumn("rnk", F.row_number().over(w_rank)).filter(F.col("rnk") <= 5)
 
 
-def ann_ivf_scaled(spark: SparkSession, sf_dir: str, nprobe: int = 2,
-                   n_centroids: int | None = None,
-                   emb: DataFrame | None = None) -> DataFrame:
+def ann_ivf_scaled(spark: SparkSession, sf_dir: str, nprobe: int = 2) -> DataFrame:
     """The production ANN path: numpy-matmul assignment (Arrow batches,
     operators/ann.py) + sqrt(N)-sized centroids + per-cell BLAS probe
     scoring.  The expression-fold quantizer costs N x k x dim scalar
@@ -567,10 +565,8 @@ def ann_ivf_scaled(spark: SparkSession, sf_dir: str, nprobe: int = 2,
         ann_probe_topk_blas, centroid_matrix, ivf_assign_vectorized)
     from ..operators.similarity import ivf_centroids_for_corpus
 
-    if emb is None:
-        emb = _emb_with_norms(spark, sf_dir)
-    if n_centroids is None:
-        n_centroids = ivf_centroids_for_corpus(emb.count())
+    emb = _emb_with_norms(spark, sf_dir)
+    n_centroids = ivf_centroids_for_corpus(emb.count())
     cent_ids, cent_mat = centroid_matrix(emb, n_centroids)
     ranked = ivf_assign_vectorized(emb, cent_ids, cent_mat, nprobe=nprobe)
     return ann_probe_topk_blas(emb, ranked, nprobe=nprobe)
@@ -701,7 +697,10 @@ def similarity_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ANN scale path 2: signed-random-projection LSH buckets.
 # --------------------------------------------------------------------------
 
-def srp_oracle(n_planes: int = SIM.N_PLANES, min_cosine: float = 0.3) -> str:
+_SRP_MIN_COSINE = 0.3
+
+
+def srp_oracle(n_planes: int = SIM.N_PLANES) -> str:
     """DuckDB twin of :func:`srp_pairs`, any plane count."""
     return f"""
 WITH {SIM.duck_srp_planes(n_planes)},
@@ -727,12 +726,11 @@ pairs AS (
   JOIN e ea ON ea.vec_id = a.vec_id
   JOIN e eb ON eb.vec_id = b.vec_id
 )
-SELECT left_id, right_id, srp_bucket, cosine FROM pairs WHERE cosine >= {min_cosine}
+SELECT left_id, right_id, srp_bucket, cosine FROM pairs WHERE cosine >= {_SRP_MIN_COSINE}
 """
 
 
-def srp_pairs(emb: DataFrame, n_planes: int = SIM.N_PLANES,
-              min_cosine: float = 0.3) -> DataFrame:
+def srp_pairs(emb: DataFrame, n_planes: int = SIM.N_PLANES) -> DataFrame:
     """Same-bucket SRP pairs scored by exact cosine, any plane count."""
     b = srp_buckets(emb, n_planes=n_planes).select("vec_id", "v", "srp_bucket")
     left = b.alias("a")
@@ -750,7 +748,7 @@ def srp_pairs(emb: DataFrame, n_planes: int = SIM.N_PLANES,
             F.col("a.srp_bucket").alias("srp_bucket"),
             cos.alias("cosine"),
         )
-        .filter(F.col("cosine") >= min_cosine)
+        .filter(F.col("cosine") >= _SRP_MIN_COSINE)
     )
 
 
@@ -762,10 +760,10 @@ def similarity_srp_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection over the data); only same-bucket pairs are scored, so
     the pair count tracks bucket occupancy instead of N^2.  Random
     hyperplanes preserve cosine locality: P[same bit] = 1 - angle/pi
-    per plane.  Plane count is the occupancy/recall dial — size it with
-    operators.similarity.srp_planes_for_corpus (planes ~
-    log2(N / target_bucket)) so mean occupancy stays flat as the corpus
-    grows; this query pins the 8-plane default for oracle parity.
+    per plane.  Plane count is the occupancy/recall dial: mean
+    occupancy is N / 2^planes, so planes ~ log2(N / target_bucket)
+    holds it flat as the corpus grows; this query pins the 8-plane
+    default for oracle parity.
     """
     emb = load_table(spark, sf_dir, "embeddings")
     return srp_pairs(emb, n_planes=SIM.N_PLANES)
@@ -990,8 +988,7 @@ def ann_kmeans_recall_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def semantic_dedup_scaled(spark: SparkSession, sf_dir: str,
-                          n_centroids: int | None = None,
-                          emb: DataFrame | None = None) -> DataFrame:
+                          n_centroids: int | None = None) -> DataFrame:
     """Production semantic dedup: numpy-matmul assignment + sqrt(N)
     cells (see ann_ivf_scaled — same two dials, same measured
     rationale) + blocked per-cell matmul scoring (semantic_dups_blas:
@@ -1002,8 +999,7 @@ def semantic_dedup_scaled(spark: SparkSession, sf_dir: str,
         centroid_matrix, ivf_assign_vectorized, semantic_dups_blas)
     from ..operators.similarity import ivf_centroids_for_corpus
 
-    if emb is None:
-        emb = _emb_with_norms(spark, sf_dir)
+    emb = _emb_with_norms(spark, sf_dir)
     if n_centroids is None:
         n_centroids = ivf_centroids_for_corpus(emb.count())
     cent_ids, cent_mat = centroid_matrix(emb, n_centroids)

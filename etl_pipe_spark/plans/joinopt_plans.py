@@ -45,8 +45,7 @@ from ..sources.catalog import load_table
 from .catalog import register
 
 _PRIORITY = "1-URGENT"
-_BLOOM_M = 1 << 15   # ~10 bits/key for the sf0.01 urgent-order keys;
-                     # production sizes via bloom_bits_for(n_keys)
+_BLOOM_M = 1 << 15   # ~10 bits/key for the sf0.01 urgent-order keys
 
 
 _BLOOM_JOIN_ORACLE = f"""

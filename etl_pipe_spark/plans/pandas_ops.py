@@ -1,8 +1,7 @@
 """Grouped-map Pandas operator (applyInPandas) with exact parity.
 
-Completes the UDF surface demonstration: mapInPandas (multimodal),
-applyInPandasWithState (streaming/stateful), and here the grouped-map
-shape — per-group normalization, the canonical "needs whole-group
+Completes the UDF surface demonstration: mapInPandas (multimodal)
+and here the grouped-map shape — per-group normalization, the canonical "needs whole-group
 context" operator.
 
 Parity trick: all statistics derive from *integer* sums (n_chars is

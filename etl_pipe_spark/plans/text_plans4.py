@@ -336,8 +336,7 @@ ORDER BY query_id, rnk
 
 
 @register("bm25_retrieval", oracle=_BM25_ORACLE)
-def bm25_retrieval(spark: SparkSession, sf_dir: str,
-                   query_set=None) -> DataFrame:
+def bm25_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Okapi BM25 top-k retrieval for a fixed query set, hash-checked
     end to end (Robertson & Zaragoza 2009; the Lucene-style
     +1-inside-the-log idf, so scores stay positive).
@@ -365,11 +364,10 @@ def bm25_retrieval(spark: SparkSession, sf_dir: str,
     stats (N, avgdl) are a 1-row broadcast crossJoin (the repo-wide
     scalar pattern) computed from a narrow no-shuffle scan.
     """
-    return scope.checkpoint(_bm25_topk(spark, sf_dir, query_set))
+    return scope.checkpoint(_bm25_topk(spark, sf_dir))
 
 
-def _bm25_topk(spark: SparkSession, sf_dir: str,
-               query_set=None) -> DataFrame:
+def _bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The lazy ranking behind :func:`bm25_retrieval`."""
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.split("text", " ").alias("w")
@@ -379,12 +377,9 @@ def _bm25_topk(spark: SparkSession, sf_dir: str,
     stats = doclen.agg(
         F.count(F.lit(1)).cast("bigint").alias("__n"),
         (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("__avgdl"))
-    # query_set overrides the pinned oracle queries for scale sweeps
-    # over corpora with a different vocabulary (tools/dedup_scaling);
-    # the registered/oracle-checked form always uses the module set
     qterms = local_frame(
         docs.sparkSession,
-        [(qid, t) for qid, ts in (query_set or _BM25_QUERIES) for t in ts],
+        [(qid, t) for qid, ts in _BM25_QUERIES for t in ts],
         "query_id int, term string")
     tok = docs.select("doc_id", F.explode("w").alias("term"))
     matched = scope.cache(

@@ -65,9 +65,8 @@ def read_jsonl(spark: SparkSession, path: str,
     )
 
 
-def read_csv(spark: SparkSession, path: str, schema: T.StructType,
-             header: bool = True) -> DataFrame:
-    """CSV with an explicit schema and corrupt-record capture.
+def read_csv(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
+    """CSV with a header line, an explicit schema and corrupt-record capture.
 
     For untrusted drops, pass an ALL-STRING schema and run
     ``coerce_columns`` afterwards: the CSV parser then only fails on
@@ -78,7 +77,7 @@ def read_csv(spark: SparkSession, path: str, schema: T.StructType,
     """
     return (
         spark.read.schema(_with_corrupt(schema))
-        .option("header", "true" if header else "false")
+        .option("header", "true")
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", CORRUPT_COL)
         .csv(path)

@@ -54,11 +54,10 @@ def event_source_key(event_id_col=None):
 
 
 class IncrementalPipeline:
-    def __init__(self, spark: SparkSession, source_sf_dir: str, target_dir: str,
-                 overlap_sec: int = 90):
+    def __init__(self, spark: SparkSession, source_sf_dir: str, target_dir: str):
         self.spark = spark
         self.source_sf_dir = source_sf_dir
-        self.store = WatermarkStore(spark, f"{target_dir}/etl_watermark", overlap_sec)
+        self.store = WatermarkStore(spark, f"{target_dir}/etl_watermark")
         self.sinks = {
             "dim_users": ParquetMergeSink(spark, f"{target_dir}/dim_users", _DIM_USERS_DDL),
             "fact_event_log": ParquetMergeSink(spark, f"{target_dir}/fact_event_log",

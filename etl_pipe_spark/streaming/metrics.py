@@ -1,23 +1,19 @@
 """Log/metrics sink (SURVEY §2.1 S10; reference scheduler.py:21-28).
 
 The reference logs per-cycle, per-flow row counts through a logging
-sink.  Spark-first, that splits into two native mechanisms:
-
-* ``EtlMetricsListener`` — a ``StreamingQueryListener`` attached to the
-  session: every structured-streaming micro-batch reports (query name,
-  batch id, input rows, duration) with zero extra jobs, the streaming
-  twin of the reference's per-cycle log lines.
-* ``FlowObserver`` — ``Observation``-based per-flow output row counts
-  for the batch flows (clearsight and the incremental pipeline): the
-  count rides the flow's own action, so metrics never add a pass over
-  the data (collect-free, scale-indifferent).
+sink.  Spark-first, ``EtlMetricsListener`` is a
+``StreamingQueryListener`` attached to the session: every
+structured-streaming micro-batch reports (query name, batch id, input
+rows, duration) with zero extra jobs, the streaming twin of the
+reference's per-cycle log lines.  The watermark cycle reports its
+per-flow counts itself (``IncrementalPipeline.run_cycle``).
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQueryListener
 
 
@@ -74,55 +70,3 @@ def attach_metrics_listener(
     listener = EtlMetricsListener(log)
     spark.streams.addListener(listener)
     return listener
-
-
-class FlowObserver:
-    """Per-flow observed output row counts for batch flows.
-
-    ``wrap(name, df)`` plants an ``Observation`` at the flow's output;
-    after the flow's own action ran (sink write, collect), ``counts()``
-    returns {flow: rows_out} and ``emit()`` sends the reference-shaped
-    log lines.  Reading an Observation blocks until its job finishes,
-    so call ``counts()`` only after the cycle's actions.
-    """
-
-    def __init__(self, log: Callable[[str], None] | None = None):
-        self._obs: dict[str, Observation] = {}
-        self._log = log if log is not None else (lambda msg: print(msg))
-
-    def wrap(self, name: str, df: DataFrame) -> DataFrame:
-        obs = Observation(f"flow_{name}")
-        self._obs[name] = obs
-        return df.observe(obs, F.count(F.lit(1)).alias("rows_out"))
-
-    def counts(self) -> dict[str, int]:
-        return {name: obs.get["rows_out"] for name, obs in self._obs.items()}
-
-    def emit(self) -> dict[str, int]:
-        counts = self.counts()
-        for name, n in counts.items():
-            self._log(f"[etl_pipe_spark] flow={name} rows_out={n}")
-        return counts
-
-
-def observe_clearsight_cycle(
-    src: dict[str, DataFrame], since, log: Callable[[str], None] | None = None
-) -> tuple[dict[str, DataFrame], FlowObserver]:
-    """All six ClearSight flows with output metrics attached (S10).
-
-    Returns ({flow_name: observed DataFrame}, observer); run each flow
-    through its sink, then ``observer.emit()`` logs per-flow counts —
-    the exact surface of the reference's per-cycle log sink.
-    """
-    from ..flows import clearsight as CS
-
-    flows = {
-        "scenarios": CS.scenarios_flow(src, since),
-        "node_data": CS.node_data_flow(src, since),
-        "runs": CS.runs_flow(src, since),
-        "node_calc": CS.node_calc_flow(src, since),
-        "event_data": CS.event_data_flow(src, since),
-        "timeline": CS.timeline_flow(src, since),
-    }
-    observer = FlowObserver(log)
-    return {name: observer.wrap(name, df) for name, df in flows.items()}, observer

@@ -1,68 +1,18 @@
-"""Custom stateful streaming operator via applyInPandasWithState.
+"""Stateful streaming deduplication with bounded state.
 
 The reference keeps NO cross-batch memory state (duplicates are
-absorbed by sink keys — SURVEY §2.10 ST3); this is the idiomatic-Spark
-upgrade for operators that genuinely need running state: per-key
-accumulators that survive micro-batches through the state store,
-checkpoint-recoverable, emitting an update row per key per batch.
+absorbed by sink keys — SURVEY §2.10 ST3); the idiomatic-Spark upgrade
+drops duplicates inside the stream, holding each key in the state
+store only while the watermark's lateness window is open.
 """
 
 from __future__ import annotations
 
-import sys
-from collections.abc import Iterator
-from typing import Any
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-# Workers unpickle the state function by reference unless the module is
-# registered for by-value pickling (same seam as operators/multimodal.py).
-try:
-    from pyspark import cloudpickle as _cp
-except ImportError:  # pragma: no cover
-    import cloudpickle as _cp
-_cp.register_pickle_by_value(sys.modules[__name__])
-
-OUTPUT_SCHEMA = "user_id bigint, n_events bigint, total_value double"
-STATE_SCHEMA = "n bigint, total double"
-
-
-def _update_user_totals(
-    key: tuple[Any, ...],
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    (user_id,) = key
-    n, total = state.get if state.exists else (0, 0.0)
-    for pdf in pdfs:
-        n += len(pdf)
-        total += float(pdf["value"].sum())
-    state.update((n, total))
-    yield pd.DataFrame({"user_id": [user_id], "n_events": [n], "total_value": [total]})
-
-
-def running_user_totals(stream: DataFrame) -> DataFrame:
-    """Running per-user event count + value total across micro-batches.
-
-    Arrow-batched per-group state transitions; the state store holds
-    one (n, total) tuple per user, recovered from the checkpoint on
-    restart.
-    """
-    return stream.groupBy("user_id").applyInPandasWithState(
-        _update_user_totals,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
 
 
 def dedup_within_watermark(stream: DataFrame, keys: list[str],
-                           ts_col: str = "ts",
-                           lateness: str = "90 seconds") -> DataFrame:
+                           ts_col: str = "ts") -> DataFrame:
     """Streaming deduplication with BOUNDED state:
     ``dropDuplicatesWithinWatermark`` keeps each key only until the
     watermark passes its first-seen event time, so state size tracks
@@ -79,6 +29,6 @@ def dedup_within_watermark(stream: DataFrame, keys: list[str],
     (reference extract.py:27-30).
     """
     return (
-        stream.withWatermark(ts_col, lateness)
+        stream.withWatermark(ts_col, "90 seconds")
         .dropDuplicatesWithinWatermark(keys)
     )

@@ -27,8 +27,7 @@ from ..operators import scope
 from ..operators.merge import ParquetMergeSink, insert_if_absent
 
 
-def read_events_stream(spark: SparkSession, sf_dir: str,
-                       max_files_per_trigger: int | None = None) -> DataFrame:
+def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming scan of the events table with the same ts/ts_ns
     normalization the batch loader applies (sources/catalog.py).
 
@@ -40,8 +39,6 @@ def read_events_stream(spark: SparkSession, sf_dir: str,
     from ..sources.catalog import _events_normalize, file_schema
 
     reader = spark.readStream.schema(file_schema(spark, sf_dir, "events"))
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     # the file source derives basePath from the non-glob path prefix and
     # requires it to be a directory; the catalog stores one parquet file
     # per table, so glob the filename to keep basePath at the sf dir
@@ -51,12 +48,12 @@ def read_events_stream(spark: SparkSession, sf_dir: str,
     return _events_normalize(raw).withColumn("ts", F.col("ts").cast("timestamp"))
 
 
-def windowed_counts(stream: DataFrame, window: str = "1 hour",
-                    lateness: str = "90 seconds") -> DataFrame:
-    """Tumbling-window counts with the reference's 90 s allowed lateness."""
+def windowed_counts(stream: DataFrame) -> DataFrame:
+    """Hourly tumbling-window counts with the reference's 90 s allowed
+    lateness."""
     return (
-        stream.withWatermark("ts", lateness)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
+        stream.withWatermark("ts", "90 seconds")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             F.col("w.start").cast("timestamp_ntz").alias("window_start"),
@@ -67,31 +64,21 @@ def windowed_counts(stream: DataFrame, window: str = "1 hour",
 
 
 def run_stream_to_table(spark: SparkSession, agg: DataFrame,
-                        output_mode: str = "complete",
-                        metrics: bool = False) -> DataFrame:
+                        output_mode: str = "complete") -> DataFrame:
     """Drain a finite stream into an in-memory table and return it.
 
     ``AvailableNow`` processes everything then stops — the batch-like
     execution mode used by tests and the driver's correctness harness.
-    ``metrics=True`` attaches the S10 ``EtlMetricsListener`` for the
-    run, logging per-micro-batch input rows (streaming/metrics.py).
     """
-    from .metrics import attach_metrics_listener
-
-    listener = attach_metrics_listener(spark) if metrics else None
     name = f"etl_stream_{uuid.uuid4().hex[:8]}"
-    try:
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if listener is not None:
-            listener.detach(spark)
+    q = (
+        agg.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
     return spark.table(name)
 
 

@@ -210,31 +210,3 @@ def test_merge_sink_interleaved_writers_lose_no_update(spark, tmp_path):
     with pytest.raises(commit.CommitConflict):
         sink.write(a_read.unionByName(row("ka")), read_version=a_version)
     assert _keys(sink) == ["k0", "kb"]
-
-
-def test_rollup_maintainer_carries_its_read_version(spark, tmp_path):
-    """The read-modify-write callers pass the version they read: another
-    writer committing between the maintainer's read and its write makes
-    the maintainer raise instead of overwriting that commit."""
-    from etl_pipe_spark.operators.merge import ParquetMergeSink
-    from etl_pipe_spark.streaming.rollup import RollupMaintainer
-
-    path = str(tmp_path / "t")
-    schema = "k string, n bigint"
-    sink = ParquetMergeSink(spark, path, schema)
-    sink.write(spark.createDataFrame([("k0", 1)], schema))
-    real_read = sink.read
-
-    def read_then_other_writer_commits(*args, **kwargs):
-        out = real_read(*args, **kwargs)
-        other = ParquetMergeSink(spark, path, schema)
-        other.write(other.read().unionByName(spark.createDataFrame([("kb", 1)], schema)))
-        return out
-
-    sink.read = read_then_other_writer_commits
-    m = RollupMaintainer(sink, ["k"], {"n": "sum"})
-    with pytest.raises(commit.CommitConflict):
-        m.apply_batch(spark.createDataFrame([("ka", 1)], schema), 0)
-    del sink.read
-    assert _keys(sink) == ["k0", "kb"]
-    assert m.last_epoch() == -1

@@ -102,14 +102,10 @@ def test_unigram_quality_scores_all_docs_positive(spark, sf_dir):
 
 
 def test_bloom_no_false_negatives_and_low_fp(spark):
-    from etl_pipe_spark.operators.bloom import (
-        bloom_bits_for,
-        bloom_build,
-        bloom_probe,
-    )
+    from etl_pipe_spark.operators.bloom import bloom_build, bloom_probe
 
     members = spark.range(0, 2000).selectExpr("concat('key-', id) AS k")
-    m = bloom_bits_for(2000)
+    m = 1 << 15  # next power of two >= 10 bits per key
     words = bloom_build(members, "k", m)
     # the filter is bounded by construction: <= m/64 words
     assert words.count() <= m // 64

@@ -1,12 +1,13 @@
-"""Hot-shingle document-frequency cap: candidate-count pinning.
+"""Hot-shingle document-frequency cap on the production Jaccard path.
 
 A single corpus-wide stop phrase makes every doc pair a candidate
 (O(N^2) through the inverted index); the df cap must cut exactly those
 pairs while leaving genuine near-dup pairs — and their exact Jaccard
-values — untouched.
+values — untouched.  ``jaccard_pairs_capped`` is checked against a
+pure-Python set oracle over the same shingle sets.
 """
 
-from pyspark.sql import functions as F
+from itertools import combinations
 
 from etl_pipe_spark.operators import dedup as DD
 
@@ -26,51 +27,73 @@ _DOCS = [
 ]
 
 
-def _shingles(spark):
-    docs = spark.createDataFrame(_DOCS, ["doc_id", "text"])
-    return DD.shingle_sets(docs, n=3)
+def _py_shingles() -> dict[int, set[str]]:
+    out = {}
+    for doc_id, text in _DOCS:
+        toks = text.lower().split()
+        out[doc_id] = {" ".join(toks[i:i + 3]) for i in range(len(toks) - 2)}
+    return out
+
+
+def _py_df() -> dict[str, int]:
+    df: dict[str, int] = {}
+    for s in _py_shingles().values():
+        for sh in s:
+            df[sh] = df.get(sh, 0) + 1
+    return df
+
+
+def _py_capped_pairs(max_df: int) -> dict[tuple[int, int], float]:
+    """Pairs sharing >= 1 shingle of df <= max_df, with Jaccard over
+    the FULL shingle sets."""
+    sets, df = _py_shingles(), _py_df()
+    out = {}
+    for a, b in combinations(sorted(sets), 2):
+        if any(df[sh] <= max_df for sh in sets[a] & sets[b]):
+            out[(a, b)] = len(sets[a] & sets[b]) / len(sets[a] | sets[b])
+    return out
+
+
+def _capped(spark, max_df: int) -> dict[tuple[int, int], float]:
+    sharr = DD.shingle_arrays(spark.createDataFrame(_DOCS, ["doc_id", "text"]), n=3)
+    assert {r.doc_id: set(r.shingles) for r in sharr.collect()} == _py_shingles()
+    pairs = DD.jaccard_pairs_capped(sharr, threshold=0.0, max_df=max_df)
+    return {(r.left_id, r.right_id): r.jaccard for r in pairs.collect()}
 
 
 def test_uncapped_index_is_quadratic_in_hot_bucket(spark):
-    sh = _shingles(spark)
-    # Boilerplate shingles put every pair in the candidate set: C(8,2).
-    assert DD.index_candidates(sh).count() == 28
+    # A cap above every df keeps the boilerplate shingles, so every
+    # pair is a candidate: C(8,2).
+    got = _capped(spark, max_df=len(_DOCS))
+    assert len(got) == 28
+    assert got == _py_capped_pairs(len(_DOCS))
 
 
 def test_cap_cuts_boilerplate_pairs_keeps_real_overlap(spark):
-    sh = _shingles(spark)
-    cand = DD.index_candidates(sh, max_df=4)
-    rows = {(r.left_id, r.right_id) for r in cand.collect()}
-    assert rows == {(6, 7)}, rows
+    got = _capped(spark, max_df=4)
+    assert got.keys() == {(6, 7)}
+    assert got.keys() == _py_capped_pairs(4).keys()
 
 
 def test_capped_postings_drops_exactly_hot_shingles(spark):
-    sh = _shingles(spark)
-    kept = DD.capped_postings(sh, max_df=4)
-    hot = (
-        sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") > 4).count()
-    )
-    assert hot > 0  # fixture really has hot shingles
-    assert kept.select("shingle").distinct().count() == (
-        sh.select("shingle").distinct().count() - hot
-    )
+    # At every cap, a pair survives iff it shares a shingle of df <= cap:
+    # the cap drops the hot shingles from candidate generation, no more.
+    df = _py_df()
+    hot = {sh for sh, n in df.items() if n > 4}
+    assert hot and hot < set(df)  # fixture really has hot and cold shingles
+    for max_df in (1, 2, 4, 7, 8):
+        assert _capped(spark, max_df).keys() == _py_capped_pairs(max_df).keys(), max_df
 
 
 def test_jaccard_value_exact_despite_cap(spark):
-    sh = _shingles(spark)
-    capped = {
-        (r.left_id, r.right_id): r.jaccard
-        for r in DD.jaccard_pairs(sh, threshold=0.0, max_df=4).collect()
-    }
-    full = {
-        (r.left_id, r.right_id): r.jaccard
-        for r in DD.jaccard_pairs(sh, threshold=0.0).collect()
-    }
-    # The surviving pair scores on FULL shingle sets: same value as the
-    # uncapped computation, not the capped-index intersection.
-    assert capped.keys() == {(6, 7)}
-    assert capped[(6, 7)] == full[(6, 7)]
+    # The surviving pair scores on FULL shingle sets, boilerplate
+    # included: same value as the uncapped computation, not the
+    # capped-index intersection.
+    sets, df = _py_shingles(), _py_df()
+    common, union = sets[6] & sets[7], sets[6] | sets[7]
+    cold_common = {sh for sh in common if df[sh] <= 4}
+    assert cold_common < common  # the pair shares hot shingles too
+    assert _capped(spark, max_df=4)[(6, 7)] == len(common) / len(union)
 
 
 def test_pipeline_dedup_stage_is_capped(spark):

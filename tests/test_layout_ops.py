@@ -1,11 +1,9 @@
 """Unit tests for the late-round-5 additions: Z-order layout,
-length-bucket batching, distributed PCA, the incremental LSH probe,
-and size-targeted file compaction.  The registered queries' full
-differential checks live in test_oracle_parity.py; these tests pin
-the operator-level contracts the oracle can't see (bit-level Morton
-correctness, pruning DOMINANCE over the linear layout, eigen
-invariants, probe-vs-batch agreement, footer-range disjointness and
-hive-tree survival across compaction)."""
+length-bucket batching, distributed PCA and the incremental LSH probe.
+The registered queries' full differential checks live in
+test_oracle_parity.py; these tests pin the operator-level contracts
+the oracle can't see (bit-level Morton correctness, pruning DOMINANCE
+over the linear layout, eigen invariants, probe-vs-batch agreement)."""
 
 from __future__ import annotations
 
@@ -156,50 +154,6 @@ def _file_stats(path: str, cols: list[str]) -> list[dict]:
     return out
 
 
-def test_write_zordered_footer_stats_prune(spark, sf_dir, tmp_path):
-    """The z-ordered WRITE must leave real parquet footers whose
-    per-file (custkey, orderdate-day) bounding boxes prune a
-    two-dimensional box predicate that a linear sort's footers
-    cannot — the engine-agnostic data-skipping claim, checked against
-    actual file metadata, not a simulation."""
-    from etl_pipe_spark.operators.zorder import write_zordered
-
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey",
-        F.datediff(F.col("o_orderdate").cast("date"), F.lit("1970-01-01"))
-        .cast("bigint").alias("o_day"),
-    )
-    zpath, lpath = str(tmp_path / "z"), str(tmp_path / "linear")
-    write_zordered(orders, zpath, "o_custkey", "o_day", n_files=16)
-    (orders.repartitionByRange(16, "o_orderkey")
-     .sortWithinPartitions("o_orderkey").write.parquet(lpath))
-
-    assert spark.read.parquet(zpath).count() == orders.count()
-
-    # box predicate: middle ~tenth of each dimension's range
-    mm = orders.agg(
-        F.min("o_custkey"), F.max("o_custkey"),
-        F.min("o_day"), F.max("o_day")).first()
-    cklo = mm[0] + (mm[1] - mm[0]) * 45 // 100
-    ckhi = mm[0] + (mm[1] - mm[0]) * 55 // 100
-    dlo = mm[2] + (mm[3] - mm[2]) * 45 // 100
-    dhi = mm[2] + (mm[3] - mm[2]) * 55 // 100
-
-    def pruned(path: str) -> tuple[int, int]:
-        stats = _file_stats(path, ["o_custkey", "o_day"])
-        n_prune = sum(
-            1 for s in stats
-            if s["o_custkey"][1] < cklo or s["o_custkey"][0] > ckhi
-            or s["o_day"][1] < dlo or s["o_day"][0] > dhi)
-        return n_prune, len(stats)
-
-    zp, zn = pruned(zpath)
-    lp, ln = pruned(lpath)
-    assert zn >= 8 and ln >= 8
-    assert zp > lp, f"z-order pruned {zp}/{zn}, linear {lp}/{ln}"
-    assert zp >= zn // 2
-
-
 def test_lsh_probe_excludes_reingested_self_pairs(spark, sf_dir):
     """A doc present on BOTH sides (re-ingest) must never pair with
     itself — it would otherwise win best-match with jaccard 1.0."""
@@ -209,96 +163,3 @@ def test_lsh_probe_excludes_reingested_self_pairs(spark, sf_dir):
     pairs = DD.lsh_probe_pairs(sig, batch).collect()  # history ⊇ batch
     assert pairs, "re-ingested docs should still find cross candidates"
     assert all(r["left_id"] != r["right_id"] for r in pairs)
-
-
-def test_compact_to_size_rejects_in_place(spark, tmp_path):
-    import pytest
-
-    from etl_pipe_spark.operators.layout import compact_to_size
-
-    p = str(tmp_path / "same")
-    spark.range(10).write.parquet(p)
-    with pytest.raises(ValueError, match="never-in-place"):
-        compact_to_size(spark, p, p + "/../same")
-
-
-def test_compact_to_size_preserves_hive_partitions(spark, tmp_path):
-    """partition_cols must re-emit the directory tree — a flat rewrite
-    would silently destroy partition pruning."""
-    import glob as _glob
-
-    from etl_pipe_spark.operators.layout import compact_to_size
-
-    src, dst = str(tmp_path / "part_src"), str(tmp_path / "part_dst")
-    df = spark.range(0, 4000).select(
-        F.col("id").alias("k"), (F.col("id") % 4).alias("p"))
-    df.repartition(8).write.partitionBy("p").parquet(src)
-
-    stats = compact_to_size(spark, src, dst, target_bytes=1 << 20,
-                            partition_cols=["p"])
-    assert sorted(_os_basename(d) for d in _glob.glob(f"{dst}/p=*")) == [
-        "p=0", "p=1", "p=2", "p=3"]
-    assert stats["files_after"] <= stats["files_before"]
-    a = sorted(tuple(r) for r in spark.read.parquet(src).collect())
-    b = sorted(tuple(r) for r in spark.read.parquet(dst).collect())
-    assert a == b
-
-
-def _os_basename(p: str) -> str:
-    import os
-
-    return os.path.basename(p)
-
-
-def test_listed_total_bytes_matches_os_sizes(spark, tmp_path):
-    """The listing-based size sum must equal the on-disk byte total of
-    exactly the scan's input files — including across a partitioned
-    tree's many directories — with NO row scan (it is the sizing input
-    for maintenance jobs scheduled against 100 TB sinks)."""
-    import os
-
-    from etl_pipe_spark.operators.layout import _listed_total_bytes
-
-    p = str(tmp_path / "sized")
-    spark.range(0, 5000).select(
-        F.col("id").alias("k"), (F.col("id") % 3).alias("p")
-    ).repartition(4).write.partitionBy("p").parquet(p)
-    src = spark.read.parquet(p)
-    files = src.inputFiles()
-    expected = sum(
-        os.path.getsize(f.removeprefix("file:")) for f in files)
-    assert _listed_total_bytes(spark, files) == expected > 0
-
-
-def test_compact_to_size_preserves_clustering(spark, tmp_path):
-    """Size-targeted compaction: 32 tiny sorted files -> few files near
-    the byte target, with DISJOINT per-file key ranges when sort_cols
-    is given (pruning survives), and row-level content identical."""
-    from etl_pipe_spark.operators.layout import compact_to_size
-
-    src = str(tmp_path / "small")
-    dst = str(tmp_path / "big")
-    df = spark.range(0, 20000).select(
-        F.col("id").alias("k"),
-        F.concat(F.lit("v"), F.col("id")).alias("payload"),
-    )
-    # 32 small sorted files, ~totaling a few hundred KB
-    df.repartitionByRange(32, "k").sortWithinPartitions("k") \
-        .write.mode("overwrite").parquet(src)
-
-    stats = compact_to_size(spark, src, dst,
-                            target_bytes=96 << 10, sort_cols=["k"])
-    assert stats["files_before"] == 32
-    assert 1 <= stats["files_after"] < 32
-    expected = max(1, -(-stats["total_bytes"] // (96 << 10)))
-    assert stats["files_after"] == expected
-
-    # content parity
-    a = sorted(r["k"] for r in spark.read.parquet(src).collect())
-    b = sorted(r["k"] for r in spark.read.parquet(dst).collect())
-    assert a == b
-
-    # clustering preserved: footer key ranges must not overlap
-    ranges = sorted((s["k"][0], s["k"][1]) for s in _file_stats(dst, ["k"]))
-    for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-        assert hi1 < lo2, "compacted files overlap in key space"

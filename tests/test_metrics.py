@@ -1,18 +1,12 @@
-"""S10 log/metrics sink (reference scheduler.py:21-28).
-
-Two surfaces: the StreamingQueryListener on structured streams, and
-Observation-based per-flow output counts on the batch flows."""
+"""S10 log/metrics sink (reference scheduler.py:21-28): the
+StreamingQueryListener on structured streams."""
 
 from __future__ import annotations
 
 import time
 
-from etl_pipe_spark.streaming.metrics import (
-    attach_metrics_listener,
-    observe_clearsight_cycle,
-)
+from etl_pipe_spark.streaming.metrics import attach_metrics_listener
 from etl_pipe_spark.streaming.structured import read_events_stream, windowed_counts
-from tests.clearsight_fixtures import T0, build_sources
 
 
 def test_listener_reports_stream_batches(spark, sf_dir):
@@ -39,18 +33,3 @@ def test_listener_reports_stream_batches(spark, sf_dir):
     assert batches, "no progress events delivered"
     assert listener.rows_for(name) > 0  # events table is non-empty
     assert any(name in line for line in logged)  # log sink got the line
-
-
-def test_clearsight_cycle_observed_counts(spark):
-    src = build_sources(spark)
-    logged: list[str] = []
-    flows, observer = observe_clearsight_cycle(src, T0, log=logged.append)
-    assert set(flows) == {
-        "scenarios", "node_data", "runs", "node_calc", "event_data", "timeline",
-    }
-    # run the cycle (the sink action in production; collect here)
-    actual = {name: len(df.collect()) for name, df in flows.items()}
-    counts = observer.emit()
-    assert counts == actual  # observed == materialized, no extra job
-    assert all(n > 0 for n in counts.values()), counts
-    assert len(logged) == 6 and all("rows_out=" in line for line in logged)

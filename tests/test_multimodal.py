@@ -1,6 +1,5 @@
-"""Multimodal binary-column plumbing: the three UDF shapes (1->1
-features, 1->N frame sampling, binary->binary resize) over Arrow
-batches, with the codec step honestly stubbed."""
+"""Multimodal column plumbing: the 1->N frame-sampling shape over
+Arrow batches, with the codec step honestly stubbed."""
 
 from __future__ import annotations
 
@@ -9,12 +8,8 @@ import hashlib
 from pyspark.sql import functions as F
 
 from etl_pipe_spark.operators.multimodal import (
-    DECODE_STATUS_STUB,
     FRAME_CHARS,
     FRAME_STRIDE,
-    THUMB_BYTES,
-    documents_as_binary,
-    resize_payloads,
     sample_frames,
 )
 from etl_pipe_spark.sources.catalog import load_table
@@ -41,27 +36,10 @@ def test_sample_frames_fans_out_and_digests(spark, sf_dir):
         assert digest == hashlib.md5(seg.encode("utf-8")).hexdigest()
 
 
-def test_resize_payloads_binary_roundtrip(spark, sf_dir):
-    docs = documents_as_binary(load_table(spark, sf_dir, "documents"))
-    out = resize_payloads(docs)
-    assert out.count() == docs.count()
-    r = out.join(docs, "doc_id").select("payload", "thumb", "n_thumb_bytes",
-                                        "resize_status").first()
-    expected = hashlib.md5(bytes(r.payload)).digest() + bytes(r.payload)[:THUMB_BYTES]
-    assert bytes(r.thumb) == expected
-    assert r.n_thumb_bytes == len(expected)
-    assert r.resize_status == DECODE_STATUS_STUB
-
-
 def test_null_payloads_are_routed_not_fatal(spark):
-    # the poison-pill contract: a null payload/text must produce a
-    # status row (resize) or contribute nothing (frames), never raise
+    # the poison-pill contract: a null text contributes no frames,
+    # never raises
     docs = spark.createDataFrame(
         [(1, "hello world"), (2, None)], "doc_id long, text string")
     frames = sample_frames(docs).collect()
     assert {r.doc_id for r in frames} == {1}
-    bins = docs.selectExpr("doc_id", "encode(text, 'UTF-8') AS payload")
-    out = {r.doc_id: r for r in resize_payloads(bins).collect()}
-    assert out[1].resize_status == DECODE_STATUS_STUB
-    assert out[2].resize_status == "error:null-payload"
-    assert out[2].thumb is None and out[2].n_thumb_bytes == 0

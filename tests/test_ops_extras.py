@@ -1,15 +1,9 @@
-"""Scheduler, skew, and layout operator tests."""
+"""Scheduler and ordering operator tests."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from etl_pipe_spark.operators.layout import (
-    read_date_partitioned,
-    write_date_partitioned,
-)
-from etl_pipe_spark.operators.skew import salted_agg, salted_join
-from etl_pipe_spark.sources.catalog import load_table
 from etl_pipe_spark.streaming.scheduler import CycleScheduler
 
 
@@ -41,80 +35,6 @@ def test_scheduler_exception_isolated():
                            alert=lambda m: None, sleep=lambda s: None)
     assert sched.run_once() is None
     assert sched.consecutive_failures == 1
-
-
-def test_salted_agg_equals_plain(spark, sf_dir):
-    li = load_table(spark, sf_dir, "lineitem")
-    plain = {
-        (r.l_returnflag, r.n, float(r.qty))
-        for r in li.groupBy("l_returnflag")
-        .agg(F.count(F.lit(1)).alias("n"),
-             F.sum(F.col("l_quantity").cast("decimal(18,4)")).alias("qty"))
-        .collect()
-    }
-    salted = {
-        (r.l_returnflag, r.n, float(r.qty))
-        for r in salted_agg(
-            li,
-            ["l_returnflag"],
-            {
-                "n": (F.count(F.lit(1)), F.sum),
-                "qty": (F.sum(F.col("l_quantity").cast("decimal(18,4)")), F.sum),
-            },
-            n_salts=8,
-        ).collect()
-    }
-    assert salted == plain
-
-
-def test_salted_join_equals_plain(spark, sf_dir):
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
-    orders = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("l_orderkey"), "o_orderstatus"
-    )
-    plain = li.join(orders, "l_orderkey").groupBy("o_orderstatus").count()
-    salted = salted_join(li, orders, "l_orderkey", n_salts=4) \
-        .groupBy("o_orderstatus").count()
-    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
-
-
-def test_date_partitioned_roundtrip_and_pruning(spark, sf_dir, tmp_path):
-    ev = load_table(spark, sf_dir, "events").drop("ts_ns")
-    path = str(tmp_path / "events_by_month")
-    write_date_partitioned(ev, path, "ts", granularity="day")
-    back = read_date_partitioned(spark, path)
-    assert back.count() == ev.count()
-    # partition pruning: a ts-derived predicate hits only matching dirs
-    one_day = back.filter(F.to_date("ts") == "2024-01-05")
-    expected = ev.filter(F.to_date("ts") == "2024-01-05").count()
-    assert one_day.count() == expected
-    # directory count confirms physical partitioning happened
-    import os
-    dirs = [d for d in os.listdir(path) if d.startswith("__dt=")]
-    assert len(dirs) >= 25  # ~30 days of events
-
-
-def test_bucketed_tables_join_without_shuffle(spark, sf_dir, tmp_path):
-    """Two tables bucketed on the join key must hash-join with no
-    Exchange on either side — the co-located join layout.py promises."""
-    from etl_pipe_spark.operators.layout import write_bucketed_table
-
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-        li = load_table(spark, sf_dir, "lineitem").select(
-            F.col("l_orderkey").alias("o_orderkey"), "l_quantity"
-        )
-        write_bucketed_table(orders, "b_orders", "o_orderkey", n_buckets=4)
-        write_bucketed_table(li, "b_lineitem", "o_orderkey", n_buckets=4)
-        joined = spark.table("b_orders").join(spark.table("b_lineitem"), "o_orderkey")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, "bucketed join still shuffles"
-        assert joined.count() == li.count()
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_lineitem")
 
 
 def test_ranked_running_sum_equals_global_window(spark):

@@ -1,13 +1,9 @@
 """SRP-LSH plane-count parameterization: oracle parity at >=2 plane
-counts, plus the corpus-sizing rules for the occupancy/recall and
-IVF cell-size dials."""
+counts, plus the corpus-sizing rule for the IVF cell-size dial."""
 
 import pytest
 
-from etl_pipe_spark.operators.similarity import (
-    ivf_centroids_for_corpus,
-    srp_planes_for_corpus,
-)
+from etl_pipe_spark.operators.similarity import ivf_centroids_for_corpus
 from etl_pipe_spark.plans.dedup_plans import srp_oracle, srp_pairs
 from etl_pipe_spark.sources.catalog import load_table
 from tests.oracle_utils import compare, duckdb_connect
@@ -22,17 +18,6 @@ def test_srp_pairs_match_oracle_at_plane_count(spark, sf_dir, n_planes):
         compare(df, con, srp_oracle(n_planes), name=f"srp_{n_planes}planes")
     finally:
         con.close()
-
-
-def test_plane_sizing_holds_mean_occupancy_flat():
-    # planes ~ log2(N / target): occupancy N / 2^planes stays within a
-    # constant factor of the target across a 10^6x corpus growth.
-    for n in (10**4, 10**6, 10**8, 10**10):
-        planes = srp_planes_for_corpus(n, target_bucket=1000)
-        occupancy = n / 2**planes
-        assert occupancy <= 1000
-    # never below the 8-plane floor, even for tiny corpora
-    assert srp_planes_for_corpus(100) == 8
 
 
 def test_ivf_centroid_sizing_bounds_both_cost_terms():

@@ -1,32 +1,6 @@
-"""Custom stateful streaming operator (applyInPandasWithState)."""
+"""Stateful streaming deduplication (dropDuplicatesWithinWatermark)."""
 
 from __future__ import annotations
-
-import pytest
-from pyspark.sql import functions as F
-
-from etl_pipe_spark.sources.catalog import load_table
-from etl_pipe_spark.streaming.stateful import running_user_totals
-from etl_pipe_spark.streaming.structured import read_events_stream, run_stream_to_table
-
-
-def test_running_user_totals_match_batch(spark, sf_dir):
-    stream = read_events_stream(spark, sf_dir).select("user_id", "value", "ts")
-    got = run_stream_to_table(spark, running_user_totals(stream), output_mode="update")
-    # update mode emits one row per key per batch; keep the final row per key
-    final = {r.user_id: r for r in got.collect()}
-
-    batch = {
-        r.user_id: r
-        for r in load_table(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("total_value"))
-        .collect()
-    }
-    assert set(final) == set(batch)
-    for uid, b in batch.items():
-        assert final[uid].n_events == b.n_events
-        assert final[uid].total_value == pytest.approx(b.total_value, rel=1e-9)
 
 
 def test_dedup_within_watermark_bounds_state(spark, sf_dir, tmp_path):

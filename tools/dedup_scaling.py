@@ -592,8 +592,6 @@ def main() -> None:
         return
     scales = [int(s) for s in args.scales.split(",")]
 
-    from pyspark.sql import functions as F
-
     from etl_pipe_spark.operators import dedup as DD
     from etl_pipe_spark.plans.catalog import queries
     from etl_pipe_spark.session import get_spark
@@ -608,14 +606,15 @@ def main() -> None:
         docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
         sharr = DD.shingle_arrays(docs.repartition(32), n=3)
 
-        # candidate counts: capped always; uncapped only at the small scale
+        # candidate counts (pairs sharing >= 1 indexed shingle, i.e. the
+        # Jaccard operator at threshold 0): capped always; uncapped (a
+        # cap no df can exceed) only at the small scale
         t0 = time.time()
-        sh = sharr.select("doc_id", F.explode("shingles").alias("shingle"))
-        row["cand_capped"] = DD.index_candidates(sh, max_df=DD.MAX_DF).count()
+        row["cand_capped"] = DD.jaccard_pairs_capped(sharr, 0.0, DD.MAX_DF).count()
         row["cand_capped_sec"] = round(time.time() - t0, 2)
         if n <= args.uncapped_at:
             t0 = time.time()
-            row["cand_uncapped"] = DD.index_candidates(sh).count()
+            row["cand_uncapped"] = DD.jaccard_pairs_capped(sharr, 0.0, n).count()
             row["cand_uncapped_sec"] = round(time.time() - t0, 2)
         n_boiler = int(0.3 * n)
         row["uncapped_lower_bound"] = n_boiler * (n_boiler - 1) // 2
