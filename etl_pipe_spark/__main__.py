@@ -78,13 +78,12 @@ def main(argv: list[str] | None = None) -> int:
         spark = get_spark("etl-pipe-cycle")
         pipe = IncrementalPipeline(spark, args.sf_dir, args.target)
         sched = CycleScheduler(pipe.run_cycle, interval_sec=args.interval)
-        # one line per flow and cycle with run_cycle's value: the row
-        # count of the flow's committed snapshot (not the rows merged
-        # this cycle), or -1 when the flow failed
+        # one line per flow and cycle with run_cycle's value: the batch
+        # rows the flow merged this cycle, or -1 when the flow failed
         while sched.cycles_run < args.loops:
             counts = sched.run_once()
             for name, n in (counts or {}).items():
-                status = "snapshot_rows" if n >= 0 else "FAILED code"
+                status = "rows_merged" if n >= 0 else "FAILED code"
                 print(f"[etl_pipe_spark] cycle={sched.cycles_run} flow={name} {status}={n}")
             if sched.cycles_run < args.loops and args.interval:
                 sched.sleep(args.interval)

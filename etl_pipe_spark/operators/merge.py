@@ -357,16 +357,31 @@ class ParquetMergeSink:
         reader = self.spark.read if schema is None else self.spark.read.schema(schema)
         return reader.parquet(*[os.path.join(self.path, e["path"]) for e in entries])
 
+    def _read_entries(self, horizon: dt.datetime | None) -> list[dict] | None:
+        """The manifest entries of the files ``read(horizon)`` scans, None
+        before the first commit."""
+        snap = self.current_snapshot()
+        if snap is None:
+            return None
+        return [e for e in self._manifest(snap)
+                if self.freeze_col is None or not self._is_cold(e, horizon)]
+
     def read(self, horizon: dt.datetime | None = None) -> DataFrame:
         """The committed table; with ``horizon``, only its hot files: the
         hot region and the cold rows that share a file with it."""
-        snap = self.current_snapshot()
-        if snap is None:
+        entries = self._read_entries(horizon)
+        if entries is None:
             return self.spark.createDataFrame([], self.schema_ddl)
-        entries = self._manifest(snap)
-        if self.freeze_col is None or horizon is None:
-            return self._scan(entries)
-        return self._scan([e for e in entries if not self._is_cold(e, horizon)])
+        return self._scan(entries)
+
+    def read_rows(self, horizon: dt.datetime | None = None) -> int | None:
+        """The number of rows ``read(horizon)`` returns, summed from the
+        manifest with no Spark job and no data read; None when a file's
+        count is not recorded (a snapshot written before manifests)."""
+        entries = self._read_entries(horizon) or []
+        if any("rows" not in e for e in entries):
+            return None
+        return sum(e["rows"] for e in entries)
 
     def write(self, df: DataFrame, meta: dict[str, str] | None = None,
               horizon: dt.datetime | None = None, read_version: int | None = None) -> int:

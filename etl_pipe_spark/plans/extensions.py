@@ -9,6 +9,8 @@ expressions (no row-at-a-time Python) on the hot paths.
 
 from __future__ import annotations
 
+import sys
+
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from ..functions import text as TX
@@ -17,6 +19,14 @@ from ..operators import scope
 from ..operators.multimodal import documents_as_binary, extract_features
 from ..sources.catalog import load_table
 from .catalog import register
+
+try:
+    from pyspark import cloudpickle as _cp
+except ImportError:  # pragma: no cover
+    import cloudpickle as _cp
+# the winnowing kernel ships to mapInArrow by value, so Python workers
+# never need this package importable
+_cp.register_pickle_by_value(sys.modules[__name__])
 
 # --------------------------------------------------------------------------
 # Exact dedup (hash groupBy).

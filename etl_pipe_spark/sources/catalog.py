@@ -239,6 +239,44 @@ def events_since(events: DataFrame, since) -> DataFrame:
     return events.filter(watermark_predicate(events, since))
 
 
+def rows_since(sf_dir: str, name: str, since) -> int | None:
+    """Rows of table ``name`` in the row groups that the watermark
+    predicate ``ts >= since`` (:func:`watermark_predicate`) cannot prune,
+    read from the parquet footer alone: no Spark job, no data page.
+
+    A row group is pruned when the footer's max of ``ts`` lies below
+    ``since``, compared in nanoseconds so that both timestamp layouts
+    (TIMESTAMP(MICROS) and TIMESTAMP(NANOS)) count alike.  A row group
+    whose statistics are missing counts as unpruned.  None when the
+    table is not a single local parquet file (a directory, a remote
+    URI, an unreadable footer): its size is unknown.
+    """
+    import json
+
+    import pyarrow.parquet as pq
+
+    path = _table_path(sf_dir, name)
+    if not os.path.isfile(path):
+        return None
+    try:
+        footer = pq.read_metadata(path)
+        j = footer.schema.names.index("ts")
+        unit = json.loads(footer.schema.column(j).logical_type.to_json()).get("timeUnit")
+    except (OSError, ValueError):
+        return None
+    # nanoseconds per unit of the parquet TIMESTAMP logical type
+    scale = {"milliseconds": 1_000_000, "microseconds": 1_000, "nanoseconds": 1}.get(unit)
+    since_ns = since_to_ns(since)
+    rows = 0
+    for i in range(footer.num_row_groups):
+        group = footer.row_group(i)
+        stats = group.column(j).statistics
+        if (scale is None or stats is None or not stats.has_min_max
+                or not isinstance(stats.max_raw, int) or stats.max_raw * scale >= since_ns):
+            rows += group.num_rows
+    return rows
+
+
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every catalog table as a temp view for the SQL API."""
     for name in TABLE_NAMES:

@@ -18,6 +18,19 @@ That bound, the flow's *horizon*, also splits each history sink
 change and cold files it cannot, so a cycle reads and rewrites only the
 hot region (operators/merge.py ``ParquetMergeSink``).  ``dim_users``
 holds one row per user and is rewritten whole.
+
+A flow merges a small input in ONE Spark task.  Its input is the hot
+region plus the ``events`` rows its scan decodes, both counted without
+a Spark job: the sink's manifest holds the hot files' row counts, and
+the source's parquet footer tells which row groups the watermark
+predicate cannot prune (``sources.catalog.rows_since``).  Below
+:data:`ONE_TASK_BELOW` rows the flow coalesces the hot region and the
+batch to one partition each, which meets every distribution the merge
+needs, and hints the event log's anti-join to a sort-merge join instead
+of a broadcast of the hot region.  The plan then has no Exchange and no
+AQE stage boundary: the flow is one job of one task.  At or above the
+constant, or when the source is not a local parquet file, the flow
+keeps the partitioned plan.
 """
 
 from __future__ import annotations
@@ -28,8 +41,14 @@ from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from ..operators.merge import ParquetMergeSink, insert_if_absent, scd2_apply_versions, upsert
-from ..sources.catalog import events_since, load_table
+from ..sources.catalog import events_since, load_table, rows_since
 from .watermark import WatermarkStore
+
+# Merge input (hot-region rows + unpruned source rows) below which a flow
+# runs as one task.  A sweep on 4 cores of the first and the second cycle
+# over an N-row source (CHANGES.md): the one-task plan was at par or
+# faster up to N = 10^6, mixed at 2 * 10^6 and slower from 3 * 10^6.
+ONE_TASK_BELOW = 1_000_000
 
 _DIM_USERS_DDL = (
     "user_id long, last_event_id long, last_event_type string, "
@@ -120,9 +139,17 @@ class IncrementalPipeline:
         )
 
     # -- cycle -----------------------------------------------------------
+    def _fits_one_task(self, sink: ParquetMergeSink, horizon) -> bool:
+        """Whether the flow's merge input is known and below
+        :data:`ONE_TASK_BELOW` rows; reads the manifest and the source's
+        parquet footer, never a data page, and launches no Spark job."""
+        hot = sink.read_rows(horizon)
+        source = rows_since(self.source_sf_dir, "events", horizon)
+        return hot is not None and source is not None and hot + source < ONE_TASK_BELOW
+
     def _run_flow(self, name: str, flow, events: DataFrame, now_ts) -> int:
         """One flow: merge its batch into its sink's hot region, then
-        advance its watermark.  Returns the sink's row count, or -1 if
+        advance its watermark.  Returns the batch rows merged, or -1 if
         the flow failed — its watermark then stays put (crash-safe
         restart semantics, reference ST4)."""
         try:
@@ -138,11 +165,19 @@ class IncrementalPipeline:
             )
             sink = self.sinks[name]
             base = sink.committed_version()  # before the read: no lost update
-            rows = sink.write(flow(sink.read(horizon), batch), horizon=horizon,
-                              read_version=base)
+            existing = sink.read(horizon)
+            if self._fits_one_task(sink, horizon):
+                # one partition each meets every distribution the merge needs
+                existing, batch = existing.coalesce(1), batch.coalesce(1)
+                if flow == self._flow_event_log:
+                    # its anti-join would broadcast the hot region in a job
+                    # of its own; the hint rides the batch, which only the
+                    # join reads (the hot region is also a union branch)
+                    batch = batch.hint("merge")
+            sink.write(flow(existing, batch), horizon=horizon, read_version=base)
             stats = obs.get
             self.store.advance(name, stats["mx"], stats["n"])
-            return rows
+            return stats["n"]
         except Exception as exc:  # per-flow isolation (pipeline.py:41-49)
             print(f"[etl_pipe_spark] flow {name} failed: {exc}")
             return -1
@@ -154,8 +189,11 @@ class IncrementalPipeline:
         costs its slowest flow rather than the sum of all three: each
         flow reads only its own sink and watermark row and writes only
         its own sink, and the watermark store serializes the advances.
-        Per-flow failure isolation: a failing flow is reported as -1
-        but the rest proceed, and its watermark does not advance.
+        Returns, per flow, the batch rows it merged: the source rows in
+        [horizon, now_ts), overlap replays included, which is also what
+        its watermark advance records.  Per-flow failure isolation: a
+        failing flow is reported as -1 but the rest proceed, and its
+        watermark does not advance.
         """
         flows = {
             "dim_users": self._flow_dim_users,

@@ -6,7 +6,9 @@ sink.  Spark-first, ``EtlMetricsListener`` is a
 structured-streaming micro-batch reports (query name, batch id, input
 rows, duration) with zero extra jobs, the streaming twin of the
 reference's per-cycle log lines.  The watermark cycle reports its
-per-flow counts itself (``IncrementalPipeline.run_cycle``).
+per-flow counts itself: ``IncrementalPipeline.run_cycle`` returns the
+batch rows each flow merged, as the reference logs them, not the
+sinks' sizes.
 """
 
 from __future__ import annotations

@@ -37,7 +37,9 @@ class CycleScheduler:
     def run_once(self) -> dict[str, int] | None:
         """One cycle with the reference's failure accounting: any flow
         reporting -1 (see IncrementalPipeline.run_cycle) or a raised
-        error bumps the counter; success resets it; threshold alerts."""
+        error bumps the counter; success resets it; threshold alerts.
+        Returns the cycle's per-flow counts, the batch rows each flow
+        merged, or None when the cycle raised."""
         self.cycles_run += 1
         try:
             counts = self.run_cycle()

@@ -467,3 +467,147 @@ def test_hourly_cycles_write_only_the_hot_region(spark, sf_dir, pipe):
             if hour > KEEP_SNAPSHOTS + 2 and name == "dim_users":
                 assert dirs == {snap, previous}
         prev_horizon = horizon
+
+
+def _batch_rows(spark, src, since, now):
+    ev = load_table(spark, src, "events")
+    return catalog.events_since(ev, since).filter(F.col("ts") < F.lit(now)).count()
+
+
+def test_cycle_counts_are_the_rows_each_flow_merged(spark, sf_dir, pipe):
+    """run_cycle reports, per flow, the source rows in [horizon, now) it
+    merged: the overlap replay included, snapshot sizes not."""
+    for now in (MID, END, END, END + dt.timedelta(days=1)):
+        want = {name: _batch_rows(spark, sf_dir, pipe.store.get(name), now)
+                for name in pipe.sinks}
+        assert pipe.run_cycle(now_ts=now) == want, now
+
+
+def test_rows_since_counts_the_row_groups_the_watermark_cannot_prune(tmp_path):
+    """Footer-only count: row groups whose max ts lies below ``since`` are
+    pruned, in either timestamp unit; a row group without statistics
+    counts whole; a source that is not a local parquet file is unknown."""
+    base = dt.datetime(2024, 1, 1)
+    ts = [base + dt.timedelta(hours=h) for h in range(10)]
+    for unit in ("us", "ns"):
+        src = tmp_path / unit
+        src.mkdir()
+        table = pa.table({"event_id": pa.array(range(10), pa.int64()),
+                          "ts": pa.array(ts, pa.timestamp(unit))})
+        pq.write_table(table, src / "events.parquet", row_group_size=3,
+                       coerce_timestamps=None)
+        # row groups [0, 2], [3, 5], [6, 8], [9]
+        for since, want in ((base - dt.timedelta(1), 10), (ts[2], 10),
+                            (ts[2] + dt.timedelta(microseconds=1), 7),
+                            (ts[5], 7), (ts[6], 4), (ts[9], 1),
+                            (ts[9] + dt.timedelta(microseconds=1), 0)):
+            assert catalog.rows_since(str(src), "events", since) == want, (unit, since)
+        pq.write_table(table, src / "events.parquet", row_group_size=3,
+                       coerce_timestamps=None, write_statistics=False)
+        assert catalog.rows_since(str(src), "events", ts[9]) == 10
+    (tmp_path / "dir" / "events.parquet").mkdir(parents=True)
+    pq.write_table(table, tmp_path / "dir" / "events.parquet" / "part-0.parquet")
+    assert catalog.rows_since(str(tmp_path / "dir"), "events", base) is None
+    assert catalog.rows_since(str(tmp_path / "missing"), "events", base) is None
+    (tmp_path / "bad").mkdir()
+    (tmp_path / "bad" / "events.parquet").write_bytes(b"not parquet")
+    assert catalog.rows_since(str(tmp_path / "bad"), "events", base) is None
+
+
+def _write_plans(pipe) -> dict[str, str]:
+    """Record, per flow, the physical plan (AQE's initial plan, exchanges
+    included) of the DataFrame its sink writes."""
+    plans = {}
+    for name, sink in pipe.sinks.items():
+        def write(df, meta=None, horizon=None, read_version=None, _write=sink.write,
+                  _name=name):
+            plans[_name] = df._jdf.queryExecution().executedPlan().toString()
+            return _write(df, meta, horizon=horizon, read_version=read_version)
+        sink.write = write
+    return plans
+
+
+def _exchanges(plan: str) -> Counter:
+    return Counter(w for w in plan.split() if w in ("Exchange", "BroadcastExchange"))
+
+
+def test_small_merges_run_as_one_exchange_free_job_per_flow(
+        spark, sf_dir, pipe, jobs_launched):
+    """Below ONE_TASK_BELOW each flow's merge plan has no Exchange or
+    BroadcastExchange, and a warm cycle launches one job per flow; the
+    size signal launches none."""
+    pipe.run_cycle(now_ts=MID)
+    plans = _write_plans(pipe)
+    for name, sink in pipe.sinks.items():
+        fits, n = jobs_launched(pipe._fits_one_task, sink, pipe.store.get(name))
+        assert fits and n == 0, (name, fits, n)
+    counts, n = jobs_launched(pipe.run_cycle, MID + dt.timedelta(hours=1))
+    assert all(v >= 0 for v in counts.values()), counts
+    assert n == len(pipe.sinks)
+    assert {name: _exchanges(plan) for name, plan in plans.items()} == {
+        name: Counter() for name in pipe.sinks}
+
+
+def test_large_merges_keep_the_partitioned_plan(spark, sf_dir, pipe, monkeypatch):
+    """At or above ONE_TASK_BELOW (0 here) every flow keeps its
+    shuffle, and the event log's anti-join its broadcast."""
+    monkeypatch.setattr(incremental, "ONE_TASK_BELOW", 0)
+    pipe.run_cycle(now_ts=MID)
+    plans = _write_plans(pipe)
+    counts = pipe.run_cycle(now_ts=MID + dt.timedelta(hours=1))
+    assert all(v >= 0 for v in counts.values()), counts
+    shapes = {name: _exchanges(plan) for name, plan in plans.items()}
+    assert all(shape["Exchange"] >= 1 for shape in shapes.values()), shapes
+    assert shapes["fact_event_log"]["BroadcastExchange"] == 1, shapes
+
+
+def test_a_source_of_unknown_size_takes_the_partitioned_plan(spark, sf_dir, tmp_path):
+    src = tmp_path / "src"
+    (src / "events.parquet").mkdir(parents=True)
+    pq.write_table(pq.read_table(f"{sf_dir}/events.parquet"),
+                   src / "events.parquet" / "part-0.parquet")
+    pipe = IncrementalPipeline(spark, str(src), str(tmp_path / "target"))
+    assert not any(pipe._fits_one_task(sink, DEFAULT_EPOCH) for sink in pipe.sinks.values())
+
+
+def _failed_flow_catch_up(spark, src, target, fits: list) -> IncrementalPipeline:
+    """Cycles with a replay and a failed fact_event_log write, whose
+    catch-up merges from an older horizon than the other flows'; each
+    plan choice is appended to ``fits``."""
+    pipe = IncrementalPipeline(spark, src, target)
+
+    def fits_one_task(*args, _fits=pipe._fits_one_task):
+        fits.append(_fits(*args))
+        return fits[-1]
+
+    def failing_write(*args, **kwargs):
+        raise RuntimeError("simulated fact_event_log write failure")
+
+    pipe._fits_one_task = fits_one_task
+    log = pipe.sinks["fact_event_log"]
+    for now in (MID, MID + dt.timedelta(days=5), MID + dt.timedelta(days=5)):
+        assert all(v >= 0 for v in pipe.run_cycle(now_ts=now).values())
+        _assert_equals_full_recompute(spark, src, pipe, now)
+    log.write = failing_write
+    assert pipe.run_cycle(now_ts=END)["fact_event_log"] == -1
+    del log.write
+    assert pipe.store.get("fact_event_log") < pipe.store.get("dim_users")
+    now = END + dt.timedelta(days=1)
+    assert all(v >= 0 for v in pipe.run_cycle(now_ts=now).values())
+    _assert_equals_full_recompute(spark, src, pipe, now)
+    return pipe
+
+
+def test_one_task_and_partitioned_plans_give_the_same_tables(
+        spark, sf_dir, tmp_path, monkeypatch):
+    fits = {"partitioned": [], "one_task": []}
+    with monkeypatch.context() as m:
+        m.setattr(incremental, "ONE_TASK_BELOW", 0)
+        partitioned = _failed_flow_catch_up(spark, sf_dir, str(tmp_path / "p"),
+                                            fits["partitioned"])
+    one_task = _failed_flow_catch_up(spark, sf_dir, str(tmp_path / "o"), fits["one_task"])
+    assert not any(fits["partitioned"]) and all(fits["one_task"]), fits
+    for name in one_task.sinks:
+        got = sorted(map(str, one_task.sinks[name].read().collect()))
+        want = sorted(map(str, partitioned.sinks[name].read().collect()))
+        assert got == want, name

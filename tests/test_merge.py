@@ -478,3 +478,23 @@ def test_sink_compaction_merges_cold_files_and_its_crash_is_invisible(
     assert sorted(e["rows"] for e in cold(horizon)) == [1, step - 1]
     assert sorted(r.k for r in sink.read().collect()) == sorted(
         f"k{i}" for i in range(step + 2))
+
+
+def test_read_rows_counts_what_read_returns_without_spark_jobs(spark, tmp_path, jobs_launched):
+    """read_rows(horizon) is the row count of read(horizon), from the
+    manifest: before the first commit, over hot and cold files, and None
+    for a snapshot written before manifests."""
+    from etl_pipe_spark.operators.merge import ParquetMergeSink
+
+    sink = ParquetMergeSink(spark, str(tmp_path / "log"), _LOG_DDL, freeze_col="t")
+    assert sink.read_rows() == 0
+    rows = _log_rows(12)
+    for i in (4, 8, 12):
+        _log_step(spark, sink, rows[i - 4][1], rows[:i])
+    for horizon in (None, rows[0][1], rows[5][1], rows[11][1], rows[11][1] + dt.timedelta(1)):
+        n, jobs = jobs_launched(sink.read_rows, horizon)
+        assert jobs == 0
+        assert n == sink.read(horizon).count(), horizon
+    snap = os.path.join(sink.path, sink.current_snapshot())
+    os.remove(os.path.join(snap, "_meta_manifest"))
+    assert sink.read_rows() is None
