@@ -1,17 +1,24 @@
 #!/usr/bin/env python
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR
+"""Benchmark harness: registered queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+
+    python bench.py                      # every registered query
+    python bench.py name [name ...]      # just the named queries
 
 Prints ONE JSON line:
   {"metric": "...", "value": <total sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": ...}
+   "queries": {name: best sec, ...}, "runs": {name: [sec, sec], ...},
+   "sf": ..., "headline_total_sec": ..., "calibration_total_sec": ...}
 
 Each query is fully materialized via the noop writer (count() would
-let Spark prune projections and undercount the real work).
+let Spark prune projections and undercount the real work).  A sweep
+over scale or cores is one run per setting of SPARK_GRAFT_SF_DIR or
+SPARK_GRAFT_CPUS.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -63,12 +70,25 @@ HEADLINE = [
 CALIBRATION = ["incremental_scan", "wide_projection", "tpch_q6_forecast_revenue"]
 
 
-def main() -> None:
+def main(argv: list[str] | None = None) -> int:
+    """Time ``argv``'s query names, or the full registry when there are
+    none.  ``argv=None`` means no names: ``sys.argv`` is never read
+    here, so the CLI's ``bench`` word is not taken for a query."""
+    ap = argparse.ArgumentParser(
+        prog="bench.py", description="Best-of-2 noop-sink timing of registered queries.")
+    ap.add_argument("names", nargs="*", help="queries to time (default: all)")
+    names = ap.parse_args([] if argv is None else argv).names
+
     from etl_pipe_spark.plans.catalog import queries
     from etl_pipe_spark.session import get_spark
 
-    spark = get_spark("etl-pipe-spark-bench")
     qs = queries()
+    unknown = [n for n in names if n not in qs]
+    if unknown:
+        print(f"bench: unknown query {', '.join(map(repr, unknown))}; "
+              f"see `python -m etl_pipe_spark list`", file=sys.stderr)
+        return 2
+    spark = get_spark("etl-pipe-spark-bench")
 
     # Warm the JVM, file listing, and parquet footers for every table so
     # query timings measure plan execution, not first-touch I/O.
@@ -102,14 +122,14 @@ def main() -> None:
     # Each call goes through the registry wrapper, whose
     # scope.release() drops the previous run's caches before the build
     # — run 2 never reads run 1's frames through Spark's CacheManager.
-    timings: dict[str, float] = {}
-    for name in qs:  # the FULL registry, registration order
-        best = float("inf")
+    runs: dict[str, list[float]] = {}
+    for name in names or qs:  # default: the FULL registry, registration order
+        runs[name] = []
         for _ in range(2):
             t0 = time.perf_counter()
             qs[name](spark, SF_DIR).write.mode("overwrite").format("noop").save()
-            best = min(best, time.perf_counter() - t0)
-        timings[name] = round(best, 3)
+            runs[name].append(round(time.perf_counter() - t0, 3))
+    timings = {name: min(times) for name, times in runs.items()}
 
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     payload = {
@@ -131,27 +151,31 @@ def main() -> None:
         "calibration_total_sec": round(
             sum(timings[n] for n in CALIBRATION if n in timings), 3
         ),
+        "runs": runs,
     }
-    # Self-persist every run (round 10, VERDICT r9 item 6): BENCH_r08's
-    # stored stdout kept only the last 2000 chars of the ~8 KB JSON
-    # line, which cost round 9 its round-over-round table.  Writing the
-    # full payload to docs/bench_runs/ from the bench itself makes a
-    # truncated capture recoverable.  Best-effort: the stdout contract
-    # (ONE JSON line) must survive an unwritable repo.
+    # Self-persist every full-registry run (round 10, VERDICT r9 item
+    # 6): BENCH_r08's stored stdout kept only the last 2000 chars of the
+    # ~8 KB JSON line, which cost round 9 its round-over-round table.
+    # Writing the full payload to docs/bench_runs/ from the bench itself
+    # makes a truncated capture recoverable; a named run's line is
+    # short.  Best-effort: the stdout contract (ONE JSON line) must
+    # survive an unwritable repo.
     try:
-        runs_dir = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "docs", "bench_runs")
-        os.makedirs(runs_dir, exist_ok=True)
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 0))
-        fname = f"bench_{time.strftime('%Y%m%dT%H%M%SZ', time.gmtime())}" \
-                f"_sf{sf}_c{cpus}.json"
-        with open(os.path.join(runs_dir, fname), "w") as fh:
-            json.dump(payload, fh, indent=1)
+        if not names:
+            runs_dir = os.path.join(
+                os.path.dirname(os.path.abspath(__file__)), "docs", "bench_runs")
+            os.makedirs(runs_dir, exist_ok=True)
+            cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 0))
+            fname = f"bench_{time.strftime('%Y%m%dT%H%M%SZ', time.gmtime())}" \
+                    f"_sf{sf}_c{cpus}.json"
+            with open(os.path.join(runs_dir, fname), "w") as fh:
+                json.dump(payload, fh, indent=1)
     except OSError as exc:
         print(f"bench: run-log write skipped ({exc})", file=sys.stderr)
     print(json.dumps(payload))
     spark.stop()
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    raise SystemExit(main(sys.argv[1:]))

@@ -5,7 +5,7 @@ surface, reference Dockerfile:13 CMD).
     python -m etl_pipe_spark run <query> [--sf-dir DIR] [--limit N]
     python -m etl_pipe_spark explain <query> [--sf-dir DIR]
     python -m etl_pipe_spark cycle --target DIR [--sf-dir DIR] [--loops N] [--interval S]
-    python -m etl_pipe_spark bench
+    python -m etl_pipe_spark bench [query ...]
 """
 
 from __future__ import annotations
@@ -35,16 +35,17 @@ def main(argv: list[str] | None = None) -> int:
     p_cyc.add_argument("--loops", type=int, default=1)
     p_cyc.add_argument("--interval", type=float, default=0.0)
 
-    sub.add_parser("bench", help="run the benchmark harness")
+    p_bench = sub.add_parser("bench", help="run the benchmark harness")
+    p_bench.add_argument("names", nargs="*", help="queries to time (default: all)")
 
     args = ap.parse_args(argv)
 
     if args.cmd == "bench":
         import bench  # repo-root script
 
-        bench.main()
-        return 0
+        return bench.main(args.names)
 
+    from .operators import scope
     from .plans.catalog import queries
     from .session import get_spark
 
@@ -63,11 +64,14 @@ def main(argv: list[str] | None = None) -> int:
             print(f"unknown query {args.query!r}; see `list`", file=sys.stderr)
             return 2
         spark = get_spark(f"etl-pipe-{args.cmd}")
-        df = qs[args.query](spark, args.sf_dir)
         if args.cmd == "explain":
+            # built under inspect(): a checkpointing query shows its
+            # operator tree, not a scan of the checkpointed RDD
+            with scope.inspect():
+                df = qs[args.query](spark, args.sf_dir)
             df.explain("formatted")
         else:
-            df.show(args.limit, truncate=False)
+            qs[args.query](spark, args.sf_dir).show(args.limit, truncate=False)
         spark.stop()
         return 0
 

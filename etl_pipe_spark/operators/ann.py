@@ -53,12 +53,13 @@ def _batch_matrix(batch: pa.RecordBatch, vec_col: str) -> np.ndarray:
     5.7 s conversion-only) — the Arrow transfer itself was never the
     cost, the per-row ndarray boxing was.  Assumes fixed-length,
     null-free vectors (embeddings are); reshape fails loudly otherwise.
+    A zero-row batch gives a (0, 0) matrix.
     """
     col = batch.column(batch.schema.get_field_index(vec_col))
     return (
         col.flatten().to_numpy(zero_copy_only=False)
         .astype(np.float64, copy=False)
-        .reshape(len(col), -1)
+        .reshape(len(col), -1 if len(col) else 0)
     )
 
 

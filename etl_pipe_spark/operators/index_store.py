@@ -88,9 +88,6 @@ _ROWS_PER_CODE_FILE = 250_000
 _POINTER = "COMMITTED"
 _QUANTIZER = "quantizer.npz"
 
-ConcurrentAppendError = commit.CommitConflict
-
-
 def _n_code_files(n_rows: int, floor: int = 8) -> int:
     return max(floor, -(-int(n_rows) // _ROWS_PER_CODE_FILE))
 

@@ -44,18 +44,9 @@ except ImportError:  # pragma: no cover
     import cloudpickle as _cp
 _cp.register_pickle_by_value(sys.modules[__name__])
 
+from .ann import _batch_matrix
+
 GRAM_Q = 1024.0  # 2^10 fixed-point input scale; see module docstring
-
-
-def _batch_matrix(batch: pa.RecordBatch, vec_col: str) -> np.ndarray:
-    """Arrow list column -> (n, dim) float64 matrix, no per-row boxing
-    (the flatten-and-reshape fast path measured in operators/ann.py)."""
-    col = batch.column(batch.schema.get_field_index(vec_col))
-    return (
-        col.flatten().to_numpy(zero_copy_only=False)
-        .astype(np.float64, copy=False)
-        .reshape(len(col), -1)
-    )
 
 
 def gram_matrix(emb: DataFrame, vec_col: str = "v") -> DataFrame:
@@ -114,18 +105,31 @@ class PCAKResult(NamedTuple):
 
 
 def pca_top_k(emb: DataFrame, k: int, vec_col: str = "v") -> PCAKResult:
-    """Distributed PCA, top-K components — the next thing a real
-    embedding pipeline asks of PCA (whitening / dimensionality
-    reduction ahead of clustering or ANN).
+    """Distributed PCA, top-K components, by the tall-skinny
+    covariance route — what a real embedding pipeline asks of PCA
+    (whitening / dimensionality reduction ahead of clustering or ANN).
 
-    SAME cost shape as the top-1 fit: ``eigh`` on the driver already
-    factorizes the full dim x dim Gram (no deflation loop — that
-    would only make sense if dim itself were huge, and then the
-    covariance route is the wrong algorithm), so top-K costs ONE Gram
-    pass + ONE projection pass regardless of K: the projection kernel
-    right-multiplies each quantized Arrow batch by the (dim, k)
-    component matrix and emits k partial sums of squares per batch —
-    shuffle volume batches x k, corpus-size independent.
+    One map-side pass builds G = Q^T Q (``gram_matrix`` — batches x
+    dim^2 shuffle at any corpus size); ``eigh`` on the driver
+    factorizes the full dim x dim Gram (the broadcast-dim pattern, the
+    footprint class of the k-means centroid table in operators/ann.py;
+    no deflation loop — that would only make sense if dim itself were
+    huge, and then the covariance route is the wrong algorithm), so
+    top-K costs ONE Gram pass + ONE projection pass regardless of K:
+    the projection kernel right-multiplies each quantized Arrow batch
+    by the (dim, k) component matrix and emits k partial sums of
+    squares per batch — shuffle volume batches x k, corpus-size
+    independent.
+
+    Exactness/determinism: G's entries are exact int64 (gram_matrix's
+    fixed-point contract), so the eigenproblem input is bit-identical
+    under any partitioning.  int64 -> float64 for eigh is lossless
+    while |gram| < 2^53 — at the 2^10 lattice that is ~2^31 corpus
+    rows per unit-variance coordinate; beyond that the eigensolve (NOT
+    the hash-checked trace) sees ~1e-16 relative rounding, far inside
+    eigh's own backward error.  The float projection partials are
+    summed in partition order, so ``proj_sumsq`` matches ``lams`` to
+    ~1e-12 relative, not bit for bit.
 
     Sign convention per component: first coordinate with magnitude
     above 1e-12 made positive (reproducible under eigh's sign
@@ -181,52 +185,3 @@ def pca_top_k(emb: DataFrame, k: int, vec_col: str = "v") -> PCAKResult:
     n = int(sum(int(r["cnt"]) for r in agg))
     return PCAKResult(V, lams, trace, max_diag, n, proj)
 
-
-class PCAResult(NamedTuple):
-    """pca_top_component result: the unit top eigenvector, its Rayleigh
-    quotient lambda-hat = v^T G v (quantized-lattice scale), the exact
-    integer trace and max diagonal of G, the corpus row count, and the
-    DISTRIBUTED sum of squared projections Sigma (q . v)^2 — computed
-    by a second corpus pass, so comparing it to lambda-hat ties the
-    projection kernel to the driver-side eigendecomposition."""
-
-    component: np.ndarray
-    lam1: float
-    trace: int
-    max_diag: int
-    n: int
-    proj_sumsq: float
-
-
-def pca_top_component(emb: DataFrame, vec_col: str = "v") -> PCAResult:
-    """Distributed PCA, the tall-skinny covariance route: one
-    map-side pass builds G = Q^T Q (``gram_matrix`` — batches x dim^2
-    shuffle at any corpus size), the dim x dim eigendecomposition runs
-    on the driver (the broadcast-dim pattern: dim^2 floats, the same
-    footprint class as the k-means centroid table in operators/ann.py),
-    and a second linear pass projects every vector onto the top
-    component.
-
-    Exactness/determinism: G's entries are exact int64 (gram_matrix's
-    fixed-point contract), so the eigenproblem input is bit-identical
-    under any partitioning; the eigenvector's sign is pinned (first
-    coordinate above 1e-12 made positive) so the fit is reproducible.
-    int64 -> float64 for eigh is lossless while |gram| < 2^53 — at the
-    2^10 lattice that is ~2^31 corpus rows per unit-variance
-    coordinate; beyond that the eigensolve (NOT the hash-checked
-    trace) sees ~1e-16 relative rounding, which is far inside eigh's
-    own backward error.
-
-    The projection pass emits one (sum of squares, count) partial per
-    Arrow batch; the float partial sum is order-dependent at ~1e-12
-    relative — callers comparing it to lambda-hat must use a
-    tolerance, which is exactly what the registered query's
-    invariant boolean does.
-
-    Since round 6 this is the k=1 specialization of :func:`pca_top_k`
-    (identical passes and conventions), kept for its scalar-shaped
-    result and existing call sites.
-    """
-    r = pca_top_k(emb, 1, vec_col)
-    return PCAResult(r.components[:, 0], float(r.lams[0]), r.trace,
-                     r.max_diag, r.n, float(r.proj_sumsq[0]))

@@ -199,9 +199,6 @@ def scd2_apply_versions(
     )
 
 
-ConcurrentWriteError = commit.CommitConflict
-
-
 def _ntz(value: dt.datetime):
     """``value`` as a TIMESTAMP_NTZ literal, exact to the microsecond
     and independent of the session time zone."""
@@ -332,8 +329,6 @@ class ParquetMergeSink:
         """The committed snapshot's version, 0 before the first commit."""
         snap = self.current_snapshot()
         return int(snap.rsplit("-", 1)[1]) if snap else 0
-
-    _version = committed_version  # its earlier private name, still called
 
     def _manifest(self, snap: str) -> list[dict]:
         """The data files of committed snapshot ``snap``."""

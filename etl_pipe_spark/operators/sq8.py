@@ -37,19 +37,12 @@ except ImportError:  # pragma: no cover
     import cloudpickle as _cp
 _cp.register_pickle_by_value(sys.modules[__name__])
 
+from .ann import _batch_matrix, column_minmax_count
+
 Q_LEVELS = 255
 
 _ENCODE_SCHEMA = "vec_id bigint, codes binary"
 _CAND_SCHEMA = "query_id bigint, neighbor_id bigint, score double"
-
-
-def _batch_matrix(batch: pa.RecordBatch, vec_col: str) -> np.ndarray:
-    """Arrow list column -> (n, dim) float64 matrix via the contiguous
-    values buffer (same zero-object path as operators/ann.py)."""
-    col = batch.column(batch.schema.get_field_index(vec_col))
-    flat = col.flatten()
-    dim = len(flat) // len(col) if len(col) else 0
-    return np.asarray(flat, dtype=np.float64).reshape(len(col), dim)
 
 
 def sq8_stats(emb: DataFrame, vec_col: str = "v",
@@ -68,8 +61,6 @@ def sq8_stats(emb: DataFrame, vec_col: str = "v",
     the SAME pass (callers previously paid a separate count() scan),
     as (lo, scale, n).
     """
-    from .ann import column_minmax_count
-
     lo, hi, n = column_minmax_count(emb, vec_col=vec_col)
     scale = (hi - lo) / Q_LEVELS
     if with_count:

@@ -61,7 +61,7 @@ _PLAN_MODULES = (
 # periodically.  Out-of-window queries stay covered by the local oracle
 # parity suite (tests/test_oracle_parity.py runs ALL registered
 # queries) and by the per-round driver-format artifact
-# (tools/local_correctness.py -> docs/CORRECTNESS_local_r{N}.json —
+# (tools/check_queries.py --json -> docs/CORRECTNESS_local_r{N}.json —
 # auditable row/schema/hash flags for every query, demoted included).
 # Exactly 116 names: 166 registered − 116 demoted = 50 in-window
 # (test_registry_window.py pins the arithmetic and the flagship set).

@@ -105,8 +105,8 @@ def chunked_hour_spine(span: DataFrame) -> DataFrame:
     offset from every later day's buckets, diverging from the
     single-sequence semantics for minute-grain spans.  The registered
     gap-fill query truncates its span to whole hours, which is why
-    neither surfaced until the extreme-span sweep
-    (tools/spine_scaling.py) drove the operator's general contract.
+    neither surfaced until an extreme-span sweep drove the operator's
+    general contract (tests/test_timeseries_ops.py pins those spans).
     Offset-aligned chunks make the identity unconditional: chunk k
     covers hours [24k, 24k+23] past ``lo``, every chunk start is
     <= ``hi`` by construction of the chunk count, and the union is

@@ -201,8 +201,8 @@ def compare_pandas(spark_df, con, sql: str, name: str = "?") -> None:
     orc_roundtrip_ingest driver red for two rounds — this path sees
     the same float64-vs-Decimal divergence the driver hashes.
 
-    Re-executes both sides; intended for tools/local_correctness.py
-    (once per round), not the per-test hot path."""
+    Re-executes both sides; intended for tools/check_queries.py, not
+    the per-test hot path."""
     spdf = spark_df.toPandas()
     dkdf = con.execute(sql).df()
     s_cols, d_cols = sorted(spdf.columns), sorted(dkdf.columns)

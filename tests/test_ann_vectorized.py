@@ -8,9 +8,11 @@ total, and the scaled entrypoints must keep the output contracts.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import functions as F
 
-from etl_pipe_spark.operators.ann import centroid_matrix, ivf_assign_vectorized
+from etl_pipe_spark.operators.ann import (
+    _batch_matrix, centroid_matrix, ivf_assign_vectorized)
 from etl_pipe_spark.plans.dedup_plans import (
     N_CENTROIDS,
     _emb_with_norms,
@@ -194,3 +196,14 @@ def test_blas_semantic_dups_zero_vector_and_copies_edge(spark):
     flags = dict(blas)
     assert flags[1] is False, "identical zero vectors must not be dups"
     assert flags[3] is True, "identical nonzero copies must be dups"
+
+
+def test_batch_matrix_of_a_zero_row_batch_is_0_by_0():
+    """The one Arrow-to-matrix helper (ann, linalg, pq and sq8 share it):
+    rows x dim for a non-empty batch, (0, 0) for an empty one."""
+    vecs = pa.list_(pa.float32())
+    empty = pa.RecordBatch.from_arrays([pa.array([], type=vecs)], ["v"])
+    assert _batch_matrix(empty, "v").shape == (0, 0)
+    two = pa.RecordBatch.from_arrays([pa.array([[1, 2, 3], [4, 5, 6]], type=vecs)], ["v"])
+    m = _batch_matrix(two, "v")
+    assert m.dtype == "float64" and m.tolist() == [[1, 2, 3], [4, 5, 6]]

@@ -12,7 +12,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from etl_pipe_spark.operators import pq as PQ
+from etl_pipe_spark.operators import commit, pq as PQ
 from etl_pipe_spark.operators.ann import centroid_matrix, ivf_assign_vectorized
 from etl_pipe_spark.operators.index_store import (
     append_to_ivfpq_index, build_ivfpq_index, load_index_meta,
@@ -312,7 +312,7 @@ def test_lsh_torn_append_invisible_then_recovered(
 
     # the crashed claimant's slot fences a second appender...
     monkeypatch.setattr(IS, "_commit_epoch", real_commit)
-    with pytest.raises(IS.ConcurrentAppendError):
+    with pytest.raises(commit.CommitConflict):
         IS.append_to_lsh_index(spark, batch, path)
     # ...until the claim is stale; the retry must not duplicate rows
     backdate_epoch_claims(path)
@@ -402,7 +402,7 @@ def test_ivfpq_torn_append_invisible_then_recovered(
     assert got1 == got0
 
     monkeypatch.setattr(IS, "_commit_epoch", real_commit)
-    with pytest.raises(IS.ConcurrentAppendError):
+    with pytest.raises(commit.CommitConflict):
         IS.append_to_ivfpq_index(spark, batch, path)
     backdate_epoch_claims(path)
     out = IS.append_to_ivfpq_index(spark, batch, path)
@@ -425,7 +425,7 @@ def test_sq8_concurrent_append_excluded(spark, emb, tmp_path_factory):
     base = emb.filter(F.col("vec_id") == 0).first()
     batch = spark.createDataFrame([(10_000_000, list(base["v"]))],
                                   "vec_id bigint, v array<double>")
-    with pytest.raises(IS.ConcurrentAppendError):
+    with pytest.raises(commit.CommitConflict):
         IS.append_to_sq8_index(spark, batch, path)
     assert not os.path.exists(f"{path}/codes/epoch=1")  # nothing written
     assert IS.load_index_meta(spark, path)["epoch"] == 0
@@ -722,7 +722,7 @@ def test_bq_torn_append_invisible_then_recovered(
     assert got1 == got0
 
     monkeypatch.setattr(IS, "_commit_epoch", real_commit)
-    with pytest.raises(IS.ConcurrentAppendError):
+    with pytest.raises(commit.CommitConflict):
         IS.append_to_bq_index(spark, batch, path)
     backdate_epoch_claims(path)
     out = IS.append_to_bq_index(spark, batch, path)

@@ -11,7 +11,7 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from etl_pipe_spark.operators import dedup as DD
-from etl_pipe_spark.operators.linalg import pca_top_component
+from etl_pipe_spark.operators.linalg import pca_top_k
 from etl_pipe_spark.operators.zorder import morton32
 from etl_pipe_spark.plans.dedup_plans import _spread
 from etl_pipe_spark.plans.layout_plans import (
@@ -63,12 +63,13 @@ def test_zorder_prunes_strictly_more_bins_than_linear(spark, sf_dir):
 def test_pca_component_invariants(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings").select(
         F.col("embedding").cast("array<double>").alias("v"))
-    res = pca_top_component(emb)
-    v = res.component
+    res = pca_top_k(emb, 1)
+    v, lam1 = res.components[:, 0], float(res.lams[0])
+    proj_sumsq = float(res.proj_sumsq[0])
     assert abs(float(v @ v) - 1.0) < 1e-9
-    assert res.lam1 >= res.max_diag * (1 - 1e-9) - 1e-6
-    assert res.lam1 <= res.trace * (1 + 1e-12) + 1e-6
-    assert abs(res.proj_sumsq - res.lam1) / max(res.lam1, 1.0) < 1e-9
+    assert lam1 >= res.max_diag * (1 - 1e-9) - 1e-6
+    assert lam1 <= res.trace * (1 + 1e-12) + 1e-6
+    assert abs(proj_sumsq - lam1) / max(lam1, 1.0) < 1e-9
     assert res.n == emb.count()
     # deterministic sign pin: first non-tiny coordinate is positive
     nz = np.flatnonzero(np.abs(v) > 1e-12)
@@ -80,7 +81,7 @@ def test_pca_top_k_invariants_and_numpy_agreement(spark, sf_dir):
     projections match the Rayleigh quotients, and — the exactness
     teeth — component-by-component agreement with a sequential numpy
     PCA over the same quantized lattice."""
-    from etl_pipe_spark.operators.linalg import GRAM_Q, pca_top_k
+    from etl_pipe_spark.operators.linalg import GRAM_Q
 
     emb = load_table(spark, sf_dir, "embeddings").select(
         F.col("embedding").cast("array<double>").alias("v"))

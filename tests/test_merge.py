@@ -181,12 +181,12 @@ def test_sink_vacuum_retention(spark, tmp_path):
 def test_sink_concurrent_writer_loses_cas_before_writing_data(spark, tmp_path):
     """Two writers that both read snapshot N must not both commit N+1:
     the CAS on the snapshot directory makes the second claimant fail
-    with ConcurrentWriteError BEFORE any data lands, so its re-derived
+    with CommitConflict BEFORE any data lands, so its re-derived
     retry sees the winner's rows (lost-update prevention)."""
     import os
 
-    from etl_pipe_spark.operators.merge import (
-        ConcurrentWriteError, ParquetMergeSink)
+    from etl_pipe_spark.operators.commit import CommitConflict
+    from etl_pipe_spark.operators.merge import ParquetMergeSink
 
     sink_a = ParquetMergeSink(spark, str(tmp_path / "t"), "id long, v string")
     sink_b = ParquetMergeSink(spark, str(tmp_path / "t"), "id long, v string")
@@ -196,7 +196,7 @@ def test_sink_concurrent_writer_loses_cas_before_writing_data(spark, tmp_path):
     os.mkdir(tmp_path / "t" / "snapshot-00000002")
     # ...so A's write of v2 must refuse, leaving v1 committed intact.
     import pytest as _pytest
-    with _pytest.raises(ConcurrentWriteError):
+    with _pytest.raises(CommitConflict):
         sink_a.write(spark.createDataFrame([(2, "b")], "id long, v string"))
     assert sink_a.current_snapshot() == "snapshot-00000001"
     assert [(r.id, r.v) for r in sink_a.read().collect()] == [(1, "a")]
@@ -225,12 +225,12 @@ def test_sink_stale_orphan_claim_is_reclaimed(spark, tmp_path):
 def test_sink_committed_snapshot_is_never_reclaimed(spark, tmp_path):
     """The stale-claim path must only fire for UNCOMMITTED claims: a
     slot the pointer already advanced to is a committed table version
-    and raises ConcurrentWriteError regardless of age."""
+    and raises CommitConflict regardless of age."""
     import os
 
     from etl_pipe_spark.operators import commit
-    from etl_pipe_spark.operators.merge import (
-        ConcurrentWriteError, ParquetMergeSink)
+    from etl_pipe_spark.operators.commit import CommitConflict
+    from etl_pipe_spark.operators.merge import ParquetMergeSink
 
     sink = ParquetMergeSink(spark, str(tmp_path / "t"), "id long, v string")
     sink.write(spark.createDataFrame([(1, "a")], "id long, v string"))
@@ -240,8 +240,8 @@ def test_sink_committed_snapshot_is_never_reclaimed(spark, tmp_path):
     # targets v1 — the slot the pointer has already advanced to.  The
     # claim re-reads the pointer and must refuse even at age > stale.
     import pytest as _pytest
-    with _pytest.raises(ConcurrentWriteError):
-        commit.claim(slot, 1, sink._version)
+    with _pytest.raises(CommitConflict):
+        commit.claim(slot, 1, sink.committed_version)
     assert [(r.id, r.v) for r in sink.read().collect()] == [(1, "a")]
 
 

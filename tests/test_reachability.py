@@ -32,6 +32,8 @@ PUBLIC_API = {
                               "append_to_bq_index", "compact_bq_index"},
     # reference for the Arrow winnowing kernel (tests/test_extensions.py)
     "plans.extensions": {"winnowing_fingerprints_expr"},
+    # reference for the Arrow LSH probe kernel (tests/test_dedup_kernel.py)
+    "operators.dedup": {"lsh_probe_pairs"},
 }
 
 

@@ -9,8 +9,8 @@ import pytest
 
 from etl_pipe_spark.operators import scope
 
-_PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                    "etl_pipe_spark")
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_PKG = os.path.join(_REPO, "etl_pipe_spark")
 
 
 def _cache_is_empty(spark) -> bool:
@@ -42,19 +42,20 @@ def test_release_empties_tracked_list(spark):
 def test_cache_lifecycle_has_one_home():
     """Only operators/scope.py persists or releases frames (after
     test_commit_protocol_has_one_home): a hand-paired persist/unpersist
-    anywhere else in the package fails here."""
+    anywhere else in the package, in ``tools/`` or in ``bench.py``
+    fails here."""
     primitive = re.compile(r"\.persist\(|\.cache\(\)|\.unpersist\(")
     home = os.path.join(_PKG, "operators", "scope.py")
+    paths = [os.path.join(_REPO, "bench.py")]
+    for top in (_PKG, os.path.join(_REPO, "tools")):
+        for root, _, files in os.walk(top):
+            paths += [os.path.join(root, name) for name in files if name.endswith(".py")]
     found = []
-    for root, _, files in os.walk(_PKG):
-        for name in files:
-            if not name.endswith(".py"):
-                continue
-            full = os.path.join(root, name)
-            with open(full) as f:
-                for n, line in enumerate(f, 1):
-                    if primitive.search(line) and full != home:
-                        found.append(f"{os.path.relpath(full, _PKG)}:{n}: {line.strip()}")
+    for full in paths:
+        with open(full) as f:
+            for n, line in enumerate(f, 1):
+                if primitive.search(line) and full != home:
+                    found.append(f"{os.path.relpath(full, _REPO)}:{n}: {line.strip()}")
     assert found == []
     with open(home) as f:
         text = f.read()

@@ -36,7 +36,7 @@ _SPANS = [
     # calendar-day-truncated chunking with inverted sequence
     # boundaries (greatest(day, lo) > day + 23h on the first chunk),
     # and any sub-hour lo offset silently mis-aligned later days'
-    # buckets — caught by tools/spine_scaling.py, pinned here
+    # buckets — caught by an extreme-span sweep, pinned here
     (7, dt.datetime(2024, 1, 1, 23, 1), dt.datetime(2024, 1, 9, 4, 50)),
     (8, dt.datetime(2024, 1, 1, 0, 37), dt.datetime(2024, 1, 3, 22, 59)),
     # sub-hour total span
