@@ -4,8 +4,7 @@ Three stores keep state that must survive a crash: the merge sink
 (``ParquetMergeSink``, ``snapshot-N`` directories + a ``CURRENT``
 pointer + ``_meta_*`` commit metadata, whose ``_meta_manifest`` names
 the snapshot's data files: the ones in its own directory and the
-unchanged cold files it inherits from older ``snapshot-N``
-directories), the persisted ANN/LSH indexes
+files it inherits unchanged from older ``snapshot-N`` directories), the persisted ANN/LSH indexes
 (``index_store``, ``<table>/epoch=N`` data + ``_claim-epoch-N`` claims +
 a ``COMMITTED`` JSON pointer carrying the meta) and the watermark store
 (``WatermarkStore``, ``state-N`` JSON files + a ``CURRENT`` pointer).

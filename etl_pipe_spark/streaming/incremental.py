@@ -13,21 +13,22 @@ reference pipeline.py:41-49), reads from its own watermark minus the
 reference runs its flows one after another; here they run
 concurrently in the driver, still one writer per sink.
 
-That bound, the flow's *horizon*, also splits each history sink
-(``fact_event_log``, ``user_versions``) into a hot region the batch can
-change and cold files it cannot, so a cycle reads and rewrites only the
-hot region (operators/merge.py ``ParquetMergeSink``).  ``dim_users``
-holds one row per user and is rewritten whole.
+Each sink declares how its rows resolve (operators/merge.py
+``ParquetMergeSink``), so a flow never reads its sink: it appends its
+batch's per-key winners as one delta file, and the sink resolves base
+plus deltas on read and folds the deltas into the base every
+``merge.COMPACT_AT`` files.  The lower bound of a flow's batch, its
+*horizon* (the watermark minus the overlap), also lets a fold of a
+history sink (``fact_event_log``, ``user_versions``) set aside the rows
+no later batch can touch as cold files, which reads return as they
+are.
 
-A flow merges a small input in ONE Spark task.  Its input is the hot
-region plus the ``events`` rows its scan decodes, both counted without
-a Spark job: the sink's manifest holds the hot files' row counts, and
-the source's parquet footer tells which row groups the watermark
-predicate cannot prune (``sources.catalog.rows_since``).  Below
-:data:`ONE_TASK_BELOW` rows the flow coalesces the hot region and the
-batch to one partition each, which meets every distribution the merge
-needs, and hints the event log's anti-join to a sort-merge join instead
-of a broadcast of the hot region.  The plan then has no Exchange and no
+A flow merges a small batch in ONE Spark task.  Its size is the
+``events`` rows its scan decodes, counted without a Spark job from the
+source's parquet footer: the row groups the watermark predicate cannot
+prune (``sources.catalog.rows_since``).  Below :data:`ONE_TASK_BELOW`
+rows the flow coalesces the batch to one partition, which meets every
+distribution its resolution needs, so the plan has no Exchange and no
 AQE stage boundary: the flow is one job of one task.  At or above the
 constant, or when the source is not a local parquet file, the flow
 keeps the partitioned plan.
@@ -44,10 +45,10 @@ from ..operators.merge import ParquetMergeSink, insert_if_absent, scd2_apply_ver
 from ..sources.catalog import events_since, load_table, rows_since
 from .watermark import WatermarkStore
 
-# Merge input (hot-region rows + unpruned source rows) below which a flow
-# runs as one task.  A sweep on 4 cores of the first and the second cycle
-# over an N-row source (CHANGES.md): the one-task plan was at par or
-# faster up to N = 10^6, mixed at 2 * 10^6 and slower from 3 * 10^6.
+# Unpruned source rows below which a flow runs as one task.  A sweep on
+# 4 cores of the first and the second cycle over an N-row source
+# (CHANGES.md): the one-task plan was at par or faster up to N = 10^6,
+# mixed at 2 * 10^6 and slower from 3 * 10^6.
 ONE_TASK_BELOW = 1_000_000
 
 _DIM_USERS_DDL = (
@@ -77,12 +78,25 @@ class IncrementalPipeline:
         self.spark = spark
         self.source_sf_dir = source_sf_dir
         self.store = WatermarkStore(spark, f"{target_dir}/etl_watermark")
+        # each resolution looks its merge up by this module's name at
+        # call time, so a wrapper set on that name (perfbench's tracer)
+        # sees every call
         self.sinks = {
-            "dim_users": ParquetMergeSink(spark, f"{target_dir}/dim_users", _DIM_USERS_DDL),
-            "fact_event_log": ParquetMergeSink(spark, f"{target_dir}/fact_event_log",
-                                               _EVENT_LOG_DDL, freeze_col="event_time"),
-            "user_versions": ParquetMergeSink(spark, f"{target_dir}/user_versions",
-                                              _VERSIONS_DDL, freeze_col="version_ended_at"),
+            "dim_users": ParquetMergeSink(
+                spark, f"{target_dir}/dim_users", _DIM_USERS_DDL,
+                resolve=lambda rows: upsert(None, rows, keys=["user_id"],
+                                            order_col="updated_at",
+                                            tiebreakers=["last_event_id"])),
+            "fact_event_log": ParquetMergeSink(
+                spark, f"{target_dir}/fact_event_log", _EVENT_LOG_DDL,
+                freeze_col="event_time",
+                resolve=lambda rows: insert_if_absent(None, rows, ["source_key"])),
+            "user_versions": ParquetMergeSink(
+                spark, f"{target_dir}/user_versions", _VERSIONS_DDL,
+                freeze_col="version_ended_at",
+                resolve=lambda rows: scd2_apply_versions(
+                    None, rows, keys=["user_id"], ts_col="version_started_at",
+                    tiebreakers=["event_id"])),
         }
 
     # -- extract ---------------------------------------------------------
@@ -100,61 +114,49 @@ class IncrementalPipeline:
             batch = batch.filter(F.col("ts") < F.lit(now_ts))
         return batch
 
-    # -- flows -----------------------------------------------------------
-    def _flow_dim_users(self, existing: DataFrame, batch: DataFrame) -> DataFrame:
-        updates = batch.select(
+    # -- flows: a batch as its sink's rows -------------------------------
+    def _flow_dim_users(self, batch: DataFrame) -> DataFrame:
+        return batch.select(
             F.col("user_id"),
             F.col("event_id").alias("last_event_id"),
             F.col("event_type").alias("last_event_type"),
             F.col("value").alias("last_value"),
             F.col("ts").alias("updated_at"),
         )
-        return upsert(
-            existing, updates,
-            keys=["user_id"], order_col="updated_at",
-            tiebreakers=["last_event_id"],
-        )
 
-    def _flow_event_log(self, existing: DataFrame, batch: DataFrame) -> DataFrame:
-        updates = batch.select(
+    def _flow_event_log(self, batch: DataFrame) -> DataFrame:
+        return batch.select(
             event_source_key().alias("source_key"),
             F.col("ts").alias("event_time"),
             "user_id",
             "event_type",
             F.col("value").alias("amount"),
         )
-        return insert_if_absent(existing, updates, ["source_key"])
 
-    def _flow_versions(self, existing: DataFrame, batch: DataFrame) -> DataFrame:
-        updates = batch.select(
+    def _flow_versions(self, batch: DataFrame) -> DataFrame:
+        return batch.select(
             "user_id",
             F.col("ts").alias("version_started_at"),
             "event_id",
             "value",
         )
-        return scd2_apply_versions(
-            existing, updates,
-            keys=["user_id"], ts_col="version_started_at",
-            tiebreakers=["event_id"],
-        )
 
     # -- cycle -----------------------------------------------------------
-    def _fits_one_task(self, sink: ParquetMergeSink, horizon) -> bool:
-        """Whether the flow's merge input is known and below
-        :data:`ONE_TASK_BELOW` rows; reads the manifest and the source's
-        parquet footer, never a data page, and launches no Spark job."""
-        hot = sink.read_rows(horizon)
+    def _fits_one_task(self, horizon) -> bool:
+        """Whether the rows a flow's scan decodes are known and below
+        :data:`ONE_TASK_BELOW`; reads the source's parquet footer, never
+        a data page, and launches no Spark job."""
         source = rows_since(self.source_sf_dir, "events", horizon)
-        return hot is not None and source is not None and hot + source < ONE_TASK_BELOW
+        return source is not None and source < ONE_TASK_BELOW
 
     def _run_flow(self, name: str, flow, events: DataFrame, now_ts) -> int:
-        """One flow: merge its batch into its sink's hot region, then
-        advance its watermark.  Returns the batch rows merged, or -1 if
-        the flow failed — its watermark then stays put (crash-safe
-        restart semantics, reference ST4)."""
+        """One flow: merge its batch into its sink, then advance its
+        watermark.  Returns the batch rows merged, or -1 if the flow
+        failed — its watermark then stays put (crash-safe restart
+        semantics, reference ST4)."""
         try:
-            # read once: the batch filter and the sink's hot/cold split
-            # must agree on it (merge.ParquetMergeSink's exactness)
+            # read once: the batch filter and the sink's cold split must
+            # agree on it (merge.ParquetMergeSink's exactness)
             horizon = self.store.get(name)
             # observe() rides the sink write's own job (reference S10's
             # row counters via the metrics API) — no extra pass over
@@ -163,18 +165,10 @@ class IncrementalPipeline:
             batch = self._batch(events, horizon, now_ts).observe(
                 obs, F.max("ts").alias("mx"), F.count(F.lit(1)).alias("n")
             )
-            sink = self.sinks[name]
-            base = sink.committed_version()  # before the read: no lost update
-            existing = sink.read(horizon)
-            if self._fits_one_task(sink, horizon):
-                # one partition each meets every distribution the merge needs
-                existing, batch = existing.coalesce(1), batch.coalesce(1)
-                if flow == self._flow_event_log:
-                    # its anti-join would broadcast the hot region in a job
-                    # of its own; the hint rides the batch, which only the
-                    # join reads (the hot region is also a union branch)
-                    batch = batch.hint("merge")
-            sink.write(flow(existing, batch), horizon=horizon, read_version=base)
+            if self._fits_one_task(horizon):
+                # one partition meets every distribution the resolution needs
+                batch = batch.coalesce(1)
+            self.sinks[name].write(flow(batch), horizon=horizon)
             stats = obs.get
             self.store.advance(name, stats["mx"], stats["n"])
             return stats["n"]
@@ -187,8 +181,9 @@ class IncrementalPipeline:
 
         The flows run concurrently, one driver thread each, so a cycle
         costs its slowest flow rather than the sum of all three: each
-        flow reads only its own sink and watermark row and writes only
-        its own sink, and the watermark store serializes the advances.
+        flow reads only the source and its own watermark row and writes
+        only its own sink, and the watermark store serializes the
+        advances.
         Returns, per flow, the batch rows it merged: the source rows in
         [horizon, now_ts), overlap replays included, which is also what
         its watermark advance records.  Per-flow failure isolation: a

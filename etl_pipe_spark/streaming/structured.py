@@ -9,8 +9,8 @@ into an idempotent sink.  This module expresses it natively:
 * file-source ``readStream`` over the events table,
 * ``withWatermark("ts", "90 seconds")`` for stateful ops (ST2),
 * windowed aggregations (tumbling/sliding/session — ST5),
-* ``foreachBatch`` driving the same merge sinks as the batch layer
-  (ST3), with checkpointing for crash-safe restart (ST4).
+* ``foreachBatch`` appending to the same keyed merge sinks as the batch
+  layer (ST3), with checkpointing for crash-safe restart (ST4).
 
 Tests run with ``Trigger.AvailableNow`` so a finite parquet table
 drives the stream to completion; production would use
@@ -24,7 +24,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators import scope
-from ..operators.merge import ParquetMergeSink, insert_if_absent
+from ..operators.merge import ParquetMergeSink
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -82,17 +82,31 @@ def run_stream_to_table(spark: SparkSession, agg: DataFrame,
     return spark.table(name)
 
 
+def _require_keyed(sink: ParquetMergeSink) -> None:
+    """A sink fed micro-batches must declare how its rows resolve: a
+    plain sink would replace its table with each batch."""
+    if sink.resolve is None:
+        raise ValueError(f"sink {sink.path} declares no resolution: give it "
+                         "resolve=, e.g. one row per key")
+
+
 def stream_into_sink(spark: SparkSession, stream: DataFrame, sink: ParquetMergeSink,
                      checkpoint_dir: str, metrics: bool = False) -> None:
     """foreachBatch -> idempotent merge (ST3/ST4).
 
-    Each micro-batch is insert-if-absent merged on source_key, so
-    at-least-once redelivery after a restart is absorbed — the
-    reference's ON CONFLICT DO NOTHING recipe, with the checkpoint
-    replacing the watermark table.
+    Each micro-batch is appended to ``sink``, which must resolve to one
+    row per source_key (e.g. ``resolve=lambda rows:
+    insert_if_absent(None, rows, ["source_key"])``), so at-least-once
+    redelivery after a restart is absorbed — the reference's ON
+    CONFLICT DO NOTHING recipe, with the checkpoint replacing the
+    watermark table.  A batch appends without reading the table (a fold
+    every ``merge.COMPACT_AT`` files reads the files it merges), as the
+    watermark cycle's flows do.
     """
 
     from .metrics import attach_metrics_listener
+
+    _require_keyed(sink)
 
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
         from .incremental import event_source_key
@@ -104,8 +118,7 @@ def stream_into_sink(spark: SparkSession, stream: DataFrame, sink: ParquetMergeS
             "event_type",
             F.col("value").alias("amount"),
         )
-        base = sink.committed_version()
-        sink.write(insert_if_absent(sink.read(), updates, ["source_key"]), read_version=base)
+        sink.write(updates)
 
     listener = attach_metrics_listener(spark) if metrics else None
     try:
@@ -128,19 +141,18 @@ def stream_jsonl_ingest(
     sink: ParquetMergeSink,
     dead_dir: str,
     checkpoint_dir: str,
-    key_cols: list[str],
     max_files_per_trigger: int | None = None,
 ) -> None:
     """Streaming JSONL ingestion with a dead-letter quarantine — the
     production landing-zone topology: shards appear in ``src_dir``,
     each micro-batch parses under the explicit schema, malformed lines
-    land in ``dead_dir`` and parsed rows insert-if-absent merge into
-    the sink.
+    land in ``dead_dir`` and parsed rows are appended to the sink, which
+    must declare one row per key as its resolution.
 
     Exactly-once end to end under at-least-once redelivery:
 
-    * good rows — ``insert_if_absent`` on ``key_cols`` absorbs any
-      replayed batch (ON CONFLICT DO NOTHING semantics);
+    * good rows — the sink's per-key resolution absorbs any replayed
+      batch (ON CONFLICT DO NOTHING semantics);
     * dead letters — partitioned by a digest of the SOURCE FILE path
       and written with dynamic partition overwrite, so a redelivered
       file rewrites exactly its own partition no matter how redelivery
@@ -159,6 +171,7 @@ def stream_jsonl_ingest(
     """
     from ..sources.text_formats import CORRUPT_COL, _with_corrupt, quarantine
 
+    _require_keyed(sink)
     reader = (
         spark.readStream.schema(_with_corrupt(schema))
         .option("mode", "PERMISSIVE")
@@ -187,10 +200,7 @@ def stream_jsonl_ingest(
                 .mode("overwrite")
                 .json(dead_dir)
             )
-            base = sink.committed_version()
-            sink.write(insert_if_absent(
-                sink.read(), good.drop("src_path", "src_file"), key_cols),
-                read_version=base)
+            sink.write(good.drop("src_path", "src_file"))
 
     q = (
         stream.writeStream.foreachBatch(apply_batch)

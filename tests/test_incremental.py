@@ -381,11 +381,15 @@ def _manifest(sink, snap=None):
 _W = dt.datetime(2024, 1, 10, 5)  # the watermark after each test's first cycle
 
 
-def test_replay_straddling_the_horizon_matches_full_recompute(spark, tmp_path):
+def test_replay_straddling_the_horizon_matches_full_recompute(spark, tmp_path, monkeypatch):
     """The second cycle's batch starts at its horizon, the first cycle's
-    watermark minus 90 s, and replays the events between the two; rows
-    just below the horizon are cold and stay out of the rewrite.  Every
-    sink equals a full recompute after each cycle and after a replay."""
+    watermark minus 90 s, and replays the events between the two.  Every
+    commit folds here, so rows just below the horizon go to cold files.
+    Every sink equals a full recompute after each cycle and after a
+    replay."""
+    from etl_pipe_spark.operators import merge
+
+    monkeypatch.setattr(merge, "COMPACT_AT", 1)
     s = dt.timedelta(seconds=1)
     src = _events_source(tmp_path / "src", [
         (1, _W - 4 * 3600 * s, 1), (2, _W - 3 * 3600 * s, 1), (3, _W - 120 * s, 1),
@@ -425,17 +429,13 @@ def test_late_version_inside_the_overlap_closes_a_hot_version(spark, tmp_path):
     assert {(5, _W - 30 * s), (6, None), (2, _W - 45 * s), (7, _W)} <= versions
 
 
-def test_hourly_cycles_write_only_the_hot_region(spark, sf_dir, pipe):
+def test_hourly_cycles_append_only_their_batch(spark, sf_dir, pipe):
     """Seven hourly cycles at sf0.001.  After the first, each commit's own
-    files hold at most (users + the events since the previous horizon)
-    rows, cold files are inherited under their paths, every sink equals
-    a full recompute, and retention keeps exactly the snapshot
-    directories the current and previous manifests name."""
-    from etl_pipe_spark.operators.merge import KEEP_SNAPSHOTS
-
+    files hold at most the resolved batch, every earlier file is
+    inherited under its path, every sink equals a full recompute, and
+    retention keeps exactly the snapshot directories the current and
+    previous manifests name."""
     ev = load_table(spark, sf_dir, "events")
-    n_users = ev.select("user_id").distinct().count()
-    prev_horizon = None
     for hour in range(7):
         now = MID + dt.timedelta(hours=hour)
         horizon = {name: pipe.store.get(name) for name in pipe.sinks}
@@ -444,19 +444,16 @@ def test_hourly_cycles_write_only_the_hot_region(spark, sf_dir, pipe):
         assert all(v >= 0 for v in counts.values()), counts
         _assert_equals_full_recompute(spark, sf_dir, pipe, now)
         if hour == 0:
-            prev_horizon = horizon
             continue
         for name, sink in pipe.sinks.items():
             snap = sink.current_snapshot()
             manifest = _manifest(sink)
-            recent = ev.filter((F.col("ts") >= F.lit(prev_horizon[name]))
-                               & (F.col("ts") < F.lit(now))).count()
-            own = sum(e["rows"] for e in manifest if e["path"].startswith(snap + "/"))
-            assert own <= n_users + recent, (name, hour, own, recent)
-            inherited = [e for e in before[name] if sink._is_cold(e, horizon[name])]
-            assert all(e in manifest for e in inherited), name
-            if name != "dim_users" and hour >= 2:
-                assert inherited, name
+            batch = ev.filter((F.col("ts") >= F.lit(horizon[name]))
+                              & (F.col("ts") < F.lit(now))).count()
+            own = [e for e in manifest if e["path"].startswith(snap + "/")]
+            assert sum(e["rows"] for e in own) <= batch, (name, hour, own, batch)
+            assert all(e.get("delta") for e in own), name
+            assert manifest[:len(before[name])] == before[name], name
             # retention: the current and previous snapshots, and the
             # directories of the files their manifests name
             previous = f"snapshot-{int(snap.rsplit('-', 1)[1]) - 1:08d}"
@@ -464,9 +461,29 @@ def test_hourly_cycles_write_only_the_hot_region(spark, sf_dir, pipe):
             assert all(os.path.exists(os.path.join(sink.path, e["path"])) for e in named)
             dirs = {d for d in os.listdir(sink.path) if d.startswith("snapshot-")}
             assert dirs == {snap, previous} | {e["path"].split("/")[0] for e in named}, name
-            if hour > KEEP_SNAPSHOTS + 2 and name == "dim_users":
-                assert dirs == {snap, previous}
-        prev_horizon = horizon
+
+
+def test_second_cycle_writes_only_its_batch_after_a_large_first_cycle(spark, tmp_path):
+    """A first cycle over N rows, far more than an hour's batch, writes
+    them all; each commit of the second cycle then writes at most the
+    rows of its batch, overlap replays included, not the N rows again."""
+    start = dt.datetime(2024, 1, 1)
+    n = 3000
+    events = [(i, start + dt.timedelta(minutes=i), i % 40) for i in range(n)]
+    src = _events_source(tmp_path / "src", events)
+    pipe = IncrementalPipeline(spark, src, str(tmp_path / "target"))
+    first = start + dt.timedelta(minutes=n - 60)
+    assert all(v >= 0 for v in pipe.run_cycle(now_ts=first).values())
+    horizon = {name: pipe.store.get(name) for name in pipe.sinks}
+    second = first + dt.timedelta(hours=1)
+    counts = pipe.run_cycle(now_ts=second)
+    for name, sink in pipe.sinks.items():
+        batch = sum(1 for _, ts, _ in events if horizon[name] <= ts < second)
+        assert counts[name] == batch < n // 10, (name, counts)
+        snap = sink.current_snapshot()
+        own = sum(e["rows"] for e in _manifest(sink) if e["path"].startswith(snap + "/"))
+        assert own <= batch, (name, own, batch)
+    _assert_equals_full_recompute(spark, src, pipe, second)
 
 
 def _batch_rows(spark, src, since, now):
@@ -514,16 +531,21 @@ def test_rows_since_counts_the_row_groups_the_watermark_cannot_prune(tmp_path):
     assert catalog.rows_since(str(tmp_path / "bad"), "events", base) is None
 
 
-def _write_plans(pipe) -> dict[str, str]:
+def _write_plans(pipe, monkeypatch) -> dict[str, str]:
     """Record, per flow, the physical plan (AQE's initial plan, exchanges
     included) of the DataFrame its sink writes."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
     plans = {}
-    for name, sink in pipe.sinks.items():
-        def write(df, meta=None, horizon=None, read_version=None, _write=sink.write,
-                  _name=name):
-            plans[_name] = df._jdf.queryExecution().executedPlan().toString()
-            return _write(df, meta, horizon=horizon, read_version=read_version)
-        sink.write = write
+    parquet = DataFrameWriter.parquet
+
+    def record(writer, path, *args, **kwargs):
+        for name, sink in pipe.sinks.items():
+            if path.startswith(sink.path + os.sep):
+                plans[name] = writer._df._jdf.queryExecution().executedPlan().toString()
+        return parquet(writer, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", record)
     return plans
 
 
@@ -532,33 +554,37 @@ def _exchanges(plan: str) -> Counter:
 
 
 def test_small_merges_run_as_one_exchange_free_job_per_flow(
-        spark, sf_dir, pipe, jobs_launched):
-    """Below ONE_TASK_BELOW each flow's merge plan has no Exchange or
-    BroadcastExchange, and a warm cycle launches one job per flow; the
-    size signal launches none."""
+        spark, sf_dir, pipe, jobs_launched, monkeypatch):
+    """Below ONE_TASK_BELOW each flow's write plan has no Exchange or
+    BroadcastExchange and scans only the source, never its sink, and a
+    warm cycle launches one job per flow; the size signal launches
+    none."""
     pipe.run_cycle(now_ts=MID)
-    plans = _write_plans(pipe)
-    for name, sink in pipe.sinks.items():
-        fits, n = jobs_launched(pipe._fits_one_task, sink, pipe.store.get(name))
+    plans = _write_plans(pipe, monkeypatch)
+    for name in pipe.sinks:
+        fits, n = jobs_launched(pipe._fits_one_task, pipe.store.get(name))
         assert fits and n == 0, (name, fits, n)
     counts, n = jobs_launched(pipe.run_cycle, MID + dt.timedelta(hours=1))
     assert all(v >= 0 for v in counts.values()), counts
     assert n == len(pipe.sinks)
     assert {name: _exchanges(plan) for name, plan in plans.items()} == {
         name: Counter() for name in pipe.sinks}
+    for name, plan in plans.items():
+        assert plan.count("FileScan") == 1 and "events.parquet" in plan, name
+        assert "snapshot-" not in plan, name
 
 
 def test_large_merges_keep_the_partitioned_plan(spark, sf_dir, pipe, monkeypatch):
     """At or above ONE_TASK_BELOW (0 here) every flow keeps its
-    shuffle, and the event log's anti-join its broadcast."""
+    shuffle."""
     monkeypatch.setattr(incremental, "ONE_TASK_BELOW", 0)
     pipe.run_cycle(now_ts=MID)
-    plans = _write_plans(pipe)
+    plans = _write_plans(pipe, monkeypatch)
     counts = pipe.run_cycle(now_ts=MID + dt.timedelta(hours=1))
     assert all(v >= 0 for v in counts.values()), counts
     shapes = {name: _exchanges(plan) for name, plan in plans.items()}
+    assert set(shapes) == set(pipe.sinks), shapes
     assert all(shape["Exchange"] >= 1 for shape in shapes.values()), shapes
-    assert shapes["fact_event_log"]["BroadcastExchange"] == 1, shapes
 
 
 def test_a_source_of_unknown_size_takes_the_partitioned_plan(spark, sf_dir, tmp_path):
@@ -567,7 +593,7 @@ def test_a_source_of_unknown_size_takes_the_partitioned_plan(spark, sf_dir, tmp_
     pq.write_table(pq.read_table(f"{sf_dir}/events.parquet"),
                    src / "events.parquet" / "part-0.parquet")
     pipe = IncrementalPipeline(spark, str(src), str(tmp_path / "target"))
-    assert not any(pipe._fits_one_task(sink, DEFAULT_EPOCH) for sink in pipe.sinks.values())
+    assert not pipe._fits_one_task(DEFAULT_EPOCH)
 
 
 def _failed_flow_catch_up(spark, src, target, fits: list) -> IncrementalPipeline:

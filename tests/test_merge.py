@@ -341,13 +341,18 @@ def test_sink_stores_schema_and_counts_rows_without_spark_jobs(
 _LOG_DDL = "k string, t timestamp_ntz, v long"
 
 
-def _log_step(spark, sink, horizon, rows):
-    """One hot-region cycle of an event log: ``rows`` (all at or after
-    ``horizon``, replays included) merged into the sink's hot region."""
-    from etl_pipe_spark.operators.merge import insert_if_absent
+def _log_sink(spark, path):
+    """An event log keyed on ``k`` and frozen on ``t``."""
+    from etl_pipe_spark.operators.merge import ParquetMergeSink
 
-    batch = spark.createDataFrame(rows, _LOG_DDL)
-    return sink.write(insert_if_absent(sink.read(horizon), batch, ["k"]), horizon=horizon)
+    return ParquetMergeSink(spark, path, _LOG_DDL, freeze_col="t",
+                            resolve=lambda rows: insert_if_absent(None, rows, ["k"]))
+
+
+def _log_step(spark, sink, horizon, rows):
+    """One cycle of an event log: ``rows`` (all at or after ``horizon``,
+    replays included) merged into the sink."""
+    return sink.write(spark.createDataFrame(rows, _LOG_DDL), horizon=horizon)
 
 
 def _log_rows(n):
@@ -393,17 +398,16 @@ def test_footer_classification_never_calls_a_file_cold_that_may_hold_hot_rows(
 
 def test_sink_crash_before_publish_keeps_cold_files_readable(spark, tmp_path, monkeypatch):
     """A crash after the data write but before the publish leaves readers
-    on the previous manifest, whose inherited cold files all stay
-    readable; once the dead writer's claim is stale the retry lands
+    on the previous manifest, whose inherited cold files and deltas all
+    stay readable; once the dead writer's claim is stale the retry lands
     the same table as an uninterrupted sink."""
     import pytest
 
-    from etl_pipe_spark.operators import commit
-    from etl_pipe_spark.operators.merge import ParquetMergeSink
+    from etl_pipe_spark.operators import commit, merge
 
+    monkeypatch.setattr(merge, "COMPACT_AT", 3)
     rows = _log_rows(8)
-    sinks = [ParquetMergeSink(spark, str(tmp_path / name), _LOG_DDL, freeze_col="t")
-             for name in ("crashed", "control")]
+    sinks = [_log_sink(spark, str(tmp_path / name)) for name in ("crashed", "control")]
     for step in range(1, 6):
         for sink in sinks:
             _log_step(spark, sink, rows[step - 1][1], rows[step - 1:step + 1])
@@ -411,6 +415,8 @@ def test_sink_crash_before_publish_keeps_cold_files_readable(spark, tmp_path, mo
     before = sorted(crashed.read().collect())
     manifest = _manifest(crashed)
     assert sum(e["path"].split("/")[0] != crashed.current_snapshot() for e in manifest) >= 2
+    assert any(crashed._is_cold(e, rows[5][1]) for e in manifest)
+    assert any(e.get("delta") for e in manifest)
 
     def crash(pointer, text):
         raise RuntimeError("simulated crash before the pointer swap")
@@ -419,6 +425,7 @@ def test_sink_crash_before_publish_keeps_cold_files_readable(spark, tmp_path, mo
     with pytest.raises(RuntimeError, match="simulated crash"):
         _log_step(spark, crashed, rows[5][1], rows[5:7])
     monkeypatch.undo()
+    monkeypatch.setattr(merge, "COMPACT_AT", 3)
 
     assert sorted(crashed.read().collect()) == before
     assert _manifest(crashed) == manifest
@@ -435,30 +442,27 @@ def test_sink_crash_before_publish_keeps_cold_files_readable(spark, tmp_path, mo
 
 def test_sink_compaction_merges_cold_files_and_its_crash_is_invisible(
         spark, tmp_path, monkeypatch):
-    """Once a manifest names COMPACT_AT cold files of one size, the next
-    commit merges them into one within its own write.  A crash of that
-    commit before its publish is invisible, and its retry compacts."""
+    """Once a manifest names COMPACT_AT files, the next commit folds the
+    deltas into the base within its own write and splits off the rows
+    below its horizon as cold files; a later fold merges the cold files
+    of the smallest tier.  A crash of a fold before its publish is
+    invisible, and its retry folds."""
     import pytest
 
     from etl_pipe_spark.operators import commit, merge
-    from etl_pipe_spark.operators.merge import ParquetMergeSink
 
     monkeypatch.setattr(merge, "COMPACT_AT", 3)
     rows = _log_rows(12)
-    sink = ParquetMergeSink(spark, str(tmp_path / "t"), _LOG_DDL, freeze_col="t")
+    sink = _log_sink(spark, str(tmp_path / "t"))
 
     def cold(horizon):
         return [e for e in _manifest(sink) if sink._is_cold(e, horizon)]
 
-    step = 1
-    _log_step(spark, sink, rows[0][1], rows[0:2])
-    while len(cold(rows[step][1])) < 3:  # one more file freezes every step or so
-        step += 1
+    for step in (1, 2, 3):  # the first write, then two deltas, each with a replay
         _log_step(spark, sink, rows[step - 1][1], rows[step - 1:step + 1])
-        assert step < 8
-    horizon = rows[step][1]
-    assert {e["rows"] for e in cold(horizon)} == {1}
+    assert [bool(e.get("delta")) for e in _manifest(sink)] == [False, True, True]
     before = sorted(sink.read().collect())
+    assert [r.k for r in before] == ["k0", "k1", "k2", "k3"]
     manifest = _manifest(sink)
 
     def crash(pointer, text):
@@ -467,34 +471,21 @@ def test_sink_compaction_merges_cold_files_and_its_crash_is_invisible(
     with monkeypatch.context() as m:
         m.setattr(commit, "publish", crash)
         with pytest.raises(RuntimeError, match="simulated crash"):
-            _log_step(spark, sink, horizon, rows[step:step + 2])
+            _log_step(spark, sink, rows[3][1], rows[3:5])
     assert sorted(sink.read().collect()) == before
     assert _manifest(sink) == manifest
     for entry in manifest:
         assert os.path.exists(os.path.join(sink.path, entry["path"]))
 
-    _backdate(os.path.join(sink.path, f"snapshot-{step + 1:08d}"))
-    assert _log_step(spark, sink, horizon, rows[step:step + 2]) == step + 2
-    assert sorted(e["rows"] for e in cold(horizon)) == [1, step - 1]
-    assert sorted(r.k for r in sink.read().collect()) == sorted(
-        f"k{i}" for i in range(step + 2))
+    _backdate(os.path.join(sink.path, "snapshot-00000004"))
+    assert _log_step(spark, sink, rows[3][1], rows[3:5]) == 5  # the fold's rows
+    assert [(e["rows"], "delta" in e) for e in _manifest(sink)] == [(3, False), (2, False)]
+    (first_cold,) = cold(rows[3][1])
+    assert first_cold["rows"] == 3
+    for step in (5, 6):  # a delta, then a fold that merges the cold file too
+        _log_step(spark, sink, rows[step - 1][1], rows[step - 1:step + 1])
+    assert first_cold not in _manifest(sink)
+    assert sum(e["rows"] for e in cold(rows[5][1])) == 5
+    assert sorted(r.k for r in sink.read().collect()) == [f"k{i}" for i in range(7)]
 
 
-def test_read_rows_counts_what_read_returns_without_spark_jobs(spark, tmp_path, jobs_launched):
-    """read_rows(horizon) is the row count of read(horizon), from the
-    manifest: before the first commit, over hot and cold files, and None
-    for a snapshot written before manifests."""
-    from etl_pipe_spark.operators.merge import ParquetMergeSink
-
-    sink = ParquetMergeSink(spark, str(tmp_path / "log"), _LOG_DDL, freeze_col="t")
-    assert sink.read_rows() == 0
-    rows = _log_rows(12)
-    for i in (4, 8, 12):
-        _log_step(spark, sink, rows[i - 4][1], rows[:i])
-    for horizon in (None, rows[0][1], rows[5][1], rows[11][1], rows[11][1] + dt.timedelta(1)):
-        n, jobs = jobs_launched(sink.read_rows, horizon)
-        assert jobs == 0
-        assert n == sink.read(horizon).count(), horizon
-    snap = os.path.join(sink.path, sink.current_snapshot())
-    os.remove(os.path.join(snap, "_meta_manifest"))
-    assert sink.read_rows() is None

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from etl_pipe_spark.operators.merge import ParquetMergeSink
+from etl_pipe_spark.operators.merge import ParquetMergeSink, insert_if_absent
 from etl_pipe_spark.sources.catalog import load_table
 from etl_pipe_spark.streaming.structured import (
     read_events_stream,
@@ -37,7 +37,9 @@ def test_stream_windowed_counts_match_batch(spark, sf_dir):
 
 
 def test_foreach_batch_merge_idempotent_restart(spark, sf_dir, tmp_path):
-    sink = ParquetMergeSink(spark, str(tmp_path / "event_log"), _EVENT_LOG_DDL)
+    sink = ParquetMergeSink(
+        spark, str(tmp_path / "event_log"), _EVENT_LOG_DDL,
+        resolve=lambda rows: insert_if_absent(None, rows, ["source_key"]))
     n_events = load_table(spark, sf_dir, "events").count()
 
     stream_into_sink(spark, read_events_stream(spark, sf_dir), sink,

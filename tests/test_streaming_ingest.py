@@ -16,7 +16,7 @@ import os
 
 from pyspark.sql import types as T
 
-from etl_pipe_spark.operators.merge import ParquetMergeSink
+from etl_pipe_spark.operators.merge import ParquetMergeSink, insert_if_absent
 from etl_pipe_spark.streaming.structured import stream_jsonl_ingest
 
 SCHEMA = T.StructType([
@@ -55,12 +55,12 @@ def test_stream_jsonl_ingest_quarantine_and_replay(spark, tmp_path):
     src = str(tmp_path / "landing")
     dead = str(tmp_path / "dead")
     _write_shards(src)
-    sink = ParquetMergeSink(spark, str(tmp_path / "sink"), DDL)
+    sink = ParquetMergeSink(spark, str(tmp_path / "sink"), DDL,
+                            resolve=lambda rows: insert_if_absent(None, rows, ["doc_id"]))
 
     stream_jsonl_ingest(
         spark, src, SCHEMA, sink, dead,
-        checkpoint_dir=str(tmp_path / "ckpt1"),
-        key_cols=["doc_id"], max_files_per_trigger=1,
+        checkpoint_dir=str(tmp_path / "ckpt1"), max_files_per_trigger=1,
     )
     rows = {r["doc_id"]: r for r in sink.read().collect()}
     assert set(rows) == {0, 1, 2, 3}
@@ -76,7 +76,6 @@ def test_stream_jsonl_ingest_quarantine_and_replay(spark, tmp_path):
     stream_jsonl_ingest(
         spark, src, SCHEMA, sink, dead,
         checkpoint_dir=str(tmp_path / "ckpt2"),
-        key_cols=["doc_id"],
     )
     assert sorted(map(tuple, sink.read().collect())) == before
     assert _dead_lines(dead) == ['garbage line one', '{"doc_id": 99, "la']
