@@ -11,16 +11,17 @@ yields the same table, which is what absorbs the watermark overlap's
 duplicates (reference ST2/ST3).  Given ``existing=None`` each returns
 its batch *resolved*: the latest row per key, one row per key, or the
 version chains the batch closes.  Those resolutions are associative,
-commutative and idempotent, so a keyed sink need not read its table to
-merge a batch: it appends the batch's resolved rows as a delta file and
-resolves base plus deltas on read, folding the deltas into the base
-every :data:`COMPACT_AT` files (merge-on-read; ``ParquetMergeSink``
-states why this gives the table the merges give).
+commutative and idempotent, so a keyed sink need not read its table,
+nor resolve its batch, to merge the batch: it appends the batch as it is
+as a delta file and resolves base plus deltas on read, folding the
+deltas into the base every :data:`COMPACT_AT` files (merge-on-read;
+``ParquetMergeSink`` states why this gives the table the merges give).
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import functools
 import json
 import os
 from collections import Counter
@@ -283,10 +284,13 @@ class ParquetMergeSink:
     (one of the merges above with ``existing=None``); it must be a
     join in the lattice sense, ``resolve(resolve(A) ∪ B) ==
     resolve(A ∪ B)`` for all row sets A, B.  Its ``write(df)`` merges
-    ``df`` into the table without reading it:
+    ``df``, whose columns must be the DDL's, into the table without
+    reading it:
 
-    * an *append* writes ``resolve(df)`` as one delta file beside the
-      table's files, and is the write of every cycle but a fold's;
+    * an *append* writes ``df`` as it is, unresolved, as delta files
+      beside the table's files, one per non-empty partition of ``df``
+      (a caller that wants one delta file coalesces ``df`` to one
+      partition), and is the write of every cycle but a fold's;
     * a *fold* writes ``resolve(open files ∪ df)``, together with the
       cold files :func:`_compaction` picked, and drops every file it
       read.  A commit folds when :func:`_compaction` picks a file, and
@@ -298,9 +302,9 @@ class ParquetMergeSink:
     with no delta among the open files they are returned as they are.
 
     EXACTNESS OF RESOLUTION.  After writes of batches B1..Bn, ``read()``
-    returns ``resolve(B1 ∪ ... ∪ Bn)``: an append adds ``resolve(Bi)``
-    and a fold replaces files by their resolution, and by the join law
-    neither changes the resolution of the union of all files.  For the
+    returns ``resolve(B1 ∪ ... ∪ Bn)``: an append adds ``Bi`` and a fold
+    replaces files by their resolution, and by the join law neither
+    changes the resolution of the union of all files.  For the
     pipeline's sinks (streaming/incremental.py) that is the table the
     read-merge-rewrite cycle gave:
 
@@ -358,7 +362,10 @@ class ParquetMergeSink:
     files, which Spark's reader skips) inside the snapshot before the
     pointer swap, and ``read`` hands it to ``spark.read.schema`` instead
     of inferring the schema from a footer, which costs a job.  A
-    snapshot written without it still reads by inference.  ``write``
+    snapshot written without it still reads by inference.  For an
+    append the written DataFrame is the batch, so a batch without one
+    of the DDL's columns would hide that column from every later read:
+    a keyed sink refuses such a batch.  ``write``
     returns the rows it wrote, from the written files' parquet footers,
     rather than re-reading the snapshot.
     """
@@ -370,6 +377,10 @@ class ParquetMergeSink:
         self.schema_ddl = schema_ddl
         self.freeze_col = freeze_col
         self.resolve = resolve
+
+    @functools.cached_property
+    def _columns(self) -> list[str]:
+        return StructType.fromDDL(self.schema_ddl).names
 
     def _pointer(self) -> str:
         return os.path.join(self.path, "CURRENT")
@@ -433,7 +444,15 @@ class ParquetMergeSink:
         overlapped in time.  Without it the write lands on top of
         whatever is committed (a blind write), which a keyed sink's
         merge needs: it reads nothing but the manifest of the version
-        its claim holds."""
+        its claim holds.
+
+        A keyed sink raises ``ValueError`` before it claims a version
+        when ``df``'s columns are not the DDL's."""
+        if self.resolve is not None and df.columns != self._columns:
+            raise ValueError(
+                f"batch columns {df.columns} are not the columns of {self.path}, "
+                f"{self._columns}: missing {[c for c in self._columns if c not in df.columns]}, "
+                f"extra {[c for c in df.columns if c not in self._columns]}")
         version = (self.committed_version() if read_version is None else read_version) + 1
         new_snap = f"snapshot-{version:08d}"
         snap_dir = os.path.join(self.path, new_snap)
@@ -455,11 +474,10 @@ class ParquetMergeSink:
             # a file with a recorded max that is not cold at this horizon
             # may share keys with the batch: fold it back in
             fold = bool(picked) or not warm or any(e.get("max") is not None for e in warm)
-            out = self.resolve(df)
+            out = df
             if fold:
                 picked = [e for e in picked if e in cold]
-                if warm:
-                    out = self.resolve(self._scan(warm).unionByName(out))
+                out = self.resolve(self._scan(warm).unionByName(df) if warm else df)
                 if picked:  # their rows in one task: each scan task would write a file
                     out = out.unionByName(self._scan(picked).coalesce(1))
             kept = [e for e in cold if e not in picked] if fold else prev

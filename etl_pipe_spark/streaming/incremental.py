@@ -14,24 +14,27 @@ reference runs its flows one after another; here they run
 concurrently in the driver, still one writer per sink.
 
 Each sink declares how its rows resolve (operators/merge.py
-``ParquetMergeSink``), so a flow never reads its sink: it appends its
-batch's per-key winners as one delta file, and the sink resolves base
-plus deltas on read and folds the deltas into the base every
-``merge.COMPACT_AT`` files.  The lower bound of a flow's batch, its
+``ParquetMergeSink``), so a flow neither reads its sink nor resolves
+its batch: it projects the batch to the sink's columns and appends it
+as it is, as a delta file, and the sink resolves base plus deltas on
+read and folds the deltas into the base every ``merge.COMPACT_AT``
+files.  An appending flow is thus scan, filter, project and write,
+with no sort, window or shuffle.  The lower bound of a flow's batch, its
 *horizon* (the watermark minus the overlap), also lets a fold of a
 history sink (``fact_event_log``, ``user_versions``) set aside the rows
 no later batch can touch as cold files, which reads return as they
 are.
 
-A flow merges a small batch in ONE Spark task.  Its size is the
+A flow writes a small batch in ONE Spark task.  Its size is the
 ``events`` rows its scan decodes, counted without a Spark job from the
 source's parquet footer: the row groups the watermark predicate cannot
 prune (``sources.catalog.rows_since``).  Below :data:`ONE_TASK_BELOW`
-rows the flow coalesces the batch to one partition, which meets every
-distribution its resolution needs, so the plan has no Exchange and no
-AQE stage boundary: the flow is one job of one task.  At or above the
-constant, or when the source is not a local parquet file, the flow
-keeps the partitioned plan.
+rows the flow coalesces the batch to one partition, so an append is
+one job of one task and writes one delta file (``merge.COMPACT_AT``
+counts files), and a fold's resolution has no Exchange.  At or above
+the constant, or when the source is not a local parquet file, the
+flow keeps the partitioned plan: an append writes a delta file per
+non-empty scan partition, and a fold shuffles.
 """
 
 from __future__ import annotations
@@ -45,10 +48,10 @@ from ..operators.merge import ParquetMergeSink, insert_if_absent, scd2_apply_ver
 from ..sources.catalog import events_since, load_table, rows_since
 from .watermark import WatermarkStore
 
-# Unpruned source rows below which a flow runs as one task.  A sweep on
-# 4 cores of the first and the second cycle over an N-row source
-# (CHANGES.md): the one-task plan was at par or faster up to N = 10^6,
-# mixed at 2 * 10^6 and slower from 3 * 10^6.
+# Unpruned source rows below which a flow runs as one task and appends
+# one delta file.  A sweep on 4 cores of the first and the second cycle
+# over an N-row source (CHANGES.md): the one-task plan was at par or
+# faster up to N = 10^6, mixed at 2 * 10^6 and slower from 3 * 10^6.
 ONE_TASK_BELOW = 1_000_000
 
 _DIM_USERS_DDL = (
@@ -134,11 +137,15 @@ class IncrementalPipeline:
         )
 
     def _flow_versions(self, batch: DataFrame) -> DataFrame:
+        # the closure columns stay NULL until resolution closes the
+        # chains; the delta still carries them, in the table's schema
         return batch.select(
             "user_id",
             F.col("ts").alias("version_started_at"),
             "event_id",
             "value",
+            F.lit(None).cast("timestamp_ntz").alias("version_ended_at"),
+            F.lit(None).cast("boolean").alias("is_current_version"),
         )
 
     # -- cycle -----------------------------------------------------------
@@ -166,7 +173,7 @@ class IncrementalPipeline:
                 obs, F.max("ts").alias("mx"), F.count(F.lit(1)).alias("n")
             )
             if self._fits_one_task(horizon):
-                # one partition meets every distribution the resolution needs
+                # one task, and one delta file for an append
                 batch = batch.coalesce(1)
             self.sinks[name].write(flow(batch), horizon=horizon)
             stats = obs.get

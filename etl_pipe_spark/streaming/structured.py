@@ -99,9 +99,11 @@ def stream_into_sink(spark: SparkSession, stream: DataFrame, sink: ParquetMergeS
     insert_if_absent(None, rows, ["source_key"])``), so at-least-once
     redelivery after a restart is absorbed — the reference's ON
     CONFLICT DO NOTHING recipe, with the checkpoint replacing the
-    watermark table.  A batch appends without reading the table (a fold
-    every ``merge.COMPACT_AT`` files reads the files it merges), as the
-    watermark cycle's flows do.
+    watermark table.  A batch appends as it is, without reading the
+    table or resolving the batch (a fold every ``merge.COMPACT_AT`` files
+    reads the files it merges), as the watermark cycle's flows do.  A
+    micro-batch is coalesced to one partition, so an append writes one
+    delta file; bound a batch's size with the stream's trigger.
     """
 
     from .metrics import attach_metrics_listener
@@ -118,7 +120,7 @@ def stream_into_sink(spark: SparkSession, stream: DataFrame, sink: ParquetMergeS
             "event_type",
             F.col("value").alias("amount"),
         )
-        sink.write(updates)
+        sink.write(updates.coalesce(1))
 
     listener = attach_metrics_listener(spark) if metrics else None
     try:
@@ -147,7 +149,10 @@ def stream_jsonl_ingest(
     production landing-zone topology: shards appear in ``src_dir``,
     each micro-batch parses under the explicit schema, malformed lines
     land in ``dead_dir`` and parsed rows are appended to the sink, which
-    must declare one row per key as its resolution.
+    must declare one row per key as its resolution.  A batch's rows are
+    coalesced to one partition, so an append writes one delta file
+    whatever the number of files in the batch (``maxFilesPerTrigger``
+    bounds that number).
 
     Exactly-once end to end under at-least-once redelivery:
 
@@ -200,7 +205,7 @@ def stream_jsonl_ingest(
                 .mode("overwrite")
                 .json(dead_dir)
             )
-            sink.write(good.drop("src_path", "src_file"))
+            sink.write(good.drop("src_path", "src_file").coalesce(1))
 
     q = (
         stream.writeStream.foreachBatch(apply_batch)

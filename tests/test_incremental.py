@@ -6,6 +6,7 @@ from __future__ import annotations
 import datetime as dt
 import json
 import os
+import re
 import threading
 from collections import Counter
 from concurrent.futures import ThreadPoolExecutor
@@ -431,7 +432,7 @@ def test_late_version_inside_the_overlap_closes_a_hot_version(spark, tmp_path):
 
 def test_hourly_cycles_append_only_their_batch(spark, sf_dir, pipe):
     """Seven hourly cycles at sf0.001.  After the first, each commit's own
-    files hold at most the resolved batch, every earlier file is
+    files hold at most its batch, every earlier file is
     inherited under its path, every sink equals a full recompute, and
     retention keeps exactly the snapshot directories the current and
     previous manifests name."""
@@ -553,12 +554,20 @@ def _exchanges(plan: str) -> Counter:
     return Counter(w for w in plan.split() if w in ("Exchange", "BroadcastExchange"))
 
 
+def _resolution_nodes(plan: str) -> set[str]:
+    """The nodes of ``plan`` that a resolution brings: sorts, windows
+    and AQE's wrapper around a shuffle."""
+    return set(re.findall(r"\b(Sort|Window|WindowGroupLimit|AdaptiveSparkPlan)\b", plan))
+
+
 def test_small_merges_run_as_one_exchange_free_job_per_flow(
         spark, sf_dir, pipe, jobs_launched, monkeypatch):
     """Below ONE_TASK_BELOW each flow's write plan has no Exchange or
     BroadcastExchange and scans only the source, never its sink, and a
     warm cycle launches one job per flow; the size signal launches
-    none."""
+    none.  A warm cycle appends its batch unresolved: the plan is the
+    coalesced scan and projection, with no Sort, Window or
+    AdaptiveSparkPlan node."""
     pipe.run_cycle(now_ts=MID)
     plans = _write_plans(pipe, monkeypatch)
     for name in pipe.sinks:
@@ -572,19 +581,28 @@ def test_small_merges_run_as_one_exchange_free_job_per_flow(
     for name, plan in plans.items():
         assert plan.count("FileScan") == 1 and "events.parquet" in plan, name
         assert "snapshot-" not in plan, name
+        assert "Coalesce 1" in plan, name
+        assert _resolution_nodes(plan) == set(), (name, plan)
 
 
 def test_large_merges_keep_the_partitioned_plan(spark, sf_dir, pipe, monkeypatch):
-    """At or above ONE_TASK_BELOW (0 here) every flow keeps its
-    shuffle."""
+    """At or above ONE_TASK_BELOW (0 here) no flow coalesces its batch:
+    the first cycle's fold keeps its shuffle, and the next cycle's
+    append writes the scan's partitions as they are, with no Coalesce
+    and no Exchange."""
     monkeypatch.setattr(incremental, "ONE_TASK_BELOW", 0)
-    pipe.run_cycle(now_ts=MID)
     plans = _write_plans(pipe, monkeypatch)
-    counts = pipe.run_cycle(now_ts=MID + dt.timedelta(hours=1))
-    assert all(v >= 0 for v in counts.values()), counts
-    shapes = {name: _exchanges(plan) for name, plan in plans.items()}
-    assert set(shapes) == set(pipe.sinks), shapes
-    assert all(shape["Exchange"] >= 1 for shape in shapes.values()), shapes
+    for now, fold in ((MID, True), (MID + dt.timedelta(hours=1), False)):
+        plans.clear()
+        counts = pipe.run_cycle(now_ts=now)
+        assert all(v >= 0 for v in counts.values()), counts
+        assert set(plans) == set(pipe.sinks), plans
+        for name, plan in plans.items():
+            assert "Coalesce 1" not in plan, (name, plan)
+            if fold:
+                assert _exchanges(plan)["Exchange"] >= 1, (name, plan)
+            else:
+                assert _exchanges(plan) == Counter(), (name, plan)
 
 
 def test_a_source_of_unknown_size_takes_the_partitioned_plan(spark, sf_dir, tmp_path):

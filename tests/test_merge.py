@@ -351,8 +351,10 @@ def _log_sink(spark, path):
 
 def _log_step(spark, sink, horizon, rows):
     """One cycle of an event log: ``rows`` (all at or after ``horizon``,
-    replays included) merged into the sink."""
-    return sink.write(spark.createDataFrame(rows, _LOG_DDL), horizon=horizon)
+    replays included) merged into the sink.  Like the pipeline's small
+    batches, the rows are one partition, so an append writes one delta
+    file."""
+    return sink.write(spark.createDataFrame(rows, _LOG_DDL).coalesce(1), horizon=horizon)
 
 
 def _log_rows(n):
@@ -489,3 +491,26 @@ def test_sink_compaction_merges_cold_files_and_its_crash_is_invisible(
     assert sorted(r.k for r in sink.read().collect()) == [f"k{i}" for i in range(7)]
 
 
+def test_keyed_sink_refuses_a_batch_without_the_tables_columns(spark, tmp_path):
+    """An append stores its batch's schema as the table's, so a keyed
+    sink refuses a batch whose columns are not the DDL's: a
+    user_versions-shaped batch without ``version_ended_at`` raises
+    ValueError naming the column, before a version is claimed."""
+    import pytest
+
+    from etl_pipe_spark.operators.merge import ParquetMergeSink
+    from etl_pipe_spark.streaming.incremental import _VERSIONS_DDL
+
+    sink = ParquetMergeSink(
+        spark, str(tmp_path / "t"), _VERSIONS_DDL, freeze_col="version_ended_at",
+        resolve=lambda rows: scd2_apply_versions(
+            None, rows, keys=["user_id"], ts_col="version_started_at",
+            tiebreakers=["event_id"]))
+    ok = spark.createDataFrame([(1, _t(1), 10, 1.0, None, None)], _VERSIONS_DDL)
+    sink.write(ok, horizon=_t(1))
+    short = ok.drop("version_ended_at")
+    with pytest.raises(ValueError, match="missing \\['version_ended_at'\\]"):
+        sink.write(short, horizon=_t(1))
+    assert sink.committed_version() == 1
+    assert sorted(os.listdir(sink.path)) == ["CURRENT", "snapshot-00000001"]
+    assert [(r.event_id, r.is_current_version) for r in sink.read().collect()] == [(10, True)]

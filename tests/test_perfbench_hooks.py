@@ -38,11 +38,16 @@ def test_install_and_restore_leave_the_package_as_it_was():
     assert {(owner, attr): getattr(owner, attr) for owner, attr in _hooked()} == before
 
 
-def test_a_traced_cycle_records_every_layer(spark, sf_dir, tmp_path):
+def test_a_traced_cycle_records_every_layer(spark, sf_dir, tmp_path, monkeypatch):
+    """The traced cycle folds (``COMPACT_AT`` = 1), so every flow plans a
+    resolution: an append resolves nothing and records no
+    ``merge.plan_s``."""
+    from etl_pipe_spark.operators import merge
     from etl_pipe_spark.streaming.incremental import IncrementalPipeline
 
     pipe = IncrementalPipeline(spark, sf_dir, str(tmp_path / "target"))
     pipe.run_cycle(now_ts=dt.datetime(2024, 1, 15))
+    monkeypatch.setattr(merge, "COMPACT_AT", 1)
     tracer = Tracer()
     tracer.op = "cycle-0"
     cycle._install(tracer)

@@ -58,6 +58,38 @@ def test_foreach_batch_merge_idempotent_restart(spark, sf_dir, tmp_path):
     assert sink.read().count() == n_events
 
 
+def test_stream_into_sink_appends_one_delta_file_per_micro_batch(spark, sf_dir, tmp_path):
+    """A micro-batch read as several partitions is still appended as one
+    delta file: the events file is rewritten in 50-row row groups and
+    read in 8 KB splits."""
+    import json
+
+    import pyarrow.parquet as pq
+
+    src = tmp_path / "src"
+    src.mkdir()
+    pq.write_table(pq.read_table(f"{sf_dir}/events.parquet"), src / "events.parquet",
+                   row_group_size=50)
+    sink = ParquetMergeSink(
+        spark, str(tmp_path / "event_log"), _EVENT_LOG_DDL,
+        resolve=lambda rows: insert_if_absent(None, rows, ["source_key"]))
+    key = "spark.sql.files.maxPartitionBytes"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "8k")
+    try:
+        assert load_table(spark, str(src), "events").rdd.getNumPartitions() > 1
+        for ckpt in ("ckpt1", "ckpt2"):  # the first write folds, the second appends
+            stream_into_sink(spark, read_events_stream(spark, str(src)), sink,
+                             str(tmp_path / ckpt))
+    finally:
+        spark.conf.set(key, before)
+    snap = sink.current_snapshot()
+    own = [e for e in json.loads(sink.current_meta("manifest"))["files"]
+           if e["path"].startswith(snap + "/")]
+    assert [e.get("delta") for e in own] == [True]
+    assert sink.read().count() == load_table(spark, sf_dir, "events").count()
+
+
 def test_stream_static_dim_join(spark, sf_dir):
     """Stream-static join: streaming events enriched against a static
     user dimension (the streaming image of the broadcast dim join)."""

@@ -79,3 +79,9 @@ def test_stream_jsonl_ingest_quarantine_and_replay(spark, tmp_path):
     )
     assert sorted(map(tuple, sink.read().collect())) == before
     assert _dead_lines(dead) == ['garbage line one', '{"doc_id": 99, "la']
+    # the two shards of the one redelivered micro-batch are appended as
+    # one delta file
+    snap = sink.current_snapshot()
+    own = [e for e in json.loads(sink.current_meta("manifest"))["files"]
+           if e["path"].startswith(snap + "/")]
+    assert [e.get("delta") for e in own] == [True]
